@@ -1,13 +1,15 @@
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload serve_read --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload serve_write_mix --seed 1 \
+        --seconds 10 --trace 0
 
 Run from the root of a checkout.  One driver process, one closed-loop
 client: each operation is sent after the previous reply arrived.  The
-run sets up the workload three times (``setup_s`` is the median), then
-times a loop of ``--seconds``.  With ``--trace 1`` it also times a
-second loop with every engine layer wrapped in spans and Spark's event
-log on, and reports the per-layer metrics instead.
+run sets up the workload three times (``setup_s`` is the median), runs
+an untimed warm-up loop, then times a loop of ``--seconds``.  With
+``--trace 1`` it also times a second loop with every engine layer
+wrapped in spans and Spark's event log on, and reports the per-layer
+metrics instead.
 
 The last stdout line is the result:
 ``{"correct": ..., "attempted": ..., "failed": ..., "metrics": {...}}``.
@@ -109,7 +111,9 @@ def _stop_spark(spark) -> None:
 
 def run_loop(wl, seconds: float, tracer=None, spark=None) -> dict:
     """Closed loop: send operations until ``seconds`` have passed and
-    the workload's cycle is complete.  Every reply is checked."""
+    the workload's cycle is complete.  Every reply is checked.  The
+    workload's maintenance between operations is not timed: the
+    deadline moves by its duration and it is left out of ``wall_s``."""
     lat: dict[str, list] = defaultdict(list)
     by_label: dict[str, list] = defaultdict(list)
     failed, errors, roots = 0, [], {}
@@ -117,8 +121,16 @@ def run_loop(wl, seconds: float, tracer=None, spark=None) -> dict:
     span_start = len(tracer.spans) if tracer is not None else 0
     t0 = time.perf_counter()
     deadline = t0 + seconds
-    n = 0
+    n, paused, maint = 0, 0.0, 0
     while time.perf_counter() < deadline or not wl.cycle_done():
+        if wl.maintenance_due():
+            a = time.perf_counter()
+            listed = tracer.listdir_calls if tracer is not None else 0
+            wl.maintain()
+            if tracer is not None:  # count the reads' listings only
+                tracer.listdir_calls = listed
+            d = time.perf_counter() - a
+            paused, deadline, maint = paused + d, deadline + d, maint + 1
         op = wl.next_op()
         group = None
         if spark is not None:
@@ -144,10 +156,11 @@ def run_loop(wl, seconds: float, tracer=None, spark=None) -> dict:
         if group is not None and len(tracer.spans) > first:
             roots[group] = first
         n += 1
-    wall = time.perf_counter() - t0
+    wall = time.perf_counter() - t0 - paused
     return {"ops": n, "failed": failed, "wall_s": wall, "lat": dict(lat),
             "by_label": dict(by_label), "errors": errors, "roots": roots,
-            "span_start": span_start}
+            "span_start": span_start, "maintenance": maint,
+            "maintenance_s": paused}
 
 
 def end_to_end(loop: dict, setup: list, wl) -> tuple[dict, dict]:
@@ -167,6 +180,8 @@ def end_to_end(loop: dict, setup: list, wl) -> tuple[dict, dict]:
         "ops": loop["ops"], "failed": loop["failed"],
         "failed_frac": loop["failed"] / max(loop["ops"], 1),
         "wall_s": loop["wall_s"], "setup_samples_s": setup,
+        "maintenance": loop["maintenance"],
+        "maintenance_s": loop["maintenance_s"],
         "read_ms": summary(reads),
         "write_ms": summary(loop["lat"].get("write", [])),
         "by_label_ms": {k: summary(v) for k, v in loop["by_label"].items()},
@@ -226,26 +241,27 @@ def main(argv=None) -> int:
         if tracer is not None:
             tracer.uninstall()
         checked = []  # every loop whose replies were checked
-        if wl.warm_cycle:
-            checked.append(run_loop(wl, 0))
+        if wl.warm_seconds is not None:
+            checked.append(run_loop(wl, wl.warm_seconds))
         loop = run_loop(wl, args.seconds)
         checked.append(loop)
         metrics, detail = end_to_end(loop, setup, wl)
         if trace:
             from perfbench import layers
-            from perfbench.workloads import log_bytes
 
             # the traced loop starts from the same state as the untraced
             # one: a fresh store and cold request caches
             wl.setup(SETUP_REPS)
-            bytes_before = log_bytes(wl.log)
+            if wl.warm_seconds:  # the JVM stays warm; the caches do not
+                checked.append(run_loop(wl, wl.warm_seconds))
+            wl.count_bytes()
             tracer.listdir_calls = 0
             tracer.install()
             groups = spark if wl.spark_ops else None
             traced = run_loop(wl, args.seconds, tracer, groups)
             tracer.uninstall()
             checked.append(traced)
-            commit_bytes = log_bytes(wl.log) - bytes_before
+            commit_bytes = wl.written_bytes()
             _stop_spark(spark)  # finishes the event log
             spark = None
             metrics, tdetail = layers.per_layer(

@@ -1,7 +1,7 @@
 """Steadiness report: run each workload with several seeds and print
 every metric's median and spread.
 
-    python3 perfbench/steady.py --seeds 10 [--workloads serve_read,analytic]
+    python3 perfbench/steady.py --seeds 10 [--workloads serve_write_mix,analytic]
                                 [--seconds 5] [--trace] [--json out.json]
 
 The spread is the distance between the first and third quartile as a

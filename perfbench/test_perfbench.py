@@ -197,6 +197,8 @@ def _session(wl):
 
     wl.gs = GraphSession()  # in-memory store: the fast path, no Spark
     wl.g.write(wl.gs.store)
+    os.makedirs(wl.log, exist_ok=True)  # no commit files: 0 bytes
+    wl.reset_model()
     return wl
 
 
@@ -213,22 +215,41 @@ def _drive(wl, n):
 def small(monkeypatch):
     from perfbench import workloads
 
-    monkeypatch.setattr(workloads.ServeRead, "NATIONS", 600)
-    monkeypatch.setattr(workloads.ServeRead, "REGIONS", 20)
+    monkeypatch.setattr(workloads.ServeWriteMix, "NATIONS", 600)
+    monkeypatch.setattr(workloads.ServeWriteMix, "REGIONS", 20)
     return workloads
-
-
-def test_serve_read_replies_match_the_generator(small, tmp_path):
-    wl = _session(small.ServeRead(None, str(tmp_path), seed=7))
-    labels = _drive(wl, 3000)
-    assert set(labels) == {"1hop", "2hop", "chain", "variant"}
 
 
 def test_serve_write_mix_replies_match_the_model(small, tmp_path):
     wl = _session(small.ServeWriteMix(None, str(tmp_path), seed=7))
-    wl.reset_model()
-    labels = _drive(wl, 2000)
-    assert labels["write"] > 300 and labels["1hop"] and labels["2hop"]
+    labels = _drive(wl, 5000)
+    assert set(labels) == {"1hop", "2hop", "chain", "variant", "write"}
+    # writes and chains interleave; chains page regions writes never join
+    assert labels["write"] > 800 and labels["chain"] > 100
+
+
+def test_maintenance_is_left_out_of_the_timed_loop():
+    from perfbench.run import run_loop
+    from perfbench.workloads import Op, Workload
+
+    class Slow(Workload):
+        def __init__(self):
+            self.n = 0
+
+        def next_op(self):
+            self.n += 1
+            return Op("read", "r", lambda: True)
+
+        def maintenance_due(self):
+            return self.n % 100 == 99
+
+        def maintain(self):
+            __import__("time").sleep(0.05)
+
+    loop = run_loop(Slow(), 0.3)
+    assert loop["maintenance"] >= 1 and loop["failed"] == 0
+    assert loop["maintenance_s"] >= 0.05 * loop["maintenance"]
+    assert 0.29 < loop["wall_s"] < 0.5
 
 
 def test_variants_are_distinct_shapes():
@@ -239,9 +260,9 @@ def test_variants_are_distinct_shapes():
 
 
 def test_same_seed_same_requests(small, tmp_path):
-    a = small.ServeRead(None, str(tmp_path), seed=3)
-    b = small.ServeRead(None, str(tmp_path), seed=3)
-    c = small.ServeRead(None, str(tmp_path), seed=4)
+    a = small.ServeWriteMix(None, str(tmp_path), seed=3)
+    b = small.ServeWriteMix(None, str(tmp_path), seed=3)
+    c = small.ServeWriteMix(None, str(tmp_path), seed=4)
     assert a.g.nations == b.g.nations and a.rank == b.rank
     assert a.g.nations != c.g.nations
 
@@ -284,7 +305,7 @@ def test_run_fails_without_the_engine(tmp_path):
                     ignore=shutil.ignore_patterns("__pycache__"))
     shutil.copy(os.path.join(ROOT, "BENCHMARK.json"), tmp_path)
     proc = subprocess.run(
-        [sys.executable, "perfbench/run.py", "--workload", "serve_read",
+        [sys.executable, "perfbench/run.py", "--workload", "serve_write_mix",
          "--seed", "1", "--seconds", "1", "--trace", "0"],
         cwd=tmp_path, capture_output=True, text=True, timeout=120)
     assert proc.returncode != 0

@@ -191,8 +191,9 @@ class Workload:
     log_dirs: tuple = ()
     #: ops run Spark jobs: the traced loop gives each its own job group
     spark_ops = False
-    #: run one untimed cycle of operations before the timed loop
-    warm_cycle = False
+    #: seconds of untimed operations before the timed loop (0: one
+    #: cycle), or None for no warm-up loop
+    warm_seconds = None
 
     def __init__(self, spark, workdir: str, seed: int):
         self.spark = spark
@@ -213,6 +214,21 @@ class Workload:
         """True once the loop may stop at its deadline."""
         return True
 
+    def maintenance_due(self) -> bool:
+        """True when ``maintain`` should run before the next operation."""
+        return False
+
+    def maintain(self) -> None:
+        """Housekeeping between operations, outside the timed region."""
+
+    def count_bytes(self) -> None:
+        """Start counting the bytes commits add to the log."""
+        self._bytes_base, self._bytes_done = log_bytes(self.log), 0
+
+    def written_bytes(self) -> int:
+        """Bytes commits added to the log since ``count_bytes``."""
+        return self._bytes_done + log_bytes(self.log) - self._bytes_base
+
     def primitives(self) -> int:
         raise NotImplementedError
 
@@ -220,17 +236,31 @@ class Workload:
         return {}
 
 
-class ServeRead(Workload):
-    """Hydrated fast-path reads: Zipf-skewed 1-hop and 2-hop reads,
-    cursor-paged chains, and 1% template variants."""
+class ServeWriteMix(Workload):
+    """Hydrated serving under writes.  80% reads: Zipf-skewed 1-hop and
+    2-hop reads, cursor-paged chains and 1% template variants, with 30%
+    of the reads on a recently written nation.  20% protocol writes:
+    new nations with their ``in-region`` link, and ``guid~=`` version
+    bumps, one commit file each.  Every ``COMPACT_EVERY`` writes the
+    loop compacts the log outside the timed region, so the directory
+    every read lists cycles through the same file counts however long
+    the run is.  New nations join the upper half of the regions and
+    chains page the lower half, so every chain has the same length."""
 
-    name = "serve_read"
+    name = "serve_write_mix"
+    warm_seconds = 1.0
     NATIONS, REGIONS, PAGE = 10_000, 500, 10
-    #: Zipf exponent of the key popularity: about a quarter of requests
+    #: Zipf exponent of the key popularity: about a quarter of reads
     #: repeat a line the request caches hold (with s=1 it is near one
     #: half, which puts the median on the boundary between the cached
     #: and the uncached path)
     ZIPF_S = 0.8
+    #: shares of reads: 1-hop below the first bound, 2-hop below the
+    #: second, then cursor chains (two pages each), the rest
+    #: template variants
+    READ_MIX = (0.12, 0.975, 0.99)
+    WRITE_SHARE, RECENT_SHARE, RECENT = 0.2, 0.3, 256
+    COMPACT_EVERY = 128
 
     def __init__(self, spark, workdir, seed):
         super().__init__(spark, workdir, seed)
@@ -251,14 +281,47 @@ class ServeRead(Workload):
         if not gs.store.hydrate():
             raise RuntimeError("hydrate declined the serving store")
         self.gs = gs
+        self.reset_model()
+        g = self.g
         for i in range(0, self.NATIONS, self.NATIONS // 16):  # warm-up
-            gs.request(one_hop(self.g.nations[i]))
-            gs.request(two_hop(self.g.nations[i]))
+            gs.request(one_hop(g.nations[i]))
+            gs.request(two_hop(g.nations[i]))
+            gs.request(variant(i % VARIANTS, guid_of(g.nation_id(i)),
+                               g.nations[i], g.regions[g.region_of[i]])[0])
+        for j in range(4):
+            self._start_chain(j)
+            while self.chain is not None:
+                self._chain_page().run()
+
+    def reset_model(self) -> None:
+        """Expected state of the freshly built store."""
+        g = self.g
+        # per nation: [value, guid, region index, still linked]
+        self.model = [
+            [v, guid_of(g.nation_id(i)), g.region_of[i], True]
+            for i, v in enumerate(g.nations)
+        ]
+        self.next_id = g.size
+        self.recent: list[int] = []
+        self.writes = self.since_compact = 0
+        self.chain = None
+        self.count_bytes()
 
     def primitives(self) -> int:
-        return self.g.size
+        return self.next_id
+
+    def maintenance_due(self) -> bool:
+        return self.since_compact >= self.COMPACT_EVERY
+
+    def maintain(self) -> None:
+        self._bytes_done += log_bytes(self.log) - self._bytes_base
+        self.gs.store.compact()
+        self._bytes_base = log_bytes(self.log)
+        self.since_compact = 0
 
     def _key(self) -> int:
+        if self.recent and self.rng.random() < self.RECENT_SHARE:
+            return self.rng.choice(self.recent)
         r = bisect.bisect_left(self.cum, self.rng.random() * self.cum[-1])
         return self.rank[min(r, self.NATIONS - 1)]
 
@@ -268,26 +331,62 @@ class ServeRead(Workload):
     def next_op(self) -> Op:
         if self.chain is not None:
             return self._chain_page()
-        g, i = self.g, self._key()
-        v, r = g.nations[i], g.regions[g.region_of[i]]
+        if self.rng.random() < self.WRITE_SHARE:
+            return self._write()
+        g, k = self.g, self._key()
+        v, gd, j, linked = self.model[k]
+        r = g.regions[j]
         u = self.rng.random()
-        if u < 0.35:
+        one, two, chain = self.READ_MIX
+        if u < one or (u < two and not linked):
             return Op("read", "1hop", lambda: self._send(
-                one_hop(v), ok_one_hop(guid_of(g.nation_id(i)), v)))
-        if u < 0.97:
+                one_hop(v), ok_one_hop(gd, v)))
+        if u < two:
             return Op("read", "2hop", lambda: self._send(
                 two_hop(v), ok_two_hop(v, r)))
-        if u < 0.99:
-            j = g.region_of[i]
-            self.chain = {
-                "line": region_members(g.regions[j], self.PAGE),
-                "want": [guid_of(g.nation_id(m)) for m in g.members[j]],
-                "got": [], "cursor": None,
-            }
+        if u < chain:
+            self._start_chain(j % (self.REGIONS // 2))
             return self._chain_page()
-        line, want = variant(self.rng.randrange(VARIANTS),
-                             guid_of(g.nation_id(i)), v, r)
+        # a nation whose link names an older version has no 2-hop answer
+        idx = self.rng.randrange(VARIANTS if linked else VARIANTS // 2)
+        line, want = variant(idx, gd, v, r)
         return Op("read", "variant", lambda: self._send(line, want))
+
+    def _write(self) -> Op:
+        rng, g = self.rng, self.g
+        self.writes += 1
+        self.since_compact += 1
+        tag = seed_tag(self.seed)
+        if rng.random() < 0.5:
+            # region j has id j; chains page the lower half
+            j = rng.randrange(self.REGIONS // 2, self.REGIONS)
+            v = f"w{tag}{self.writes:06d}"
+            line = (f'write (name="nation" value="{v}" (<-left '
+                    f'name="in-region" right={guid_of(j)}))')
+            gd = guid_of(self.next_id)
+            want = f"ok ({gd} ({guid_of(self.next_id + 1)}))"
+            self.model.append([v, gd, j, True])
+            k, self.next_id = len(self.model) - 1, self.next_id + 2
+        else:
+            k = rng.randrange(len(self.model))
+            ent = self.model[k]
+            v = f"{ent[0].split('.')[0]}.{self.writes}"
+            line = f'write (guid~={ent[1]} name="nation" value="{v}")'
+            want = f"ok ({guid_of(self.next_id)})"
+            # the link names the old version: 2-hop reads miss it
+            self.model[k] = [v, guid_of(self.next_id), ent[2], False]
+            self.next_id += 1
+        self.recent.append(k)
+        del self.recent[:-self.RECENT]
+        return Op("write", "write", lambda: self._send(line, want))
+
+    def _start_chain(self, j: int) -> None:
+        g = self.g
+        self.chain = {
+            "line": region_members(g.regions[j], self.PAGE),
+            "want": [guid_of(g.nation_id(m)) for m in g.members[j]],
+            "got": [], "cursor": None,
+        }
 
     def _chain_page(self) -> Op:
         ch = self.chain
@@ -312,70 +411,8 @@ class ServeRead(Workload):
 
     def info(self) -> dict:
         return {"primitives": self.g.size, "nations": self.NATIONS,
-                "regions": self.REGIONS}
-
-
-class ServeWriteMix(ServeRead):
-    """80% reads, 20% protocol writes (new linked nations and ``guid~=``
-    version bumps); reads favour recently written keys."""
-
-    name = "serve_write_mix"
-    WRITE_SHARE, RECENT_SHARE, RECENT = 0.2, 0.3, 256
-
-    def setup(self, rep: int) -> None:
-        super().setup(rep)
-        self.reset_model()
-
-    def reset_model(self) -> None:
-        """Expected state of the freshly built store."""
-        g = self.g
-        # per nation: [value, guid, region index, still linked]
-        self.model = [
-            [v, guid_of(g.nation_id(i)), g.region_of[i], True]
-            for i, v in enumerate(g.nations)
-        ]
-        self.next_id = g.size
-        self.recent: list[int] = []
-        self.writes = 0
-
-    def primitives(self) -> int:
-        return self.next_id
-
-    def next_op(self) -> Op:
-        rng, g = self.rng, self.g
-        if rng.random() < self.WRITE_SHARE:
-            self.writes += 1
-            tag = seed_tag(self.seed)
-            if rng.random() < 0.5:
-                j = rng.randrange(len(g.regions))  # region j has id j
-                v = f"w{tag}{self.writes:06d}"
-                line = (f'write (name="nation" value="{v}" (<-left '
-                        f'name="in-region" right={guid_of(j)}))')
-                want = f"ok ({guid_of(self.next_id)} ({guid_of(self.next_id + 1)}))"
-                self.model.append([v, guid_of(self.next_id), j, True])
-                k, self.next_id = len(self.model) - 1, self.next_id + 2
-            else:
-                k = rng.randrange(len(self.model))
-                ent = self.model[k]
-                v = f"{ent[0].split('.')[0]}.{self.writes}"
-                line = f'write (guid~={ent[1]} name="nation" value="{v}")'
-                want = f"ok ({guid_of(self.next_id)})"
-                # the link names the old version: 2-hop reads miss it
-                self.model[k] = [v, guid_of(self.next_id), ent[2], False]
-                self.next_id += 1
-            self.recent.append(k)
-            del self.recent[:-self.RECENT]
-            return Op("write", "write", lambda: self._send(line, want))
-        if self.recent and rng.random() < self.RECENT_SHARE:
-            k = rng.choice(self.recent)
-        else:
-            k = rng.randrange(len(self.model))
-        v, gd, j, linked = self.model[k]
-        if linked and rng.random() < 0.4:
-            return Op("read", "2hop", lambda: self._send(
-                two_hop(v), ok_two_hop(v, g.regions[j])))
-        return Op("read", "1hop", lambda: self._send(
-            one_hop(v), ok_one_hop(gd, v)))
+                "regions": self.REGIONS, "writes": self.writes,
+                "compact_every": self.COMPACT_EVERY}
 
 
 #: inventory queries the analytic workload runs, one per operator
@@ -398,7 +435,7 @@ class Analytic(Workload):
 
     name = "analytic"
     spark_ops = True
-    warm_cycle = True
+    warm_seconds = 0.0
     NATIONS, REGIONS, TOPK = 10_000, 100, 5
 
     def __init__(self, spark, workdir, seed):
@@ -443,7 +480,9 @@ class Analytic(Workload):
         self.pos = 0
 
     def cycle_done(self) -> bool:
-        return self.pos >= len(self.cycle)
+        # whole cycles only: a loop cut inside a cycle would time a
+        # different mix of queries on a faster host
+        return self.pos > 0 and self.pos % len(self.cycle) == 0
 
     def next_op(self) -> Op:
         kind, label = self.cycle[self.pos % len(self.cycle)]
@@ -476,4 +515,4 @@ class Analytic(Workload):
                 "expected_rows": self.expected}
 
 
-WORKLOADS = {w.name: w for w in (ServeRead, ServeWriteMix, Analytic)}
+WORKLOADS = {w.name: w for w in (ServeWriteMix, Analytic)}
