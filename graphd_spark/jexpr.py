@@ -24,6 +24,7 @@ hold.
 from __future__ import annotations
 
 import decimal
+import itertools
 
 from pyspark.sql import functions as F
 
@@ -40,7 +41,7 @@ def _put(key, val):
         # FIFO: evict the oldest (dict preserves insertion order);
         # hot constants that age out simply rebuild
         drop = len(_JCACHE) - _JCACHE_CAP
-        for k in [next(iter(_JCACHE)) for _ in range(drop)]:
+        for k in list(itertools.islice(_JCACHE, drop)):
             del _JCACHE[k]
     return val
 

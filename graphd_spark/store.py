@@ -578,29 +578,35 @@ class ParquetLogStore(PrimitiveStore):
 
     _PART_RE = None  # compiled lazily below
 
-    def _fs_horizon(self) -> Optional[int]:
-        """Next id according to the commit files on disk — one
-        os.listdir, no Spark job.  None when the directory contains
-        parquet files outside the canonical part-<start>-<count>
-        naming (e.g. a Spark-written bulk import), whose id coverage
-        we can't read cheaply."""
+    def _fs_spans(self) -> Optional[list]:
+        """The commit files on disk as sorted (start, count, name)
+        spans — one os.listdir, no Spark job.  None when the directory
+        contains parquet files outside the canonical
+        part-<start>-<count> naming (e.g. a Spark-written bulk
+        import), whose id coverage we can't read cheaply."""
         import re as _re
 
         if ParquetLogStore._PART_RE is None:
             ParquetLogStore._PART_RE = _re.compile(
                 r"part-(\d{12})-(\d{8})\.parquet$"
             )
-        hi = 0
+        spans = []
         for f in os.listdir(self.path):
             if not f.endswith(".parquet"):
                 continue
             m = ParquetLogStore._PART_RE.match(f)
             if m is None:
                 return None
-            hi = max(hi, int(m.group(1)) + int(m.group(2)))
-        return hi
+            spans.append((int(m.group(1)), int(m.group(2)), f))
+        spans.sort()
+        return spans
 
-    #: (dir-stat signature, fs_horizon) — see mirror_current
+    @staticmethod
+    def _horizon_of(spans: list) -> int:
+        """Next id according to the commit-file spans."""
+        return max((s + c for s, c, _ in spans), default=0)
+
+    #: (dir-stat signature, _fs_spans listing) — see mirror_current
     _dir_sig_cache = None
 
     #: class-level write epoch: bumped by EVERY in-process commit-file
@@ -608,31 +614,32 @@ class ParquetLogStore(PrimitiveStore):
     #: append invalidates every session's TTL cache immediately
     _write_epoch = 0
 
-    #: (monotonic_ns of last verified-current check, epoch) — see
-    #: mirror_current's TTL fast path
+    #: (monotonic_ns when the verified-current proof began, epoch) —
+    #: see mirror_current's TTL fast path and _flush
     _mc_cache = None
 
-    #: TTL of a verified-current verdict.  Only extends a COLD
-    #: directory signature (mtime > 1s old — the same-jiffy rule
-    #: already refuses to cache hot directories), so the only thing
-    #: the TTL can hide is a cross-process append landing within the
-    #: window; in-process appends bump _write_epoch and re-check.
-    #: 10 ms (r10, was 2 ms): the stat behind an expired TTL costs
-    #: ~90 us on overlay filesystems, which at 40k+ q/s made the
-    #: re-probe a measurable serving tax; 10 ms is still far inside
-    #: any replica-visibility contract the reference implies.
+    #: TTL of a verified-current verdict.  Another in-process
+    #: session's append bumps _write_epoch and forces a re-check at
+    #: once (a store's own commits carry its verdict, see _flush), so
+    #: the only thing the TTL can hide is a cross-process append
+    #: landing within the window.
+    #: 10 ms: the stat behind an expired TTL costs ~90 us on overlay
+    #: filesystems, which at 40k+ q/s made the re-probe a measurable
+    #: serving tax; 10 ms is still far inside any replica-visibility
+    #: contract the reference implies.
     _MC_TTL_NS = 10_000_000  # 10 ms
 
     def mirror_current(self) -> bool:
         if not self._covers_all:
             return False
-        import time as _mtime
+        import time as _time
 
+        now = _time.monotonic_ns()
         mc = self._mc_cache
         if (
             mc is not None
             and mc[1] == ParquetLogStore._write_epoch
-            and _mtime.monotonic_ns() - mc[0] < self._MC_TTL_NS
+            and now - mc[0] < self._MC_TTL_NS
         ):
             return True
         # one os.stat of the log directory stands in for the listdir
@@ -643,10 +650,8 @@ class ParquetLogStore(PrimitiveStore):
         # directory is "hot" (mtime within the last second) is never
         # cached — a foreign append landing in the same jiffy as the
         # listdir would otherwise alias the signature and hide
-        # forever.  Steady-state serving (no recent appends) drops
-        # from one listdir+regex per request to one stat.
-        import time as _time
-
+        # forever.  Steady-state serving (no recent appends) pays one
+        # stat per TTL instead of a listdir+regex.
         try:
             st = os.stat(self.path)
             sig = (st.st_mtime_ns, st.st_ctime_ns, st.st_size, st.st_ino)
@@ -654,50 +659,44 @@ class ParquetLogStore(PrimitiveStore):
             sig = None
         cached = self._dir_sig_cache
         if sig is not None and cached is not None and cached[0] == sig:
-            fs = cached[1]
+            spans = cached[1]
         else:
-            fs = self._fs_horizon()
+            spans = self._fs_spans()
             if (
                 sig is not None
-                and fs is not None
+                and spans is not None
                 and _time.time_ns() - sig[0] > 1_000_000_000
             ):
-                self._dir_sig_cache = (sig, fs)
+                self._dir_sig_cache = (sig, spans)
             else:
                 self._dir_sig_cache = None
-        if fs is None:
+        if spans is None:
             self._mc_cache = None
             return False
-        if fs <= self.next_id:
-            # TTL-cache the verdict only when the signature itself was
-            # cacheable (cold directory, same-jiffy rule above)
-            self._mc_cache = (
-                (_mtime.monotonic_ns(), ParquetLogStore._write_epoch)
-                if self._dir_sig_cache is not None
-                else None
-            )
+        if self._horizon_of(spans) <= self.next_id:
+            # the verdict holds for one TTL whether the directory is
+            # hot or cold: a listing is authoritative when it runs,
+            # and the same-jiffy rule above guards only the signature
+            # cache, which has no expiry
+            self._mc_cache = (now, ParquetLogStore._write_epoch)
             return True
         self._dir_sig_cache = None  # absorbing changes our own state
         self._mc_cache = None
-        return self._absorb_delta(fs)
+        return self._absorb_delta(spans)
 
-    def _absorb_delta(self, fs_horizon: int) -> bool:
+    def _absorb_delta(self, spans: list) -> bool:
         """Another session appended to the shared log: pull the delta
-        commit files into the mirror driver-side (pyarrow — no Spark
-        job), keeping the serving fast path hot under multi-session
-        writes."""
+        commit files (``spans`` from _fs_spans) into the mirror
+        driver-side (pyarrow — no Spark job), keeping the serving fast
+        path hot under multi-session writes."""
         import pyarrow.parquet as pq
 
         from graphd_spark.model import su_decode
 
-        files = []
-        for f in os.listdir(self.path):
-            m = ParquetLogStore._PART_RE.match(f)
-            if m and int(m.group(1)) >= self.next_id:
-                files.append((int(m.group(1)), f))
-        files.sort()
-        expect = self.next_id
-        for start, f in files:
+        expect = base = self.next_id
+        for start, _, f in spans:
+            if start < base:
+                continue
             if start != expect:
                 return False  # gap: fall back to the Spark view
             table = pq.read_table(os.path.join(self.path, f))
@@ -722,7 +721,7 @@ class ParquetLogStore(PrimitiveStore):
                 self._index_prim(p)
             expect += table.num_rows
         self._flushed = expect
-        return expect == fs_horizon
+        return expect == self._horizon_of(spans)
 
     def hydrate(self, limit: int = 200_000) -> bool:
         """Load the whole log into the driver mirror — the serving
@@ -835,8 +834,15 @@ class ParquetLogStore(PrimitiveStore):
         pq.write_table(table, fname)
         self._flushed = self.next_id
         # any in-process commit write invalidates every session's
-        # mirror_current TTL cache (see _write_epoch)
+        # mirror_current TTL cache (see _write_epoch) — except this
+        # store's own verdict, when it was taken at the epoch just
+        # before this bump (no other writer came in between): it moves
+        # to the new epoch with its original timestamp, so own writes
+        # never extend the TTL
+        mc = self._mc_cache
         ParquetLogStore._write_epoch += 1
+        if mc is not None and mc[1] == ParquetLogStore._write_epoch - 1:
+            self._mc_cache = (mc[0], ParquetLogStore._write_epoch)
 
     def compact(self) -> None:
         """Merge the canonical commit files into ONE part file — the
@@ -848,30 +854,19 @@ class ParquetLogStore(PrimitiveStore):
         31 tiny parquet files, re-opened by each compiled read).
         Refuses foreign layouts (files outside the part-<start>-<count>
         naming, e.g. a Spark-written bulk import) and non-contiguous
-        logs, same rule as _fs_horizon."""
-        if ParquetLogStore._PART_RE is None:
-            self._fs_horizon()  # compiles the lazy regex
-        files = sorted(
-            f for f in os.listdir(self.path) if f.endswith(".parquet")
-        )
-        if len(files) <= 1:
-            return
-        spans = []
-        for f in files:
-            m = ParquetLogStore._PART_RE.match(f)
-            if m is None:
-                return  # foreign layout: leave it alone
-            spans.append((int(m.group(1)), int(m.group(2))))
+        logs, same rule as _fs_spans."""
+        spans = self._fs_spans()
+        if spans is None or len(spans) <= 1:
+            return  # foreign layout, or nothing to merge
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         tables = [
-            pq.read_table(os.path.join(self.path, f)) for f in files
+            pq.read_table(os.path.join(self.path, f)) for _, _, f in spans
         ]
         merged = pa.concat_tables(tables).sort_by("id")
-        start = min(s for s, _ in spans)
-        horizon = max(s + c for s, c in spans)
-        if start + merged.num_rows != horizon:
+        start = spans[0][0]
+        if start + merged.num_rows != self._horizon_of(spans):
             return  # gaps/overlap: refuse rather than mint a lying name
         fname = os.path.join(
             self.path,
@@ -879,7 +874,7 @@ class ParquetLogStore(PrimitiveStore):
         )
         tmp = fname + ".tmp"
         pq.write_table(merged, tmp)
-        for f in files:
+        for _, _, f in spans:
             os.unlink(os.path.join(self.path, f))
         os.replace(tmp, fname)
         ParquetLogStore._write_epoch += 1

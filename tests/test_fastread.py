@@ -257,6 +257,157 @@ def test_dir_sig_cache_never_hides_foreign_appends(spark, tmp_path):
     assert c is None or c[0] != sig0
 
 
+def _frozen_clock(monkeypatch):
+    """Freeze time.monotonic_ns (mirror_current's TTL clock); the
+    returned one-element list holds the reading and can be advanced."""
+    import time
+
+    now = [time.monotonic_ns()]
+    monkeypatch.setattr(time, "monotonic_ns", lambda: now[0])
+    return now
+
+
+def _count_listdir(monkeypatch, path):
+    """Count os.listdir calls on ``path``."""
+    import os
+
+    calls = []
+    real = os.listdir
+
+    def listdir(p="."):
+        if p == path:
+            calls.append(p)
+        return real(p)
+
+    monkeypatch.setattr(os, "listdir", listdir)
+    return calls
+
+
+def test_own_writes_keep_the_ttl_verdict(spark, tmp_path, monkeypatch):
+    """A session that alternates its own commits and reads in a hot
+    log directory proves freshness with one listing per TTL, not one
+    per read: a listing arms the TTL even in a hot directory, and the
+    session's own commit carries its verdict to the new write epoch
+    with the verdict's original timestamp (own writes never extend
+    the TTL)."""
+    from graphd_spark.store import ParquetLogStore
+
+    log = str(tmp_path / "log")
+    GraphSession(spark, log_path=log).request('write (name="w" value="v0")')
+    sess = GraphSession.attach(spark, log)
+    assert sess.store.hydrate()
+    now = _frozen_clock(monkeypatch)
+    listed = _count_listdir(monkeypatch, log)
+    for i in range(1, 6):
+        assert sess.request(f'write (name="w" value="v{i}")').startswith(
+            "ok ("
+        )
+        assert sess.request(
+            f'read (value="v{i}" result=((value)))'
+        ) == f'ok (("v{i}"))'
+    assert len(listed) == 1
+    # a commit by another in-process store in between (here on another
+    # log) moves the epoch past the verdict: the session's next commit
+    # cannot carry it, and its next read lists again
+    other = GraphSession(spark, log_path=str(tmp_path / "other"))
+    other.request('write (value="x")')
+    sess.request('write (name="w" value="v6")')
+    assert sess.request(
+        'read (value="v6" result=((value)))'
+    ) == 'ok (("v6"))'
+    assert len(listed) == 2
+    # a write half-way through the TTL keeps the verdict's original
+    # timestamp, so the read one TTL after the listing lists again
+    ttl = ParquetLogStore._MC_TTL_NS
+    now[0] += ttl // 2
+    sess.request('write (name="w" value="v7")')
+    now[0] += ttl - ttl // 2
+    assert sess.request(
+        'read (value="v7" result=((value)))'
+    ) == 'ok (("v7"))'
+    assert len(listed) == 3
+
+
+def test_other_session_write_visible_on_next_read(
+    spark, tmp_path, monkeypatch
+):
+    """A write by another in-process session bumps the write epoch,
+    so it reaches a reader holding a fresh TTL verdict on the
+    reader's very next read, hot directory or not."""
+    log = str(tmp_path / "log")
+    writer = GraphSession(spark, log_path=log)
+    writer.request('write (name="w" value="v0")')
+    reader = GraphSession.attach(spark, log)
+    assert reader.store.hydrate()
+    _frozen_clock(monkeypatch)  # the TTL never expires on its own
+    reader.request('write (name="r" value="own")')
+    assert reader.request(
+        'read (value="own" result=((value)))'
+    ) == 'ok (("own"))'
+    # the writer absorbs the reader's commit before writing itself
+    # (concurrent writers to one log are out of scope)
+    assert writer.request(
+        'read (value="own" result=((value)))'
+    ) == 'ok (("own"))'
+    assert reader.store._mc_cache is not None  # verdict armed
+    writer.request('write (name="w" value="theirs")')
+    assert reader.request(
+        'read (value="theirs" result=((value)))'
+    ) == 'ok (("theirs"))'
+
+
+def test_cross_process_append_visible_after_ttl(
+    spark, tmp_path, monkeypatch
+):
+    """A canonical commit file written straight through pyarrow (a
+    stand-in for another process's append: no write-epoch bump) into
+    a hot log directory is absorbed on the first read after the TTL
+    elapses."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from graphd_spark.model import PRIMITIVE_FIELDS, su_encode
+    from graphd_spark.store import ParquetLogStore, _arrow_schema
+
+    log = str(tmp_path / "log")
+    writer = GraphSession(spark, log_path=log)
+    writer.request('write (name="w" value="v0")')
+    reader = GraphSession.attach(spark, log)
+    assert reader.store.hydrate()
+    # the foreign primitive: the same history replayed in memory, so
+    # its id and guid continue the log
+    twin = GraphSession()
+    twin.request('write (name="w" value="v0")')
+    twin.request('write (name="w" value="foreign")')
+    p = twin.store.rows[-1]
+    assert p.id == reader.store.next_id
+
+    now = _frozen_clock(monkeypatch)
+    assert reader.request(
+        'read (value="v0" result=((value)))'
+    ) == 'ok (("v0"))'
+    assert reader.store._mc_cache is not None  # verdict armed
+    cols = {
+        f: [su_encode(v) if f in ("name", "value") else v]
+        for f in PRIMITIVE_FIELDS
+        for v in (getattr(p, f),)
+    }
+    pq.write_table(
+        pa.table(cols, schema=_arrow_schema()),
+        os.path.join(log, f"part-{p.id:012d}-{1:08d}.parquet"),
+    )
+    # hot: modified within the signature cache's 1 s guard
+    assert os.stat(log).st_mtime_ns > time.time_ns() - 1_000_000_000
+    now[0] += ParquetLogStore._MC_TTL_NS
+    assert reader.request(
+        'read (value="foreign" result=((value)))'
+    ) == 'ok (("foreign"))'
+    assert reader.store.next_id == p.id + 1
+
+
 def test_versioned_link_target_dangles(spark):
     """Traversal joins on RAW guids (probed against the reference
     binary, roundtrip seeds 47/93/95/103): versioning a link TARGET

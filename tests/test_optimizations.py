@@ -244,6 +244,17 @@ def test_jexpr_cache_is_bounded(spark):
     assert jx._l("bound-pin-warm") is jx._l("bound-pin-warm")
 
 
+def test_jexpr_cap_below_size_evicts_oldest_first(monkeypatch):
+    # a cap lowered below the current size drops several entries in
+    # one put: the oldest ones, in insertion order
+    import graphd_spark.jexpr as jx
+
+    monkeypatch.setattr(jx, "_JCACHE", {k: k for k in range(10)})
+    monkeypatch.setattr(jx, "_JCACHE_CAP", 4)
+    assert jx._put("new", "v") == "v"
+    assert list(jx._JCACHE) == [7, 8, 9, "new"]
+
+
 def test_jexpr_float_literals_key_by_repr(spark):
     # 0.0 / -0.0 compare equal but are different literals; NaN never
     # compares equal to itself but must key stably (no dead entries)

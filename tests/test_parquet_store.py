@@ -167,7 +167,7 @@ def test_compact_merges_commit_files_content_identical(spark):
     assert files[0] == f"part-{0:012d}-{7:08d}.parquet"
     after = sorted(tuple(r) for r in sess.store.to_df(spark).collect())
     assert after == before
-    assert sess.store._fs_horizon() == horizon_before
+    assert sess.store._horizon_of(sess.store._fs_spans()) == horizon_before
     # every probe replies byte-identically across the compaction
     assert [sess.request(p) for p in probes] == replies_before
     # a fresh attach sees the compacted log
