@@ -23,6 +23,7 @@ ticks (ref graphd/graphd.c graphd_set_time).
 from __future__ import annotations
 
 import calendar
+import operator
 import time
 from dataclasses import dataclass
 
@@ -63,7 +64,7 @@ _SU_MARK = "\ue000"
 
 
 def su_encode(s: str) -> str:
-    if not any("\udc80" <= ch <= "\udcff" for ch in s):
+    if s.isascii() or not any("\udc80" <= ch <= "\udcff" for ch in s):
         return s
     return "".join(
         "%s%02x" % (_SU_MARK, ord(ch) & 0xFF)
@@ -303,6 +304,9 @@ PRIMITIVES_SCHEMA = StructType(
 )
 
 PRIMITIVE_FIELDS = [f.name for f in PRIMITIVES_SCHEMA.fields]
+_ROW = operator.attrgetter(*PRIMITIVE_FIELDS)
+_NAME_AT = PRIMITIVE_FIELDS.index("name")
+_VALUE_AT = PRIMITIVE_FIELDS.index("value")
 
 
 @dataclass
@@ -334,12 +338,16 @@ class Primitive:
     generation: int = 0
 
     def as_row(self) -> tuple:
-        return tuple(
-            su_encode(v)
-            if f in ("name", "value") and isinstance(v, str) else v
-            for f in PRIMITIVE_FIELDS
-            for v in (getattr(self, f),)
-        )
+        """The PRIMITIVES_SCHEMA row; name and value su_encode'd."""
+        row = _ROW(self)
+        if self.name is None and self.value is None:
+            return row
+        row = list(row)
+        if self.name is not None:
+            row[_NAME_AT] = su_encode(self.name)
+        if self.value is not None:
+            row[_VALUE_AT] = su_encode(self.value)
+        return tuple(row)
 
     @property
     def is_link(self) -> bool:

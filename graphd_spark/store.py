@@ -32,6 +32,8 @@ disk and analytical readers only ever see committed state.
 
 from __future__ import annotations
 
+import contextlib
+import functools
 import os
 from typing import Iterator, Optional
 
@@ -486,9 +488,11 @@ class PrimitiveStore:
         return self.next_id
 
 
-# -- arrow schema mirroring PRIMITIVES_SCHEMA (driver-side flush) ---------
+# -- commit-file format (driver-side pyarrow) ---------------------------
 
+@functools.cache
 def _arrow_schema():
+    """The arrow schema of a log part, mirroring PRIMITIVES_SCHEMA."""
     import pyarrow as pa
 
     typ = {
@@ -506,18 +510,80 @@ def _arrow_schema():
     )
 
 
+def _prims_table(prims: list):
+    """``prims`` as a log-part table, built by one ``pa.array`` call
+    over their su_encode'd rows (``Primitive.as_row``)."""
+    import pyarrow as pa
+
+    schema = _arrow_schema()
+    rows = pa.array([p.as_row() for p in prims], type=pa.struct(schema))
+    return pa.Table.from_batches(
+        [pa.RecordBatch.from_struct_array(rows)], schema=schema
+    )
+
+
+def _write_part(dirpath: str, table, start: int, *, durable: bool) -> None:
+    """Land ``table`` in ``dirpath`` as ``part-<start>-<count>.parquet``.
+
+    The file is serialized in memory, written under a hidden
+    ``.part-….parquet.tmp`` name and renamed into place, so no reader
+    ever sees a partial part: Spark skips dot-files and _fs_spans
+    skips names not ending in ``.parquet``.  ``durable`` fsyncs the
+    file before the rename and the directory after it.
+
+    Dictionary encoding is off: most columns are unique guids, where
+    dictionary pages only add encode time and bytes.  The arrow schema
+    is not stored in the footer: the parquet types read back as the
+    same arrow types, and Spark never reads it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    name = f"part-{start:012d}-{table.num_rows:08d}.parquet"
+    tmp = os.path.join(dirpath, f".{name}.tmp")
+    sink = pa.BufferOutputStream()
+    pq.write_table(
+        table, sink, compression="snappy", use_dictionary=False,
+        store_schema=False,
+    )
+    try:
+        with open(tmp, "wb") as fh:
+            fh.write(sink.getvalue())
+            if durable:
+                fh.flush()
+                os.fsync(fh.fileno())
+        os.replace(tmp, os.path.join(dirpath, name))
+    except BaseException:
+        with contextlib.suppress(OSError):
+            os.unlink(tmp)
+        raise
+    if durable:
+        fd = os.open(dirpath, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+
+
 class ParquetLogStore(PrimitiveStore):
     """Primitive store whose source of truth is a parquet log directory.
 
     - ``to_df`` = ``spark.read.parquet(log)`` (lazy; Catalyst pushes
       filters into the files) — the read path never serializes the
       store through the driver.
-    - ``commit`` appends the transaction's delta as ONE parquet file,
-      written driver-side with pyarrow (~ms; no Spark job): the analog
-      of the reference's istore append + index update
-      (libaddb/README:9-15).  At scale a background compactor would
-      merge small commit files; commit granularity is what a replica
-      stream tails (streaming.py).
+    - ``commit`` appends the transaction's delta as ONE parquet part,
+      ``part-<start>-<count>.parquet``, written driver-side with
+      pyarrow (~1 ms; no Spark job): the analog of the reference's
+      istore append + index update (libaddb/README:9-15).  The part
+      lands by rename from a hidden tmp file, so readers see all of a
+      commit or none of it.  A commit is not fsynced: it survives a
+      process crash once ``commit`` returns, but not a power loss.
+      Commit granularity is what a replica stream tails
+      (streaming.py).
+    - ``compact`` merges the parts into one.  The merged part is
+      fsynced and renamed into place, and the directory fsynced,
+      before the parts it covers are unlinked; a crash in between
+      leaves covered parts, which the span listing ignores and
+      ``attach`` unlinks before its first Spark read.
     - the driver keeps a bounded suffix cache (``cache_rows``) of
       recent primitives for the write annotators' point lookups (ref
       graphd-write.c:596-782); lookups below the cached range fall back
@@ -545,8 +611,12 @@ class ParquetLogStore(PrimitiveStore):
         self._lookup_cache: dict[str, Optional[Primitive]] = {}
         os.makedirs(path, exist_ok=True)
         if fresh:
+            # hidden ".part-" files are tmp parts of a crashed commit;
+            # attach leaves them alone (another process may be writing)
             for f in os.listdir(path):
-                if f.endswith(".parquet") or f.startswith(("part-", "_")):
+                if f.endswith(".parquet") or f.startswith(
+                    ("part-", "_", ".part-")
+                ):
                     os.unlink(os.path.join(path, f))
 
     @classmethod
@@ -557,6 +627,10 @@ class ParquetLogStore(PrimitiveStore):
         the last row's (id, guid) is collected to set the id horizon
         and adopt the database id."""
         store = cls(spark, path, db_id=db_id)
+        # finish an interrupted compaction before Spark lists the files
+        covered: list = []
+        store._fs_spans(covered)
+        store._unlink_parts(covered)
         from pyspark.sql import functions as F
 
         df = store._log_df()
@@ -578,12 +652,16 @@ class ParquetLogStore(PrimitiveStore):
 
     _PART_RE = None  # compiled lazily below
 
-    def _fs_spans(self) -> Optional[list]:
+    def _fs_spans(self, covered: Optional[list] = None) -> Optional[list]:
         """The commit files on disk as sorted (start, count, name)
         spans — one os.listdir, no Spark job.  None when the directory
         contains parquet files outside the canonical
         part-<start>-<count> naming (e.g. a Spark-written bulk
-        import), whose id coverage we can't read cheaply."""
+        import), whose id coverage we can't read cheaply.
+
+        A span inside a wider span that starts at or before it is a
+        part an interrupted compaction left behind: it is dropped
+        (and its name appended to ``covered`` when given)."""
         import re as _re
 
         if ParquetLogStore._PART_RE is None:
@@ -598,8 +676,16 @@ class ParquetLogStore(PrimitiveStore):
             if m is None:
                 return None
             spans.append((int(m.group(1)), int(m.group(2)), f))
-        spans.sort()
-        return spans
+        spans.sort(key=lambda s: (s[0], -s[1]))
+        live, end = [], -1
+        for s in spans:
+            if s[0] + s[1] <= end:
+                if covered is not None:
+                    covered.append(s[2])
+            else:
+                live.append(s)
+                end = s[0] + s[1]
+        return live
 
     @staticmethod
     def _horizon_of(spans: list) -> int:
@@ -806,32 +892,14 @@ class ParquetLogStore(PrimitiveStore):
         self._trim_cache()
 
     def _flush(self) -> None:
-        """Write rows[_flushed:] as one parquet commit file (driver-side
-        pyarrow append — no Spark job on the OLTP write path)."""
+        """Write rows[_flushed:] as one log part (driver-side pyarrow,
+        no Spark job on the OLTP write path)."""
         pend = self.rows[self._flushed - self._base:]
         if not pend:
             return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from graphd_spark.model import su_encode
-
-        schema = _arrow_schema()
-        cols = {
-            f.name: [
-                su_encode(v)
-                if f.name in ("name", "value") and isinstance(v, str)
-                else v
-                for p in pend
-                for v in (getattr(p, f.name),)
-            ]
-            for f in schema
-        }
-        table = pa.table(cols, schema=schema)
-        fname = os.path.join(
-            self.path, f"part-{self._flushed:012d}-{len(pend):08d}.parquet"
+        _write_part(
+            self.path, _prims_table(pend), self._flushed, durable=False
         )
-        pq.write_table(table, fname)
         self._flushed = self.next_id
         # any in-process commit write invalidates every session's
         # mirror_current TTL cache (see _write_epoch) — except this
@@ -854,7 +922,13 @@ class ParquetLogStore(PrimitiveStore):
         31 tiny parquet files, re-opened by each compiled read).
         Refuses foreign layouts (files outside the part-<start>-<count>
         naming, e.g. a Spark-written bulk import) and non-contiguous
-        logs, same rule as _fs_spans."""
+        logs, same rule as _fs_spans.
+
+        Crash rule: the merged part lands durably (fsync, rename,
+        directory fsync) before any old part is unlinked, so a crash
+        leaves either the old parts alone or the merged part beside
+        some of the parts it covers; _fs_spans ignores covered parts
+        and ``attach`` unlinks them."""
         spans = self._fs_spans()
         if spans is None or len(spans) <= 1:
             return  # foreign layout, or nothing to merge
@@ -868,29 +942,31 @@ class ParquetLogStore(PrimitiveStore):
         start = spans[0][0]
         if start + merged.num_rows != self._horizon_of(spans):
             return  # gaps/overlap: refuse rather than mint a lying name
-        fname = os.path.join(
-            self.path,
-            f"part-{start:012d}-{merged.num_rows:08d}.parquet",
-        )
-        tmp = fname + ".tmp"
-        pq.write_table(merged, tmp)
-        for _, _, f in spans:
-            os.unlink(os.path.join(self.path, f))
-        os.replace(tmp, fname)
-        ParquetLogStore._write_epoch += 1
-        self._dir_sig_cache = None
-        self._mc_cache = None
-        # drop the memoized lazy frame: its plan pins the old file
-        # listing (content is identical, so _version stays — derived
-        # caches keyed on it remain valid)
-        self._df = None
-        # Spark's shared file-status cache may still list the old
-        # commit files for this path; drop those entries so the next
-        # scan plans against the compacted layout
+        _write_part(self.path, merged, start, durable=True)
         try:
-            self._spark().catalog.refreshByPath(self.path)
-        except Exception:
-            pass  # no live session: nothing cached a listing yet
+            self._unlink_parts(f for _, _, f in spans)
+        finally:
+            ParquetLogStore._write_epoch += 1
+            self._dir_sig_cache = None
+            self._mc_cache = None
+            # drop the memoized lazy frame: its plan pins the old file
+            # listing (content is identical, so _version stays —
+            # derived caches keyed on it remain valid)
+            self._df = None
+            # Spark's shared file-status cache may still list the old
+            # commit files for this path; drop those entries so the
+            # next scan plans against the compacted layout
+            try:
+                self._spark().catalog.refreshByPath(self.path)
+            except Exception:
+                pass  # no live session: nothing cached a listing yet
+
+    def _unlink_parts(self, names) -> None:
+        for f in names:
+            # another process finishing the same compaction may have
+            # unlinked it first
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(os.path.join(self.path, f))
 
     def _trim_cache(self) -> None:
         if self.cache_rows is None or len(self.rows) <= self.cache_rows:

@@ -137,28 +137,35 @@ def test_rollback_never_touches_disk(spark):
     )
 
 
-def test_compact_merges_commit_files_content_identical(spark):
-    """compact() folds N commit files into one part file with the
-    same rows, same horizon, and working reads before/after."""
-    import os
-
+def _write_versioned_log(spark):
+    """Six commits plus a version bump: seven one-primitive parts."""
     sess = _parquet_session(spark)
     guids = []
     for i in range(6):
         r = sess.request(f'write (name="n" value="v{i}")')
         guids.append(r.split("(")[1].split(" ")[0])
     sess.request(f'write (guid~={guids[0]} name="n" value="v0b")')
+    probes = [
+        'read (name="n" value="v3" result=((value)))',
+        'read (name="n" result=((value guid)))',
+        f'read (guid={guids[1]} result=((value)))',
+        f'read (guid~={guids[0]} result=((value)))',
+    ]
+    return sess, probes
+
+
+def test_compact_merges_commit_files_content_identical(spark):
+    """compact() folds N commit files into one part file with the
+    same rows, same horizon, and working reads before/after."""
+    import os
+
+    sess, probes = _write_versioned_log(spark)
     log = sess.log_path
     files = [f for f in os.listdir(log) if f.endswith(".parquet")]
     assert len(files) == 7
     before = sorted(
         tuple(r) for r in sess.store.to_df(spark).collect()
     )
-    probes = [
-        'read (name="n" value="v3" result=((value)))',
-        'read (name="n" result=((value guid)))',
-        f'read (guid={guids[1]} result=((value)))',
-    ]
     replies_before = [sess.request(p) for p in probes]
     horizon_before = sess.store.next_id
     sess.store.compact()
@@ -208,3 +215,173 @@ def test_compact_refuses_foreign_layout(spark):
     assert sorted(
         f for f in os.listdir(log) if f.endswith(".parquet")
     ) == names_before
+
+
+def _parquet_names(log):
+    import os
+
+    return sorted(f for f in os.listdir(log) if f.endswith(".parquet"))
+
+
+@pytest.mark.parametrize("fail", ["replace", "unlink"])
+def test_compact_interrupted_keeps_log_intact(spark, monkeypatch, fail):
+    """A compaction that dies before its rename leaves the old parts
+    alone; one that dies after the rename, with only the first old
+    part unlinked, leaves the merged part beside parts it covers.
+    Either way a re-attach sees the pre-compaction rows, horizon and
+    replies, and the covered parts are gone after the attach."""
+    import os
+
+    sess, probes = _write_versioned_log(spark)
+    log = sess.log_path
+    old_parts = _parquet_names(log)
+    assert len(old_parts) == 7
+    rows_before = sorted(tuple(r) for r in sess.store.to_df(spark).collect())
+    horizon = sess.store.next_id
+    replies_before = [sess.request(p) for p in probes]
+
+    real = getattr(os, fail)
+    calls = []
+
+    def flaky(*args, **kwargs):
+        calls.append(args)
+        if fail == "replace" or len(calls) > 1:
+            raise OSError("injected fault")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(os, fail, flaky)
+    with pytest.raises(OSError, match="injected fault"):
+        sess.store.compact()
+    monkeypatch.undo()
+
+    merged = f"part-{0:012d}-{7:08d}.parquet"
+    names = _parquet_names(log)
+    if fail == "replace":
+        assert names == old_parts
+    else:
+        assert names == sorted([merged] + old_parts[1:])
+        covered = []
+        assert sess.store._fs_spans(covered) == [(0, 7, merged)]
+        assert sorted(covered) == old_parts[1:]
+    assert not [f for f in os.listdir(log) if f.endswith(".tmp")]
+
+    sess2 = GraphSession.attach(spark, log)
+    assert _parquet_names(log) == (
+        old_parts if fail == "replace" else [merged]
+    )
+    assert sess2.store.next_id == horizon
+    rows_after = sorted(tuple(r) for r in sess2.store.to_df(spark).collect())
+    assert rows_after == rows_before
+    assert [sess2.request(p) for p in probes] == replies_before
+
+
+def test_commit_lands_by_rename(spark, monkeypatch):
+    """A commit whose rename fails publishes nothing: no part under a
+    canonical name, no tmp file left, and a fresh attach sees only
+    the rows committed before it.  A normal commit leaves no tmp."""
+    import os
+
+    sess = _parquet_session(spark)
+    sess.request('write (value="a")')
+    sess.request('write (value="b")')
+    log = sess.log_path
+    names = _parquet_names(log)
+    assert not [f for f in os.listdir(log) if not f.endswith(".parquet")]
+    count = sess.store.next_id
+
+    def broken(*args, **kwargs):
+        raise OSError("injected fault")
+
+    store = sess.store
+    store.begin()
+    store.append(value="lost")
+    monkeypatch.setattr(os, "replace", broken)
+    with pytest.raises(OSError, match="injected fault"):
+        store.commit()
+    monkeypatch.undo()
+    assert sorted(os.listdir(log)) == names
+    reader = GraphSession.attach(spark, log)
+    assert reader.store.next_id == count
+    assert reader.store.to_df(spark).count() == count
+
+
+def test_tmp_parts_invisible_and_kept_by_attach(spark):
+    """A hidden tmp part (a crashed commit's, or one another process
+    is still writing) is invisible to Spark and to the span listing;
+    attach leaves it, a fresh store removes it."""
+    import os
+
+    from graphd_spark.store import ParquetLogStore
+
+    sess = _parquet_session(spark)
+    sess.request('write (value="a")')
+    log = sess.log_path
+    count = sess.store.next_id
+    tmp = os.path.join(log, f".part-{count:012d}-{1:08d}.parquet.tmp")
+    with open(tmp, "wb") as fh:
+        fh.write(b"PAR1 partial")
+    reader = GraphSession.attach(spark, log)
+    assert os.path.exists(tmp)
+    assert reader.store.next_id == count
+    assert reader.store.to_df(spark).count() == count
+    assert reader.store._horizon_of(reader.store._fs_spans()) == count
+    ParquetLogStore(spark, log, fresh=True)
+    assert os.listdir(log) == []
+
+
+def test_commit_file_contract(spark):
+    """A commit file reads back, schema included, as the table the
+    original per-column writer built; no column chunk is dictionary
+    encoded; Spark collects the same rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from graphd_spark.model import PRIMITIVE_FIELDS, su_encode
+    from graphd_spark.store import ParquetLogStore, _arrow_schema
+
+    log = tempfile.mkdtemp(prefix="graphd_log_")
+    store = ParquetLogStore(spark, log, fresh=True)
+    store.begin()
+    a = store.append(name="n\udcff", value="v\udc80x")  # broken UTF-8
+    # value_norm is written as is, and a lone surrogate cannot cross
+    # into Arrow: give this row an encodable one
+    a.value_norm = su_encode(a.value_norm)
+    store.append(name="plain", left=a.guid, right=a.guid,
+                 live=False, archival=False)
+    store.append(value="3.5", typeguid=a.guid, scope=a.guid)
+    store.commit()
+    pend = store.rows
+    assert {type(p.value_fkey) for p in pend} == {bytes, type(None)}
+    assert {p.txstart for p in pend} == {True, False}
+    assert {p.live for p in pend} == {True, False}
+    assert any(p.left is None for p in pend)
+
+    (part,) = _parquet_names(log)
+    assert part == f"part-{0:012d}-{3:08d}.parquet"
+    got = pq.read_table(os.path.join(log, part))
+    cols = {
+        f: [
+            su_encode(v) if f in ("name", "value") and isinstance(v, str)
+            else v
+            for p in pend
+            for v in (getattr(p, f),)
+        ]
+        for f in PRIMITIVE_FIELDS
+    }
+    want = pa.table(cols, schema=_arrow_schema())
+    assert got.schema.equals(want.schema)
+    assert got.equals(want)
+    meta = pq.ParquetFile(os.path.join(log, part)).metadata
+    for rg in range(meta.num_row_groups):
+        for c in range(meta.num_columns):
+            chunk = meta.row_group(rg).column(c)
+            assert not chunk.has_dictionary_page, chunk.path_in_schema
+            assert not any("DICTIONARY" in e for e in chunk.encodings)
+    spark_rows = sorted(
+        tuple(r) for r in store.to_df(spark).collect()
+    )
+    assert spark_rows == sorted(
+        tuple(r[f] for f in PRIMITIVE_FIELDS) for r in want.to_pylist()
+    )
