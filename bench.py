@@ -328,10 +328,11 @@ def _serving_bench(spark, sf_dir: str, seconds: float = 5.0) -> dict:
       point indexes (fastread.py) with no Spark job — the same
       architecture as the reference's in-process serving — so this
       measures the single-threaded end-to-end request loop.  The
-      8-value template cycle hits the session's eval cache (the
-      reference's iterator-resource-cache analog), so this is the
-      HOT-template number; a cold template costs one extra candidate
-      evaluation.
+      8-value template cycle repeats its lines, so the shape cache's
+      exact-line memo serves the parse and the store's eval cache
+      (the reference's iterator-resource-cache analog) the candidate
+      evaluation: this is the HOT-template number; a cold template
+      costs one extra candidate evaluation.
       Analytical shapes (sorts, ranges, cursors) fall back to the
       Spark path, whose per-request floor is Spark's per-action
       latency; that trade is the design.
@@ -436,10 +437,11 @@ def _serving_bench(spark, sf_dir: str, seconds: float = 5.0) -> dict:
     out["deep_qps_1hop"] = _deep_serving_qps(spark, seconds=seconds)
     # cold 2-hop: every request line is distinct (100k distinct probe
     # values over a 2-hop-shaped 100k-primitive mirror), so neither
-    # the eval cache nor the line-keyed AST cache can serve any timed
-    # request — the honest counterpart to the hot protocol_qps_2hop
-    # template cycle.  What CAN amortize across these requests is the
-    # prepared-parse shape cache (gql/prepared.py): the template's
+    # the eval cache nor the shape cache's exact-line memo serves a
+    # timed request — the honest counterpart to the hot
+    # protocol_qps_2hop template cycle.  What CAN amortize across
+    # these requests is the prepared-parse shape cache
+    # (gql/prepared.py): the template's
     # SHAPE repeats, so each request re-binds its literals into the
     # cached parse instead of re-parsing — that is the serving
     # architecture, not a benchmark artifact.  deep_qps_2hop_parse_floor
@@ -517,7 +519,7 @@ def _deep_serving_qps_2hop(spark, n: int = 50_000, seconds: float = 5.0,
     """Cold 2-hop serving: the nation→link→region template shape at
     working-set scale (n nations + n link primitives + 997 regions),
     probed with n DISTINCT request lines so the eval cache and the
-    line-keyed AST cache never serve a timed request.  The
+    shape cache's exact-line memo never serve a timed request.  The
     prepared-parse shape cache still binds each request's literals
     into the once-parsed template (that is the design); pass
     ``prepared_shapes=False`` to measure the full-parse floor."""

@@ -18,6 +18,7 @@ from graphd_spark.compiler import Compiler
 from graphd_spark.fastread import FastReader, Unsupported
 from graphd_spark.gql.lexer import LexError
 from graphd_spark.gql.parser import ParseError, parse_request
+from graphd_spark.gql.prepared import ShapeCache
 from graphd_spark.pattern import (
     Assembler,
     GraphdError,
@@ -81,6 +82,14 @@ class GraphSession:
             _ship_package(spark)
         self.store = self.fresh_store()
         self.types = TypeSystem(self.store)
+        self._init_caches()
+
+    def _init_caches(self) -> None:
+        """The session's prepared-parse cache (``attach`` skips
+        ``__init__``)."""
+        self._shape_cache = ShapeCache(
+            lambda l, t: parse_request(l, toks=t)
+        )
 
     def fresh_store(self) -> PrimitiveStore:
         """A new empty store of this session's configured backend
@@ -110,6 +119,7 @@ class GraphSession:
         _ship_package(spark)
         sess.store = ParquetLogStore.attach(spark, log_path)
         sess.types = TypeSystem(sess.store)
+        sess._init_caches()
         return sess
 
     def _require_spark(self):
@@ -132,77 +142,48 @@ class GraphSession:
         if line.startswith("\n"):
             keep = len(line) - len(line.lstrip("\n"))
             line = line[:keep] + line[keep:].lstrip(" \t")
-        # session AST cache: a hot serving template repeats the SAME
-        # request line, so the tokenize+parse (the dominant hot-path
-        # cost) amortizes to one dict probe.  Reads only — evaluation
-        # never mutates the parsed tree (write ASTs are not cached).
-        # Distinct lines (the cold benchmarks, cursor chains) miss by
-        # construction.
-        ast_cache = getattr(self, "_ast_cache", None)
-        if ast_cache is None:
-            ast_cache = self._ast_cache = {}
-        cached = ast_cache.get(line)
-        toks = None
-        if cached is not None:
-            req, read_key = cached
-        else:
-            read_key = None
-            # raw-line shape serving: a known read template is patched
-            # straight from the raw line — no tokenize at all (the
-            # dominant cold-template cost).  Lines mentioning "cursor"
-            # anywhere take the token path so cursor-chain pages keep
-            # sharing one cursorless eval-cache key.  The ("raw", line)
-            # key is exact (the line IS the query) and, being a tuple,
-            # can never collide with the token path's string keys.
-            req = None
-            if (
-                self.prepared_shapes_enabled
-                and line[:4].lower() == "read"
-                and (
-                    len(line) == 4
-                    or not (line[4].isalnum() or line[4] in "_-")
-                )
-                and "cursor" not in line
-            ):
-                shape = getattr(self, "_shape_cache", None)
-                if shape is not None:
-                    req = shape.serve_raw(line)
-                    if req is not None:
-                        read_key = ("raw", line)
+        # 1. raw-line shape serving: a known read template is patched
+        # straight from the raw line — no tokenize at all (the
+        # dominant cold-template cost).  Lines mentioning "cursor"
+        # anywhere take the token path so cursor-chain pages keep
+        # sharing one cursorless eval-cache key.  The ("raw", line)
+        # key is exact (the line IS the query) and, being a tuple,
+        # can never collide with the token path's string keys.
+        shape = self._shape_cache
+        req = toks = read_key = None
+        if (
+            self.prepared_shapes_enabled
+            and line[:4].lower() == "read"
+            and (
+                len(line) == 4
+                or not (line[4].isalnum() or line[4] in "_-")
+            )
+            and "cursor" not in line
+        ):
+            req = shape.serve_raw(line)
             if req is not None:
-                pass  # raw-served; skip tokenize/parse entirely
-            else:
-                try:
-                    from graphd_spark.gql.lexer import tokenize
+                read_key = ("raw", line)
+        if req is None:
+            from graphd_spark.gql.lexer import tokenize
 
-                    toks = tokenize(line)
-                    if all(t.kind == "end" for t in toks):
-                        return ""  # comment-only input: no reply
-                except LexError:
-                    toks = None  # the parser below reports it
-            # prepared-parse shape cache: a read whose template SHAPE
-            # repeats with different string literals (point reads,
-            # cursor chains) re-binds the literals into the cached
-            # parse instead of re-parsing — see gql/prepared.py for
-            # the derivation/validation safety model
-            shape = None
-            if (
-                req is None
-                and self.prepared_shapes_enabled
+            try:
+                toks = tokenize(line)
+                if all(t.kind == "end" for t in toks):
+                    return ""  # comment-only input: no reply
+            except LexError:
+                toks = None  # the parser below reports it
+            # 2. prepared-parse shape serving: a read whose template
+            # SHAPE repeats re-binds its string literals into the
+            # cached parse instead of re-parsing — see gql/prepared.py
+            # for the derivation/validation safety model
+            prepared = (
+                self.prepared_shapes_enabled
                 and toks is not None
-                and toks
                 and toks[0].matches("read")
-            ):
-                shape = getattr(self, "_shape_cache", None)
-                if shape is None:
-                    from graphd_spark.gql.prepared import ShapeCache
-
-                    shape = self._shape_cache = ShapeCache(
-                        lambda l, t: parse_request(l, toks=t)
-                    )
+            )
+            if prepared:
                 req = shape.serve(toks, line=line)
-                if req is not None:
-                    read_key = self._cursorless_key(toks)
+            # 3. full parse
             if req is None:
                 try:
                     req = parse_request(line, toks=toks)
@@ -212,13 +193,10 @@ class GraphSession:
                         code, str(e), self._id_of_line(line),
                         extra=self._dateline_echo_of_line(line),
                     )
-                if req.command == "read" and toks is not None:
-                    read_key = self._cursorless_key(toks)
-                    ast_cache[line] = (req, read_key)
-                    while len(ast_cache) > 64:
-                        ast_cache.pop(next(iter(ast_cache)))
-                    if shape is not None:
-                        shape.observe(line, toks, req)
+                if prepared:
+                    shape.observe(line, toks, req)
+            if req.command == "read" and toks is not None:
+                read_key = self._cursorless_key(toks)
         rid = req.modifiers.get("id")
         # modifiers echo per occurrence, in request order (ref
         # test/unit/param-order.sh); dateline echoes resolve to the
@@ -852,7 +830,7 @@ class GraphSession:
             and getattr(self.store, "_covers_all", True)
             and self.store.mirror_current()
         ):
-            # session-level eval cache: a cursor chain replays the
+            # the store's eval cache: a cursor chain replays the
             # same template with only cursor= changing — key on the
             # tokenized request with cursor= elided (+ asof), so every
             # page of a chain reuses one candidate evaluation (the
@@ -860,12 +838,10 @@ class GraphSession:
             ckey = None
             if read_key is not None:
                 ckey = (read_key, asof)
-            if not hasattr(self, "_fastread_eval_cache"):
-                self._fastread_eval_cache = {}
             try:
                 plan, rows, total = FastReader(
                     self.store, self.types, asof=asof,
-                    eval_cache=self._fastread_eval_cache,
+                    eval_cache=self.store._eval_cache,
                     cache_key=ckey,
                 ).run(req.constraint)
             except Unsupported:

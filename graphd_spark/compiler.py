@@ -77,9 +77,8 @@ _FIXED_MATERIALIZE_MAX = 100
 
 
 # py4j round-trip caches: cached F.col/F.lit/constant-expression
-# handles and the shared handle store (_JCACHE, also used for the
-# compiler's base-frame memo) — see jexpr.py
-from graphd_spark.jexpr import _JCACHE, _c, _cc, _ctx_id, _l  # noqa: E402
+# handles — see jexpr.py
+from graphd_spark.jexpr import _c, _cc, _ctx_id, _l  # noqa: E402
 
 
 def number_sort_root_keep(con, store) -> bool:
@@ -563,12 +562,9 @@ class Compiler:
         # Memoizing it skips ~6 DataFrame/Window round trips per
         # compiled read (a quarter of compile wall time); no rows are
         # cached — the plan is lazy, every action still scans the log.
-        # The memo lives ON the store object (r10): a global keyed by
-        # id(store) pinned every dead store and its frames forever;
-        # an attribute dies with the store and needs no identity check
-        memo = getattr(self.store, "_base_frame_memo", None)
-        if memo is None:
-            memo = self.store._base_frame_memo = {}
+        # The memo lives ON the store object, so it dies with the
+        # store; it holds the distinct asof frames of one version
+        memo = self.store._base_frame_memo
         key = (_ctx_id(), self.asof)
         hit = memo.get(key)
         if hit is not None and hit[0] is src:
@@ -595,9 +591,7 @@ class Compiler:
             "__next",
             F.lead("guid", 1).over(w_lin.orderBy("generation")),
         )
-        memo[key] = (src, df)
-        while len(memo) > 8:  # distinct asof frames per store version
-            memo.pop(next(iter(memo)))
+        memo.put(key, (src, df))
         return df
 
     def _raw_df(self):

@@ -671,7 +671,7 @@ class FastReader:
         #: node's (rebound-per-request) strcons — constant within one
         #: reader, which lives for exactly one request
         self._msc_cache: dict = {}
-        #: session-level (plan, matches) cache for repeated template
+        #: store-level (plan, matches) cache for repeated template
         #: shapes — the serving analog of the reference's iterator
         #: resource cache (graphd-iterator-resource.c): a cursor chain
         #: re-evaluates the same candidate set page after page, so
@@ -860,9 +860,7 @@ class FastReader:
             if ck is not None:
                 # store a pristine copy — `plan` itself is mutated
                 # below (cursor/countlimit) while serving this request
-                self._eval_cache[ck] = (plan.__copy__(), list(matches))
-                while len(self._eval_cache) > 32:
-                    self._eval_cache.pop(next(iter(self._eval_cache)))
+                self._eval_cache.put(ck, (plan.__copy__(), list(matches)))
         if root_high is not None:
             matches = [
                 (p, r) for p, r in matches if p.id < root_high

@@ -3,8 +3,7 @@ re-parsing.
 
 A serving workload repeats a handful of request templates with only
 the string literals changing (point reads, cursor chains, parametrized
-dashboards).  The session AST cache (api.py) only helps when the WHOLE
-line repeats; this module caches the parse per template *shape* — the
+dashboards).  This module caches the parse per template *shape* — the
 token stream with string-literal contents masked — and re-binds the
 literals of each new request into the cached constraint tree, the
 Python analog of a prepared statement (the reference amortizes the
@@ -31,9 +30,11 @@ Safety model — the recipe is DERIVED, not assumed:
   literals are patched into the variant parse and the result must be
   deep-equal (every leaf, positions included) to the line's own full
   parse.
-- Evaluation never mutates the parsed tree (the session AST cache
-  already relies on this), so one patch target per shape can be
-  re-bound per request; sessions are single-threaded.
+- A shape with no literal slot (or only empty ones) stands for one
+  token stream, so its own parse is the patch target and is served
+  unchanged.
+- Evaluation never mutates the parsed tree, so one patch target per
+  shape can be re-bound per request; sessions are single-threaded.
 
 The differential fuzz campaigns (tests/test_differential.py) replay
 randomized literals over repeated shapes through both this engine and
@@ -47,6 +48,7 @@ from dataclasses import fields, is_dataclass
 from typing import Callable, Optional
 
 from graphd_spark.gql.lexer import STR, LexError, Token, tokenize
+from graphd_spark.lru import LRU
 
 #: max cached shapes per session (each holds one parsed request)
 _MAX_SHAPES = 128
@@ -231,19 +233,32 @@ class _Entry:
         self.raw_tried = False  # raw-key registration attempted
 
 
+def _bind(e: _Entry, texts: list[str]):
+    """Patch one literal per slot into the entry's shared target."""
+    for text, sets in zip(texts, e.compiled):
+        for kind, container, last in sets:
+            if kind == "a":
+                setattr(container, last, text)
+            elif kind == "i":
+                container[last] = text
+            else:  # tuple somewhere on the path: interpreted
+                _apply(e.target, last, text)
+    return e.target
+
+
 class ShapeCache:
     """Per-session prepared-parse cache (single-threaded use)."""
 
     def __init__(self, parse: Callable[[str, list], object]):
         self._parse = parse  # (line, toks) -> Request
-        self._entries: dict[tuple, _Entry] = {}
-        self._raw: dict[str, _Entry] = {}  # raw_template key -> entry
+        self._entries = LRU(_MAX_SHAPES)  # shape_key -> entry
+        self._raw = LRU(_MAX_SHAPES)  # raw_template key -> entry
         # exact-line fast path: a hot serving template repeats the
         # SAME line, so the raw_template regex pass amortizes to one
         # dict probe; the stored literals are deterministic in the
         # line, and the patch is re-applied per request (the entry's
         # target is shared across every line of the shape)
-        self._rawline: dict[str, tuple[_Entry, list[str]]] = {}
+        self._rawline = LRU(_MAX_SHAPES)  # line -> (entry, lits)
 
     # -- serving -----------------------------------------------------------
 
@@ -254,25 +269,11 @@ class ShapeCache:
         can be served by :meth:`serve_raw` without tokenizing."""
         key = shape_key(toks)
         e = self._entries.get(key)
-        if e is None:
-            return None
-        # LRU refresh: hot shapes survive the _MAX_SHAPES eviction
-        self._entries.pop(key)
-        self._entries[key] = e
-        if e.state != "ready":
+        if e is None or e.state != "ready":
             return None
         if line is not None and not e.raw_tried:
             self._register_raw(line, toks, e)
-        for si, sets in zip(e.slots, e.compiled):
-            text = toks[si].text
-            for kind, container, last in sets:
-                if kind == "a":
-                    setattr(container, last, text)
-                elif kind == "i":
-                    container[last] = text
-                else:  # tuple somewhere on the path: interpreted
-                    _apply(e.target, last, text)
-        return e.target
+        return _bind(e, [toks[si].text for si in e.slots])
 
     def serve_raw(self, line: str):
         """Patched Request straight from the raw line — no tokenize.
@@ -290,18 +291,8 @@ class ShapeCache:
                 or len(lits) != len(e.slots)
             ):
                 return None
-            if len(self._rawline) >= _MAX_SHAPES:
-                self._rawline.pop(next(iter(self._rawline)))
-            self._rawline[line] = (e, lits)
-        for text, sets in zip(lits, e.compiled):
-            for kind, container, last in sets:
-                if kind == "a":
-                    setattr(container, last, text)
-                elif kind == "i":
-                    container[last] = text
-                else:
-                    _apply(e.target, last, text)
-        return e.target
+            self._rawline.put(line, (e, lits))
+        return _bind(e, lits)
 
     def _register_raw(self, line: str, toks: list[Token], e: _Entry):
         """Map the line's raw template to ``e`` iff the regex literals
@@ -316,9 +307,7 @@ class ShapeCache:
         for si, text, pos in zip(e.slots, lits, poss):
             if toks[si].pos != pos or toks[si].text != text:
                 return
-        if len(self._raw) >= _MAX_SHAPES:
-            self._raw.pop(next(iter(self._raw)))
-        self._raw[key] = e
+        self._raw.put(key, e)
 
     @staticmethod
     def _compile_paths(target, recipe):
@@ -354,9 +343,7 @@ class ShapeCache:
         key = shape_key(toks)
         e = self._entries.get(key)
         if e is None:
-            if len(self._entries) >= _MAX_SHAPES:
-                self._entries.pop(next(iter(self._entries)))
-            self._entries[key] = _Entry()
+            self._entries.put(key, _Entry())
             return
         if e.state != "seen":
             return
@@ -398,8 +385,6 @@ class ShapeCache:
                 paths.append(path)
             recipe.append(paths)
             target = rb  # any variant parse works as patch target
-        if target is req:
-            return  # no variable slot: the line cache covers this
         # end-to-end validation: bind this line's literals into the
         # variant parse; it must reproduce the full parse exactly
         for si, paths in zip(slots, recipe):

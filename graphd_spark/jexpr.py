@@ -10,10 +10,10 @@ immutable unresolved expressions, so one JVM handle per
 active SparkContext's id: a restarted context (tests) misses and
 rebuilds; stale entries age out through the size cap below.
 
-The cache is BOUNDED (r10): dynamic literals (cursor boundary keys,
+The cache is a bounded LRU: dynamic literals (cursor boundary keys,
 per-query bounds) would otherwise grow it without limit in a
-long-lived serving session.  Eviction is insertion-order FIFO — an
-evicted handle just rebuilds on next use, so the cap trades at worst
+long-lived serving session.  Eviction drops the least recently used
+handle, which just rebuilds on next use, so the cap trades at worst
 two py4j round trips for bounded memory.
 
 No rows or results are ever cached here — only expression fragments,
@@ -24,26 +24,14 @@ hold.
 from __future__ import annotations
 
 import decimal
-import itertools
 
 from pyspark.sql import functions as F
 
-_JCACHE: dict = {}
+from graphd_spark.lru import LRU
 
-#: entry cap; a full working set (every column name + static literal
-#: of all 57 query builders and the compiler) measures well under 2k
-_JCACHE_CAP = 4096
-
-
-def _put(key, val):
-    _JCACHE[key] = val
-    if len(_JCACHE) > _JCACHE_CAP:
-        # FIFO: evict the oldest (dict preserves insertion order);
-        # hot constants that age out simply rebuild
-        drop = len(_JCACHE) - _JCACHE_CAP
-        for k in list(itertools.islice(_JCACHE, drop)):
-            del _JCACHE[k]
-    return val
+#: a full working set (every column name + static literal of all 57
+#: query builders and the compiler) measures well under 2k entries
+_JCACHE = LRU(4096)
 
 
 def _ctx_id() -> int:
@@ -57,7 +45,7 @@ def _c(name: str):
     key = (_ctx_id(), "col", name)
     col = _JCACHE.get(key)
     if col is None:
-        col = _put(key, F.col(name))
+        col = _JCACHE.put(key, F.col(name))
     return col
 
 
@@ -85,7 +73,7 @@ def _l(value):
     except TypeError:
         return F.lit(value)
     if lit is None:
-        lit = _put(key, F.lit(value))
+        lit = _JCACHE.put(key, F.lit(value))
     return lit
 
 
@@ -96,5 +84,5 @@ def _cc(tag: str, build):
     key = (_ctx_id(), "cc", tag)
     e = _JCACHE.get(key)
     if e is None:
-        e = _put(key, build())
+        e = _JCACHE.put(key, build())
     return e

@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from graphd_spark.lru import LRU
+
 #: tables the driver's testdata provides (TESTDATA.md)
 TESTDATA_TABLES = (
     "region",
@@ -89,7 +91,7 @@ def scan_bytes(df) -> int | None:
 #: (schema read, temp-view registration), and every inventory query
 #: calls load_tables — uncached, that metadata work dominated the
 #: simple queries' bench time (~0.9 s of a ~1.0 s total at sf0.1).
-_TABLES_CACHE: dict[tuple, dict] = {}
+_TABLES_CACHE = LRU(32)
 
 
 def _sf_signature(sf_dir: str) -> tuple:
@@ -136,9 +138,4 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
                     )
             df.createOrReplaceTempView(name)
             out[name] = df
-    _TABLES_CACHE[key] = out
-    # bound the memo: each rewritten/new directory signature adds an
-    # entry; FIFO-evict old generations (they just rebuild on miss)
-    while len(_TABLES_CACHE) > 32:
-        _TABLES_CACHE.pop(next(iter(_TABLES_CACHE)))
-    return out
+    return _TABLES_CACHE.put(key, out)

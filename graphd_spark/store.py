@@ -37,6 +37,7 @@ import functools
 import os
 from typing import Iterator, Optional
 
+from graphd_spark.lru import LRU
 from graphd_spark.model import (
     PREDICTABLE_DB_ID,
     PRIMITIVES_SCHEMA,
@@ -110,6 +111,18 @@ class PrimitiveStore:
         self._version = 0  # bumped per commit; invalidates the df cache
         self._df = None
         self._df_version = -1
+        #: (count, ts, op) -> timestamp_to_id answer
+        self._ts2id_cache = LRU(4096)
+        #: guid (or "succ:" + guid) -> Primitive for off-cache Spark
+        #: lookups of the parquet backend
+        self._lookup_cache = LRU(8192)
+        #: (context id, asof) -> (source frame, base frame) — see
+        #: Compiler._build_base
+        self._base_frame_memo = LRU(8)
+        #: FastReader's (plan, matches) per read — see FastReader.
+        #: It lives on the store because its keys (version, count)
+        #: only identify content within one store
+        self._eval_cache = LRU(32)
 
     # -- transactions -----------------------------------------------------
 
@@ -385,17 +398,12 @@ class PrimitiveStore:
         n = self.count()
         if n == 0:
             return None
-        cache = getattr(self, "_ts2id_cache", None)
-        if cache is None:
-            cache = self._ts2id_cache = {}
         ck = (n, ts, op)
-        if ck in cache:
-            return cache[ck]
-        out = self._timestamp_to_id_walk(ts, op, n)
-        if len(cache) > 4096:
-            cache.clear()
-        cache[ck] = out
-        return out
+        if ck in self._ts2id_cache:
+            return self._ts2id_cache.get(ck)
+        return self._ts2id_cache.put(
+            ck, self._timestamp_to_id_walk(ts, op, n)
+        )
 
     def _timestamp_to_id_walk(self, ts: int, op: str, n: int
                               ) -> Optional[int]:
@@ -607,8 +615,6 @@ class ParquetLogStore(PrimitiveStore):
         self.path = path
         self.cache_rows = cache_rows
         self._flushed = 0  # ids < _flushed are on disk
-        # guid -> Primitive for off-cache Spark lookups (size-capped)
-        self._lookup_cache: dict[str, Optional[Primitive]] = {}
         os.makedirs(path, exist_ok=True)
         if fresh:
             # hidden ".part-" files are tmp parts of a crashed commit;
@@ -661,7 +667,9 @@ class ParquetLogStore(PrimitiveStore):
 
         A span inside a wider span that starts at or before it is a
         part an interrupted compaction left behind: it is dropped
-        (and its name appended to ``covered`` when given)."""
+        (and its name appended to ``covered`` when given).  Raises
+        StoreError when the live spans leave a hole in the ids from
+        0: a log with a missing part is never read as complete."""
         import re as _re
 
         if ParquetLogStore._PART_RE is None:
@@ -677,14 +685,19 @@ class ParquetLogStore(PrimitiveStore):
                 return None
             spans.append((int(m.group(1)), int(m.group(2)), f))
         spans.sort(key=lambda s: (s[0], -s[1]))
-        live, end = [], -1
+        live, end = [], 0
         for s in spans:
             if s[0] + s[1] <= end:
                 if covered is not None:
                     covered.append(s[2])
-            else:
-                live.append(s)
-                end = s[0] + s[1]
+                continue
+            if s[0] > end:
+                raise StoreError(
+                    f"parquet log {self.path} is missing ids "
+                    f"{end}..{s[0] - 1}, before {s[2]}"
+                )
+            live.append(s)
+            end = s[0] + s[1]
         return live
 
     @staticmethod
@@ -784,7 +797,7 @@ class ParquetLogStore(PrimitiveStore):
             if start < base:
                 continue
             if start != expect:
-                return False  # gap: fall back to the Spark view
+                return False  # a part straddles the mirror's end
             table = pq.read_table(os.path.join(self.path, f))
             for r in table.to_pylist():
                 p = Primitive(**{k: r[k] for k in PRIMITIVE_FIELDS})
@@ -879,11 +892,6 @@ class ParquetLogStore(PrimitiveStore):
     def _from_row(self, r) -> Primitive:
         return Primitive(**{f: r[f] for f in PRIMITIVE_FIELDS})
 
-    def _cache_put(self, guid: str, p: Optional[Primitive]) -> None:
-        if len(self._lookup_cache) >= 8192:
-            self._lookup_cache.clear()
-        self._lookup_cache[guid] = p
-
     # -- transactions -----------------------------------------------------
 
     def commit(self) -> None:
@@ -920,9 +928,10 @@ class ParquetLogStore(PrimitiveStore):
         file count drops, so every downstream scan stops paying
         per-file footer/open overhead (a 31-write store is otherwise
         31 tiny parquet files, re-opened by each compiled read).
-        Refuses foreign layouts (files outside the part-<start>-<count>
-        naming, e.g. a Spark-written bulk import) and non-contiguous
-        logs, same rule as _fs_spans.
+        Skips foreign layouts (files outside the part-<start>-<count>
+        naming, e.g. a Spark-written bulk import) and parts whose row
+        counts disagree with their names; a log with a missing part
+        raises StoreError (_fs_spans).
 
         Crash rule: the merged part lands durably (fsync, rename,
         directory fsync) before any old part is unlinked, so a crash
@@ -939,10 +948,11 @@ class ParquetLogStore(PrimitiveStore):
             pq.read_table(os.path.join(self.path, f)) for _, _, f in spans
         ]
         merged = pa.concat_tables(tables).sort_by("id")
-        start = spans[0][0]
-        if start + merged.num_rows != self._horizon_of(spans):
-            return  # gaps/overlap: refuse rather than mint a lying name
-        _write_part(self.path, merged, start, durable=True)
+        # the live spans chain from id 0 (_fs_spans), so the merged
+        # part starts at 0
+        if merged.num_rows != self._horizon_of(spans):
+            return  # overlap or short parts: refuse a lying name
+        _write_part(self.path, merged, 0, durable=True)
         try:
             self._unlink_parts(f for _, _, f in spans)
         finally:
@@ -996,13 +1006,12 @@ class ParquetLogStore(PrimitiveStore):
         if p is not None or self._covers_all:
             return p
         if guid in self._lookup_cache:
-            return self._lookup_cache[guid]
+            return self._lookup_cache.get(guid)
         from pyspark.sql import functions as F
 
         rows = self._log_df().filter(F.col("guid") == guid).limit(1).collect()
         p = self._from_row(rows[0]) if rows else None
-        self._cache_put(guid, p)
-        return p
+        return self._lookup_cache.put(guid, p)
 
     def successor(self, guid: str) -> Optional[str]:
         nxt = self.next_version.get(guid)
@@ -1010,7 +1019,7 @@ class ParquetLogStore(PrimitiveStore):
             return nxt
         key = "succ:" + guid
         if key in self._lookup_cache:
-            hit = self._lookup_cache[key]
+            hit = self._lookup_cache.get(key)
             return hit.guid if hit is not None else None
         from pyspark.sql import functions as F
 
@@ -1018,7 +1027,7 @@ class ParquetLogStore(PrimitiveStore):
             self._log_df().filter(F.col("prev") == guid).limit(1).collect()
         )
         p = self._from_row(rows[0]) if rows else None
-        self._cache_put(key, p)
+        self._lookup_cache.put(key, p)
         return p.guid if p is not None else None
 
     def find_by_value(self, value: str) -> Iterator[Primitive]:

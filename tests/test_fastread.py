@@ -171,6 +171,22 @@ def test_eval_cache_hit_does_not_alias_plan():
     assert gs.request(q) == first
 
 
+def test_eval_cache_does_not_outlive_a_restore():
+    """A restore from 0 replaces the store; the new store reaches the
+    same (version, count) as the old one, so an eval cache that
+    outlived the old store would answer from its rows."""
+    gs = GraphSession()
+    gs.request('write (value="a")')
+    q = 'read (value="a" result=((value)))'
+    assert gs.request(q) == 'ok (("a"))'
+    tup = (
+        "00000012400034568000000000000000 null null string \"b\" 0 "
+        "true true true 1970-01-01T00:00:00.0000Z 0 0 0"
+    )
+    assert gs.request(f'restore ("6" 0 1 ({tup}))') == "ok"
+    assert gs.request(q) == 'error EMPTY "not found"'
+
+
 def test_fast_path_engages(spark, monkeypatch):
     """A supported read on a covered store must NOT touch Spark."""
     from graphd_spark import fastread

@@ -237,22 +237,39 @@ def test_jexpr_cache_is_bounded(spark):
     import graphd_spark.jexpr as jx
 
     jx._l("bound-pin-warm")
-    for i in range(jx._JCACHE_CAP + 50):
+    for i in range(jx._JCACHE.cap + 50):
         jx._l(f"bound-pin-{i}")
-    assert len(jx._JCACHE) <= jx._JCACHE_CAP
+    assert len(jx._JCACHE) <= jx._JCACHE.cap
     # an evicted handle transparently rebuilds
     assert jx._l("bound-pin-warm") is jx._l("bound-pin-warm")
 
 
-def test_jexpr_cap_below_size_evicts_oldest_first(monkeypatch):
-    # a cap lowered below the current size drops several entries in
-    # one put: the oldest ones, in insertion order
-    import graphd_spark.jexpr as jx
+def test_lru_evicts_least_recently_used():
+    from graphd_spark.lru import LRU
 
-    monkeypatch.setattr(jx, "_JCACHE", {k: k for k in range(10)})
-    monkeypatch.setattr(jx, "_JCACHE_CAP", 4)
-    assert jx._put("new", "v") == "v"
-    assert list(jx._JCACHE) == [7, 8, 9, "new"]
+    m = LRU(3)
+    for k in "abc":
+        m.put(k, k.upper())
+    assert m.get("a") == "A"  # a is now the most recently used
+    assert m.put("d", "D") == "D"
+    assert list(m) == ["c", "a", "d"]  # b, not the oldest a, went
+    m.put("c", "C2")  # re-putting refreshes too
+    m.put("e", "E")
+    assert list(m) == ["d", "c", "e"]
+    assert m.get("a") is None
+    assert m.get("a", "miss") == "miss"
+    assert m.get("c") == "C2"
+
+
+def test_lru_unhashable_key_raises():
+    from graphd_spark.lru import LRU
+
+    m = LRU(2)
+    with pytest.raises(TypeError):
+        m.get([1])
+    with pytest.raises(TypeError):
+        m.put([1], 1)
+    assert len(m) == 0
 
 
 def test_jexpr_float_literals_key_by_repr(spark):

@@ -223,6 +223,32 @@ def _parquet_names(log):
     return sorted(f for f in os.listdir(log) if f.endswith(".parquet"))
 
 
+def test_attach_refuses_a_log_with_a_missing_part(spark, monkeypatch):
+    """A log whose parts skip ids is not read as complete: attach
+    raises StoreError naming the missing ids, before any Spark read."""
+    import os
+
+    from graphd_spark.store import ParquetLogStore, StoreError
+
+    sess = _parquet_session(spark)
+    for v in "abc":
+        sess.request(f'write (value="{v}")')
+    log = sess.log_path
+    parts = _parquet_names(log)
+    assert len(parts) == 3
+    start, count = (int(x) for x in parts[1][5:-8].split("-"))
+    os.unlink(os.path.join(log, parts[1]))
+
+    def no_spark(self):
+        pytest.fail("attach read the gapped log through Spark")
+
+    monkeypatch.setattr(ParquetLogStore, "_log_df", no_spark)
+    with pytest.raises(
+        StoreError, match=rf"missing ids {start}\.\.{start + count - 1},"
+    ):
+        GraphSession.attach(spark, log)
+
+
 @pytest.mark.parametrize("fail", ["replace", "unlink"])
 def test_compact_interrupted_keeps_log_intact(spark, monkeypatch, fail):
     """A compaction that dies before its rename leaves the old parts

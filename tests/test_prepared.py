@@ -137,9 +137,56 @@ def test_ab_replies_identical_with_and_without_shapes(_ab_sessions):
     for ln in reads * 3:
         assert a.request(ln) == b.request(ln), ln
     # the shape cache actually engaged (not vacuous)
-    sc = getattr(a, "_shape_cache", None)
-    assert sc is not None
-    assert any(e.state == "ready" for e in sc._entries.values())
+    assert any(
+        e.state == "ready" for e in a._shape_cache._entries.values()
+    )
+
+
+def test_literal_free_read_is_served_from_its_shape(spark, monkeypatch):
+    # a read with no string literal has one token stream per shape:
+    # its second sighting makes the shape ready with its own parse as
+    # the target, and later repeats are served without a parse
+    import graphd_spark.api as api
+
+    s = GraphSession(spark)
+    s.request('write (name="nation" value="n0")')
+    line = "read (pagesize=1 result=((value)))"
+    calls = []
+    real = api.parse_request
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(api, "parse_request", counting)
+    first = s.request(line)
+    assert s.request(line) == first
+    e = s._shape_cache._entries[shape_key(tokenize(line))]
+    assert e.state == "ready"
+    n = len(calls)
+    assert s.request(line) == first == 'ok (("n0"))'
+    assert len(calls) == n
+
+
+def test_memos_stay_bounded_past_their_caps(_ab_sessions):
+    # 150 distinct shapes, each seen four times with distinct lines
+    # (observe, derive, token-path serve, raw-line serve): every
+    # session memo evicts down to its cap, and the replies still
+    # equal a full-parse session's
+    a, b = _ab_sessions
+    for k in range(1, 151):
+        for j in range(4):
+            ln = f'read (value="n{j}" pagesize={k} result=((value)))'
+            assert a.request(ln) == b.request(ln), ln
+    sc = a._shape_cache
+    memos = [
+        sc._entries, sc._raw, sc._rawline, a.store._eval_cache,
+        a.store._ts2id_cache, a.store._lookup_cache,
+        a.store._base_frame_memo,
+    ]
+    assert all(len(m) <= m.cap for m in memos)
+    assert len(sc._entries) == len(sc._raw) == len(sc._rawline) == 128
+    assert len(a.store._eval_cache) == 32
 
 
 def test_cursor_chain_pages_identically(_ab_sessions):
