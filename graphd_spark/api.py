@@ -72,7 +72,7 @@ class GraphSession:
     def __init__(self, spark=None, log_path=None, cache_rows=None):
         """``log_path`` selects the parquet-log store backend (the
         scale path: reads plan against ``spark.read.parquet(log)``,
-        commits append driver-side parquet files, and the driver keeps
+        commits append to the log's Arrow tail, and the driver keeps
         at most ``cache_rows`` primitives).  Default is the in-memory
         store (tests / staging)."""
         self.spark = spark

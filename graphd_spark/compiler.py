@@ -55,7 +55,7 @@ from graphd_spark.gql.ir import (
     Pattern,
     TRUE,
 )
-from graphd_spark.model import guid_serial, ts_from_string
+from graphd_spark.model import guid_serial, su_encode, ts_from_string
 from graphd_spark.pattern import (
     GraphdError,
     default_read_pattern,
@@ -744,7 +744,8 @@ class Compiler:
                         )
 
                         flt = (
-                            _c("value_norm") == _alow(cstate.masq)
+                            _c("value_norm")
+                            == su_encode(_alow(cstate.masq))
                         )
                     else:
                         flt = (
@@ -2079,7 +2080,7 @@ class Compiler:
         if tname == "value":
             return (
                 normalize_value(key),
-                _c("value_norm") == value_norm_key(key),
+                _c("value_norm") == su_encode(value_norm_key(key)),
             )
         return key, F.lower(_c("name")) == key.lower()
 
@@ -4461,7 +4462,7 @@ class Compiler:
             # so it never surfaces) — both must match
             eq_col = _c("value_fkey")
             eq_lits = [fuzzy_key(v) for v in nonnull]
-            norm_lits = [value_norm_key(v) for v in nonnull]
+            norm_lits = [su_encode(value_norm_key(v)) for v in nonnull]
         elif is_value and comp == "number":
             # strict: only parseable numbers equal a number literal
             eq_col = _c("value_num")
@@ -4473,7 +4474,7 @@ class Compiler:
             ]
         elif is_value and comp == "datetime":
             eq_col = _c("value_norm")
-            eq_lits = [value_norm_key(v) for v in nonnull]
+            eq_lits = [su_encode(value_norm_key(v)) for v in nonnull]
         elif comp in ("case", "octet"):
             eq_col = col
             eq_lits = nonnull

@@ -90,10 +90,10 @@ def _graph(spark: SparkSession, sf_dir: str) -> GraphSession:
     gs.request(
         f'write (guid~={nation_guid[0]} name="nation" value="RENAMED")'
     )
-    # one-time build step: merge the 31 per-write commit files into a
-    # single part file, so every compiled read scans ONE parquet file
-    # instead of paying 31 footer opens per branch (the background
-    # compactor the log format anticipates; content-identical)
+    # one-time build step: roll the 31 writes' tail into a single
+    # part file, so every compiled read scans ONE parquet file and no
+    # local relation of tail rows (the background compactor the log
+    # format anticipates; content-identical)
     gs.store.compact()
     _SESSIONS[key] = gs
     return gs

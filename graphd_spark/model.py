@@ -307,6 +307,7 @@ PRIMITIVE_FIELDS = [f.name for f in PRIMITIVES_SCHEMA.fields]
 _ROW = operator.attrgetter(*PRIMITIVE_FIELDS)
 _NAME_AT = PRIMITIVE_FIELDS.index("name")
 _VALUE_AT = PRIMITIVE_FIELDS.index("value")
+_VNORM_AT = PRIMITIVE_FIELDS.index("value_norm")
 
 
 @dataclass
@@ -338,7 +339,8 @@ class Primitive:
     generation: int = 0
 
     def as_row(self) -> tuple:
-        """The PRIMITIVES_SCHEMA row; name and value su_encode'd."""
+        """The PRIMITIVES_SCHEMA row; name, value and value_norm
+        su_encode'd."""
         row = _ROW(self)
         if self.name is None and self.value is None:
             return row
@@ -347,6 +349,8 @@ class Primitive:
             row[_NAME_AT] = su_encode(self.name)
         if self.value is not None:
             row[_VALUE_AT] = su_encode(self.value)
+            if self.value_norm is not None:
+                row[_VNORM_AT] = su_encode(self.value_norm)
         return tuple(row)
 
     @property

@@ -5,16 +5,18 @@ dense local ids, with GUIDs = database-id + serial (ref
 libaddb/README:9-15, libpdb/pdb-primitive.h:36-146).  Two backends:
 
 - :class:`PrimitiveStore` — in-memory log (golden tests, staging);
-- :class:`ParquetLogStore` — the scale backend: the parquet log on
-  disk IS the source of truth.  ``to_df`` is ``spark.read.parquet``
-  over the log (lazy — Catalyst prunes/pushes down into the files),
-  each commit appends its delta as one parquet file written directly
-  from the driver via pyarrow (the OLTP write path needs no Spark
-  job — graphd is single-writer, ref doc/a-brief-tour-of-graphd.md:73-82),
-  and the driver keeps only a *bounded cache* of recent primitives for
-  the write pipeline's point lookups; anything evicted (or predating an
-  ``attach``) is looked up through Spark on demand.  A 121M-primitive
-  log therefore never materializes on the driver.
+- :class:`ParquetLogStore` — the scale backend: the log on disk IS
+  the source of truth.  ``to_df`` is ``spark.read.parquet`` over the
+  log's parts (lazy — Catalyst prunes/pushes down into the files)
+  plus the rows of its Arrow tail, each commit appends its delta to
+  that tail from the driver via pyarrow (the OLTP write path needs no
+  Spark job — graphd is single-writer, ref
+  doc/a-brief-tour-of-graphd.md:73-82), the tail rolls into a parquet
+  part every ``TAIL_ROWS`` rows, and the driver keeps only a *bounded
+  cache* of recent primitives for the write pipeline's point lookups;
+  anything evicted (or predating an ``attach``) is looked up through
+  Spark on demand.  A 121M-primitive log therefore never materializes
+  on the driver.
 
 Version chains: every primitive carries ``lineage`` (GUID of the first
 generation) and ``generation`` (0-based), making the reference's
@@ -26,15 +28,18 @@ Write transactions are atomic per request (ref
 doc/a-brief-tour-of-graphd.md:73-82): ``begin``/``commit``/``rollback``
 bracket each write request; rollback truncates the log back to the
 transaction start, so failed writes leave nothing behind.  Only
-``commit`` flushes to the parquet log, so rolled-back rows never touch
+``commit`` flushes to the log, so rolled-back rows never touch
 disk and analytical readers only ever see committed state.
 """
 
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import functools
 import os
+import re
+import time
 from typing import Iterator, Optional
 
 from graphd_spark.lru import LRU
@@ -44,6 +49,7 @@ from graphd_spark.model import (
     PRIMITIVE_FIELDS,
     Primitive,
     guid_compose,
+    su_decode,
     ts_predictable,
 )
 
@@ -496,7 +502,25 @@ class PrimitiveStore:
         return self.next_id
 
 
-# -- commit-file format (driver-side pyarrow) ---------------------------
+# -- log file formats (driver-side pyarrow) -----------------------------
+
+#: rows a tail may hold: the commit that would pass this rolls the
+#: tail, its own rows included, into one parquet part.  An append
+#: costs the same at any tail length, while a roll decodes every
+#: message of the tail: with 2-row commits on a 4-vCPU VM a roll
+#: took ~60 ms at 1k rows, ~175 ms at 4k and ~830 ms at 16k, about
+#: 85-120 us per commit amortized.  4k keeps the rolling commit's
+#: stall, and the tail Spark reads union in, small while each roll
+#: (one part, two fsyncs) is paid once per ~2k serving commits.
+TAIL_ROWS = 4096
+
+_PART_RE = re.compile(r"part-(\d{12})-(\d{8})\.parquet$")
+_TAIL_RE = re.compile(r"_tail-(\d{12})\.arrows$")
+
+
+def _tail_name(start: int) -> str:
+    return f"_tail-{start:012d}.arrows"
+
 
 @functools.cache
 def _arrow_schema():
@@ -518,16 +542,52 @@ def _arrow_schema():
     )
 
 
-def _prims_table(prims: list):
-    """``prims`` as a log-part table, built by one ``pa.array`` call
+@functools.cache
+def _arrow_row_type():
+    import pyarrow as pa
+
+    return pa.struct(_arrow_schema())
+
+
+def _prims_batch(prims: list):
+    """``prims`` as one record batch, built by one ``pa.array`` call
     over their su_encode'd rows (``Primitive.as_row``)."""
     import pyarrow as pa
 
+    rows = pa.array([p.as_row() for p in prims], type=_arrow_row_type())
+    return pa.RecordBatch.from_struct_array(rows)
+
+
+def _read_tail(path: str, offset: int = 0) -> tuple[list, int]:
+    """The complete record-batch messages of the tail at ``path`` from
+    byte ``offset`` on, and the byte offset just past the last one.  A
+    torn last message (its writer died mid-append) is left out."""
+    import pyarrow as pa
+
+    with open(path, "rb") as fh:
+        fh.seek(offset)
+        data = fh.read()
+    reader, msgs, end = pa.BufferReader(data), [], 0
+    while end < len(data):
+        try:
+            msgs.append(pa.ipc.read_message(reader))
+        except (pa.ArrowInvalid, OSError, EOFError):
+            break
+        end = reader.tell()
+    return msgs, offset + end
+
+
+def _tail_table(msgs: list, extra: tuple = ()):
+    """Tail messages (and ``extra`` record batches) as one table of
+    one chunk: parquet and Spark pay per chunk, and a tail has one
+    per commit."""
+    import pyarrow as pa
+
     schema = _arrow_schema()
-    rows = pa.array([p.as_row() for p in prims], type=pa.struct(schema))
     return pa.Table.from_batches(
-        [pa.RecordBatch.from_struct_array(rows)], schema=schema
-    )
+        [pa.ipc.read_record_batch(m, schema) for m in msgs] + list(extra),
+        schema=schema,
+    ).combine_chunks()
 
 
 def _write_part(dirpath: str, table, start: int, *, durable: bool) -> None:
@@ -572,26 +632,53 @@ def _write_part(dirpath: str, table, start: int, *, durable: bool) -> None:
             os.close(fd)
 
 
-class ParquetLogStore(PrimitiveStore):
-    """Primitive store whose source of truth is a parquet log directory.
+def _decoded(r) -> Primitive:
+    """A log row (name, value and value_norm su_encode'd) as a mirror
+    primitive."""
+    p = Primitive(**{f: r[f] for f in PRIMITIVE_FIELDS})
+    if p.name is not None:
+        p.name = su_decode(p.name)
+    if p.value is not None:
+        p.value = su_decode(p.value)
+        p.value_norm = su_decode(p.value_norm)
+    return p
 
-    - ``to_df`` = ``spark.read.parquet(log)`` (lazy; Catalyst pushes
-      filters into the files) — the read path never serializes the
-      store through the driver.
-    - ``commit`` appends the transaction's delta as ONE parquet part,
-      ``part-<start>-<count>.parquet``, written driver-side with
-      pyarrow (~1 ms; no Spark job): the analog of the reference's
-      istore append + index update (libaddb/README:9-15).  The part
-      lands by rename from a hidden tmp file, so readers see all of a
-      commit or none of it.  A commit is not fsynced: it survives a
-      process crash once ``commit`` returns, but not a power loss.
-      Commit granularity is what a replica stream tails
-      (streaming.py).
-    - ``compact`` merges the parts into one.  The merged part is
-      fsynced and renamed into place, and the directory fsynced,
-      before the parts it covers are unlinked; a crash in between
-      leaves covered parts, which the span listing ignores and
-      ``attach`` unlinks before its first Spark read.
+
+class ParquetLogStore(PrimitiveStore):
+    """Primitive store whose source of truth is a log directory.
+
+    - ``commit`` appends the transaction's rows as ONE Arrow IPC
+      record-batch message (``RecordBatch.serialize()``, no schema
+      message) to the tail, ``_tail-<start>.arrows``: one contiguous
+      id span starting at the id in its name, driver-side pyarrow, no
+      Spark job, no file created.  This is the analog of the
+      reference's istore append (libaddb/README:9-15).  Spark and
+      ``readStream`` skip ``_`` files, so the tail is invisible to
+      anything that lists the directory itself.
+    - everything rolled is parquet, ``part-<start>-<count>.parquet``.
+      The commit that would push the tail past ``TAIL_ROWS`` rolls it:
+      the tail's rows plus its own land as one part (fsynced, renamed
+      into place from a hidden tmp, directory fsynced), and only then
+      is the tail unlinked.  A commit above the bound with no tail to
+      roll goes straight to a part.  ``compact`` merges every part and
+      the tail into one part.
+    - appends and rolls take ``flock(LOCK_EX)`` on the tail.  A roll
+      holds it from reading the tail until the unlink, and an append
+      that finds its tail unlinked once it holds the lock (``st_nlink
+      == 0``) starts a new tail, so an append never lands in a tail
+      a roll has already read.
+    - a torn last message (a process died mid-append) is cut by every
+      reader at the last complete batch, and truncated by the next
+      append.  A crash between a roll's part and its unlink leaves a
+      tail covered by the part: the span listing ignores it and
+      ``attach`` unlinks it, as it does for parts an interrupted
+      compaction leaves behind.
+    - a commit survives a process crash once ``commit`` returns, but
+      not a power loss: appends are not fsynced.
+    - ``to_df`` is ``spark.read.parquet(log)`` (lazy; Catalyst pushes
+      filters into the files), unioned with a local DataFrame of the
+      tail's rows when there is a tail; the read path never
+      serializes the parquet parts through the driver.
     - the driver keeps a bounded suffix cache (``cache_rows``) of
       recent primitives for the write annotators' point lookups (ref
       graphd-write.c:596-782); lookups below the cached range fall back
@@ -615,6 +702,13 @@ class ParquetLogStore(PrimitiveStore):
         self.path = path
         self.cache_rows = cache_rows
         self._flushed = 0  # ids < _flushed are on disk
+        # the tail this store appends to: its first _tail_bytes bytes
+        # hold ids [_tail_start, _flushed); None when the log's last
+        # span is a part (the next commit starts a tail at _flushed)
+        self._tail_start: Optional[int] = None
+        self._tail_bytes = 0
+        #: (tail spans, DataFrame of their rows) — see _log_df
+        self._tail_frame = None
         os.makedirs(path, exist_ok=True)
         if fresh:
             # hidden ".part-" files are tmp parts of a crashed commit;
@@ -630,24 +724,36 @@ class ParquetLogStore(PrimitiveStore):
         cls, spark, path: str, db_id: int = PREDICTABLE_DB_ID
     ) -> "ParquetLogStore":
         """Open an existing log without driver materialization: only
-        the last row's (id, guid) is collected to set the id horizon
-        and adopt the database id."""
+        the last row's (id, guid) is read to set the id horizon and
+        adopt the database id — from the tail's last batch when the
+        log ends in a tail, else by one Spark query."""
         store = cls(spark, path, db_id=db_id)
-        # finish an interrupted compaction before Spark lists the files
+        # finish an interrupted compaction or roll before Spark lists
+        # the files
         covered: list = []
-        store._fs_spans(covered)
+        spans = store._fs_spans(covered)
         store._unlink_parts(covered)
-        from pyspark.sql import functions as F
+        if spans and _TAIL_RE.match(spans[-1][2]):
+            import pyarrow as pa
 
-        df = store._log_df()
-        last = (
-            df.orderBy(F.col("id").desc()).select("id", "guid").limit(1)
-        ).collect()
+            start = spans[-1][0]
+            msgs, end = _read_tail(store._tail_path(start))
+            store._tail_start, store._tail_bytes = start, end
+            b = pa.ipc.read_record_batch(msgs[-1], _arrow_schema())
+            last = {f: b.column(f)[-1].as_py() for f in ("id", "guid")}
+        else:
+            from pyspark.sql import functions as F
+
+            df = store._log_df()
+            last = next(iter(
+                df.orderBy(F.col("id").desc()).select("id", "guid")
+                .limit(1).collect()
+            ), None)
         if last:
-            store._base = store._flushed = last[0]["id"] + 1
+            store._base = store._flushed = last["id"] + 1
             from graphd_spark.model import guid_db
 
-            store.db_id = guid_db(last[0]["guid"])
+            store.db_id = guid_db(last["guid"])
             store._version += 1
         return store
 
@@ -656,35 +762,54 @@ class ParquetLogStore(PrimitiveStore):
     def _spark(self):
         return self._spark_provider()
 
-    _PART_RE = None  # compiled lazily below
+    def _tail_path(self, start: int) -> str:
+        return os.path.join(self.path, _tail_name(start))
+
+    def _tail_rows(self, start: int) -> int:
+        """Rows in the complete messages of the tail at ``start``, read
+        from the end of what this store has read of its own tail."""
+        own = start == self._tail_start
+        msgs, _ = _read_tail(
+            self._tail_path(start), self._tail_bytes if own else 0
+        )
+        if not msgs:
+            return self._flushed - start if own else 0
+        import pyarrow as pa
+
+        last = pa.ipc.read_record_batch(msgs[-1], _arrow_schema())
+        return last.column("id")[-1].as_py() + 1 - start
 
     def _fs_spans(self, covered: Optional[list] = None) -> Optional[list]:
-        """The commit files on disk as sorted (start, count, name)
-        spans — one os.listdir, no Spark job.  None when the directory
+        """The log files on disk as sorted (start, count, name) spans —
+        one os.listdir, no Spark job.  None when the directory
         contains parquet files outside the canonical
         part-<start>-<count> naming (e.g. a Spark-written bulk
-        import), whose id coverage we can't read cheaply.
+        import), whose id coverage we can't read cheaply.  A tail's
+        count is its complete batches' rows; a tail without one is
+        left out.
 
         A span inside a wider span that starts at or before it is a
-        part an interrupted compaction left behind: it is dropped
-        (and its name appended to ``covered`` when given).  Raises
+        part an interrupted compaction left behind, or a tail whose
+        roll was interrupted before its unlink: it is dropped (and
+        its name appended to ``covered`` when given).  Raises
         StoreError when the live spans leave a hole in the ids from
         0: a log with a missing part is never read as complete."""
-        import re as _re
-
-        if ParquetLogStore._PART_RE is None:
-            ParquetLogStore._PART_RE = _re.compile(
-                r"part-(\d{12})-(\d{8})\.parquet$"
-            )
         spans = []
         for f in os.listdir(self.path):
-            if not f.endswith(".parquet"):
-                continue
-            m = ParquetLogStore._PART_RE.match(f)
-            if m is None:
-                return None
-            spans.append((int(m.group(1)), int(m.group(2)), f))
-        spans.sort(key=lambda s: (s[0], -s[1]))
+            if f.endswith(".parquet"):
+                m = _PART_RE.match(f)
+                if m is None:
+                    return None
+                spans.append((int(m[1]), int(m[2]), f))
+            elif m := _TAIL_RE.match(f):
+                try:
+                    n = self._tail_rows(int(m[1]))
+                except FileNotFoundError:  # rolled since the listing
+                    return self._fs_spans(covered)
+                if n:
+                    spans.append((int(m[1]), n, f))
+        # a part sorts before a tail of the same span, which it covers
+        spans.sort(key=lambda s: (s[0], -s[1], s[2][0] == "_"))
         live, end = [], 0
         for s in spans:
             if s[0] + s[1] <= end:
@@ -702,38 +827,59 @@ class ParquetLogStore(PrimitiveStore):
 
     @staticmethod
     def _horizon_of(spans: list) -> int:
-        """Next id according to the commit-file spans."""
+        """Next id according to the log-file spans."""
         return max((s + c for s, c, _ in spans), default=0)
 
-    #: (dir-stat signature, _fs_spans listing) — see mirror_current
+    #: the log signature (see _log_sig) under which the mirror was
+    #: last proven current by a listing — see mirror_current
     _dir_sig_cache = None
 
-    #: class-level write epoch: bumped by EVERY in-process commit-file
-    #: write (any ParquetLogStore instance), so a same-process foreign
+    #: class-level write epoch: bumped by EVERY in-process commit
+    #: (any ParquetLogStore instance), so a same-process foreign
     #: append invalidates every session's TTL cache immediately
     _write_epoch = 0
 
     #: (monotonic_ns when the verified-current proof began, epoch) —
-    #: see mirror_current's TTL fast path and _flush
+    #: see mirror_current's TTL fast path
     _mc_cache = None
 
-    #: TTL of a verified-current verdict.  Another in-process
-    #: session's append bumps _write_epoch and forces a re-check at
-    #: once (a store's own commits carry its verdict, see _flush), so
-    #: the only thing the TTL can hide is a cross-process append
-    #: landing within the window.
-    #: 10 ms: the stat behind an expired TTL costs ~90 us on overlay
-    #: filesystems, which at 40k+ q/s made the re-probe a measurable
-    #: serving tax; 10 ms is still far inside any replica-visibility
-    #: contract the reference implies.
+    #: TTL of a verified-current verdict.  Any in-process commit,
+    #: this store's own included, bumps _write_epoch and forces a
+    #: re-check at once, so the only thing the TTL can hide is a
+    #: cross-process append landing within the window.
+    #: 10 ms: the stats behind an expired TTL were a measurable
+    #: serving tax at 40k+ q/s; 10 ms is still far inside any
+    #: replica-visibility contract the reference implies.
     _MC_TTL_NS = 10_000_000  # 10 ms
+
+    #: a directory whose mtime is younger than this is "hot": its
+    #: signature is not cached.  File timestamps tick at the kernel's
+    #: coarse clock (one jiffy, <= 10 ms at HZ >= 100), so a change
+    #: landing in the same tick as the stat could carry the same mtime
+    #: and hide behind the cached signature.  Once the mtime is older
+    #: than this, any later change carries a later one.
+    _HOT_NS = 20_000_000  # 20 ms
+
+    def _log_sig(self) -> Optional[tuple]:
+        """((tail start, size, inode) of this store's tail or None,
+        directory stat): every commit changes it.  An append grows
+        the tail; a roll unlinks it; a new tail or part changes the
+        directory."""
+        try:
+            tail = None
+            if self._tail_start is not None:
+                with contextlib.suppress(FileNotFoundError):
+                    st = os.stat(self._tail_path(self._tail_start))
+                    tail = (self._tail_start, st.st_size, st.st_ino)
+            st = os.stat(self.path)
+        except OSError:
+            return None
+        return tail, (st.st_mtime_ns, st.st_ctime_ns, st.st_size, st.st_ino)
 
     def mirror_current(self) -> bool:
         if not self._covers_all:
             return False
-        import time as _time
-
-        now = _time.monotonic_ns()
+        now = time.monotonic_ns()
         mc = self._mc_cache
         if (
             mc is not None
@@ -741,86 +887,73 @@ class ParquetLogStore(PrimitiveStore):
             and now - mc[0] < self._MC_TTL_NS
         ):
             return True
-        # one os.stat of the log directory stands in for the listdir
-        # when nothing changed: adding a commit file bumps the
-        # directory's mtime/ctime, so an identical stat signature
-        # means the same file set.  Kernel file timestamps tick at
-        # jiffy granularity (~1-4 ms), so a signature taken while the
-        # directory is "hot" (mtime within the last second) is never
-        # cached — a foreign append landing in the same jiffy as the
-        # listdir would otherwise alias the signature and hide
-        # forever.  Steady-state serving (no recent appends) pays one
-        # stat per TTL instead of a listdir+regex.
-        try:
-            st = os.stat(self.path)
-            sig = (st.st_mtime_ns, st.st_ctime_ns, st.st_size, st.st_ino)
-        except OSError:
-            sig = None
-        cached = self._dir_sig_cache
-        if sig is not None and cached is not None and cached[0] == sig:
-            spans = cached[1]
-        else:
+        # two stats stand in for a listing when nothing changed: the
+        # signature moves with every commit (_log_sig), and this
+        # store's own appends move the cached one with it (see
+        # _commit_batch), so they never force a listing
+        sig = self._log_sig()
+        if sig is None or sig != self._dir_sig_cache:
+            self._dir_sig_cache = None
             spans = self._fs_spans()
+            if spans is None or (
+                self._horizon_of(spans) > self.next_id
+                and not self._absorb_delta(spans)
+            ):
+                self._mc_cache = None
+                return False
+            # keep the signature the listing was taken under, unless
+            # the log moved meanwhile or the directory is hot
             if (
                 sig is not None
-                and spans is not None
-                and _time.time_ns() - sig[0] > 1_000_000_000
+                and sig == self._log_sig()
+                and time.time_ns() - sig[1][0] > self._HOT_NS
             ):
-                self._dir_sig_cache = (sig, spans)
-            else:
-                self._dir_sig_cache = None
-        if spans is None:
-            self._mc_cache = None
-            return False
-        if self._horizon_of(spans) <= self.next_id:
-            # the verdict holds for one TTL whether the directory is
-            # hot or cold: a listing is authoritative when it runs,
-            # and the same-jiffy rule above guards only the signature
-            # cache, which has no expiry
-            self._mc_cache = (now, ParquetLogStore._write_epoch)
-            return True
-        self._dir_sig_cache = None  # absorbing changes our own state
-        self._mc_cache = None
-        return self._absorb_delta(spans)
+                self._dir_sig_cache = sig
+        self._mc_cache = (now, ParquetLogStore._write_epoch)
+        return True
 
     def _absorb_delta(self, spans: list) -> bool:
-        """Another session appended to the shared log: pull the delta
-        commit files (``spans`` from _fs_spans) into the mirror
+        """Another session appended to the shared log: pull the rows
+        past the mirror from ``spans`` (from _fs_spans) into it
         driver-side (pyarrow — no Spark job), keeping the serving fast
-        path hot under multi-session writes."""
+        path hot under multi-session writes.  A tail is read from the
+        byte offset already consumed."""
         import pyarrow.parquet as pq
 
-        from graphd_spark.model import su_decode
-
-        expect = base = self.next_id
-        for start, _, f in spans:
-            if start < base:
+        expect = self.next_id
+        for start, count, f in spans:
+            if start + count <= expect:
                 continue
-            if start != expect:
-                return False  # a part straddles the mirror's end
-            table = pq.read_table(os.path.join(self.path, f))
+            path = os.path.join(self.path, f)
+            if f.endswith(".parquet"):
+                table = pq.read_table(path)
+            else:
+                own = start == self._tail_start
+                msgs, end = _read_tail(path, self._tail_bytes if own else 0)
+                table = _tail_table(msgs)
+                self._tail_start, self._tail_bytes = start, end
+            if not table.num_rows:
+                continue
+            table = table.slice(expect - table.column("id")[0].as_py())
             for r in table.to_pylist():
-                p = Primitive(**{k: r[k] for k in PRIMITIVE_FIELDS})
-                if p.name is not None:
-                    p.name = su_decode(p.name)
-                if p.value is not None:
-                    p.value = su_decode(p.value)
-                self.rows.append(p)
-                self.by_guid[p.guid] = p
-                if p.prev is not None:
-                    self.next_version[p.prev] = p.guid
-                if p.value is not None:
-                    self._value_ids.setdefault(
-                        p.value.lower(), []
-                    ).append(p.id)
-                if p.name is not None:
-                    self._name_ids.setdefault(
-                        p.name.lower(), []
-                    ).append(p.id)
-                self._index_prim(p)
+                self._mirror_add(_decoded(r))
             expect += table.num_rows
+        if not spans or not _TAIL_RE.match(spans[-1][2]):
+            self._tail_start, self._tail_bytes = None, 0
         self._flushed = expect
-        return expect == self._horizon_of(spans)
+        return expect >= self._horizon_of(spans)
+
+    def _mirror_add(self, p: Primitive) -> None:
+        """Append a committed primitive to the mirror and its indexes."""
+        self.rows.append(p)
+        self.by_guid[p.guid] = p
+        if p.prev is not None:
+            self.next_version[p.prev] = p.guid
+        if p.value is not None:
+            self._value_ids.setdefault(p.value.lower(), []).append(p.id)
+        if p.name is not None:
+            self._name_ids.setdefault(p.name.lower(), []).append(p.id)
+        self._index_prim(p)
 
     def hydrate(self, limit: int = 200_000) -> bool:
         """Load the whole log into the driver mirror — the serving
@@ -838,37 +971,40 @@ class ParquetLogStore(PrimitiveStore):
             return False  # partial mirror with live writes: keep as-is
         if self.next_id > limit:
             return False
-        from pyspark.sql import functions as F
-
-        from graphd_spark.model import su_decode
-
-        it = self._log_df().orderBy("id").toLocalIterator()
-        rows: list[Primitive] = []
-        for r in it:
-            p = self._from_row(r)
-            if p.name is not None:
-                p.name = su_decode(p.name)
-            if p.value is not None:
-                p.value = su_decode(p.value)
-            rows.append(p)
-            self.by_guid[p.guid] = p
-            if p.prev is not None:
-                self.next_version[p.prev] = p.guid
-            if p.value is not None:
-                self._value_ids.setdefault(p.value.lower(), []).append(p.id)
-            if p.name is not None:
-                self._name_ids.setdefault(p.name.lower(), []).append(p.id)
-            self._index_prim(p)
-        self.rows = rows
+        for r in self._log_df().orderBy("id").toLocalIterator():
+            self._mirror_add(_decoded(r))
         self._base = 0
         return True
 
     def _log_df(self):
-        return (
-            self._spark()
-            .read.schema(PRIMITIVES_SCHEMA)
-            .parquet(self.path)
-        )
+        """The log as a DataFrame: the parquet parts, unioned with the
+        tail's rows when the log has a tail."""
+        spark = self._spark()
+        df = spark.read.schema(PRIMITIVES_SCHEMA).parquet(self.path)
+        spans = self._fs_spans()
+        if spans is None:  # foreign layout: every tail in the listing
+            spans = [
+                (int(m[1]), self._tail_rows(int(m[1])), f)
+                for f in os.listdir(self.path)
+                if (m := _TAIL_RE.match(f))
+            ]
+        tails = tuple(s for s in spans if s[1] and _TAIL_RE.match(s[2]))
+        if not tails:
+            return df
+        memo = self._tail_frame
+        if memo is None or memo[0] != tails:
+            import pyarrow as pa
+
+            table = pa.concat_tables(
+                _tail_table(_read_tail(os.path.join(self.path, f))[0])
+                for _, _, f in tails
+            )
+            # an arrow table becomes a LocalRelation: scans of it need
+            # no Python worker
+            memo = self._tail_frame = (
+                tails, spark.createDataFrame(table, PRIMITIVES_SCHEMA)
+            )
+        return df.unionByName(memo[1])
 
     def ts_of_id(self, id: int) -> int:
         """Timestamp point read; ids below the cache base go through
@@ -900,76 +1036,164 @@ class ParquetLogStore(PrimitiveStore):
         self._trim_cache()
 
     def _flush(self) -> None:
-        """Write rows[_flushed:] as one log part (driver-side pyarrow,
-        no Spark job on the OLTP write path)."""
+        """Commit rows[_flushed:] to the log (driver-side pyarrow, no
+        Spark job on the OLTP write path) — see _commit_batch."""
         pend = self.rows[self._flushed - self._base:]
         if not pend:
             return
-        _write_part(
-            self.path, _prims_table(pend), self._flushed, durable=False
-        )
-        self._flushed = self.next_id
-        # any in-process commit write invalidates every session's
-        # mirror_current TTL cache (see _write_epoch) — except this
-        # store's own verdict, when it was taken at the epoch just
-        # before this bump (no other writer came in between): it moves
-        # to the new epoch with its original timestamp, so own writes
-        # never extend the TTL
-        mc = self._mc_cache
+        batch = _prims_batch(pend)
+        while not self._commit_batch(batch):
+            pass  # another store rolled the tail first: resolve again
+        # any in-process commit invalidates every session's
+        # mirror_current TTL verdict (see _write_epoch)
         ParquetLogStore._write_epoch += 1
-        if mc is not None and mc[1] == ParquetLogStore._write_epoch - 1:
-            self._mc_cache = (mc[0], ParquetLogStore._write_epoch)
+
+    @contextlib.contextmanager
+    def _locked_tail(self, start: int, create: bool = False):
+        """The tail at ``start`` opened for appending under an
+        exclusive flock, or None when another store's roll unlinked
+        it (before the open, or while this one waited for the lock)."""
+        flags = os.O_WRONLY | os.O_APPEND | (os.O_CREAT if create else 0)
+        try:
+            fd = os.open(self._tail_path(start), flags, 0o644)
+        except FileNotFoundError:
+            yield None
+            return
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX)
+            yield fd if os.fstat(fd).st_nlink else None
+        finally:
+            os.close(fd)  # releases the lock
+
+    def _commit_batch(self, batch) -> bool:
+        """Append ``batch`` (the rows from _flushed on) to the tail as
+        one IPC message; or, when the tail would pass TAIL_ROWS, roll
+        the tail and the batch into one durable part and unlink the
+        tail.  False when another store rolled the tail first: its
+        rows are in a part, and the caller starts a new tail."""
+        import pyarrow as pa
+
+        start = self._tail_start
+        held = 0 if start is None else self._flushed - start
+        roll = held + batch.num_rows > TAIL_ROWS
+        if start is None and roll:
+            # too big for a tail and no tail to roll: straight to a part
+            _write_part(
+                self.path, pa.Table.from_batches([batch]), self._flushed,
+                durable=False,
+            )
+            self._flushed += batch.num_rows
+            return True
+        if start is None:
+            start, self._tail_bytes = self._flushed, 0
+        with self._locked_tail(start, create=self._tail_start is None) as fd:
+            if fd is None:
+                self._tail_start, self._tail_bytes = None, 0
+                return False
+            self._tail_start = start
+            st = os.fstat(fd)
+            if st.st_size != self._tail_bytes:
+                self._cut_tail(fd, st.st_size)
+            if roll:
+                path = self._tail_path(start)
+                table = _tail_table(_read_tail(path)[0], (batch,))
+                _write_part(self.path, table, start, durable=True)
+                self._flushed = start + table.num_rows
+                self._tail_start, self._tail_bytes = None, 0
+                os.unlink(path)
+                return True
+            buf = batch.serialize()
+            data = memoryview(buf)
+            while data:
+                data = data[os.write(fd, data):]
+        old = (start, self._tail_bytes, st.st_ino)
+        self._tail_bytes += buf.size
+        self._flushed += batch.num_rows
+        # an own append moves the signature it was proven under
+        c = self._dir_sig_cache
+        if c is not None and c[0] == old:
+            self._dir_sig_cache = (
+                (start, self._tail_bytes, st.st_ino), c[1]
+            )
+        return True
+
+    def _cut_tail(self, fd: int, size: int) -> None:
+        """Truncate the locked tail back to the bytes this store has
+        read, dropping a torn last message.  Raises StoreError when it
+        holds complete commits this store has not read: another
+        writer committed ids this store is about to reuse."""
+        if size < self._tail_bytes or _read_tail(
+            self._tail_path(self._tail_start), self._tail_bytes
+        )[0]:
+            raise StoreError(
+                f"parquet log {self.path}: another writer committed to "
+                f"{_tail_name(self._tail_start)} since this store read it"
+            )
+        os.ftruncate(fd, self._tail_bytes)
 
     def compact(self) -> None:
-        """Merge the canonical commit files into ONE part file — the
+        """Merge the parts and the tail into ONE part file — the
         background compactor the log format anticipates (see the
         class docstring; libaddb's analog merges small append files).
         Row content, ids and the fs horizon are unchanged; only the
         file count drops, so every downstream scan stops paying
-        per-file footer/open overhead (a 31-write store is otherwise
-        31 tiny parquet files, re-opened by each compiled read).
-        Skips foreign layouts (files outside the part-<start>-<count>
-        naming, e.g. a Spark-written bulk import) and parts whose row
-        counts disagree with their names; a log with a missing part
-        raises StoreError (_fs_spans).
+        per-file footer/open overhead.  Skips foreign layouts (files
+        outside the part-<start>-<count> naming, e.g. a Spark-written
+        bulk import) and parts whose row counts disagree with their
+        names; a log with a missing part raises StoreError
+        (_fs_spans).  The tail is locked from its read to its unlink,
+        so an append another store makes meanwhile waits, then
+        starts a new tail after the merged part.
 
         Crash rule: the merged part lands durably (fsync, rename,
-        directory fsync) before any old part is unlinked, so a crash
-        leaves either the old parts alone or the merged part beside
-        some of the parts it covers; _fs_spans ignores covered parts
-        and ``attach`` unlinks them."""
+        directory fsync) before any old part or the tail is unlinked,
+        so a crash leaves either the old files alone or the merged
+        part beside some of the files it covers; _fs_spans ignores
+        covered files and ``attach`` unlinks them."""
         spans = self._fs_spans()
-        if spans is None or len(spans) <= 1:
+        if not spans or (len(spans) == 1 and spans[0][2].startswith("part")):
             return  # foreign layout, or nothing to merge
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tables = [
-            pq.read_table(os.path.join(self.path, f)) for _, _, f in spans
-        ]
-        merged = pa.concat_tables(tables).sort_by("id")
-        # the live spans chain from id 0 (_fs_spans), so the merged
-        # part starts at 0
-        if merged.num_rows != self._horizon_of(spans):
-            return  # overlap or short parts: refuse a lying name
-        _write_part(self.path, merged, 0, durable=True)
-        try:
-            self._unlink_parts(f for _, _, f in spans)
-        finally:
-            ParquetLogStore._write_epoch += 1
-            self._dir_sig_cache = None
-            self._mc_cache = None
-            # drop the memoized lazy frame: its plan pins the old file
-            # listing (content is identical, so _version stays —
-            # derived caches keyed on it remain valid)
-            self._df = None
-            # Spark's shared file-status cache may still list the old
-            # commit files for this path; drop those entries so the
-            # next scan plans against the compacted layout
+        with contextlib.ExitStack() as locks:
+            tables, end = [], 0
+            for start, count, f in spans:
+                path = os.path.join(self.path, f)
+                if f.endswith(".parquet"):
+                    t = pq.read_table(path)
+                    if t.num_rows != count:
+                        return  # a part whose name lies about its rows
+                else:
+                    if locks.enter_context(self._locked_tail(start)) is None:
+                        return  # another store rolled it first
+                    t = _tail_table(_read_tail(path)[0])
+                tables.append(t)
+                end = start + t.num_rows
+            merged = pa.concat_tables(tables).sort_by("id")
+            # the live spans chain from id 0 (_fs_spans), so the merged
+            # part starts at 0
+            if merged.num_rows != end:
+                return  # overlapping parts: refuse a lying name
+            _write_part(self.path, merged, 0, durable=True)
+            self._tail_start, self._tail_bytes = None, 0
             try:
-                self._spark().catalog.refreshByPath(self.path)
-            except Exception:
-                pass  # no live session: nothing cached a listing yet
+                self._unlink_parts(f for _, _, f in spans)
+            finally:
+                ParquetLogStore._write_epoch += 1
+                self._dir_sig_cache = None
+                self._mc_cache = None
+                # drop the memoized lazy frame: its plan pins the old
+                # file listing (content is identical, so _version
+                # stays — derived caches keyed on it remain valid)
+                self._df = None
+                # Spark's shared file-status cache may still list the
+                # old log files for this path; drop those entries so
+                # the next scan plans against the compacted layout
+                try:
+                    self._spark().catalog.refreshByPath(self.path)
+                except Exception:
+                    pass  # no live session: nothing cached a listing yet
 
     def _unlink_parts(self, names) -> None:
         for f in names:

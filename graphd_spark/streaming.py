@@ -33,11 +33,13 @@ def replica_stream(
 ) -> DataFrame:
     """The replica's view: a stream of primitives with id >= start_id.
 
-    ``log_dir`` is a Parquet directory the primary appends to (one
-    file per commit; see PrimitiveStore.save_parquet /
-    append_parquet).  The id predicate prunes whole files via
-    Parquet min/max statistics, so resuming from a high start-id
-    never rescans history.
+    ``log_dir`` is a Parquet directory the primary appends to
+    (``PrimitiveStore.append_parquet`` writes one file per call).  A
+    ``ParquetLogStore``'s commits reach the stream when its tail
+    rolls into a parquet part (every 4,096 rows, or at ``compact``):
+    the stream skips the hidden tail file.  The id predicate prunes
+    whole files via Parquet min/max statistics, so resuming from a
+    high start-id never rescans history.
     """
     return (
         spark.readStream.schema(PRIMITIVES_SCHEMA)
@@ -84,7 +86,7 @@ def run_replica(
 
     ``available_now`` drains everything currently in the log and stops
     (the batch-test mode); without it the query runs continuously,
-    picking up each appended commit file.  The checkpoint directory
+    picking up each parquet file the primary adds.  The checkpoint directory
     holds the stream offset — the durable equivalent of the
     reference replica's start-id handshake.
     """

@@ -43,6 +43,15 @@ def _parquet_session(spark, cache_rows=None):
     return GraphSession(spark, log_path=log, cache_rows=cache_rows)
 
 
+@pytest.fixture
+def part_per_commit(monkeypatch):
+    """A tail bound of 0 rows: every commit lands as its own parquet
+    part, the layout the part-level tests below build their logs in."""
+    from graphd_spark import store
+
+    monkeypatch.setattr(store, "TAIL_ROWS", 0)
+
+
 @pytest.mark.parametrize("name", PARQUET_GOLDENS)
 def test_golden_parquet_backend(spark, name):
     result = run_golden(lambda: _parquet_session(spark), name)
@@ -137,9 +146,11 @@ def test_rollback_never_touches_disk(spark):
     )
 
 
-def _write_versioned_log(spark):
-    """Six commits plus a version bump: seven one-primitive parts."""
-    sess = _parquet_session(spark)
+def _write_versioned_log(spark, memory=False):
+    """Six commits plus a version bump (seven one-primitive parts
+    with ``part_per_commit``), on the log backend or, with
+    ``memory``, the in-memory one."""
+    sess = GraphSession() if memory else _parquet_session(spark)
     guids = []
     for i in range(6):
         r = sess.request(f'write (name="n" value="v{i}")')
@@ -154,7 +165,7 @@ def _write_versioned_log(spark):
     return sess, probes
 
 
-def test_compact_merges_commit_files_content_identical(spark):
+def test_compact_merges_commit_files_content_identical(spark, part_per_commit):
     """compact() folds N commit files into one part file with the
     same rows, same horizon, and working reads before/after."""
     import os
@@ -192,7 +203,7 @@ def test_compact_merges_commit_files_content_identical(spark):
     ) == 'ok (("v7"))'
 
 
-def test_compact_refuses_foreign_layout(spark):
+def test_compact_refuses_foreign_layout(spark, part_per_commit):
     """A directory holding parquet outside the canonical part naming
     (e.g. a Spark bulk import) is left untouched."""
     import os
@@ -223,7 +234,9 @@ def _parquet_names(log):
     return sorted(f for f in os.listdir(log) if f.endswith(".parquet"))
 
 
-def test_attach_refuses_a_log_with_a_missing_part(spark, monkeypatch):
+def test_attach_refuses_a_log_with_a_missing_part(
+    spark, monkeypatch, part_per_commit
+):
     """A log whose parts skip ids is not read as complete: attach
     raises StoreError naming the missing ids, before any Spark read."""
     import os
@@ -250,7 +263,9 @@ def test_attach_refuses_a_log_with_a_missing_part(spark, monkeypatch):
 
 
 @pytest.mark.parametrize("fail", ["replace", "unlink"])
-def test_compact_interrupted_keeps_log_intact(spark, monkeypatch, fail):
+def test_compact_interrupted_keeps_log_intact(
+    spark, monkeypatch, fail, part_per_commit
+):
     """A compaction that dies before its rename leaves the old parts
     alone; one that dies after the rename, with only the first old
     part unlinked, leaves the merged part beside parts it covers.
@@ -301,7 +316,7 @@ def test_compact_interrupted_keeps_log_intact(spark, monkeypatch, fail):
     assert [sess2.request(p) for p in probes] == replies_before
 
 
-def test_commit_lands_by_rename(spark, monkeypatch):
+def test_commit_lands_by_rename(spark, monkeypatch, part_per_commit):
     """A commit whose rename fails publishes nothing: no part under a
     canonical name, no tmp file left, and a fresh attach sees only
     the rows committed before it.  A normal commit leaves no tmp."""
@@ -355,7 +370,7 @@ def test_tmp_parts_invisible_and_kept_by_attach(spark):
     assert os.listdir(log) == []
 
 
-def test_commit_file_contract(spark):
+def test_commit_file_contract(spark, part_per_commit):
     """A commit file reads back, schema included, as the table the
     original per-column writer built; no column chunk is dictionary
     encoded; Spark collects the same rows."""
@@ -371,9 +386,6 @@ def test_commit_file_contract(spark):
     store = ParquetLogStore(spark, log, fresh=True)
     store.begin()
     a = store.append(name="n\udcff", value="v\udc80x")  # broken UTF-8
-    # value_norm is written as is, and a lone surrogate cannot cross
-    # into Arrow: give this row an encodable one
-    a.value_norm = su_encode(a.value_norm)
     store.append(name="plain", left=a.guid, right=a.guid,
                  live=False, archival=False)
     store.append(value="3.5", typeguid=a.guid, scope=a.guid)
@@ -389,7 +401,8 @@ def test_commit_file_contract(spark):
     got = pq.read_table(os.path.join(log, part))
     cols = {
         f: [
-            su_encode(v) if f in ("name", "value") and isinstance(v, str)
+            su_encode(v)
+            if f in ("name", "value", "value_norm") and isinstance(v, str)
             else v
             for p in pend
             for v in (getattr(p, f),)
@@ -410,4 +423,211 @@ def test_commit_file_contract(spark):
     )
     assert spark_rows == sorted(
         tuple(r[f] for f in PRIMITIVE_FIELDS) for r in want.to_pylist()
+    )
+
+
+def _tail_of(log):
+    import os
+
+    (tail,) = [f for f in os.listdir(log) if f.endswith(".arrows")]
+    return os.path.join(log, tail)
+
+
+def test_commits_append_to_one_tail(spark):
+    """Small commits append to one hidden tail and create no file;
+    Spark, attach and the fast path all see their rows."""
+    import os
+
+    from graphd_spark.store import _read_tail
+
+    sess = _parquet_session(spark)
+    sess.request('write (name="n" value="a")')
+    log = sess.log_path
+    tail = _tail_of(log)
+    names = sorted(os.listdir(log))
+    for v in "bcd":
+        sess.request(f'write (name="n" value="{v}")')
+    assert sorted(os.listdir(log)) == names
+    assert not _parquet_names(log)
+    msgs, end = _read_tail(tail)
+    assert end == os.path.getsize(tail)
+    assert len(msgs) == sess.store.next_id == 4  # a message per commit
+    reader = GraphSession.attach(spark, log)
+    assert reader.store.next_id == sess.store.next_id
+    assert reader.store.to_df(spark).count() == sess.store.next_id
+    want = 'ok (("a") ("b") ("c") ("d"))'
+    assert reader.request('read (name="n" result=((value)))') == want
+    assert sess.request('read (name="n" result=((value)))') == want
+
+
+def test_torn_tail_is_cut_at_the_last_complete_batch(spark):
+    """Half a message at the tail's end (a writer that died
+    mid-append): attach, absorb and to_df see exactly the complete
+    batches, and the next commit truncates the torn bytes first."""
+    import os
+
+    from graphd_spark.store import _read_tail
+
+    writer = _parquet_session(spark)
+    for v in "ab":
+        writer.request(f'write (name="n" value="{v}")')
+    log = writer.log_path
+    follower = GraphSession.attach(spark, log)
+    assert follower.store.hydrate()
+    count = writer.store.next_id
+    tail = _tail_of(log)
+    whole = os.path.getsize(tail)
+    msgs, _ = _read_tail(tail)
+    torn = msgs[-1].serialize().to_pybytes()
+    with open(tail, "ab") as fh:
+        fh.write(torn[: len(torn) // 2])
+
+    want = 'ok (("a") ("b"))'
+    probe = 'read (name="n" result=((value)))'
+    assert follower.request(probe) == want  # absorbs nothing
+    assert follower.store.next_id == count
+    reader = GraphSession.attach(spark, log)
+    assert reader.store.next_id == count
+    assert reader.store.to_df(spark).count() == count
+    assert reader.request(probe) == want
+    # the reader commits next: the torn half goes, its message follows
+    assert reader.request('write (name="n" value="c")').startswith("ok (")
+    msgs, end = _read_tail(tail)
+    assert end == os.path.getsize(tail) > whole
+    assert len(msgs) == 3 and end - whole == msgs[-1].serialize().size
+    want = 'ok (("a") ("b") ("c"))'
+    assert follower.request(probe) == want
+    assert GraphSession.attach(spark, log).request(probe) == want
+
+
+@pytest.mark.parametrize("roll", ["compact", "commit"])
+def test_roll_interrupted_before_tail_unlink(spark, monkeypatch, roll):
+    """A roll whose part landed but whose tail unlink failed (by
+    ``compact`` or by the commit that passes TAIL_ROWS) leaves the
+    tail beside the part that covers it.  A re-attach gives the same
+    rows, next_id and replies as an in-memory replay of the same
+    writes, and unlinks the covered tail."""
+    import os
+
+    from graphd_spark import store as store_mod
+
+    sess, probes = _write_versioned_log(spark)
+    log = sess.log_path
+    store = sess.store
+    tail = _tail_of(log)
+    twin, _ = _write_versioned_log(None, memory=True)
+    if roll == "commit":
+        monkeypatch.setattr(store_mod, "TAIL_ROWS", store.next_id)
+        for s in (store, twin.store):
+            s.begin()
+            s.append(name="n", value="rolled")
+        twin.store.commit()
+    real = os.unlink
+
+    def flaky(path, *args, **kwargs):
+        if str(path).endswith(".arrows"):
+            raise OSError("injected fault")
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(os, "unlink", flaky)
+    with pytest.raises(OSError, match="injected fault"):
+        store.compact() if roll == "compact" else store.commit()
+    monkeypatch.undo()
+
+    count = twin.store.next_id
+    merged = f"part-{0:012d}-{count:08d}.parquet"
+    assert _parquet_names(log) == [merged] and os.path.exists(tail)
+    covered = []
+    assert store._fs_spans(covered) == [(0, count, merged)]
+    assert covered == [os.path.basename(tail)]
+
+    again = GraphSession.attach(spark, log)
+    assert not os.path.exists(tail)
+    assert again.store.next_id == count
+    rows = sorted(tuple(r) for r in again.store.to_df(spark).collect())
+    assert rows == sorted(p.as_row() for p in twin.store.rows)
+    probes.append('read (name="n" value="rolled" result=((value)))')
+    assert [again.request(p) for p in probes] == [
+        twin.request(p) for p in probes
+    ]
+
+
+def test_append_during_another_stores_roll_is_kept(spark):
+    """A second store commits from a thread while the first compacts
+    the log over and over: the tail lock makes every append land in
+    a tail no roll has read yet, so no row is lost."""
+    import sys
+    import threading
+
+    from graphd_spark.store import ParquetLogStore
+
+    sess = _parquet_session(spark)
+    sess.request('write (name="n" value="base")')
+    log = sess.log_path
+    other = ParquetLogStore.attach(spark, log)
+    values = [f"w{i:04d}" for i in range(300)]
+    errors = []
+
+    def appender():
+        try:
+            for v in values:
+                other.begin()
+                other.append(name="n", value=v)
+                other.commit()
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        t = threading.Thread(target=appender)
+        t.start()
+        rolls = 0
+        while t.is_alive() or rolls < 2:
+            sess.store.compact()
+            rolls += 1
+        t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not t.is_alive() and not errors
+    reader = ParquetLogStore.attach(spark, log)
+    assert reader.next_id == other.next_id == len(values) + 1
+    got = reader.to_df(spark).select("id", "value").collect()
+    assert sorted(r["id"] for r in got) == list(range(other.next_id))
+    assert {r["value"] for r in got} == set(values) | {"base"}
+
+
+def test_lone_surrogate_value_round_trips(spark):
+    """A value with lone surrogates (broken UTF-8 on the wire)
+    commits to the log and reads back through the fast path, the
+    compiled path and a fresh attach."""
+    sess = _parquet_session(spark)
+    v = "caf\udce9"
+    assert sess.request(f'write (name="s" value="{v}")').startswith("ok (")
+    probe = f'read (name="s" value="{v}" result=((value)))'
+    want = f'ok (("{v}"))'
+    assert sess.request(probe) == want
+    sess.fast_read_enabled = False
+    assert sess.request(probe) == want
+    fresh = GraphSession.attach(spark, sess.log_path)
+    assert fresh.request(probe) == want
+    assert fresh.store.hydrate()
+    assert fresh.request(probe) == want
+
+
+def test_commits_to_a_spark_written_log_reach_spark_reads(spark, tmp_path):
+    """A log Spark wrote (part names outside the canonical naming)
+    still takes commits: they go to a tail, which Spark reads union
+    with the parts."""
+    mem = GraphSession(spark)
+    mem.request('write (name="n" value="a")')
+    log = str(tmp_path / "log")
+    mem.store.save_parquet(spark, log)
+    sess = GraphSession.attach(spark, log)
+    assert sess.store._fs_spans() is None
+    assert sess.request('write (name="n" value="b")').startswith("ok (")
+    probe = 'read (name="n" result=((value)))'
+    assert sess.request(probe) == 'ok (("a") ("b"))'
+    assert GraphSession.attach(spark, log).request(probe) == (
+        'ok (("a") ("b"))'
     )

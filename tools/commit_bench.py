@@ -5,12 +5,18 @@ primitives to the log directory:
 
 - small: commits of two primitives (a nation and its ``in-region``
   link, the shape of a serving write), reported as the median and
-  quartiles in microseconds over ``--commits`` commits;
+  quartiles in microseconds over ``--commits`` commits; they append
+  to the log's tail, and every ``TAIL_ROWS`` rows one of them rolls
+  the tail into a parquet part;
+- roll: ``compact()`` after 128 two-primitive commits on a fresh log
+  (the tail rolled into one part), as the median, min and max in
+  milliseconds over ``--bulk-runs`` fresh logs;
 - bulk: one commit of a 20,500-primitive graph (500 regions, 10,000
   nations, 10,000 links: the serving benchmark's set-up store),
   reported as the median, min and max in seconds over ``--bulk-runs``
   fresh logs;
-- the on-disk size of both logs in bytes per primitive.
+- the on-disk size of the small and bulk logs (parts and tail) in
+  bytes per primitive.
 
 Usage::
 
@@ -45,12 +51,13 @@ def _store(path: str) -> ParquetLogStore:
 def _log_bytes(path: str) -> int:
     return sum(
         e.stat().st_size for e in os.scandir(path)
-        if e.name.endswith(".parquet")
+        if e.name.endswith((".parquet", ".arrows"))
     )
 
 
-def small_commits(path: str, n: int) -> tuple[list[float], float]:
-    """µs per 2-primitive commit, and the log's bytes per primitive."""
+def _small_log(path: str, n: int) -> tuple[ParquetLogStore, list[float]]:
+    """A fresh log of one region and ``n`` 2-primitive commits, and
+    µs per commit."""
     store = _store(path)
     store.begin()
     region = store.append(name="region", value="r0000")
@@ -63,7 +70,21 @@ def small_commits(path: str, n: int) -> tuple[list[float], float]:
         t0 = time.perf_counter_ns()
         store.commit()
         us.append((time.perf_counter_ns() - t0) / 1e3)
+    return store, us
+
+
+def small_commits(path: str, n: int) -> tuple[list[float], float]:
+    """µs per 2-primitive commit, and the log's bytes per primitive."""
+    store, us = _small_log(path, n)
     return us, _log_bytes(path) / store.next_id
+
+
+def roll(path: str) -> float:
+    """Milliseconds for compact() after 128 2-primitive commits."""
+    store, _ = _small_log(path, 128)
+    t0 = time.perf_counter()
+    store.compact()
+    return (time.perf_counter() - t0) * 1e3
 
 
 def bulk_commit(path: str) -> tuple[float, float]:
@@ -102,6 +123,11 @@ def main() -> None:
         print(f"small commit (2 primitives): median {med:.0f} us, "
               f"IQR {q1:.0f}-{q3:.0f} us over {len(us)} commits; "
               f"{small_bpp:.1f} B/primitive")
+        ms = [roll(os.path.join(work, f"roll{r}"))
+              for r in range(args.bulk_runs)]
+        print(f"roll (compact after 128 small commits): median "
+              f"{statistics.median(ms):.2f} ms, min {min(ms):.2f} ms, "
+              f"max {max(ms):.2f} ms over {len(ms)} runs")
         runs = []
         for r in range(args.bulk_runs):
             runs.append(bulk_commit(os.path.join(work, f"bulk{r}")))
