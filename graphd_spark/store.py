@@ -595,7 +595,7 @@ def _write_part(dirpath: str, table, start: int, *, durable: bool) -> None:
 
     The file is serialized in memory, written under a hidden
     ``.part-….parquet.tmp`` name and renamed into place, so no reader
-    ever sees a partial part: Spark skips dot-files and _fs_spans
+    ever sees a partial part: Spark skips dot-files and _fs_files
     skips names not ending in ``.parquet``.  ``durable`` fsyncs the
     file before the rename and the directory after it.
 
@@ -632,6 +632,22 @@ def _write_part(dirpath: str, table, start: int, *, durable: bool) -> None:
             os.close(fd)
 
 
+def _hot_window_ns(mtime_ns: int) -> int:
+    """How long a directory with this mtime stays "hot" after a
+    change: a change landing in the same timestamp tick as a stat
+    carries the same mtime and would hide behind a cached signature,
+    and once the mtime is older than one tick, any later change
+    carries a later one.  The tick is read off the digits of
+    ``mtime_ns``: a filesystem with 1 s (FAT: 2 s) timestamps stores
+    whole seconds, giving two seconds here; one with fine timestamps
+    stores the kernel's coarse clock (one jiffy, <= 10 ms at HZ >=
+    100), covered by the 20 ms floor."""
+    tick = 1
+    while tick < 1_000_000_000 and mtime_ns % (tick * 10) == 0:
+        tick *= 10
+    return max(20_000_000, 2 * tick)
+
+
 def _decoded(r) -> Primitive:
     """A log row (name, value and value_norm su_encode'd) as a mirror
     primitive."""
@@ -666,7 +682,10 @@ class ParquetLogStore(PrimitiveStore):
       holds it from reading the tail until the unlink, and an append
       that finds its tail unlinked once it holds the lock (``st_nlink
       == 0``) starts a new tail, so an append never lands in a tail
-      a roll has already read.
+      a roll has already read.  A commit that finds another writer's
+      rows at or past its first id, in its tail or in the listing a
+      new tail starts from, raises StoreError instead of writing the
+      ids twice.
     - a torn last message (a process died mid-append) is cut by every
       reader at the last complete batch, and truncated by the next
       append.  A crash between a roll's part and its unlink leaves a
@@ -710,6 +729,9 @@ class ParquetLogStore(PrimitiveStore):
         #: (tail spans, DataFrame of their rows) — see _log_df
         self._tail_frame = None
         os.makedirs(path, exist_ok=True)
+        #: a directory whose mtime is younger than this is "hot": its
+        #: signature is not cached (see mirror_current)
+        self._hot_ns = _hot_window_ns(os.stat(path).st_mtime_ns)
         if fresh:
             # hidden ".part-" files are tmp parts of a crashed commit;
             # attach leaves them alone (another process may be writing)
@@ -724,37 +746,34 @@ class ParquetLogStore(PrimitiveStore):
         cls, spark, path: str, db_id: int = PREDICTABLE_DB_ID
     ) -> "ParquetLogStore":
         """Open an existing log without driver materialization: only
-        the last row's (id, guid) is read to set the id horizon and
-        adopt the database id — from the tail's last batch when the
-        log ends in a tail, else by one Spark query."""
+        the last row's (id, guid) is read, by one Spark query, to set
+        the id horizon and adopt the database id."""
+        from pyspark.sql import functions as F
+
         store = cls(spark, path, db_id=db_id)
         # finish an interrupted compaction or roll before Spark lists
         # the files
         covered: list = []
         spans = store._fs_spans(covered)
         store._unlink_parts(covered)
-        if spans and _TAIL_RE.match(spans[-1][2]):
-            import pyarrow as pa
-
-            start = spans[-1][0]
-            msgs, end = _read_tail(store._tail_path(start))
-            store._tail_start, store._tail_bytes = start, end
-            b = pa.ipc.read_record_batch(msgs[-1], _arrow_schema())
-            last = {f: b.column(f)[-1].as_py() for f in ("id", "guid")}
-        else:
-            from pyspark.sql import functions as F
-
-            df = store._log_df()
-            last = next(iter(
-                df.orderBy(F.col("id").desc()).select("id", "guid")
-                .limit(1).collect()
-            ), None)
+        last = next(iter(
+            store._log_df().orderBy(F.col("id").desc()).select("id", "guid")
+            .limit(1).collect()
+        ), None)
         if last:
             store._base = store._flushed = last["id"] + 1
             from graphd_spark.model import guid_db
 
             store.db_id = guid_db(last["guid"])
             store._version += 1
+        if spans and _TAIL_RE.match(spans[-1][2]):
+            # the next append continues the tail, unless another
+            # writer moved it past the horizon meanwhile
+            start = spans[-1][0]
+            with contextlib.suppress(FileNotFoundError):
+                end, nbytes = store._tail_end(start)
+                if end == store._flushed:
+                    store._tail_start, store._tail_bytes = start, nbytes
         return store
 
     # -- helpers ----------------------------------------------------------
@@ -765,51 +784,63 @@ class ParquetLogStore(PrimitiveStore):
     def _tail_path(self, start: int) -> str:
         return os.path.join(self.path, _tail_name(start))
 
-    def _tail_rows(self, start: int) -> int:
-        """Rows in the complete messages of the tail at ``start``, read
-        from the end of what this store has read of its own tail."""
+    def _tail_end(self, start: int) -> tuple[int, int]:
+        """(the id after the complete messages of the tail at
+        ``start``, the byte offset after them), reading on from what
+        this store has read of its own tail."""
         own = start == self._tail_start
-        msgs, _ = _read_tail(
+        msgs, end = _read_tail(
             self._tail_path(start), self._tail_bytes if own else 0
         )
         if not msgs:
-            return self._flushed - start if own else 0
+            return (self._flushed if own else start), end
         import pyarrow as pa
 
         last = pa.ipc.read_record_batch(msgs[-1], _arrow_schema())
-        return last.column("id")[-1].as_py() + 1 - start
+        return last.column("id")[-1].as_py() + 1, end
 
-    def _fs_spans(self, covered: Optional[list] = None) -> Optional[list]:
-        """The log files on disk as sorted (start, count, name) spans —
-        one os.listdir, no Spark job.  None when the directory
-        contains parquet files outside the canonical
-        part-<start>-<count> naming (e.g. a Spark-written bulk
-        import), whose id coverage we can't read cheaply.  A tail's
-        count is its complete batches' rows; a tail without one is
-        left out.
-
-        A span inside a wider span that starts at or before it is a
-        part an interrupted compaction left behind, or a tail whose
-        roll was interrupted before its unlink: it is dropped (and
-        its name appended to ``covered`` when given).  Raises
-        StoreError when the live spans leave a hole in the ids from
-        0: a log with a missing part is never read as complete."""
-        spans = []
+    def _fs_files(self) -> tuple[Optional[list], list]:
+        """The log files on disk as (part spans, tail spans), each a
+        list of (start, count, name) — one os.listdir, no Spark job.
+        The parts are None when the directory contains parquet files
+        outside the canonical part-<start>-<count> naming (e.g. a
+        Spark-written bulk import), whose id coverage we can't read
+        cheaply.  A tail's count is its complete batches' rows; a
+        tail without one is left out."""
+        parts, tails = [], []
         for f in os.listdir(self.path):
             if f.endswith(".parquet"):
                 m = _PART_RE.match(f)
                 if m is None:
-                    return None
-                spans.append((int(m[1]), int(m[2]), f))
+                    parts = None
+                elif parts is not None:
+                    parts.append((int(m[1]), int(m[2]), f))
             elif m := _TAIL_RE.match(f):
+                start = int(m[1])
                 try:
-                    n = self._tail_rows(int(m[1]))
+                    n = self._tail_end(start)[0] - start
                 except FileNotFoundError:  # rolled since the listing
-                    return self._fs_spans(covered)
+                    return self._fs_files()
                 if n:
-                    spans.append((int(m[1]), n, f))
+                    tails.append((start, n, f))
+        return parts, tails
+
+    def _fs_spans(self, covered: Optional[list] = None) -> Optional[list]:
+        """The live log files as sorted (start, count, name) spans, or
+        None for a foreign layout (see _fs_files)."""
+        parts, tails = self._fs_files()
+        return None if parts is None else self._live(parts + tails, covered)
+
+    def _live(self, spans: list, covered: Optional[list] = None) -> list:
+        """``spans`` sorted, without the spans inside a wider span that
+        starts at or before them: a part an interrupted compaction
+        left behind, or a tail whose roll was interrupted before its
+        unlink (their names are appended to ``covered`` when given).
+        Raises StoreError when the live spans leave a hole in the ids
+        from 0: a log with a missing part is never read as
+        complete."""
         # a part sorts before a tail of the same span, which it covers
-        spans.sort(key=lambda s: (s[0], -s[1], s[2][0] == "_"))
+        spans = sorted(spans, key=lambda s: (s[0], -s[1], s[2][0] == "_"))
         live, end = [], 0
         for s in spans:
             if s[0] + s[1] <= end:
@@ -851,14 +882,6 @@ class ParquetLogStore(PrimitiveStore):
     #: serving tax at 40k+ q/s; 10 ms is still far inside any
     #: replica-visibility contract the reference implies.
     _MC_TTL_NS = 10_000_000  # 10 ms
-
-    #: a directory whose mtime is younger than this is "hot": its
-    #: signature is not cached.  File timestamps tick at the kernel's
-    #: coarse clock (one jiffy, <= 10 ms at HZ >= 100), so a change
-    #: landing in the same tick as the stat could carry the same mtime
-    #: and hide behind the cached signature.  Once the mtime is older
-    #: than this, any later change carries a later one.
-    _HOT_NS = 20_000_000  # 20 ms
 
     def _log_sig(self) -> Optional[tuple]:
         """((tail start, size, inode) of this store's tail or None,
@@ -906,7 +929,7 @@ class ParquetLogStore(PrimitiveStore):
             if (
                 sig is not None
                 and sig == self._log_sig()
-                and time.time_ns() - sig[1][0] > self._HOT_NS
+                and time.time_ns() - sig[1][0] > self._hot_ns
             ):
                 self._dir_sig_cache = sig
         self._mc_cache = (now, ParquetLogStore._write_epoch)
@@ -981,14 +1004,10 @@ class ParquetLogStore(PrimitiveStore):
         tail's rows when the log has a tail."""
         spark = self._spark()
         df = spark.read.schema(PRIMITIVES_SCHEMA).parquet(self.path)
-        spans = self._fs_spans()
-        if spans is None:  # foreign layout: every tail in the listing
-            spans = [
-                (int(m[1]), self._tail_rows(int(m[1])), f)
-                for f in os.listdir(self.path)
-                if (m := _TAIL_RE.match(f))
-            ]
-        tails = tuple(s for s in spans if s[1] and _TAIL_RE.match(s[2]))
+        parts, tails = self._fs_files()
+        if parts is not None:  # drop a tail a part covers
+            tails = [s for s in self._live(parts + tails) if s in tails]
+        tails = tuple(tails)
         if not tails:
             return df
         memo = self._tail_frame
@@ -1070,10 +1089,21 @@ class ParquetLogStore(PrimitiveStore):
         one IPC message; or, when the tail would pass TAIL_ROWS, roll
         the tail and the batch into one durable part and unlink the
         tail.  False when another store rolled the tail first: its
-        rows are in a part, and the caller starts a new tail."""
+        rows are in a part, and the caller starts a new tail.  Raises
+        StoreError when another writer committed ids from _flushed on
+        (see _cut_tail for the tail itself)."""
         import pyarrow as pa
 
         start = self._tail_start
+        if start is None:
+            # a new tail or part starts at _flushed: another writer's
+            # rows past it would cover this commit's and hide them
+            spans = self._fs_spans()
+            if spans is not None and self._horizon_of(spans) > self._flushed:
+                raise StoreError(
+                    f"parquet log {self.path}: another writer committed "
+                    f"ids from {self._flushed} on since this store read it"
+                )
         held = 0 if start is None else self._flushed - start
         roll = held + batch.num_rows > TAIL_ROWS
         if start is None and roll:

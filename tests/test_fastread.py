@@ -231,13 +231,26 @@ def test_hydrated_parquet_store_serves_fast(spark, tmp_path):
     ) == 'ok (("after"))'
 
 
+def test_hot_window_follows_the_timestamp_tick():
+    """A directory stays hot for two timestamp ticks, read off the
+    digits of its mtime, and at least 20 ms (a jiffy at HZ >= 100)."""
+    from graphd_spark.store import _hot_window_ns
+
+    assert _hot_window_ns(1_760_000_000_123_456_789) == 20_000_000
+    assert _hot_window_ns(1_760_000_000_120_000_000) == 20_000_000
+    assert _hot_window_ns(1_760_000_000_100_000_000) == 200_000_000
+    assert _hot_window_ns(1_760_000_001_000_000_000) == 2_000_000_000
+    assert _hot_window_ns(1_760_000_002_000_000_000) == 2_000_000_000
+
+
 def test_dir_sig_cache_never_hides_foreign_appends(spark, tmp_path):
     """mirror_current's stat-signature cache (store.py): steady-state
     serving skips the per-request listdir, but a foreign append —
     even one landing immediately after a cached probe — is absorbed
     on the very next request, because a changed directory signature
     always forces the listdir and a hot directory (mtime younger
-    than the 1 s guard) is never cached at all."""
+    than its hot window, see _hot_window_ns) is never cached at
+    all."""
     import os
 
     log = str(tmp_path / "log")

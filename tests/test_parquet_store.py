@@ -44,12 +44,28 @@ def _parquet_session(spark, cache_rows=None):
 
 
 @pytest.fixture
-def part_per_commit(monkeypatch):
-    """A tail bound of 0 rows: every commit lands as its own parquet
-    part, the layout the part-level tests below build their logs in."""
+def layouts(monkeypatch):
+    """Runs a test body once per log layout, yielding its name:
+    "part" (a tail bound of 0 rows, so every commit lands as its own
+    parquet part) and "tail" (the default bound: small commits append
+    to the tail)."""
     from graphd_spark import store
 
-    monkeypatch.setattr(store, "TAIL_ROWS", 0)
+    def each():
+        for layout, rows in (("part", 0), ("tail", store.TAIL_ROWS)):
+            monkeypatch.setattr(store, "TAIL_ROWS", rows)
+            yield layout
+
+    return each()
+
+
+def _log_names(log):
+    """The log's parts and tails, sorted by name."""
+    import os
+
+    return sorted(
+        f for f in os.listdir(log) if f.endswith((".parquet", ".arrows"))
+    )
 
 
 @pytest.mark.parametrize("name", PARQUET_GOLDENS)
@@ -146,15 +162,18 @@ def test_rollback_never_touches_disk(spark):
     )
 
 
-def _write_versioned_log(spark, memory=False):
-    """Six commits plus a version bump (seven one-primitive parts
-    with ``part_per_commit``), on the log backend or, with
-    ``memory``, the in-memory one."""
+def _write_versioned_log(spark, memory=False, compact_after=None):
+    """Six commits plus a version bump (seven one-primitive parts in
+    the "part" layout), on the log backend or, with ``memory``, the
+    in-memory one.  ``compact_after`` commits are compacted first:
+    in the "tail" layout the log is then a part and a tail."""
     sess = GraphSession() if memory else _parquet_session(spark)
     guids = []
     for i in range(6):
         r = sess.request(f'write (name="n" value="v{i}")')
         guids.append(r.split("(")[1].split(" ")[0])
+        if i + 1 == compact_after:
+            sess.store.compact()
     sess.request(f'write (guid~={guids[0]} name="n" value="v0b")')
     probes = [
         'read (name="n" value="v3" result=((value)))',
@@ -165,67 +184,68 @@ def _write_versioned_log(spark, memory=False):
     return sess, probes
 
 
-def test_compact_merges_commit_files_content_identical(spark, part_per_commit):
-    """compact() folds N commit files into one part file with the
-    same rows, same horizon, and working reads before/after."""
-    import os
+def test_compact_merges_commit_files_content_identical(spark, layouts):
+    """compact() folds N commit files (or a part and a tail) into one
+    part file with the same rows, same horizon, and working reads
+    before/after."""
+    for layout in layouts:
+        sess, probes = _write_versioned_log(
+            spark, compact_after=3 if layout == "tail" else None
+        )
+        log = sess.log_path
+        assert len(_log_names(log)) == (7 if layout == "part" else 2)
+        before = sorted(
+            tuple(r) for r in sess.store.to_df(spark).collect()
+        )
+        replies_before = [sess.request(p) for p in probes]
+        horizon_before = sess.store.next_id
+        sess.store.compact()
+        merged = [f"part-{0:012d}-{7:08d}.parquet"]
+        assert _log_names(log) == merged
+        after = sorted(tuple(r) for r in sess.store.to_df(spark).collect())
+        assert after == before
+        assert sess.store._horizon_of(sess.store._fs_spans()) == (
+            horizon_before
+        )
+        # every probe replies byte-identically across the compaction
+        assert [sess.request(p) for p in probes] == replies_before
+        # a fresh attach sees the compacted log
+        sess2 = GraphSession.attach(spark, log)
+        assert sess2.store.next_id == horizon_before
+        # compact is idempotent / no-op on a single file
+        sess.store.compact()
+        assert _log_names(log) == merged
+        # appends after compaction keep working
+        sess.request('write (name="n" value="v7")')
+        assert sess.request(
+            'read (name="n" value="v7" result=((value)))'
+        ) == 'ok (("v7"))'
 
-    sess, probes = _write_versioned_log(spark)
-    log = sess.log_path
-    files = [f for f in os.listdir(log) if f.endswith(".parquet")]
-    assert len(files) == 7
-    before = sorted(
-        tuple(r) for r in sess.store.to_df(spark).collect()
-    )
-    replies_before = [sess.request(p) for p in probes]
-    horizon_before = sess.store.next_id
-    sess.store.compact()
-    files = [f for f in os.listdir(log) if f.endswith(".parquet")]
-    assert len(files) == 1
-    assert files[0] == f"part-{0:012d}-{7:08d}.parquet"
-    after = sorted(tuple(r) for r in sess.store.to_df(spark).collect())
-    assert after == before
-    assert sess.store._horizon_of(sess.store._fs_spans()) == horizon_before
-    # every probe replies byte-identically across the compaction
-    assert [sess.request(p) for p in probes] == replies_before
-    # a fresh attach sees the compacted log
-    sess2 = GraphSession.attach(spark, log)
-    assert sess2.store.next_id == horizon_before
-    # compact is idempotent / no-op on a single file
-    sess.store.compact()
-    assert len(
-        [f for f in os.listdir(log) if f.endswith(".parquet")]
-    ) == 1
-    # appends after compaction keep working
-    sess.request('write (name="n" value="v7")')
-    assert sess.request(
-        'read (name="n" value="v7" result=((value)))'
-    ) == 'ok (("v7"))'
 
-
-def test_compact_refuses_foreign_layout(spark, part_per_commit):
+def test_compact_refuses_foreign_layout(spark, layouts):
     """A directory holding parquet outside the canonical part naming
     (e.g. a Spark bulk import) is left untouched."""
     import os
 
-    sess = _parquet_session(spark)
-    sess.request('write (name="n" value="a")')
-    sess.request('write (name="n" value="b")')
-    log = sess.log_path
-    alien = os.path.join(log, "data-0001.parquet")
-    canonical = sorted(
-        f for f in os.listdir(log) if f.endswith(".parquet")
-    )
-    import shutil
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    shutil.copy(os.path.join(log, canonical[0]), alien)
-    names_before = sorted(
-        f for f in os.listdir(log) if f.endswith(".parquet")
-    )
-    sess.store.compact()
-    assert sorted(
-        f for f in os.listdir(log) if f.endswith(".parquet")
-    ) == names_before
+    from graphd_spark.store import _prims_batch
+
+    for layout in layouts:
+        sess = _parquet_session(spark)
+        sess.request('write (name="n" value="a")')
+        sess.request('write (name="n" value="b")')
+        log = sess.log_path
+        # a copy of the log's rows under a name outside the naming
+        pq.write_table(
+            pa.Table.from_batches([_prims_batch(sess.store.rows)]),
+            os.path.join(log, "data-0001.parquet"),
+        )
+        names_before = _log_names(log)
+        assert len(names_before) == (2 if layout == "tail" else 3)
+        sess.store.compact()
+        assert _log_names(log) == names_before
 
 
 def _parquet_names(log):
@@ -235,115 +255,145 @@ def _parquet_names(log):
 
 
 def test_attach_refuses_a_log_with_a_missing_part(
-    spark, monkeypatch, part_per_commit
+    spark, monkeypatch, layouts
 ):
-    """A log whose parts skip ids is not read as complete: attach
-    raises StoreError naming the missing ids, before any Spark read."""
+    """A log whose parts skip ids (a missing part between parts, or
+    in front of the tail) is not read as complete: attach raises
+    StoreError naming the missing ids, before any Spark read."""
     import os
 
     from graphd_spark.store import ParquetLogStore, StoreError
 
-    sess = _parquet_session(spark)
-    for v in "abc":
-        sess.request(f'write (value="{v}")')
-    log = sess.log_path
-    parts = _parquet_names(log)
-    assert len(parts) == 3
-    start, count = (int(x) for x in parts[1][5:-8].split("-"))
-    os.unlink(os.path.join(log, parts[1]))
-
     def no_spark(self):
         pytest.fail("attach read the gapped log through Spark")
 
-    monkeypatch.setattr(ParquetLogStore, "_log_df", no_spark)
-    with pytest.raises(
-        StoreError, match=rf"missing ids {start}\.\.{start + count - 1},"
-    ):
-        GraphSession.attach(spark, log)
+    for layout in layouts:
+        sess = _parquet_session(spark)
+        for v in "abc":
+            sess.request(f'write (value="{v}")')
+            if layout == "tail" and v == "a":
+                sess.store.compact()  # a part in front of the tail
+        log = sess.log_path
+        spans = sess.store._fs_spans()
+        assert len(spans) == (3 if layout == "part" else 2)
+        start, count, name = spans[-2]
+        os.unlink(os.path.join(log, name))
+
+        with monkeypatch.context() as m:
+            m.setattr(ParquetLogStore, "_log_df", no_spark)
+            with pytest.raises(
+                StoreError,
+                match=rf"missing ids {start}\.\.{start + count - 1}, "
+                rf"before {spans[-1][2]}",
+            ):
+                GraphSession.attach(spark, log)
 
 
 @pytest.mark.parametrize("fail", ["replace", "unlink"])
 def test_compact_interrupted_keeps_log_intact(
-    spark, monkeypatch, fail, part_per_commit
+    spark, monkeypatch, fail, layouts
 ):
-    """A compaction that dies before its rename leaves the old parts
+    """A compaction that dies before its rename leaves the old files
     alone; one that dies after the rename, with only the first old
-    part unlinked, leaves the merged part beside parts it covers.
-    Either way a re-attach sees the pre-compaction rows, horizon and
-    replies, and the covered parts are gone after the attach."""
+    file unlinked, leaves the merged part beside files it covers
+    (parts, or the tail).  Either way a re-attach sees the
+    pre-compaction rows, horizon and replies, and the covered files
+    are gone after the attach."""
     import os
 
-    sess, probes = _write_versioned_log(spark)
-    log = sess.log_path
-    old_parts = _parquet_names(log)
-    assert len(old_parts) == 7
-    rows_before = sorted(tuple(r) for r in sess.store.to_df(spark).collect())
-    horizon = sess.store.next_id
-    replies_before = [sess.request(p) for p in probes]
+    for layout in layouts:
+        sess, probes = _write_versioned_log(
+            spark, compact_after=3 if layout == "tail" else None
+        )
+        log = sess.log_path
+        # in the order compact() unlinks them
+        old = [f for _, _, f in sess.store._fs_spans()]
+        assert len(old) == (7 if layout == "part" else 2)
+        assert _log_names(log) == sorted(old)
+        rows_before = sorted(
+            tuple(r) for r in sess.store.to_df(spark).collect()
+        )
+        horizon = sess.store.next_id
+        replies_before = [sess.request(p) for p in probes]
 
-    real = getattr(os, fail)
-    calls = []
+        real = getattr(os, fail)
+        calls = []
 
-    def flaky(*args, **kwargs):
-        calls.append(args)
-        if fail == "replace" or len(calls) > 1:
-            raise OSError("injected fault")
-        return real(*args, **kwargs)
+        def flaky(*args, **kwargs):
+            calls.append(args)
+            if fail == "replace" or len(calls) > 1:
+                raise OSError("injected fault")
+            return real(*args, **kwargs)
 
-    monkeypatch.setattr(os, fail, flaky)
-    with pytest.raises(OSError, match="injected fault"):
-        sess.store.compact()
-    monkeypatch.undo()
+        monkeypatch.setattr(os, fail, flaky)
+        with pytest.raises(OSError, match="injected fault"):
+            sess.store.compact()
+        monkeypatch.undo()
 
-    merged = f"part-{0:012d}-{7:08d}.parquet"
-    names = _parquet_names(log)
-    if fail == "replace":
-        assert names == old_parts
-    else:
-        assert names == sorted([merged] + old_parts[1:])
-        covered = []
-        assert sess.store._fs_spans(covered) == [(0, 7, merged)]
-        assert sorted(covered) == old_parts[1:]
-    assert not [f for f in os.listdir(log) if f.endswith(".tmp")]
+        merged = f"part-{0:012d}-{7:08d}.parquet"
+        names = _log_names(log)
+        if fail == "replace":
+            assert names == sorted(old)
+        else:
+            assert names == sorted([merged] + old[1:])
+            covered = []
+            assert sess.store._fs_spans(covered) == [(0, 7, merged)]
+            assert sorted(covered) == sorted(old[1:])
+        assert not [f for f in os.listdir(log) if f.endswith(".tmp")]
 
-    sess2 = GraphSession.attach(spark, log)
-    assert _parquet_names(log) == (
-        old_parts if fail == "replace" else [merged]
-    )
-    assert sess2.store.next_id == horizon
-    rows_after = sorted(tuple(r) for r in sess2.store.to_df(spark).collect())
-    assert rows_after == rows_before
-    assert [sess2.request(p) for p in probes] == replies_before
+        sess2 = GraphSession.attach(spark, log)
+        assert _log_names(log) == (
+            sorted(old) if fail == "replace" else [merged]
+        )
+        assert sess2.store.next_id == horizon
+        rows_after = sorted(
+            tuple(r) for r in sess2.store.to_df(spark).collect()
+        )
+        assert rows_after == rows_before
+        assert [sess2.request(p) for p in probes] == replies_before
 
 
-def test_commit_lands_by_rename(spark, monkeypatch, part_per_commit):
+def test_commit_lands_by_rename(spark, monkeypatch, layouts):
     """A commit whose rename fails publishes nothing: no part under a
-    canonical name, no tmp file left, and a fresh attach sees only
-    the rows committed before it.  A normal commit leaves no tmp."""
+    canonical name, no tmp file left, the tail (when it was rolling
+    one) unchanged, and a fresh attach sees only the rows committed
+    before it.  A normal commit leaves no tmp."""
     import os
 
-    sess = _parquet_session(spark)
-    sess.request('write (value="a")')
-    sess.request('write (value="b")')
-    log = sess.log_path
-    names = _parquet_names(log)
-    assert not [f for f in os.listdir(log) if not f.endswith(".parquet")]
-    count = sess.store.next_id
+    from graphd_spark import store as store_mod
 
     def broken(*args, **kwargs):
         raise OSError("injected fault")
 
-    store = sess.store
-    store.begin()
-    store.append(value="lost")
-    monkeypatch.setattr(os, "replace", broken)
-    with pytest.raises(OSError, match="injected fault"):
-        store.commit()
-    monkeypatch.undo()
-    assert sorted(os.listdir(log)) == names
-    reader = GraphSession.attach(spark, log)
-    assert reader.store.next_id == count
-    assert reader.store.to_df(spark).count() == count
+    for layout in layouts:
+        sess = _parquet_session(spark)
+        sess.request('write (value="a")')
+        sess.request('write (value="b")')
+        log = sess.log_path
+        names = _log_names(log)
+        assert sorted(os.listdir(log)) == names
+        tails = [f for f in names if f.endswith(".arrows")]
+        assert len(tails) == (layout == "tail")
+        sizes = {f: os.path.getsize(os.path.join(log, f)) for f in names}
+        count = sess.store.next_id
+
+        store = sess.store
+        store.begin()
+        # one row lands as its own part in the "part" layout; past the
+        # bound, the commit rolls the tail and its rows into a part
+        for i in range(store_mod.TAIL_ROWS + 1):
+            store.append(value=f"lost{i}")
+        monkeypatch.setattr(os, "replace", broken)
+        with pytest.raises(OSError, match="injected fault"):
+            store.commit()
+        monkeypatch.undo()
+        assert sorted(os.listdir(log)) == names
+        assert sizes == {
+            f: os.path.getsize(os.path.join(log, f)) for f in names
+        }
+        reader = GraphSession.attach(spark, log)
+        assert reader.store.next_id == count
+        assert reader.store.to_df(spark).count() == count
 
 
 def test_tmp_parts_invisible_and_kept_by_attach(spark):
@@ -370,60 +420,74 @@ def test_tmp_parts_invisible_and_kept_by_attach(spark):
     assert os.listdir(log) == []
 
 
-def test_commit_file_contract(spark, part_per_commit):
-    """A commit file reads back, schema included, as the table the
-    original per-column writer built; no column chunk is dictionary
-    encoded; Spark collects the same rows."""
+def test_commit_file_contract(spark, layouts):
+    """A commit's rows read back, schema included, as the table the
+    original per-column writer built: from the tail, and from the
+    part a commit (or, for the tail, a compaction) writes; no column
+    chunk of the part is dictionary encoded; Spark collects the same
+    rows."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from graphd_spark.model import PRIMITIVE_FIELDS, su_encode
-    from graphd_spark.store import ParquetLogStore, _arrow_schema
-
-    log = tempfile.mkdtemp(prefix="graphd_log_")
-    store = ParquetLogStore(spark, log, fresh=True)
-    store.begin()
-    a = store.append(name="n\udcff", value="v\udc80x")  # broken UTF-8
-    store.append(name="plain", left=a.guid, right=a.guid,
-                 live=False, archival=False)
-    store.append(value="3.5", typeguid=a.guid, scope=a.guid)
-    store.commit()
-    pend = store.rows
-    assert {type(p.value_fkey) for p in pend} == {bytes, type(None)}
-    assert {p.txstart for p in pend} == {True, False}
-    assert {p.live for p in pend} == {True, False}
-    assert any(p.left is None for p in pend)
-
-    (part,) = _parquet_names(log)
-    assert part == f"part-{0:012d}-{3:08d}.parquet"
-    got = pq.read_table(os.path.join(log, part))
-    cols = {
-        f: [
-            su_encode(v)
-            if f in ("name", "value", "value_norm") and isinstance(v, str)
-            else v
-            for p in pend
-            for v in (getattr(p, f),)
-        ]
-        for f in PRIMITIVE_FIELDS
-    }
-    want = pa.table(cols, schema=_arrow_schema())
-    assert got.schema.equals(want.schema)
-    assert got.equals(want)
-    meta = pq.ParquetFile(os.path.join(log, part)).metadata
-    for rg in range(meta.num_row_groups):
-        for c in range(meta.num_columns):
-            chunk = meta.row_group(rg).column(c)
-            assert not chunk.has_dictionary_page, chunk.path_in_schema
-            assert not any("DICTIONARY" in e for e in chunk.encodings)
-    spark_rows = sorted(
-        tuple(r) for r in store.to_df(spark).collect()
+    from graphd_spark.store import (
+        ParquetLogStore, _arrow_schema, _read_tail, _tail_table,
     )
-    assert spark_rows == sorted(
-        tuple(r[f] for f in PRIMITIVE_FIELDS) for r in want.to_pylist()
-    )
+
+    for layout in layouts:
+        log = tempfile.mkdtemp(prefix="graphd_log_")
+        store = ParquetLogStore(spark, log, fresh=True)
+        store.begin()
+        a = store.append(name="n\udcff", value="v\udc80x")  # broken UTF-8
+        store.append(name="plain", left=a.guid, right=a.guid,
+                     live=False, archival=False)
+        store.append(value="3.5", typeguid=a.guid, scope=a.guid)
+        store.commit()
+        pend = store.rows
+        assert {type(p.value_fkey) for p in pend} == {bytes, type(None)}
+        assert {p.txstart for p in pend} == {True, False}
+        assert {p.live for p in pend} == {True, False}
+        assert any(p.left is None for p in pend)
+
+        cols = {
+            f: [
+                su_encode(v)
+                if f in ("name", "value", "value_norm")
+                and isinstance(v, str)
+                else v
+                for p in pend
+                for v in (getattr(p, f),)
+            ]
+            for f in PRIMITIVE_FIELDS
+        }
+        want = pa.table(cols, schema=_arrow_schema())
+        want_rows = sorted(
+            tuple(r[f] for f in PRIMITIVE_FIELDS) for r in want.to_pylist()
+        )
+
+        def spark_rows():
+            return sorted(tuple(r) for r in store.to_df(spark).collect())
+
+        if layout == "tail":
+            got = _tail_table(_read_tail(_tail_of(log))[0])
+            assert got.schema.equals(want.schema)
+            assert got.equals(want)
+            assert spark_rows() == want_rows
+            store.compact()
+        (part,) = _parquet_names(log)
+        assert part == f"part-{0:012d}-{3:08d}.parquet"
+        got = pq.read_table(os.path.join(log, part))
+        assert got.schema.equals(want.schema)
+        assert got.equals(want)
+        meta = pq.ParquetFile(os.path.join(log, part)).metadata
+        for rg in range(meta.num_row_groups):
+            for c in range(meta.num_columns):
+                chunk = meta.row_group(rg).column(c)
+                assert not chunk.has_dictionary_page, chunk.path_in_schema
+                assert not any("DICTIONARY" in e for e in chunk.encodings)
+        assert spark_rows() == want_rows
 
 
 def _tail_of(log):
@@ -595,6 +659,89 @@ def test_append_during_another_stores_roll_is_kept(spark):
     got = reader.to_df(spark).select("id", "value").collect()
     assert sorted(r["id"] for r in got) == list(range(other.next_id))
     assert {r["value"] for r in got} == set(values) | {"base"}
+
+
+def _commit(store, value):
+    store.begin()
+    store.append(name="n", value=value)
+    store.commit()
+
+
+@pytest.mark.parametrize("roller", ["other", "self"])
+def test_commit_after_another_writers_roll_is_refused(spark, roller):
+    """Another store commits after this one, and its rows are rolled
+    into a part (by it, or by this store's compaction): this store's
+    next commit, whose first id the other's rows took, raises
+    StoreError instead of starting a tail the part covers, and the
+    log keeps exactly the rows that were committed."""
+    from graphd_spark.store import ParquetLogStore, StoreError
+
+    log = tempfile.mkdtemp(prefix="graphd_log_")
+    mine = ParquetLogStore(spark, log, fresh=True)
+    _commit(mine, "base")
+    other = ParquetLogStore.attach(spark, log)
+    _commit(other, "theirs")
+    (other if roller == "other" else mine).compact()
+    with pytest.raises(StoreError, match="another writer"):
+        _commit(mine, "mine")
+    reader = ParquetLogStore.attach(spark, log)
+    assert reader.next_id == 2
+    assert sorted(
+        r["value"] for r in reader.to_df(spark).collect()
+    ) == ["base", "theirs"]
+
+
+def test_second_writer_never_hides_a_returned_commit(spark):
+    """This store compacts and commits in a loop while a second
+    store, attached after the first commit, commits from a thread.
+    Each stops at its first StoreError (the other took ids it was
+    about to write); every commit that returned is in the log once,
+    and the ids stay dense."""
+    import sys
+    import threading
+
+    from graphd_spark.store import ParquetLogStore, StoreError
+
+    log = tempfile.mkdtemp(prefix="graphd_log_")
+    mine = ParquetLogStore(spark, log, fresh=True)
+    _commit(mine, "base")
+    other = ParquetLogStore.attach(spark, log)
+    done, errors = ["base"], []
+
+    def writer(store, side):
+        try:
+            _commit(store, side)
+        except StoreError:
+            return False
+        done.append(side)
+        return True
+
+    def appender():
+        try:
+            for i in range(300):
+                if not writer(other, f"other{i}"):
+                    return
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        t = threading.Thread(target=appender)
+        t.start()
+        i, mine_ok = 0, True
+        while t.is_alive() or i < 2:
+            mine.compact()
+            mine_ok = mine_ok and writer(mine, f"mine{i}")
+            i += 1
+        t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not t.is_alive() and not errors
+    got = ParquetLogStore.attach(spark, log).to_df(spark)
+    got = got.select("id", "value").collect()
+    assert sorted(r["id"] for r in got) == list(range(len(got)))
+    assert sorted(r["value"] for r in got) == sorted(done)
 
 
 def test_lone_surrogate_value_round_trips(spark):
