@@ -108,8 +108,8 @@ class GraphSession:
     @classmethod
     def attach(cls, spark, log_path: str) -> "GraphSession":
         """Open an existing parquet log without loading it onto the
-        driver (the 100-TB entry point: only a 1-row horizon aggregate
-        is collected)."""
+        driver (the 100-TB entry point: only the last row's id and
+        guid are read, see ``ParquetLogStore.attach``)."""
         from graphd_spark.store import ParquetLogStore
 
         sess = cls.__new__(cls)

@@ -494,7 +494,8 @@ class PrimitiveStore:
     def load_parquet(cls, spark, path: str, db_id: int = PREDICTABLE_DB_ID):
         """Open a Parquet primitives table as a store WITHOUT loading it
         onto the driver: returns a :class:`ParquetLogStore` attached to
-        ``path`` (only a 1-row max-id/db-id aggregate is collected).
+        ``path`` (only the last row's id and guid are read; see
+        ``ParquetLogStore.attach``).
         """
         return ParquetLogStore.attach(spark, path, db_id=db_id)
 
@@ -648,16 +649,26 @@ def _hot_window_ns(mtime_ns: int) -> int:
     return max(20_000_000, 2 * tick)
 
 
-def _decoded(r) -> Primitive:
-    """A log row (name, value and value_norm su_encode'd) as a mirror
-    primitive."""
-    p = Primitive(**{f: r[f] for f in PRIMITIVE_FIELDS})
-    if p.name is not None:
-        p.name = su_decode(p.name)
-    if p.value is not None:
-        p.value = su_decode(p.value)
-        p.value_norm = su_decode(p.value_norm)
-    return p
+def _prims_of(batch) -> list:
+    """The rows of a log record batch (or table), whose name, value
+    and value_norm are su_encode'd, as mirror primitives.
+
+    Decoded column by column: ``to_numpy(...).tolist()`` costs ~25 ms
+    for a 20.5k-row log where ``to_pylist`` costs ~0.4-0.5 s.  An
+    integer column holding a null goes through ``to_pylist``, since
+    numpy would turn it into floats with NaN."""
+    import pyarrow as pa
+
+    cols = {}
+    for f in PRIMITIVE_FIELDS:
+        col = batch.column(f)
+        if col.null_count and pa.types.is_integer(col.type):
+            cols[f] = col.to_pylist()
+        else:
+            cols[f] = col.to_numpy(zero_copy_only=False).tolist()
+    for f in ("name", "value", "value_norm"):
+        cols[f] = [s if s is None else su_decode(s) for s in cols[f]]
+    return list(map(Primitive, *cols.values()))
 
 
 class ParquetLogStore(PrimitiveStore):
@@ -698,6 +709,13 @@ class ParquetLogStore(PrimitiveStore):
       filters into the files), unioned with a local DataFrame of the
       tail's rows when there is a tail; the read path never
       serializes the parquet parts through the driver.
+    - ``attach`` and ``hydrate`` read the log through pyarrow, with
+      no Spark job: the listing gives the id horizon, the last row
+      the database id, and ``hydrate`` decodes the parts and the tail
+      column by column into the mirror (_absorb_delta).  Only a
+      foreign layout (parquet files outside the part naming, e.g. a
+      Spark-written bulk import) is opened and hydrated by a Spark
+      query.
     - the driver keeps a bounded suffix cache (``cache_rows``) of
       recent primitives for the write annotators' point lookups (ref
       graphd-write.c:596-782); lookups below the cached range fall back
@@ -745,36 +763,76 @@ class ParquetLogStore(PrimitiveStore):
     def attach(
         cls, spark, path: str, db_id: int = PREDICTABLE_DB_ID
     ) -> "ParquetLogStore":
-        """Open an existing log without driver materialization: only
-        the last row's (id, guid) is read, by one Spark query, to set
-        the id horizon and adopt the database id."""
-        from pyspark.sql import functions as F
+        """Open an existing log without driver materialization.  The
+        id horizon comes from the file listing; the last row's (id,
+        guid), read through pyarrow from the last part's last row
+        group or the tail's last batch, confirms it and gives the
+        database id.  No Spark job runs, except for a foreign layout
+        (see _fs_files), whose last row one Spark query reads.  Raises
+        StoreError when the last row's id does not end the horizon."""
+        from graphd_spark.model import guid_db
 
         store = cls(spark, path, db_id=db_id)
-        # finish an interrupted compaction or roll before Spark lists
-        # the files
-        covered: list = []
-        spans = store._fs_spans(covered)
-        store._unlink_parts(covered)
-        last = next(iter(
-            store._log_df().orderBy(F.col("id").desc()).select("id", "guid")
-            .limit(1).collect()
-        ), None)
-        if last:
-            store._base = store._flushed = last["id"] + 1
-            from graphd_spark.model import guid_db
-
-            store.db_id = guid_db(last["guid"])
-            store._version += 1
-        if spans and _TAIL_RE.match(spans[-1][2]):
-            # the next append continues the tail, unless another
-            # writer moved it past the horizon meanwhile
-            start = spans[-1][0]
-            with contextlib.suppress(FileNotFoundError):
-                end, nbytes = store._tail_end(start)
-                if end == store._flushed:
-                    store._tail_start, store._tail_bytes = start, nbytes
+        while True:
+            # finish an interrupted compaction or roll first
+            covered: list = []
+            spans = store._fs_spans(covered)
+            store._unlink_parts(covered)
+            try:
+                last = store._last_row(spans)
+                break
+            except FileNotFoundError:  # rolled or compacted meanwhile
+                continue
+        if last is None:
+            return store
+        id, guid, nbytes = last
+        if spans is not None:
+            horizon = store._horizon_of(spans)
+            # a tail may grow between the listing and its read; a
+            # part never changes
+            if id + 1 < horizon or (id + 1 > horizon and nbytes is None):
+                raise StoreError(
+                    f"parquet log {path}: {spans[-1][2]} ends at id {id}, "
+                    f"its span at id {horizon - 1}"
+                )
+        store._base = store._flushed = id + 1
+        store.db_id = guid_db(guid)
+        store._version += 1
+        if nbytes is not None:  # the next append continues the tail
+            store._tail_start, store._tail_bytes = spans[-1][0], nbytes
         return store
+
+    def _last_row(self, spans: Optional[list]) -> Optional[tuple]:
+        """(id, guid, tail bytes) of the log's last row, None for an
+        empty log.  ``spans`` are _fs_spans; the row comes from the
+        last one through pyarrow, or through one Spark query when they
+        are None.  Tail bytes is the byte offset after the last
+        complete message when the last span is a tail, else None."""
+        if spans is None:
+            from pyspark.sql import functions as F
+
+            row = next(iter(
+                self._log_df().orderBy(F.col("id").desc())
+                .select("id", "guid").limit(1).collect()
+            ), None)
+            return None if row is None else (row["id"], row["guid"], None)
+        if not spans:
+            return None
+        start, _, f = spans[-1]
+        if f.endswith(".parquet"):
+            import pyarrow.parquet as pq
+
+            with pq.ParquetFile(os.path.join(self.path, f)) as pf:
+                last = pf.read_row_group(
+                    pf.num_row_groups - 1, columns=["id", "guid"]
+                )
+            nbytes = None
+        else:
+            last, nbytes = self._tail_last(start)
+        return (
+            last.column("id")[-1].as_py(), last.column("guid")[-1].as_py(),
+            nbytes,
+        )
 
     # -- helpers ----------------------------------------------------------
 
@@ -784,19 +842,27 @@ class ParquetLogStore(PrimitiveStore):
     def _tail_path(self, start: int) -> str:
         return os.path.join(self.path, _tail_name(start))
 
+    def _tail_last(self, start: int) -> tuple:
+        """(the last complete record batch of the tail at ``start``,
+        or None when there is none past what this store has read of
+        its own tail, the byte offset after it)."""
+        msgs, end = _read_tail(
+            self._tail_path(start),
+            self._tail_bytes if start == self._tail_start else 0,
+        )
+        if not msgs:
+            return None, end
+        import pyarrow as pa
+
+        return pa.ipc.read_record_batch(msgs[-1], _arrow_schema()), end
+
     def _tail_end(self, start: int) -> tuple[int, int]:
         """(the id after the complete messages of the tail at
         ``start``, the byte offset after them), reading on from what
         this store has read of its own tail."""
-        own = start == self._tail_start
-        msgs, end = _read_tail(
-            self._tail_path(start), self._tail_bytes if own else 0
-        )
-        if not msgs:
-            return (self._flushed if own else start), end
-        import pyarrow as pa
-
-        last = pa.ipc.read_record_batch(msgs[-1], _arrow_schema())
+        last, end = self._tail_last(start)
+        if last is None:
+            return (self._flushed if start == self._tail_start else start), end
         return last.column("id")[-1].as_py() + 1, end
 
     def _fs_files(self) -> tuple[Optional[list], list]:
@@ -936,11 +1002,13 @@ class ParquetLogStore(PrimitiveStore):
         return True
 
     def _absorb_delta(self, spans: list) -> bool:
-        """Another session appended to the shared log: pull the rows
-        past the mirror from ``spans`` (from _fs_spans) into it
-        driver-side (pyarrow — no Spark job), keeping the serving fast
-        path hot under multi-session writes.  A tail is read from the
-        byte offset already consumed."""
+        """Pull the rows past the mirror from ``spans`` (from
+        _fs_spans) into it driver-side (pyarrow — no Spark job): the
+        whole log for ``hydrate``, or what another session appended to
+        the shared log, keeping the serving fast path hot under
+        multi-session writes.  A part is read one record batch at a
+        time; a tail is read from the byte offset already consumed.
+        True when the mirror reaches the spans' horizon."""
         import pyarrow.parquet as pq
 
         expect = self.next_id
@@ -949,22 +1017,29 @@ class ParquetLogStore(PrimitiveStore):
                 continue
             path = os.path.join(self.path, f)
             if f.endswith(".parquet"):
-                table = pq.read_table(path)
+                with pq.ParquetFile(path) as pf:
+                    expect = self._ingest(pf.iter_batches(), expect)
             else:
                 own = start == self._tail_start
                 msgs, end = _read_tail(path, self._tail_bytes if own else 0)
-                table = _tail_table(msgs)
+                expect = self._ingest(_tail_table(msgs).to_batches(), expect)
                 self._tail_start, self._tail_bytes = start, end
-            if not table.num_rows:
-                continue
-            table = table.slice(expect - table.column("id")[0].as_py())
-            for r in table.to_pylist():
-                self._mirror_add(_decoded(r))
-            expect += table.num_rows
         if not spans or not _TAIL_RE.match(spans[-1][2]):
             self._tail_start, self._tail_bytes = None, 0
         self._flushed = expect
         return expect >= self._horizon_of(spans)
+
+    def _ingest(self, batches, expect: int) -> int:
+        """Add the rows with ids from ``expect`` on of ``batches``
+        (record batches in id order) to the mirror; returns the id
+        after the last one."""
+        for batch in batches:
+            if batch.num_rows:
+                batch = batch.slice(expect - batch.column("id")[0].as_py())
+                for p in _prims_of(batch):
+                    self._mirror_add(p)
+                expect += batch.num_rows
+        return expect
 
     def _mirror_add(self, p: Primitive) -> None:
         """Append a committed primitive to the mirror and its indexes."""
@@ -985,19 +1060,28 @@ class ParquetLogStore(PrimitiveStore):
         analog).  Declines (returns False) when the log exceeds
         ``limit`` rows; True when the mirror now covers the log.
 
-        Streams via toLocalIterator in id order, so no single collect
-        exceeds a partition; indexes (value/name/norm/lineage/linkage)
-        and the successor map rebuild as rows arrive."""
+        The engine's own layout is read like any other session's
+        appends (_absorb_delta on an empty mirror): through pyarrow,
+        one record batch at a time, no Spark job, leaving the commit
+        horizon and the tail offset at what it read.  A foreign
+        layout is read by one Spark query, as one arrow table.
+        Indexes (value/name/norm/lineage/linkage) and the successor
+        map rebuild as rows arrive."""
         if self._covers_all:
             return True
         if self.rows:
             return False  # partial mirror with live writes: keep as-is
         if self.next_id > limit:
             return False
-        for r in self._log_df().orderBy("id").toLocalIterator():
-            self._mirror_add(_decoded(r))
+        spans = self._fs_spans()
+        if spans is None:
+            table = self._log_df().orderBy("id").toArrow()
+            self._base = 0
+            self._flushed = self._ingest(table.to_batches(), 0)
+            return True
         self._base = 0
-        return True
+        self._tail_start, self._tail_bytes = None, 0
+        return self._absorb_delta(spans)
 
     def _log_df(self):
         """The log as a DataFrame: the parquet parts, unioned with the

@@ -320,10 +320,17 @@ def test_own_writes_keep_the_ttl_verdict(spark, tmp_path, monkeypatch):
     commit (which bumps the write epoch) costs two stats.  Neither a
     commit by another in-process store (here on another log) nor an
     expired TTL forces a listing while the signature holds."""
+    import os
+
     from graphd_spark.store import ParquetLogStore
 
     log = str(tmp_path / "log")
     GraphSession(spark, log_path=log).request('write (name="w" value="v0")')
+    # age the directory past its hot window (_hot_window_ns; a whole
+    # second keeps the mtime's digits): a hot directory is listed on
+    # every read, and attach + hydrate take far less than the window
+    st = os.stat(log)
+    os.utime(log, ns=(st.st_atime_ns, st.st_mtime_ns - 1_000_000_000))
     sess = GraphSession.attach(spark, log)
     assert sess.store.hydrate()
     now = _frozen_clock(monkeypatch)

@@ -6,8 +6,9 @@ Verifies the three scale properties the architecture promises:
 - bounded driver: with ``cache_rows`` set, the driver never holds more
   than the cache, and reads/writes stay correct through Spark
   fallbacks;
-- attach: opening an existing log collects only the 1-row horizon
-  aggregate, never the log body.
+- attach: opening an existing log reads only its last row, never the
+  log body; the engine's own layout opens and hydrates with no Spark
+  job, a foreign one through Spark.
 """
 
 from __future__ import annotations
@@ -778,3 +779,163 @@ def test_commits_to_a_spark_written_log_reach_spark_reads(spark, tmp_path):
     assert GraphSession.attach(spark, log).request(probe) == (
         'ok (("a") ("b"))'
     )
+
+
+def test_hydrate_after_a_concurrent_commit_then_write(spark, layouts):
+    """Another store commits between this one's attach and its
+    hydrate: the mirror holds that commit, and the hydrated session's
+    next write lands after it, since hydrate sets the commit horizon
+    and the tail offset from what it read.  A fresh attach lists
+    every id once."""
+    for layout in layouts:
+        writer = _parquet_session(spark)
+        for v in "abc":
+            assert writer.request(f'write (value="{v}")').startswith("ok (")
+        reader = GraphSession.attach(spark, writer.log_path)
+        assert writer.request('write (value="d")').startswith("ok (")
+        assert reader.store.hydrate()
+        assert reader.request('write (value="e")').startswith("ok ("), layout
+        for v in "de":
+            assert reader.request(
+                f'read (value="{v}" result=((value)))'
+            ) == f'ok (("{v}"))'
+        fresh = GraphSession.attach(spark, writer.log_path).store
+        got = fresh.to_df(spark).select("id", "value").collect()
+        assert sorted(r["id"] for r in got) == list(range(fresh.count()))
+        assert sorted(r["value"] for r in got) == list("abcde")
+
+
+def _varied_store(n=24):
+    """An in-memory store whose rows cover the decoder's cases: lone
+    surrogates in name, value and value_norm, links and None link
+    fields, value_fkey as bytes and None, both values of every
+    boolean, and versioned rows."""
+    from graphd_spark.store import PrimitiveStore
+
+    mem = PrimitiveStore()
+    mem.begin()
+    for i in range(n):
+        node = mem.append(
+            name=f"caf\udce9{i}" if i % 3 == 0 else f"n{i}",
+            value=None if i % 4 == 1 else f"V\udcff {i}",
+            live=i % 2 == 0,
+            archival=i % 5 != 0,
+        )
+        if i % 4 == 2:
+            mem.append(left=node.guid, right=mem.rows[0].guid,
+                       typeguid=mem.rows[1].guid)
+        if i % 6 == 3:
+            mem.append(prev=node.guid, value=f"v{i}.1")
+    mem.commit()
+    return mem
+
+
+def test_log_batches_decode_to_the_in_memory_rows():
+    """A log batch (su_encode'd rows) and the same rows read back from
+    a parquet file decode to primitives equal to the in-memory ones,
+    every int an int and every bool a bool."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from graphd_spark.store import _prims_batch, _prims_of
+
+    mem = _varied_store()
+    rows = mem.rows
+    assert any(p.value_norm and "\udcff" in p.value_norm for p in rows)
+    assert {p.txstart for p in rows} == {p.live for p in rows} == {
+        True, False}
+    assert {type(p.value_fkey) for p in rows} == {bytes, type(None)}
+    batch = _prims_batch(rows)
+    sink = pa.BufferOutputStream()
+    pq.write_table(pa.Table.from_batches([batch]), sink)
+    from_file = pq.read_table(pa.BufferReader(sink.getvalue()))
+    for got in (_prims_of(batch), _prims_of(from_file)):
+        assert got == rows
+        for p in got:
+            assert type(p.id) is type(p.datatype) is type(p.timestamp) is int
+            assert type(p.generation) is int
+            assert type(p.live) is type(p.archival) is type(p.txstart) is bool
+
+
+def test_integer_column_with_a_null_decodes_to_int_and_none():
+    """numpy turns an integer column with a null into NaN floats; the
+    decoder keeps its values ints and the null None."""
+    import dataclasses
+
+    from graphd_spark.store import _prims_batch, _prims_of
+
+    rows = _varied_store(4).rows
+    rows[1] = dataclasses.replace(rows[1], datatype=None, generation=None)
+    got = _prims_of(_prims_batch(rows))
+    assert got == rows
+    assert got[1].datatype is None and got[1].generation is None
+    assert [type(p.datatype) for p in got[2:]] == [int] * (len(got) - 2)
+    assert type(got[0].generation) is int
+
+
+def test_foreign_layout_attaches_and_hydrates(spark, tmp_path):
+    """A log Spark wrote as 8 files outside the part naming opens and
+    hydrates through Spark into a mirror equal to the in-memory rows."""
+    from graphd_spark.store import ParquetLogStore
+
+    mem = _varied_store()
+    log = str(tmp_path / "log")
+    mem.save_parquet(spark, log, partitions=8)
+    store = ParquetLogStore.attach(spark, log)
+    assert store._fs_spans() is None
+    assert store.count() == mem.count() and store.rows == []
+    assert store.hydrate()
+    assert store.rows == mem.rows
+    assert store.count() == mem.count()
+
+
+def test_own_layout_opens_and_hydrates_without_spark(spark, monkeypatch):
+    """attach and hydrate of a log of parts and a tail run no Spark
+    job: with no Spark session and _log_df raising, the store opens
+    at the log's horizon and database id and hydrates the writer's
+    rows, and its next commit continues the tail."""
+    from graphd_spark.store import ParquetLogStore
+
+    writer = _parquet_session(spark)
+    for i in range(6):
+        writer.request(f'write (name="caf\udce9" value="v{i}")')
+        if i == 2:
+            writer.store.compact()
+    names = _log_names(writer.log_path)
+    assert [n[:5] for n in names] == ["_tail", "part-"]
+
+    def no_spark(self):
+        pytest.fail("the log was read through Spark")
+
+    monkeypatch.setattr(ParquetLogStore, "_log_df", no_spark)
+    store = ParquetLogStore.attach(None, writer.log_path)
+    assert store.count() == writer.store.count()
+    assert store.db_id == writer.store.db_id
+    assert store.hydrate()
+    assert store.rows == writer.store.rows
+    _commit(store, "after")
+    assert _log_names(writer.log_path) == names
+    assert ParquetLogStore.attach(None, writer.log_path).count() == (
+        writer.store.count() + 1
+    )
+
+
+def test_attach_refuses_a_part_whose_rows_disagree_with_its_name(spark):
+    """A part named for more rows than it holds ends the listed
+    horizon past its last row: attach raises StoreError."""
+    import os
+
+    from graphd_spark.store import ParquetLogStore, StoreError
+
+    sess = _parquet_session(spark)
+    for v in "ab":
+        sess.request(f'write (value="{v}")')
+    sess.store.compact()
+    (name,) = _log_names(sess.log_path)
+    start, count = name[5:17], int(name[18:26])
+    os.rename(
+        os.path.join(sess.log_path, name),
+        os.path.join(sess.log_path, f"part-{start}-{count + 1:08d}.parquet"),
+    )
+    with pytest.raises(StoreError, match=f"ends at id {count - 1}"):
+        ParquetLogStore.attach(spark, sess.log_path)
