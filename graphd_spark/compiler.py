@@ -964,19 +964,15 @@ class Compiler:
             # 2-element name bin, a value= bin, a type gmap, and a
             # linkage sub all drop (reference probes in seed-142
             # analysis); a default-comparator value range keeps the
-            # string vrange as producer (seeds 139/147).
-            _fixed_producer = bool(con.guid)
-            _one_name_bin = (
-                not _fixed_producer
-                and number_sort_root_keep(con, self.store)
-            )
+            # string vrange as producer (seeds 139/147).  The name-bin
+            # probe is a store lookup, so it goes last.
             if (
                 first.pattern.kind == "value"
                 and comp0 == "number"
                 and not _value_range
-                and not _fixed_producer
-                and not _one_name_bin
+                and not con.guid
                 and _renders
+                and not number_sort_root_keep(con, self.store)
             ):
                 # number-comparator value sorts iterate the NUMBERS
                 # binset, so values that don't decode as numbers (and

@@ -37,10 +37,13 @@ from __future__ import annotations
 import contextlib
 import fcntl
 import functools
+import itertools
 import os
 import re
 import time
 from typing import Iterator, Optional
+
+from pyspark.sql import functions as F
 
 from graphd_spark.lru import LRU
 from graphd_spark.model import (
@@ -50,6 +53,7 @@ from graphd_spark.model import (
     Primitive,
     guid_compose,
     su_decode,
+    su_encode,
     ts_predictable,
 )
 
@@ -117,11 +121,6 @@ class PrimitiveStore:
         self._version = 0  # bumped per commit; invalidates the df cache
         self._df = None
         self._df_version = -1
-        #: (count, ts, op) -> timestamp_to_id answer
-        self._ts2id_cache = LRU(4096)
-        #: guid (or "succ:" + guid) -> Primitive for off-cache Spark
-        #: lookups of the parquet backend
-        self._lookup_cache = LRU(8192)
         #: (context id, asof) -> (source frame, base frame) — see
         #: Compiler._build_base
         self._base_frame_memo = LRU(8)
@@ -149,10 +148,6 @@ class PrimitiveStore:
             del self.by_guid[p.guid]
             if p.prev is not None:
                 self.next_version.pop(p.prev, None)
-            if p.value is not None:
-                self._value_ids[p.value.lower()].pop()
-            if p.name is not None:
-                self._name_ids[p.name.lower()].pop()
             self._unindex_prim(p)
         self._txn_start = None
 
@@ -221,7 +216,6 @@ class PrimitiveStore:
             if prev_p is None:
                 raise StoreError(f"versioning unknown guid {prev}")
             lineage, generation = prev_p.lineage, prev_p.generation + 1
-            self.next_version[prev] = guid
         else:
             lineage, generation = guid, 0
         from graphd_spark.comparators import (
@@ -269,21 +263,28 @@ class PrimitiveStore:
             lineage=lineage,
             generation=generation,
         )
-        self.rows.append(p)
-        self.by_guid[guid] = p
-        if value is not None:
-            self._value_ids.setdefault(value.lower(), []).append(id)
-        if name is not None:
-            self._name_ids.setdefault(name.lower(), []).append(id)
-        self._index_prim(p)
+        self._mirror_add(p)
         return p
 
+    def _mirror_add(self, p: Primitive) -> None:
+        """Append a primitive to the mirror and index it: the one
+        routine behind ``append``, ``hydrate`` and absorbed foreign
+        commits (``rollback`` undoes it)."""
+        self.rows.append(p)
+        self.by_guid[p.guid] = p
+        if p.prev is not None:
+            self.next_version[p.prev] = p.guid
+        self._index_prim(p)
+
     def _index_prim(self, p: Primitive) -> None:
+        if p.name is not None:
+            self._name_ids.setdefault(p.name.lower(), []).append(p.id)
         if p.value_norm is not None:
             self._vnorm_ids.setdefault(p.value_norm, []).append(p.id)
         if p.value is not None:
             from graphd_spark.wordhash import value_word_codes
 
+            self._value_ids.setdefault(p.value.lower(), []).append(p.id)
             for code in value_word_codes(p.value):
                 self._word_ids.setdefault(code, []).append(p.id)
         for lk in ("typeguid", "left", "right", "scope"):
@@ -296,11 +297,14 @@ class PrimitiveStore:
                 self._lin_ids.setdefault((lk, v), []).append(p.id)
 
     def _unindex_prim(self, p: Primitive) -> None:
+        if p.name is not None:
+            self._name_ids[p.name.lower()].pop()
         if p.value_norm is not None:
             self._vnorm_ids[p.value_norm].pop()
         if p.value is not None:
             from graphd_spark.wordhash import value_word_codes
 
+            self._value_ids[p.value.lower()].pop()
             for code in value_word_codes(p.value):
                 self._word_ids[code].pop()
         for lk in ("typeguid", "left", "right", "scope"):
@@ -395,24 +399,10 @@ class PrimitiveStore:
         reference STILL bsearches, so timestamp range bounds land on
         arbitrary-but-deterministic ids; cursor/read parity needs the
         identical walk.  op in ('lt','le','eq','ge','gt'); None is
-        GRAPHD_ERR_NO (the constraint compiles to false).
-
-        Memoized per (store count, ts, op): keyed writes run two
-        bsearches per candidate per timestamp literal, and on a
-        ParquetLogStore every probe below the cache base is a Spark
-        point read — the count key self-invalidates on appends."""
+        GRAPHD_ERR_NO (the constraint compiles to false)."""
         n = self.count()
         if n == 0:
             return None
-        ck = (n, ts, op)
-        if ck in self._ts2id_cache:
-            return self._ts2id_cache.get(ck)
-        return self._ts2id_cache.put(
-            ck, self._timestamp_to_id_walk(ts, op, n)
-        )
-
-    def _timestamp_to_id_walk(self, ts: int, op: str, n: int
-                              ) -> Optional[int]:
         base = 0
         nelem = n
         while True:
@@ -550,13 +540,20 @@ def _arrow_row_type():
     return pa.struct(_arrow_schema())
 
 
-def _prims_batch(prims: list):
-    """``prims`` as one record batch, built by one ``pa.array`` call
-    over their su_encode'd rows (``Primitive.as_row``)."""
+def _rows_batch(rows: list):
+    """Log rows (PRIMITIVES_SCHEMA tuples: su_encode'd, as stored) as
+    one record batch, built by one ``pa.array`` call."""
     import pyarrow as pa
 
-    rows = pa.array([p.as_row() for p in prims], type=_arrow_row_type())
-    return pa.RecordBatch.from_struct_array(rows)
+    return pa.RecordBatch.from_struct_array(
+        pa.array(rows, type=_arrow_row_type())
+    )
+
+
+def _prims_batch(prims: list):
+    """``prims`` as one record batch of their rows
+    (``Primitive.as_row``)."""
+    return _rows_batch([p.as_row() for p in prims])
 
 
 def _read_tail(path: str, offset: int = 0) -> tuple[list, int]:
@@ -717,10 +714,13 @@ class ParquetLogStore(PrimitiveStore):
       Spark-written bulk import) is opened and hydrated by a Spark
       query.
     - the driver keeps a bounded suffix cache (``cache_rows``) of
-      recent primitives for the write annotators' point lookups (ref
-      graphd-write.c:596-782); lookups below the cached range fall back
-      to Spark queries over the log, so the store never needs to fit
-      in driver memory.
+      recent primitives, ids ``[_base, next_id)``, for the write
+      annotators' point lookups (ref graphd-write.c:596-782).  Every
+      lookup answers ids below ``_base`` through one Spark reader
+      (``_below``) and ids at or past it from the mirror alone, so
+      the store never needs to fit in driver memory, and a row
+      another writer committed past this session's horizon stays
+      invisible until the session absorbs it.
     """
 
     def __init__(
@@ -809,8 +809,6 @@ class ParquetLogStore(PrimitiveStore):
         are None.  Tail bytes is the byte offset after the last
         complete message when the last span is a tail, else None."""
         if spans is None:
-            from pyspark.sql import functions as F
-
             row = next(iter(
                 self._log_df().orderBy(F.col("id").desc())
                 .select("id", "guid").limit(1).collect()
@@ -1008,50 +1006,49 @@ class ParquetLogStore(PrimitiveStore):
         the shared log, keeping the serving fast path hot under
         multi-session writes.  A part is read one record batch at a
         time; a tail is read from the byte offset already consumed.
-        True when the mirror reaches the spans' horizon."""
+        A file another store rolled or compacted away since the
+        listing makes it list again and go on from the mirror's end,
+        as ``attach`` does; the commit horizon (_flushed) is what the
+        mirror holds, even when a read fails.  True when the mirror
+        reaches the spans' horizon."""
         import pyarrow.parquet as pq
 
-        expect = self.next_id
-        for start, count, f in spans:
-            if start + count <= expect:
-                continue
-            path = os.path.join(self.path, f)
-            if f.endswith(".parquet"):
-                with pq.ParquetFile(path) as pf:
-                    expect = self._ingest(pf.iter_batches(), expect)
-            else:
-                own = start == self._tail_start
-                msgs, end = _read_tail(path, self._tail_bytes if own else 0)
-                expect = self._ingest(_tail_table(msgs).to_batches(), expect)
-                self._tail_start, self._tail_bytes = start, end
+        try:
+            while True:
+                try:
+                    for start, count, f in spans:
+                        if start + count <= self.next_id:
+                            continue
+                        path = os.path.join(self.path, f)
+                        if f.endswith(".parquet"):
+                            with pq.ParquetFile(path) as pf:
+                                self._ingest(pf.iter_batches())
+                            continue
+                        own = start == self._tail_start
+                        msgs, end = _read_tail(
+                            path, self._tail_bytes if own else 0
+                        )
+                        self._ingest(_tail_table(msgs).to_batches())
+                        self._tail_start, self._tail_bytes = start, end
+                    break
+                except FileNotFoundError:  # rolled or compacted meanwhile
+                    spans = self._fs_spans()
+                    if spans is None:
+                        return False
+        finally:
+            self._flushed = self.next_id
         if not spans or not _TAIL_RE.match(spans[-1][2]):
             self._tail_start, self._tail_bytes = None, 0
-        self._flushed = expect
-        return expect >= self._horizon_of(spans)
+        return self.next_id >= self._horizon_of(spans)
 
-    def _ingest(self, batches, expect: int) -> int:
-        """Add the rows with ids from ``expect`` on of ``batches``
-        (record batches in id order) to the mirror; returns the id
-        after the last one."""
+    def _ingest(self, batches) -> None:
+        """Add the rows of ``batches`` (record batches in id order)
+        from the mirror's end on to the mirror."""
         for batch in batches:
             if batch.num_rows:
-                batch = batch.slice(expect - batch.column("id")[0].as_py())
-                for p in _prims_of(batch):
+                start = batch.column("id")[0].as_py()
+                for p in _prims_of(batch.slice(self.next_id - start)):
                     self._mirror_add(p)
-                expect += batch.num_rows
-        return expect
-
-    def _mirror_add(self, p: Primitive) -> None:
-        """Append a committed primitive to the mirror and its indexes."""
-        self.rows.append(p)
-        self.by_guid[p.guid] = p
-        if p.prev is not None:
-            self.next_version[p.prev] = p.guid
-        if p.value is not None:
-            self._value_ids.setdefault(p.value.lower(), []).append(p.id)
-        if p.name is not None:
-            self._name_ids.setdefault(p.name.lower(), []).append(p.id)
-        self._index_prim(p)
 
     def hydrate(self, limit: int = 200_000) -> bool:
         """Load the whole log into the driver mirror — the serving
@@ -1077,7 +1074,8 @@ class ParquetLogStore(PrimitiveStore):
         if spans is None:
             table = self._log_df().orderBy("id").toArrow()
             self._base = 0
-            self._flushed = self._ingest(table.to_batches(), 0)
+            self._ingest(table.to_batches())
+            self._flushed = self.next_id
             return True
         self._base = 0
         self._tail_start, self._tail_bytes = None, 0
@@ -1109,27 +1107,11 @@ class ParquetLogStore(PrimitiveStore):
             )
         return df.unionByName(memo[1])
 
-    def ts_of_id(self, id: int) -> int:
-        """Timestamp point read; ids below the cache base go through
-        one Spark lookup (the bsearch reads ~log2(n) of these)."""
-        if id >= self._base:
-            return self.rows[id - self._base].timestamp
-        from pyspark.sql import functions as F
-
-        row = (
-            self._log_df().filter(F.col("id") == id)
-            .select("timestamp").head()
-        )
-        return int(row["timestamp"])
-
     @property
     def _covers_all(self) -> bool:
         """True while the driver cache mirrors the whole log (every
         write went through this process and nothing was evicted)."""
         return self._base == 0
-
-    def _from_row(self, r) -> Primitive:
-        return Primitive(**{f: r[f] for f in PRIMITIVE_FIELDS})
 
     # -- transactions -----------------------------------------------------
 
@@ -1324,157 +1306,101 @@ class ParquetLogStore(PrimitiveStore):
         self._base += drop
         for p in dropped:
             self.by_guid.pop(p.guid, None)
-        # rebuild the value/name id maps over the surviving suffix
-        self._value_ids.clear()
-        self._name_ids.clear()
-        self._vnorm_ids.clear()
-        self._ptr_ids.clear()
-        self._lin_ids.clear()
+        # rebuild the id indexes over the surviving suffix
+        for index in (
+            self._value_ids, self._name_ids, self._vnorm_ids,
+            self._word_ids, self._ptr_ids, self._lin_ids,
+        ):
+            index.clear()
         for p in self.rows:
-            if p.value is not None:
-                self._value_ids.setdefault(p.value.lower(), []).append(p.id)
-            if p.name is not None:
-                self._name_ids.setdefault(p.name.lower(), []).append(p.id)
             self._index_prim(p)
 
-    # -- point lookups with Spark fallback --------------------------------
+    # -- lookups: ids below _base through Spark, the rest from the mirror
+
+    #: max rows a lookup below the mirror COLLECTS; a hotter key
+    #: streams the same scan instead (toLocalIterator, one partition
+    #: at a time), so a key= / unique= write against a value shared by
+    #: millions of primitives never pulls them into one driver buffer
+    #: (the reference iterates its hmap bin lazily: libpdb/pdb-hash.c)
+    POINT_LOOKUP_BOUND = 1024
+
+    def _below(self, where) -> Iterator[Primitive]:
+        """The log rows with ``id < _base`` that match ``where`` (a
+        Spark condition over the stored, su_encode'd columns), in id
+        order, each decoded once by _prims_of.  Every lookup on a
+        partial mirror yields these, then the mirror's own answer: a
+        row at or past ``_base`` comes only from the mirror."""
+        scan = (
+            self._log_df().filter(where & (F.col("id") < self._base))
+            .orderBy("id")
+        )
+        rows = scan.limit(self.POINT_LOOKUP_BOUND + 1).collect()
+        if len(rows) > self.POINT_LOOKUP_BOUND:
+            rows = scan.toLocalIterator()
+        rows = iter(rows)
+        while chunk := list(itertools.islice(rows, self.POINT_LOOKUP_BOUND)):
+            yield from _prims_of(_rows_batch(chunk))
 
     def get(self, guid: str) -> Optional[Primitive]:
         p = self.by_guid.get(guid)
-        if p is not None or self._covers_all:
-            return p
-        if guid in self._lookup_cache:
-            return self._lookup_cache.get(guid)
-        from pyspark.sql import functions as F
-
-        rows = self._log_df().filter(F.col("guid") == guid).limit(1).collect()
-        p = self._from_row(rows[0]) if rows else None
-        return self._lookup_cache.put(guid, p)
+        if p is None and self._base:
+            p = next(self._below(F.col("guid") == guid), None)
+        return p
 
     def successor(self, guid: str) -> Optional[str]:
         nxt = self.next_version.get(guid)
-        if nxt is not None or self._covers_all:
-            return nxt
-        key = "succ:" + guid
-        if key in self._lookup_cache:
-            hit = self._lookup_cache.get(key)
-            return hit.guid if hit is not None else None
-        from pyspark.sql import functions as F
+        if nxt is None and self._base:
+            p = next(self._below(F.col("prev") == guid), None)
+            nxt = None if p is None else p.guid
+        return nxt
 
-        rows = (
-            self._log_df().filter(F.col("prev") == guid).limit(1).collect()
-        )
-        p = self._from_row(rows[0]) if rows else None
-        self._lookup_cache.put(key, p)
-        return p.guid if p is not None else None
-
-    def find_by_value(self, value: str) -> Iterator[Primitive]:
-        if self._covers_all:
-            yield from super().find_by_value(value)
-            return
-        yield from self._find_spark("value", value)
-
-    def find_by_name(self, name: str) -> Iterator[Primitive]:
-        if self._covers_all:
-            yield from super().find_by_name(name)
-            return
-        yield from self._find_spark("name", name)
-
-    #: max rows a point lookup may COLLECT at once; a hotter key
-    #: switches to toLocalIterator streaming (one partition's batch at
-    #: a time), so a key= / unique= write against a value shared by
-    #: millions of primitives can never pull them all into one driver
-    #: buffer (the reference iterates its hmap bin lazily:
-    #: libpdb/pdb-hash.c)
-    POINT_LOOKUP_BOUND = 1024
-
-    def _find_spark(self, field: str, text: str) -> Iterator[Primitive]:
-        from pyspark.sql import functions as F
-
-        base = (
-            self._log_df()
-            .filter(F.lower(F.col(field)) == text.lower())
-            .filter(F.col("id") < self._flushed)
-            .orderBy("id")
-        )
-        head = base.limit(self.POINT_LOOKUP_BOUND + 1).collect()
-        if len(head) <= self.POINT_LOOKUP_BOUND:
-            for r in head:
-                yield self._from_row(r)
-        else:
-            # hot key: re-scan streaming — bounded driver memory
-            for r in base.toLocalIterator():
-                yield self._from_row(r)
-        # unflushed tail (open transaction) lives only on the driver
-        for p in self.rows[self._flushed - self._base:]:
-            v = getattr(p, field)
-            if v is not None and v.lower() == text.lower():
-                yield p
-
-    def lineage_members(self, lineage: str) -> list[str]:
-        if self._covers_all:
-            return super().lineage_members(lineage)
-        from pyspark.sql import functions as F
-
-        sel = (
-            self._log_df()
-            .filter(F.col("lineage") == lineage)
-            .filter(F.col("id") < self._flushed)
-            .select("generation", "guid")
-        )
-        head = sel.limit(self.POINT_LOOKUP_BOUND + 1).collect()
-        if len(head) <= self.POINT_LOOKUP_BOUND:
-            it = head
-        else:
-            # pathological chain: stream instead of one big collect
-            it = sel.toLocalIterator()
-        pairs = [(r["generation"], r["guid"]) for r in it]
-        pairs += [
-            (p.generation, p.guid)
-            for p in self.rows[self._flushed - self._base:]
-            if p.lineage == lineage
-        ]
-        return [g for _, g in sorted(pairs)]
-
-    # -- scans ------------------------------------------------------------
-
-    def iter_all(self) -> Iterator[Primitive]:
-        if self._covers_all:
-            return iter(self.rows)
-        return self.iter_range(0, self.next_id)
-
-    def iter_range(self, start: int, end: int) -> Iterator[Primitive]:
-        if self._covers_all:
-            yield from super().iter_range(start, end)
-            return
-        from pyspark.sql import functions as F
-
-        lo, hi = start, min(end, self._base)
-        if lo < hi:
-            it = (
-                self._log_df()
-                .filter((F.col("id") >= lo) & (F.col("id") < hi))
-                .orderBy("id")
-                .toLocalIterator()  # streams; never whole-log on driver
-            )
-            for r in it:
-                yield self._from_row(r)
-        yield from super().iter_range(max(start, self._base), end)
+    def ts_of_id(self, id: int) -> int:
+        """Timestamp point read (the bsearch reads ~log2(n) of these)."""
+        if id >= self._base:
+            return super().ts_of_id(id)
+        return next(self._below(F.col("id") == id)).timestamp
 
     def last_primitive(self) -> Optional[Primitive]:
-        if self.rows:
-            return self.rows[-1]
-        if self._base == 0:
-            return None
-        from pyspark.sql import functions as F
+        if self.rows or not self._base:
+            return super().last_primitive()
+        return next(self._below(F.col("id") == self._base - 1), None)
 
-        rows = (
-            self._log_df().orderBy(F.col("id").desc()).limit(1).collect()
-        )
-        return self._from_row(rows[0]) if rows else None
+    def find_by_value(self, value: str) -> Iterator[Primitive]:
+        if self._base:
+            yield from self._below(
+                F.lower(F.col("value")) == su_encode(value).lower()
+            )
+        yield from super().find_by_value(value)
 
-    # asof_id_for_ts inherits the exact bsearch; ts_of_id (below)
-    # answers point reads for ids under the cache base through Spark
+    def find_by_name(self, name: str) -> Iterator[Primitive]:
+        if self._base:
+            yield from self._below(
+                F.lower(F.col("name")) == su_encode(name).lower()
+            )
+        yield from super().find_by_name(name)
+
+    def lineage_members(self, lineage: str) -> list[str]:
+        """All version GUIDs of a lineage, oldest first: the ones
+        below the mirror, then the mirror's chain after them."""
+        out = []
+        if self._base:
+            out = [p.guid for p in self._below(F.col("lineage") == lineage)]
+        g = self.next_version.get(out[-1]) if out else lineage
+        while g in self.by_guid:
+            out.append(g)
+            g = self.next_version.get(g)
+        return out
+
+    def iter_all(self) -> Iterator[Primitive]:
+        if self._base:
+            return self.iter_range(0, self.next_id)
+        return super().iter_all()
+
+    def iter_range(self, start: int, end: int) -> Iterator[Primitive]:
+        if start < min(end, self._base):
+            id = F.col("id")
+            yield from self._below((id >= start) & (id < end))
+        yield from super().iter_range(start, end)
 
     # -- Spark view -------------------------------------------------------
 
@@ -1486,8 +1412,6 @@ class ParquetLogStore(PrimitiveStore):
         if self._txn_start is not None:
             # defensive: txn rows are never flushed before commit, but
             # make the read horizon explicit anyway
-            from pyspark.sql import functions as F
-
             df = df.filter(F.col("id") < self._txn_start)
         self._df = df
         self._df_version = self._version

@@ -939,3 +939,187 @@ def test_attach_refuses_a_part_whose_rows_disagree_with_its_name(spark):
     )
     with pytest.raises(StoreError, match=f"ends at id {count - 1}"):
         ParquetLogStore.attach(spark, sess.log_path)
+
+
+def test_attached_lookups_round_trip_lone_surrogates(spark):
+    """On an attached, un-hydrated log, rows read below the mirror
+    come back su_decode'd, and text literals reach Spark su_encode'd:
+    a keyed write matches the stored lone-surrogate value."""
+    writer = _parquet_session(spark)
+    v = "caf\udce9"
+    reply = writer.request(f'write (name="s" value="{v}")')
+    g = reply[len("ok ("):-1]
+    reader = GraphSession.attach(spark, writer.log_path)
+    assert reader.store.rows == []
+    assert reader.store.get(g).value == v
+    assert [p.guid for p in reader.store.find_by_value(v)] == [g]
+    assert reader.request(
+        f'write (name="s" value="{v}" key=(value))'
+    ) == f"ok ({g})"
+
+
+def test_lookups_below_the_mirror_ignore_rows_past_the_horizon(spark):
+    """Rows at or past the mirror's base come only from the mirror: a
+    version another writer committed past this session's horizon is
+    invisible to get, successor and find_by_value, and a fresh attach
+    sees it."""
+    from graphd_spark.store import ParquetLogStore
+
+    log = tempfile.mkdtemp(prefix="graphd_log_")
+    writer = ParquetLogStore(spark, log, fresh=True)
+    _commit(writer, "a")
+    g = writer.rows[0].guid
+    reader = ParquetLogStore.attach(spark, log)
+    writer.begin()
+    new = writer.append(prev=g, name="n", value="b")
+    writer.commit()
+    assert reader.get(g).value == "a"
+    assert reader.get(new.guid) is None
+    assert reader.successor(g) is None
+    assert list(reader.find_by_value("b")) == []
+    assert reader.lineage_members(g) == [g]
+    fresh = ParquetLogStore.attach(spark, log)
+    assert fresh.get(new.guid) == new
+    assert fresh.successor(g) == new.guid
+    assert fresh.lineage_members(g) == [g, new.guid]
+
+
+def test_full_mirror_answers_get_and_successor_without_spark(
+    spark, monkeypatch
+):
+    """While the mirror covers the log (a writing session, or an
+    attached one after hydrate), get and successor build no Spark
+    object, for known and unknown guids alike."""
+    from pyspark.sql import functions as F
+
+    from graphd_spark.store import ParquetLogStore
+
+    sess = _parquet_session(spark)
+    first = sess.request('write (value="a")')[len("ok ("):-1]
+    second = sess.request(f'write (guid~={first} value="b")')
+    second = second[len("ok ("):-1]
+    hydrated = ParquetLogStore.attach(spark, sess.log_path)
+    assert hydrated.hydrate()
+
+    def no_spark(*args, **kwargs):
+        pytest.fail("a full mirror's lookup built a Spark object")
+
+    monkeypatch.setattr(F, "col", no_spark)
+    monkeypatch.setattr(ParquetLogStore, "_log_df", no_spark)
+    unknown = "0" * 32
+    for store in (sess.store, hydrated):
+        assert store.get(first).value == "a"
+        assert store.get(unknown) is None
+        assert store.successor(first) == second
+        assert store.successor(second) is None
+        assert store.successor(unknown) is None
+
+
+def test_absorb_lists_again_after_a_concurrent_compaction(spark, layouts):
+    """Another store compacts between mirror_current's listing and its
+    read of the listed files: the read lists again and goes on from
+    the mirror's end, so the mirror holds every committed row, the
+    commit horizon is what it holds, and the next commit lands after
+    them."""
+    from graphd_spark.store import ParquetLogStore
+
+    for layout in layouts:
+        mine = ParquetLogStore(
+            spark, tempfile.mkdtemp(prefix="graphd_log_"), fresh=True
+        )
+        for v in "ab":
+            _commit(mine, v)
+        other = ParquetLogStore.attach(spark, mine.path)
+        _commit(other, "c")
+        listing = mine._fs_spans
+
+        def stale(covered=None):
+            del mine._fs_spans  # one stale listing, then the real one
+            spans = listing(covered)
+            other.compact()
+            return spans
+
+        mine._fs_spans = stale
+        assert mine.mirror_current(), layout
+        assert [p.value for p in mine.rows] == list("abc")
+        assert mine._flushed == mine.next_id == 3
+        _commit(mine, "d")
+        fresh = ParquetLogStore.attach(spark, mine.path)
+        assert fresh.next_id == 4
+        got = fresh.to_df(spark).select("id", "value").collect()
+        assert sorted((r["id"], r["value"]) for r in got) == list(
+            enumerate("abcd")
+        )
+
+
+def test_mirror_indexes_follow_rollback_and_trim(spark):
+    """One routine indexes a mirror row and one unindexes it: after a
+    rolled-back transaction, and after the bounded cache drops rows,
+    every id index lists exactly the mirror's rows."""
+    from graphd_spark.store import ParquetLogStore, PrimitiveStore
+
+    def indexes(store):
+        return [
+            {k: v for k, v in d.items() if v}
+            for d in (
+                store._value_ids, store._name_ids, store._vnorm_ids,
+                store._word_ids, store._ptr_ids, store._lin_ids,
+            )
+        ]
+
+    def rebuilt(store):
+        fresh = PrimitiveStore()
+        for p in store.rows:
+            fresh._index_prim(p)
+        return indexes(fresh)
+
+    log = tempfile.mkdtemp(prefix="graphd_log_")
+    store = ParquetLogStore(spark, log, fresh=True, cache_rows=4)
+    store.begin()
+    head = store.append(name="Head", value="Alpha beta")
+    store.commit()
+    store.begin()
+    store.append(prev=head.guid, name="head", value="alpha gamma",
+                 left=head.guid, typeguid=head.guid)
+    store.rollback()
+    assert head.guid not in store.next_version
+    assert indexes(store) == rebuilt(store)
+    for i in range(6):
+        store.begin()
+        store.append(name=f"n{i}", value=f"word{i} alpha",
+                     left=head.guid)
+        store.commit()
+    assert store._base == 3 and len(store.rows) == 4
+    assert indexes(store) == rebuilt(store)
+
+
+def test_value_sort_probes_name_bins_only_for_number_sorts(
+    spark, monkeypatch
+):
+    """A default-comparator sort=value read on an attached store runs
+    no find_by_name (the number sort-root's name-bin probe is only
+    evaluated for a rendered number-comparator value sort), and a
+    number-comparator read replies as the in-memory session does."""
+    from graphd_spark.store import ParquetLogStore
+
+    writer, mem = _parquet_session(spark), GraphSession()
+    for sess in (writer, mem):
+        for v in ("10", "9", "x", "2"):
+            sess.request(f'write (name="region" value="{v}")')
+    reader = GraphSession.attach(spark, writer.log_path)
+    calls = []
+    find = ParquetLogStore.find_by_name
+
+    def spy(self, name):
+        calls.append(name)
+        return find(self, name)
+
+    monkeypatch.setattr(ParquetLogStore, "find_by_name", spy)
+    default = ('read (name="region" value>="1" sort=value pagesize=5 '
+               'result=((value)))')
+    assert reader.request(default) == mem.request(default)
+    assert calls == []
+    number = ('read (name="region" sort=value sort-comparator="number" '
+              'result=((value)))')
+    assert reader.request(number) == mem.request(number)
+    assert calls

@@ -181,7 +181,6 @@ def test_memos_stay_bounded_past_their_caps(_ab_sessions):
     sc = a._shape_cache
     memos = [
         sc._entries, sc._raw, sc._rawline, a.store._eval_cache,
-        a.store._ts2id_cache, a.store._lookup_cache,
         a.store._base_frame_memo,
     ]
     assert all(len(m) <= m.cap for m in memos)
