@@ -21,7 +21,7 @@ Spark-first:
 - ``write``       — write pipeline: version/unique/key/anchor (ref
                     graphd/graphd-write.c)
 - ``dump``        — dump/restore tuple codec (ref graphd/graphd-dump.c)
-- ``pagination``  — key-set cursors (scale-safe deep paging)
+- ``pagination``  — key-set continuation predicates (deep paging)
 - ``streaming``   — replication as Structured Streaming (ref
                     doc/gr-replication.txt): the Parquet commit log is
                     the replica stream; datelines are stream offsets

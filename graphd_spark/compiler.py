@@ -55,7 +55,20 @@ from graphd_spark.gql.ir import (
     Pattern,
     TRUE,
 )
+from graphd_spark.cursor import (
+    asof_horizon,
+    count_root_set,
+    cursor_high_bounds,
+    emit_root_cursor,
+    needs_total,
+    thaw_envelope,
+)
 from graphd_spark.model import guid_serial, su_encode, ts_from_string
+from graphd_spark.sortsim import (
+    range_is_checked,
+    result_pagesize,
+    sort_production,
+)
 from graphd_spark.pattern import (
     GraphdError,
     default_read_pattern,
@@ -67,8 +80,6 @@ PRIM_ELEM_FIELDS = [
     "guid", "typeguid", "left", "right", "scope", "prev", "name",
     "datatype", "value", "live", "archival", "timestamp", "generation",
 ]
-
-DEFAULT_PAGESIZE = 1024  # ref graphd/graphd-sort.c:21-22
 
 #: candidate sets up to this size pre-evaluate into a fixed iterator
 #: (the reference bounds this by budget, GRAPHD_AND_PREEVALUATE_COST_MAX,
@@ -322,15 +333,7 @@ def effective_sub_cursor_mode(sub) -> Optional[str]:
     producer, which pre-evaluates to a plain fixed set
     (gva_remove_unused_results; probed round 6)."""
     mode = sub_cursor_mode(sub)
-    rps = (
-        sub.resultpagesize
-        if sub.resultpagesize is not None
-        else (
-            sub.pagesize
-            if sub.pagesize is not None
-            else DEFAULT_PAGESIZE
-        )
-    )
+    rps = result_pagesize(sub)
     if rps != 0:
         return mode
     mode = sub_cursor_mode(sub, ignore_sort=True)
@@ -572,7 +575,7 @@ class Compiler:
         df = src
         if self.asof is not None:
             df = df.filter(
-                _c("id") <= self._asof_horizon(self.asof)
+                _c("id") <= asof_horizon(self.store, self.asof)
             )
         # the generation index as a column: one lineage window shared by
         # every constraint node (ref libpdb/pdb-generation; this is the
@@ -602,34 +605,11 @@ class Compiler:
         df = self.store.to_df(self.spark)
         if self.asof is not None:
             df = df.filter(
-                _c("id") <= self._asof_horizon(self.asof)
+                _c("id") <= asof_horizon(self.store, self.asof)
             )
         if self._chain_h is not None:
             df = df.filter(_c("id") < self._chain_h)
         return df
-
-    # -- asof -------------------------------------------------------------
-
-    def _asof_horizon(self, asof: str) -> int:
-        """asof= binds to an id bound (ref graphd-read.c:203-486)."""
-        t = asof.strip()
-        tl = t.lower()
-        if len(tl) == 32 and all(c in "0123456789abcdef" for c in tl):
-            return guid_serial(tl)
-        # dateline form "db-id.count" (ref libgraph/graph-dateline.c):
-        # the count is the next unwritten id, so the horizon excludes it
-        if "." in tl:
-            db, _, count = tl.rpartition(".")
-            if count and db and all(
-                c in "0123456789abcdef" for c in db + count
-            ):
-                return int(count, 16) - 1
-        try:
-            ts = ts_from_string(t, round_up=True)
-        except ValueError:
-            raise GraphdError("SYNTAX", f"cannot parse asof value {asof!r}")
-        # timestamps are monotone with ids: find the last id at/under ts
-        return self.store.asof_id_for_ts(ts)
 
     # -- public API -------------------------------------------------------
 
@@ -638,58 +618,32 @@ class Compiler:
 
         Returns (plan, rows, total) — rows already sorted, offset and
         paginated; total is exact when the pattern needs it, else the
-        collected length (sufficient for the EMPTY check).
+        collected length (sufficient for the EMPTY check).  The page,
+        count and cursor policy is cursor.py's (count_root_set,
+        emit_root_cursor), shared with FastReader.run; this method is
+        the Spark data plane under it.
         """
-        import re as _re0
-
         # per-node candidate high bounds from cursor [n:H] envelopes,
         # propagated like the reference's set_boundary: a cursored
         # 'my' sub bounds its ancestors (writepaged seed 454: the
         # top-level producer thaws as all[0...H]) while 'my' subs of
         # a cursored node stay open — a hot-key child appended
         # between pages still renders (directed write-into-window
-        # fuzz, round 9; mirror of fastread.run).  The legacy
-        # chain_h base filter keeps only the ROOT's bound (the base
-        # frame feeds the root producer; per-sub bounds apply at
-        # _attach_sub child enumeration via _node_highs).
-        from graphd_spark.cursor import cursor_high_bounds
-
+        # fuzz, round 9).  The chain_h base filter keeps only the
+        # ROOT's bound (the base frame feeds the root producer;
+        # per-sub bounds apply at _attach_sub child enumeration via
+        # _node_highs).
         self._node_highs = cursor_high_bounds(con)
         self._chain_h = self._node_highs.get(id(con))
         plan, df = self._compile(con)
-        # cursor= resumes a previous page: the token carries the
-        # position in the query's deterministic total order (sort keys
-        # + id tiebreak).  Unlike the reference's frozen iterator
-        # state, the token is engine-independent; an unrecognized
-        # token (including the reference's own formats) restarts, and
-        # "null:" is the exhausted cursor.
-        resume = 0
-        horizon = None
-        resume_guid = None
-        sort_body = None
-        sort_o = 0
-        cstate = None
-        if con.cursor is not None:
-            import re as _re
-
-            cur = con.cursor
-            if cur == "null:":
-                raise GraphdError("EMPTY", "not found")
-            from graphd_spark.cursor import BadCursor, parse_cursor
-
-            try:
-                cstate = parse_cursor(
-                    cur, con, self.types.resolve,
-                    asof=self.asof is not None,
-                )
-            except BadCursor as e:
-                raise GraphdError("BADCURSOR", e.message)
+        cstate, resume, horizon, resume_guid, sort_body, sort_o = (
+            thaw_envelope(con, self.types.resolve, self.asof is not None)
+        )
         masq_raw = False
         if cstate is not None:
             # a modeled iterator freeze (all / fixed / without):
             # resume by iterator position, not offset (ref
             # pdb-iterator-all.c, graphd-iterator-fixed.c)
-            horizon = cstate.horizon
             if cstate.form in ("all", "without"):
                 if cstate.backward:
                     # backward scan: skip the first `pos` elements of
@@ -782,7 +736,9 @@ class Compiler:
                 # array (bin false positives and rejected targets
                 # counted; graphd-iterator-fixed.c fixed_iterator_next;
                 # test/unit/colors3.sh) — inline ids ride the cursor,
-                # cached states regenerate from the provenance
+                # cached states regenerate from the provenance.  With
+                # no raw set recoverable, position == offset into the
+                # compiled result
                 raw = cstate.fixed_ids or self._isa_expansion_ids(con)
                 if raw:
                     allowed = (
@@ -792,10 +748,7 @@ class Compiler:
                     )
                     df = df.filter(_c("id").isin(allowed))
                     masq_raw = True
-                else:
-                    # no raw set recoverable: position == offset into
-                    # the compiled result
-                    resume = cstate.pos
+                    resume = 0
             elif cstate.form in ("and_it", "or_it"):
                 # and/or iterators resume after their last delivered
                 # candidate id — a state-cache miss replays the scan
@@ -808,121 +761,15 @@ class Compiler:
                     df = df.filter(_c("id") < cstate.pos)
                 else:
                     df = df.filter(_c("id") > cstate.pos)
-            elif cstate.form == "isa_it":
-                # the isa's position is its last delivered target; the
-                # read layer resumes by the cumulative [o:] offset
-                # (production order == id order for the expansion)
-                resume = cstate.offset
-        elif con.cursor is not None:
-            import re as _re
-
-            cur = con.cursor
-            if cur.startswith("position:"):
-                try:
-                    resume = int(cur.split(":", 1)[1].split("/")[0])
-                except ValueError:
-                    resume = 0
-            else:
-                # reference formats: "sort:[o:N][n:N]<sort state>" and
-                # "cursor:XXXX:[o:N][n:N]<iterator state>".  [o:] is
-                # the resume offset, [n:] caps the id horizon so the
-                # page sequence ignores later writes (ref
-                # graphd-constraint-cursor.c:20-80
-                # graphd_constraint_cursor_scan_prefix)
-                body = cur
-                is_sort = body.lower().startswith("sort:")
-                if is_sort:
-                    body = body[5:]
-                else:
-                    m = _re.match(r"(?i)cursor:[0-9a-f]+:", body)
-                    if m:
-                        body = body[m.end():]
-                saw_offset = False
-                while body.startswith("["):
-                    close = body.find("]")
-                    if close < 0:
-                        break
-                    m = _re.match(r"\[([onON]):(\d+)\]", body[: close + 1])
-                    if m:
-                        if m.group(1).lower() == "o":
-                            resume = int(m.group(2))
-                            saw_offset = True
-                        else:
-                            horizon = int(m.group(2))
-                    body = body[close + 1:]
-                if is_sort:
-                    # sort state: the serialized values position the
-                    # scan after the page's last element; its trailing
-                    # guid tiebreak identifies it exactly (ref
-                    # graphd-sort.c:1553-1650 sort cursor thaw).  The
-                    # reference re-enters through the boundary KEY
-                    # (the sortsim cursor grid); [o:] carries the
-                    # cumulative emitted count for count bookkeeping
-                    m = _re.search(r"g([0-9a-f]{32})$", body)
-                    if m:
-                        resume_guid = m.group(1)
-                        sort_body = body  # full frozen key payload
-                        sort_o = resume
-                        resume = 0
-                elif not saw_offset and horizon is None:
-                    # last-resort: trailing /N/ position of the
-                    # reference's and-iterator freeze
-                    m = _re.search(r"/(\d+)/$", cur)
-                    if m:
-                        resume = int(m.group(1))
         if horizon is not None:
             df = df.filter(_c("id") < horizon)
         order = self._sort_exprs(con, plan)
-        # graphd_sort_needed (graphd-sort.c:1722-1758): a leading
-        # timestamp/guid sort key over a SORTED iterator needs no
-        # sort — production is id order, or reverse id order for a
-        # descending key (the iterator runs backward,
-        # graphd_sort_iterator_direction).  The unsorted producers at
-        # this engine's shapes are value/name RANGE scans (vrange bin
-        # order — there the sort is real, with sort: cursors).
-        # Probed against the reference binary: explicit out-of-order
-        # timestamps surface in id order under sort=(timestamp);
-        # sort=(-timestamp) pages freeze backward all:~ / hmap:~ /
-        # gmap:~ / fixed:~ iterators with pos = elements consumed.
-        sort_skipped = False
-        perfect_backward = False
+        skipped = backward = simulated = False
         if con.sort:
-            first0 = con.sort[0]
-            # a value range only forces the real sort when the vrange
-            # IS the producer; with another indexed predicate the
-            # range is check-only and production stays id-ordered
-            # (same condition as the unsorted scan-order block below;
-            # probed: value<="b" + mandatory sub + sort=(timestamp)
-            # answers in id order, script seed 1427)
-            _vranges = any(
-                sc.op in ("<", "<=", ">", ">=")
-                for sc in con.value_strcons
-            )
-            _nranges = any(
-                sc.op in ("<", "<=", ">", ">=")
-                for sc in con.name_strcons
-            )
-            _range_checked = bool(
-                con.type_strcons or con.links or con.name_strcons
-                or con.guid
-                or any(
-                    (s.linkage or (None, None))[0] in ("iam", "my")
-                    and not s.is_optional
-                    and s.count_eq != 0
-                    for s in con.subs
-                )
-            )
-            if first0.pattern.kind in ("timestamp", "guid") and not (
-                _nranges
-            ) and (not _vranges or _range_checked):
-                sort_skipped = True
-                perfect_backward = bool(first0.descending)
-                order = [
-                    _c("id").desc()
-                    if perfect_backward
-                    else _c("id").asc()
-                ]
-        if con.sort and not sort_skipped:
+            skipped, backward, simulated = sort_production(con)
+        if skipped:
+            order = [_c("id").desc() if backward else _c("id").asc()]
+        elif con.sort:
             first = con.sort[0]
             comp0 = resolve_comparator(
                 con.sort_comparators[0]
@@ -985,30 +832,13 @@ class Compiler:
                 )
         if con.sort is None and any(
             sc.op in ("<", "<=", ">", ">=") for sc in con.value_strcons
-        ):
+        ) and not range_is_checked(con):
+            # the range produces the candidates (sortsim
+            # range_is_checked: otherwise rows surface in id order)
             vcomp = resolve_comparator(
                 con.value_comparator or con.comparator
             )
-            if con.type_strcons or con.links or con.name_strcons or (
-                con.guid
-            ) or any(
-                (s.linkage or (None, None))[0] in ("iam", "my")
-                and not s.is_optional
-                and s.count_eq != 0
-                for s in con.subs
-            ):
-                # another indexed constraint produces the candidates
-                # (gmap/hmap, including linkage members propagated
-                # from mandatory pinned subconstraints — an 'iam' sub
-                # contributes an isa member, a 'my' sub a linksto
-                # member), so the range is just a check and rows
-                # surface in id order (test/unit/david_6.sh:
-                # value>"lark" type="foobar"; differential seeds
-                # 64/109, and seed 42's (<-left value>=...) sub).
-                # Optional and count=0 subs produce nothing — the
-                # range stays the producer.
-                pass
-            elif vcomp == "default":
+            if vcomp == "default":
                 # unsorted range reads surface in the reference's
                 # value-bin scan order — STRING_BINS bin index, ids
                 # within a bin (ref comparator_default_range_bins,
@@ -1059,58 +889,27 @@ class Compiler:
                     _c("id").asc(),
                 ]
         # the reference's bounded incremental sorter over id-ordered
-        # production (mirror of the fast path; sortsim.py): tight
-        # sorted pages whose candidates interleave null keys truncate
-        # exactly like graphd-sort.c.  Only engages when an INDEXED
-        # producer drives production in id order; bare scans get a
-        # sort-root-ordered producer whose truncation is lossless, so
-        # the declarative top-k plan below is already exact.  Capped:
-        # the sim collects one (id, keys) tuple per candidate, so an
-        # unselective sort over a huge store falls back to the
-        # declarative plan rather than collecting the world.
+        # production (sortsim.py): tight sorted pages whose candidates
+        # interleave null keys truncate exactly like graphd-sort.c.
+        # Bare scans get a sort-root-ordered producer whose truncation
+        # is lossless, so the declarative top-k plan below is already
+        # exact.  Capped: the sim collects one (id, keys) tuple per
+        # candidate, so an unselective sort over a huge store falls
+        # back to the declarative plan rather than collecting the world.
+        rps = result_pagesize(con)
         sim_info = None
-        P_sim = 0
-        if (
-            con.sort
-            and not sort_skipped
-            and not ((_vranges or _nranges) and not _range_checked)
-        ):
-            from graphd_spark.sortsim import production_is_id_ordered
-
-            if production_is_id_ordered(con):
-                _ps0 = (
-                    con.pagesize
-                    if con.pagesize is not None
-                    else DEFAULT_PAGESIZE
-                )
-                _rps0 = (
-                    con.resultpagesize
-                    if con.resultpagesize is not None
-                    else _ps0
-                )
-                P_sim = con.start + _rps0
-                if P_sim > 0 and df.limit(
-                    _SORTSIM_CAP + 1
-                ).count() <= _SORTSIM_CAP:
-                    sim_info = self._sortsim_run(
-                        con, plan, df, P_sim, resume_guid, sort_body
-                    )
+        if simulated and con.start + rps > 0 and df.limit(
+            _SORTSIM_CAP + 1
+        ).count() <= _SORTSIM_CAP:
+            sim_info = self._sortsim_run(
+                con, plan, df, con.start + rps, resume_guid, sort_body
+            )
         if sim_info is not None:
             resume = 0
         elif resume_guid is not None:
             resume, df = self._key_resume_offset(
                 df, con, plan, resume_guid, sort_body
             )
-        pagesize = (
-            con.pagesize if con.pagesize is not None else DEFAULT_PAGESIZE
-        )
-        # resultpagesize bounds the rendered page (defaults to
-        # pagesize; ref graphd.h con_resultpagesize, test slip)
-        rps = (
-            con.resultpagesize
-            if con.resultpagesize is not None
-            else pagesize
-        )
         start = con.start + resume
         limit = start + rps
         elem = self._elem_struct(con, plan)
@@ -1122,7 +921,7 @@ class Compiler:
         if sim_info is not None:
             # page = the simulation's surviving array, start-sliced;
             # one bounded isin fetch materializes just those structs
-            sim_ids, sim_accepted, sim_trailing = sim_info
+            sim_ids, sim_accepted, trailing = sim_info
             page_ids = sim_ids[start:limit] if rps > 0 else []
             if page_ids:
                 got = {
@@ -1131,267 +930,81 @@ class Compiler:
                     .select(_c("id"), elem.alias("__e"))
                     .collect()
                 }
-                page = [got[i] for i in page_ids]
+                rows = [got[i] for i in page_ids]
             else:
-                page = []
+                rows = []
             n_prefix = min(sim_accepted, limit)
-        elif rps > 0:
-            page = [
+        else:
+            sim_accepted = trailing = sort_o = None
+            rows = [
                 r["__e"]
                 for r in df.orderBy(*order)
                 .offset(start)
                 .limit(rps)
                 .select(elem.alias("__e"))
                 .collect()
-            ]
-        else:
-            page = []
-        # n_prefix = min(total, limit), recovered without collecting
-        # the prefix: a non-empty (or start=0) page pins it exactly;
-        # an empty page past the data needs one count-only probe
-        if sim_info is not None:
-            pass
-        elif page or start == 0:
-            n_prefix = start + len(page)
-        else:
-            n_prefix = df.limit(start).count()
+            ] if rps > 0 else []
+            # n_prefix = min(total, limit), recovered without
+            # collecting the prefix: a non-empty (or start=0) page
+            # pins it exactly; an empty page past the data needs one
+            # count-only probe
+            n_prefix = (
+                start + len(rows)
+                if rows or start == 0
+                else df.limit(start).count()
+            )
         pat = con.result if con.result is not None else default_read_pattern()
         wants_cursor = any(p.kind == "cursor" for p in pat.walk())
-        need_total = (
-            wants_cursor
-            or any(
-                p.kind in ("count", "estimate", "estimate-count")
-                for p in pat.walk()
-            )
-            or con.count_eq is not None
-            or con.count_max is not None
-            or (con.count_min or 0) > 1
-        )
-        # iterator-state resumes reposition the scan, so `total` below
-        # counts the REMAINING tail; o_base converts to the absolute
-        # frame for count-bound checks and count rendering (probed:
-        # resumed pages keep rendering the original capped count, and
-        # the emptiness check is o+1, not start+1)
-        o_base = (
-            cstate.offset
-            if cstate is not None
-            and (
-                cstate.form in (
-                    "all", "without", "fixed", "gmap", "hmap",
-                    "and_it", "or_it",
-                )
-                or (cstate.form == "fixed_masq" and masq_raw)
-            )
-            else (sort_o if sim_info is not None else 0)
-        )
-        # a page starting beyond the end is EMPTY (ref: default
-        # count-min is start+1), but an explicit count bound overrides.
-        # On an iterator resume the check is offset+1; a pagesize=0
-        # probe needs one element regardless of start= (probed:
-        # start=1 pagesize=0 answers ok with [o:1])
-        count_min_chk = (
-            con.count_min
-            if con.count_min is not None
-            else (o_base + 1 if (o_base or rps == 0) else start + 1)
-        )
-        # the implicit countlimit (start + pagesize) follows the
-        # cursor offset on resume (graphd-constraint-cursor.c:52-55
-        # defaults start to the offset); explicit ones don't move
-        countlimit = con.countlimit
-        if countlimit is not None and getattr(
-            con, "countlimit_defaulted", False
-        ):
-            countlimit += sort_o if sim_info is not None else resume
-        plan.countlimit = countlimit
         wants_estimate = any(
             p.kind in ("estimate", "estimate-count") for p in pat.walk()
         )
-        # remaining-frame verification need (count bounds are absolute)
-        verify_need = max(count_min_chk - o_base, 0)
-        if con.count_eq is not None:
-            verify_need = max(verify_need, con.count_eq + 1 - o_base)
-        if con.count_max is not None:
-            verify_need = max(verify_need, con.count_max + 1 - o_base)
-        if n_prefix < limit:
-            total = n_prefix  # page not full: exact
-        elif sim_info is not None:
-            # the sim's set count is the ACCEPTED count (mirror of the
-            # fast path: prefilter-rejected candidates are invisible,
-            # grsc_one_deliver_count_success)
-            if need_total:
-                if countlimit is not None and not wants_estimate:
-                    total = min(
-                        sim_info[1], max(countlimit, verify_need)
-                    )
-                else:
-                    total = sim_info[1]
-            elif verify_need > n_prefix:
-                total = min(sim_info[1], verify_need)
-            else:
-                total = n_prefix
-        elif need_total:
-            cdf = df
-            # estimates look past the count cap ("the count page size
-            # is unlimited", graphd-semantic.c:297; test estimate-count),
-            # and count-bound checks count just far enough to verify
-            # (count=1 must see a second element to fail; test count2)
-            if countlimit is not None and not wants_estimate:
-                cdf = cdf.limit(max(countlimit, verify_need))
-            total = cdf.count()
-        elif verify_need > n_prefix:
-            # page capped below count_min (e.g. pagesize=0): probe just
-            # enough rows to decide emptiness, never a full count
-            total = df.limit(verify_need).count()
-        else:
-            total = n_prefix
-        total_abs = o_base + total
-        # the root set's own count bounds (ref graphd-read.c:606:
-        # an unsatisfiable set answers "error EMPTY not found")
-        if con.count_eq is not None:
-            ok = total_abs == con.count_eq
-        else:
-            ok = total_abs >= count_min_chk and (
-                con.count_max is None or total_abs <= con.count_max
+        total, shown = count_root_set(
+            self, df, sim_accepted, con, plan,
+            cstate=cstate, masq_raw=masq_raw, sort_o=sort_o,
+            resume=resume, rps=rps, start=start, limit=limit,
+            n_prefix=n_prefix,
+            need_total=needs_total(con, wants_cursor or any(
+                p.kind in ("count", "estimate", "estimate-count")
+                for p in pat.walk()
+            )),
+            wants_estimate=wants_estimate,
+        )
+        if wants_cursor:
+            self._probe_order = (
+                [_c("id").asc()] if skipped else order
             )
-        if not ok:
-            raise GraphdError("EMPTY", "not found")
-        rows = page
-        if wants_cursor and sim_info is not None:
-            # exact cursor-nullness rule of the incremental sorter
-            # (mirror of the fast path; graphd_sort_cursor_get after
-            # graphd_sort_finish drops the con_start prefix): null
-            # unless the final array still holds P elements AND a
-            # condense truncated — start > 0 sorted chains always end
-            # after one page
-            if (
-                rows
-                and con.start == 0
-                and start + len(rows) == P_sim
-                and sim_info[2]
-            ):
-                if self.store.count() >= 1000:
-                    members = self._and_members(con)
-                    if members is not None and len(members) >= 2:
-                        self._resource_stamp(
-                            "suspend:" + ";".join(
-                                f"{lk}->{src}" for lk, src in members
-                            )
-                        )
-                plan.cursor = self._sort_cursor(
-                    con, plan, rows, start + len(rows) + sort_o, horizon
-                )
-            else:
-                plan.cursor = "null:"
-        elif wants_cursor:
-            consumed = start + len(rows)
-            if (
-                not rows
-                and con.pagesize == 0
-                and total > consumed
-                and (not con.sort or sort_skipped)
-            ):
-                # pagesize=0 still consumes the count-min probe
-                # element, and the cursor points past it (ref
-                # test/unit/brendan4.sh: [o:1] on an empty page).
-                # The probe runs FORWARD even under a skipped
-                # descending sort (probed: sort=(-timestamp)
-                # pagesize=0 freezes all:0-N/1/)
-                probe_order = (
-                    [_c("id").asc()] if sort_skipped else order
-                )
-                # only the LAST probed element positions the cursor
-                # ([o:] carries the consumed count separately), so
-                # fetch one row at offset total-1 instead of
-                # collecting `total` rows — total can be the full
-                # match count when the result renders it
-                probe = (
-                    df.orderBy(*probe_order).offset(total - 1).limit(1)
-                    .select("guid", "id")
-                    .collect()
-                )
-                plan.cursor = (
-                    self._iterator_cursor(
-                        con, cstate, probe, df, resume,
-                        delivered=resume + total,
-                    )
-                    if probe
-                    else None
-                ) or "null:"
-            elif consumed >= total or not rows:
-                # countlimit caps the count, not the scan: a full page
-                # whose capped total looks exhausted may still have
-                # candidates beyond it (ref graphd-read-set-count.c;
-                # test/unit/nick6.sh with the implicit
-                # countlimit = start + pagesize)
-                if (
-                    rows
-                    and countlimit is not None
-                    and total >= countlimit
-                    and n_prefix >= limit
-                    and df.limit(limit + 1).count() > limit
-                ):
-                    if con.sort and not sort_skipped:
-                        plan.cursor = self._sort_cursor(
-                            con, plan, rows, consumed, horizon
-                        )
-                    else:
-                        plan.cursor = self._iterator_cursor(
-                            con, cstate, rows, df, resume,
-                            backward=perfect_backward,
-                            delivered=(
-                                cstate.offset
-                                if cstate is not None
-                                else resume
-                            ) + con.start + len(rows),
-                        ) or f"position:{consumed}/{total}"
-                else:
-                    plan.cursor = "null:"
-            elif con.sort and not sort_skipped:
-                if self.store.count() >= 1000:
-                    # a sorted scan this large exceeds the request
-                    # budget and suspends, freezing the iterator's
-                    # state into the resource cache once per query
-                    # shape (graphd-stack.c:139, graphd-iterator-
-                    # state.c; the slip golden's stamp sequence)
-                    members = self._and_members(con)
-                    if members is not None and len(members) >= 2:
-                        self._resource_stamp(
-                            "suspend:" + ";".join(
-                                f"{lk}->{src}" for lk, src in members
-                            )
-                        )
-                plan.cursor = self._sort_cursor(
-                    con, plan, rows, consumed, horizon
-                )
-            else:
-                plan.cursor = self._iterator_cursor(
-                    con, cstate, rows, df, resume,
-                    backward=perfect_backward,
-                    delivered=(
-                        cstate.offset if cstate is not None else resume
-                    ) + con.start + len(rows),
-                ) or f"position:{consumed}/{total}"
-        if (
-            self.asof is not None
-            and plan.cursor
-            and plan.cursor != "null:"
-        ):
-            # asof pages omit the [n:] block (probed; mirror fastread)
-            from graphd_spark.cursor import strip_cursor_horizon
+            emit_root_cursor(
+                self, df, con, plan,
+                cstate=cstate, rows=rows, page=rows, resume=resume,
+                start=start, limit=limit, total=total,
+                horizon=horizon, sort_o=sort_o, trailing=trailing,
+                skipped=skipped, backward=backward,
+            )
+        return plan, rows, shown
 
-            plan.cursor = strip_cursor_horizon(
-                plan.cursor, con, self.types.resolve
-            )
-        # rendered counts clamp at the ORIGINAL (unshifted) countlimit
-        # (probed: resumed pages keep rendering the first page's capped
-        # count; pagesize=0 renders 0); estimates look past the cap
-        if (
-            con.countlimit is not None
-            and not wants_estimate
-            and total_abs > con.countlimit
-        ):
-            return plan, rows, con.countlimit
-        return plan, rows, total_abs
+    # -- the data-plane steps of cursor.emit_root_cursor ------------------
+
+    def _count_upto(self, df, cap: Optional[int]) -> int:
+        return (df if cap is None else df.limit(cap)).count()
+
+    def _more_than(self, df, limit: int) -> bool:
+        return df.limit(limit + 1).count() > limit
+
+    def _probe_cursor(self, con, cstate, df, resume, total, backward):
+        # only the LAST probed element positions the cursor ([o:]
+        # carries the consumed count separately), so fetch one row at
+        # offset total-1 instead of collecting `total` rows — total
+        # can be the full match count when the result renders it
+        probe = (
+            df.orderBy(*self._probe_order).offset(total - 1).limit(1)
+            .select("guid", "id")
+            .collect()
+        )
+        if not probe:
+            return None
+        return self._iterator_cursor(
+            con, cstate, probe, df, resume, delivered=resume + total,
+        )
 
     def _iterator_cursor(self, con, cstate, rows, df, prior=0,
                          backward=False,
@@ -1418,7 +1031,7 @@ class Compiler:
         if self.asof is not None:
             # asof pages clamp every frozen bound at the id horizon
             # and omit [n:] (probed; mirror fastread._iterator_cursor)
-            count = min(count, self._asof_horizon(self.asof) + 1)
+            count = min(count, asof_horizon(self.store, self.asof) + 1)
         if self._chain_h is not None:
             # a resumed chain re-freezes [n:] and every bound at ITS
             # frozen horizon, not the grown store count (round 8)
@@ -2238,13 +1851,7 @@ class Compiler:
         low = max(m["lo"] for m in members)
         high = min(m["hi"] for m in members)
         last_id = guid_serial(rows[-1]["guid"])
-        rps = con.resultpagesize
-        if rps is None:
-            rps = (
-                con.pagesize
-                if con.pagesize is not None
-                else DEFAULT_PAGESIZE
-            )
+        rps = result_pagesize(con)
         if backward:
             subs = "".join(
                 m["set_str"](low, high).replace(
@@ -3018,14 +2625,6 @@ class Compiler:
         # exists in df (a vanished boundary contributes no row)
         return n_before + (1 if present else 0), df
 
-    def _sort_cursor(self, con, plan, rows, consumed: int,
-                     horizon) -> str:
-        """Reference-format sorted cursor (see sort_cursor_string)."""
-        return sort_cursor_string(
-            self.store, self.types, self.asof, con, plan, rows,
-            consumed, horizon,
-        )
-
     def _frozen_sort_tuple(self, con, plan, body):
         """Mirror of FastReader._frozen_sort_grid in the Spark-path
         key domain (_sort_key_col: binary comparator keys, id ints,
@@ -3391,13 +2990,7 @@ class Compiler:
             .withColumn("__e", elem)
             .select("__k", "__rn", "__e")
         )
-        rps = sub.resultpagesize
-        if rps is None:
-            rps = (
-                sub.pagesize
-                if sub.pagesize is not None
-                else DEFAULT_PAGESIZE
-            )
+        rps = result_pagesize(sub)
         # collect only the rendered page into the aggregation buffer:
         # collect_list drops the when()'s nulls, so a 10^6-fan-out
         # parent costs O(resultpagesize) memory, not O(fan-out); the
@@ -3543,7 +3136,7 @@ class Compiler:
             return child_df
         if self.asof is not None:
             horizon = min(
-                self.store.count(), self._asof_horizon(self.asof) + 1
+                self.store.count(), asof_horizon(self.store, self.asof) + 1
             )
         else:
             horizon = (

@@ -47,7 +47,8 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 from graphd_spark.gql.ir import Constraint, GenCon, Pattern, StrCon
-from graphd_spark.model import DATATYPE_NAMES
+from graphd_spark.model import DATATYPE_NAMES, guid_serial, ts_from_string
+from graphd_spark.pattern import GraphdError
 
 
 _HEX = frozenset("0123456789abcdefABCDEF")
@@ -874,6 +875,335 @@ def parse_cursor(text: str, con: Constraint,
                 )
         return None
     raise _old_style(text)
+
+
+def asof_horizon(store, asof: str) -> int:
+    """asof= binds to an id bound (ref graphd-read.c:203-486): a guid,
+    a dateline "db-id.count" whose count is the next unwritten id
+    (ref libgraph/graph-dateline.c), or a timestamp, which binds the
+    last id at or under it (timestamps are monotone with ids)."""
+    t = asof.strip()
+    tl = t.lower()
+    if len(tl) == 32 and all(c in "0123456789abcdef" for c in tl):
+        return guid_serial(tl)
+    if "." in tl:
+        db, _, count = tl.rpartition(".")
+        if count and db and all(
+            c in "0123456789abcdef" for c in db + count
+        ):
+            return int(count, 16) - 1
+    try:
+        ts = ts_from_string(t, round_up=True)
+    except ValueError:
+        raise GraphdError("SYNTAX", f"cannot parse asof value {asof!r}")
+    return store.asof_id_for_ts(ts)
+
+
+#: thaw_envelope's state for a read without cursor=
+_NO_CURSOR = (None, 0, None, None, None, 0)
+
+
+def thaw_envelope(con: Constraint, resolve=None, asof: bool = False):
+    """The root read's resume state from ``con.cursor``, as
+    ``(cstate, resume, horizon, resume_guid, sort_body, sort_o)``;
+    a read without cursor= decodes nothing.
+
+    A modeled iterator freeze (all / fixed / gmap / ...) thaws into
+    ``cstate`` and resumes by iterator position, except the
+    offset-positioned forms: ``fixed_masq`` resumes at ``pos`` unless
+    the evaluator recovers the raw masqueraded id array, ``isa_it``
+    at its cumulative [o:].  Otherwise the envelope is read directly:
+    ``position:N``; ``sort:[o:N][n:N]<keys>`` and
+    ``cursor:XXXX:[o:N][n:N]<state>``, where [o:] is the resume
+    offset and [n:] caps the id horizon so the page sequence ignores
+    later writes (ref graphd-constraint-cursor.c:20-80
+    graphd_constraint_cursor_scan_prefix).  A sort state positions
+    the scan after the page's last element, which its trailing
+    ``g<guid>`` tiebreak identifies (ref graphd-sort.c:1553-1650);
+    the reference re-enters through the boundary KEY (the sortsim
+    cursor grid), so ``sort_body`` keeps the frozen key payload and
+    ``sort_o`` the cumulative emitted count.  An unrecognized body
+    restarts, save the trailing ``/N/`` position of the reference's
+    and-iterator freeze; "null:" is the exhausted cursor."""
+    cur = con.cursor
+    if cur is None:
+        return _NO_CURSOR
+    if cur == "null:":
+        raise GraphdError("EMPTY", "not found")
+    try:
+        cstate = parse_cursor(cur, con, resolve, asof=asof)
+    except BadCursor as e:
+        raise GraphdError("BADCURSOR", e.message)
+    if cstate is not None:
+        if cstate.form == "fixed_masq":
+            resume = cstate.pos
+        elif cstate.form == "isa_it":
+            resume = cstate.offset
+        else:
+            resume = 0
+        return cstate, resume, cstate.horizon, None, None, 0
+    if cur.startswith("position:"):
+        try:
+            resume = int(cur.split(":", 1)[1].split("/")[0])
+        except ValueError:
+            resume = 0
+        return None, resume, None, None, None, 0
+    resume = 0
+    horizon = None
+    body = cur
+    is_sort = body.lower().startswith("sort:")
+    if is_sort:
+        body = body[5:]
+    else:
+        m = re.match(r"(?i)cursor:[0-9a-f]+:", body)
+        if m:
+            body = body[m.end():]
+    saw_offset = False
+    while body.startswith("["):
+        close = body.find("]")
+        if close < 0:
+            break
+        m = re.match(r"\[([onON]):(\d+)\]", body[: close + 1])
+        if m:
+            if m.group(1).lower() == "o":
+                resume = int(m.group(2))
+                saw_offset = True
+            else:
+                horizon = int(m.group(2))
+        body = body[close + 1:]
+    if is_sort:
+        m = re.search(r"g([0-9a-f]{32})$", body)
+        if m:
+            return None, 0, horizon, m.group(1), body, resume
+    elif not saw_offset and horizon is None:
+        m = re.search(r"/(\d+)/$", cur)
+        if m:
+            resume = int(m.group(1))
+    return None, resume, horizon, None, None, 0
+
+
+#: iterator freezes that resume by position: their evaluation counts
+#: only the remaining tail, so [o:] rebases it
+_POSITIONED = frozenset(
+    ("all", "without", "fixed", "gmap", "hmap", "and_it", "or_it")
+)
+
+
+def needs_total(con: Constraint, counted: bool) -> bool:
+    """Must the root set be counted past its page?  ``counted`` says
+    the result renders a cursor, count or estimate; count bounds
+    beyond the default count-min need the count too."""
+    return (
+        counted
+        or con.count_eq is not None
+        or con.count_max is not None
+        or (con.count_min or 0) > 1
+    )
+
+
+def count_root_set(ev, src, full, con, plan, *, cstate, masq_raw,
+                   sort_o, resume, rps, start, limit, n_prefix,
+                   need_total, wants_estimate):
+    """Count the root set just far enough, check its count bounds and
+    return ``(total, shown)``: ``total`` in the resumed frame, the
+    count the reply renders as ``shown`` (ref graphd-read-set-count.c).
+
+    ``full`` is the set's exact size when the evaluator knows it (the
+    mirror's matches, the sorter's accepted count), else None, and
+    ``ev._count_upto(src, cap)`` counts at most ``cap`` rows.
+    ``sort_o`` is the sorter's cumulative [o:] when the incremental
+    sorter ran, else None; ``n_prefix`` is min(set size, ``limit``).
+    Sets ``plan.countlimit``; raises EMPTY for an unsatisfied bound
+    (ref graphd-read.c:606)."""
+    # a positioned resume counts the REMAINING tail; o_base converts
+    # to the absolute frame (probed: resumed pages keep rendering the
+    # original capped count, and the emptiness check is o+1)
+    if cstate is not None and (
+        cstate.form in _POSITIONED
+        or (cstate.form == "fixed_masq" and masq_raw)
+    ):
+        o_base = cstate.offset
+    else:
+        o_base = sort_o or 0
+    # a page starting beyond the end is EMPTY (default count-min is
+    # start+1) unless an explicit count bound overrides; a pagesize=0
+    # probe needs one element regardless of start= (probed: start=1
+    # pagesize=0 answers ok with [o:1])
+    count_min_chk = (
+        con.count_min
+        if con.count_min is not None
+        else (o_base + 1 if (o_base or rps == 0) else start + 1)
+    )
+    # the implicit countlimit (start + pagesize) follows the cursor
+    # offset on resume (graphd-constraint-cursor.c:52-55 defaults
+    # start to the offset); explicit ones don't move
+    countlimit = con.countlimit
+    if countlimit is not None and getattr(
+        con, "countlimit_defaulted", False
+    ):
+        countlimit += resume if sort_o is None else sort_o
+    plan.countlimit = countlimit
+    # count bounds are absolute; verify in the remaining frame
+    verify_need = max(count_min_chk - o_base, 0)
+    if con.count_eq is not None:
+        verify_need = max(verify_need, con.count_eq + 1 - o_base)
+    if con.count_max is not None:
+        verify_need = max(verify_need, con.count_max + 1 - o_base)
+    if n_prefix >= limit and (need_total or verify_need > n_prefix):
+        if not need_total:
+            # page capped below count_min (e.g. pagesize=0): probe
+            # just enough rows to decide emptiness
+            cap = verify_need
+        elif countlimit is not None and not wants_estimate:
+            # count-bound checks count just far enough to verify
+            # (count=1 must see a second element to fail; test
+            # count2); estimates look past the count cap ("the count
+            # page size is unlimited", graphd-semantic.c:297)
+            cap = max(countlimit, verify_need)
+        else:
+            cap = None
+        if full is None:
+            total = ev._count_upto(src, cap)
+        else:
+            total = full if cap is None else min(full, cap)
+    else:
+        total = n_prefix  # page not full: exact
+    total_abs = o_base + total
+    if con.count_eq is not None:
+        ok = total_abs == con.count_eq
+    else:
+        ok = total_abs >= count_min_chk and (
+            con.count_max is None or total_abs <= con.count_max
+        )
+    if not ok:
+        raise GraphdError("EMPTY", "not found")
+    # rendered counts clamp at the ORIGINAL (unshifted) countlimit
+    # (probed: resumed pages keep rendering the first page's capped
+    # count; pagesize=0 renders 0); estimates look past the cap
+    if (
+        con.countlimit is not None
+        and not wants_estimate
+        and total_abs > con.countlimit
+    ):
+        return total, con.countlimit
+    return total, total_abs
+
+
+def _suspend_stamp(ev, con: Constraint) -> None:
+    """A sorted scan this large exceeds the request budget and
+    suspends, freezing the iterator's state into the resource cache
+    once per query shape (graphd-stack.c:139, graphd-iterator-
+    state.c; the slip golden's stamp sequence)."""
+    if ev.store.count() >= 1000:
+        members = ev._and_members(con)
+        if members is not None and len(members) >= 2:
+            from graphd_spark.freeze import resource_stamp
+
+            resource_stamp(
+                ev.store,
+                key="suspend:" + ";".join(
+                    f"{lk}->{src}" for lk, src in members
+                ),
+            )
+
+
+def _sort_cursor(ev, con, plan, rows, consumed, horizon) -> str:
+    from graphd_spark.compiler import sort_cursor_string
+
+    return sort_cursor_string(
+        ev.store, ev.types, ev.asof, con, plan, rows, consumed, horizon
+    )
+
+
+def emit_root_cursor(ev, src, con: Constraint, plan, *, cstate, rows,
+                     page, resume, start, limit, total, horizon,
+                     sort_o, trailing, skipped, backward):
+    """Set ``plan.cursor`` for a root read that renders ``cursor``
+    (ref graphd-read-set-cursor.c).
+
+    ``rows`` is the rendered page, ``page`` the same elements in the
+    form ``ev._iterator_cursor`` freezes.  The evaluator's steps:
+    ``_iterator_cursor(con, cstate, page, src, prior, backward=,
+    delivered=)``; ``_probe_cursor(con, cstate, src, resume, total,
+    backward)`` for the count-min probe of an empty pagesize=0 page;
+    ``_more_than(src, limit)``; ``_and_members(con)``.  ``trailing``
+    is the incremental sorter's truncation flag, None when it did not
+    run; ``sort_o`` its cumulative [o:].  Runs after count_root_set,
+    which set ``plan.countlimit``."""
+    if trailing is not None:
+        # the exact cursor-nullness rule of the incremental sorter
+        # (graphd_sort_cursor_get:1478-1481 after graphd_sort_finish
+        # drops the con_start prefix): null unless the final array
+        # still holds P - con_start elements AND a condense truncated,
+        # so start > 0 sorted chains always end after one page and
+        # countlimit never changes cursor nullness
+        if rows and con.start == 0 and start + len(rows) == limit and (
+            trailing
+        ):
+            _suspend_stamp(ev, con)
+            plan.cursor = _sort_cursor(
+                ev, con, plan, rows, start + len(rows) + sort_o, horizon
+            )
+        else:
+            plan.cursor = "null:"
+    else:
+        consumed = start + len(rows)
+        delivered = (
+            cstate.offset if cstate is not None else resume
+        ) + con.start + len(rows)
+        if (
+            not rows
+            and con.pagesize == 0
+            and total > consumed
+            and (not con.sort or skipped)
+        ):
+            # pagesize=0 still consumes the count-min probe elements,
+            # and the cursor points past them (ref
+            # test/unit/brendan4.sh: [o:1] on an empty page).  The
+            # probe runs FORWARD even under a skipped descending sort
+            # (probed: sort=(-timestamp) pagesize=0 freezes all:0-N/1/)
+            plan.cursor = ev._probe_cursor(
+                con, cstate, src, resume, total, backward
+            ) or "null:"
+        elif consumed >= total or not rows:
+            # countlimit caps the count, not the scan: a full page
+            # whose capped total looks exhausted may still have
+            # candidates beyond it (ref graphd-read-set-count.c;
+            # test/unit/nick6.sh with the implicit countlimit =
+            # start + pagesize)
+            if (
+                rows
+                and plan.countlimit is not None
+                and total >= plan.countlimit
+                and consumed >= limit
+                and ev._more_than(src, limit)
+            ):
+                if con.sort and not skipped:
+                    plan.cursor = _sort_cursor(
+                        ev, con, plan, rows, consumed, horizon
+                    )
+                else:
+                    plan.cursor = ev._iterator_cursor(
+                        con, cstate, page, src, resume,
+                        backward=backward, delivered=delivered,
+                    ) or f"position:{consumed}/{total}"
+            else:
+                plan.cursor = "null:"
+        elif con.sort and not skipped:
+            _suspend_stamp(ev, con)
+            plan.cursor = _sort_cursor(
+                ev, con, plan, rows, consumed, horizon
+            )
+        else:
+            plan.cursor = ev._iterator_cursor(
+                con, cstate, page, src, resume,
+                backward=backward, delivered=delivered,
+            ) or f"position:{consumed}/{total}"
+    if ev.asof is not None and plan.cursor != "null:":
+        # asof pages omit the [n:] block (probed)
+        plan.cursor = strip_cursor_horizon(
+            plan.cursor, con, ev.types.resolve
+        )
 
 
 def cursor_envelope_horizon(cur: str) -> Optional[int]:

@@ -95,7 +95,6 @@ from graphd_spark.comparators import (
     value_norm_key,
 )
 from graphd_spark.compiler import (
-    DEFAULT_PAGESIZE,
     PRIM_ELEM_FIELDS,
     SetPlan,
     SubPlan,
@@ -103,9 +102,19 @@ from graphd_spark.compiler import (
     _ISA_SMALL_SET_MAX,
     _OPS,
 )
+from graphd_spark.cursor import (
+    asof_horizon,
+    count_root_set,
+    cursor_high_bounds,
+    emit_root_cursor,
+    needs_total,
+    thaw_envelope,
+)
 from graphd_spark.glob import glob_match
 from graphd_spark.gql.ir import Constraint, StrCon, TRUE, FALSE
 from graphd_spark.model import Primitive, ts_from_string
+from graphd_spark.sortsim import result_pagesize, simulate, sort_production
+from graphd_spark.wordhash import prefix_bins
 from graphd_spark.pattern import (
     GraphdError,
     default_read_pattern,
@@ -303,7 +312,6 @@ class _ThawScan:
                 from graphd_spark.comparators import (
                     vrange_value_beyond,
                 )
-                from graphd_spark.sortsim import simulate
 
                 arr, _a, _t = simulate(
                     list(entries), self.P, self.specs, grid=self.grid
@@ -337,8 +345,6 @@ class _ThawScan:
         st[0] = pos
 
     def _page(self, ss, st):
-        from graphd_spark.sortsim import simulate
-
         arr, accepted, trailing = simulate(
             list(st[1]), self.P, self.specs, grid=self.grid
         )
@@ -636,6 +642,10 @@ def check_supported(con: Constraint) -> None:
     _walk(con, False, 0)
 
 
+def _id_key(p, row):
+    return p.id
+
+
 class FastReader:
     """Mirror of Compiler.run for the supported subset (see module
     docstring).  Construction is cheap; one instance per request."""
@@ -680,15 +690,15 @@ class FastReader:
         #: version + asof); rows are never mutated after evaluation
         self._eval_cache = eval_cache
         self._cache_key = cache_key
-        # asof= binds to an id horizon (mirror of _asof_horizon,
-        # compiler.py:146-167): candidates, traversal children, and
+        # asof= binds to an id horizon (cursor.asof_horizon, shared
+        # with Compiler): candidates, traversal children, and
         # newest-ness all evaluate within it.  A thawed cursor's [n:H]
         # later NARROWS self.horizon the same way (run: the chain
         # lives at the store horizon it froze at), but only asof_mode
         # switches the asof FORMATS ([n:]-omission, dateline maxima)
         self.asof_mode: bool = asof is not None
         self.horizon: Optional[int] = (
-            None if asof is None else self._asof_horizon(asof)
+            None if asof is None else asof_horizon(store, asof)
         )
         #: generational horizon: newest/live and lineage-pointer
         #: evaluation clamp here.  asof= sets it (time travel really
@@ -708,109 +718,24 @@ class FastReader:
         #: is CURRENTLY being (re)generated (see _helper_high)
         self._cur_high = None
 
-    def _asof_horizon(self, asof: str) -> int:
-        from graphd_spark.model import guid_serial
-
-        t = asof.strip()
-        tl = t.lower()
-        if len(tl) == 32 and all(c in "0123456789abcdef" for c in tl):
-            return guid_serial(tl)
-        if "." in tl:
-            db, _, count = tl.rpartition(".")
-            if count and db and all(
-                c in "0123456789abcdef" for c in db + count
-            ):
-                return int(count, 16) - 1
-        try:
-            ts = ts_from_string(t, round_up=True)
-        except ValueError:
-            raise GraphdError(
-                "SYNTAX", f"cannot parse asof value {asof!r}"
-            )
-        return self.store.asof_id_for_ts(ts)
-
     # -- public ----------------------------------------------------------
 
     def run(self, con: Constraint):
+        """Compiler.run's (plan, rows, total) from the driver mirror:
+        the data plane is list slices of the matches, the page, count
+        and cursor policy is cursor.py's (count_root_set,
+        emit_root_cursor).  Raises Unsupported for shapes it leaves
+        to the compiler."""
         flags = shape_flags(con)  # raises Unsupported; memoized
         wants_cursor = flags["wants_cursor"]
-        # cursor= resume (mirror of Compiler.run, compiler.py:192-345)
-        resume = 0
-        horizon = None
-        resume_guid = None
-        sort_body = None
-        sort_o = 0
-        cstate = None
-        if con.cursor is not None:
-            import re as _re
-
-            cur = con.cursor
-            if cur == "null:":
-                raise GraphdError("EMPTY", "not found")
-            from graphd_spark.cursor import BadCursor, parse_cursor
-
-            try:
-                cstate = parse_cursor(
-                    cur, con, self.types.resolve,
-                    asof=self.asof_mode,
-                )
-            except BadCursor as e:
-                raise GraphdError("BADCURSOR", e.message)
-            if cstate is not None:
-                if cstate.form not in (
-                    "all", "without", "fixed", "gmap", "hmap",
-                    "and_it", "or_it", "isa_it", "fixed_masq",
-                ):
-                    raise Unsupported("cursor-form")
-                horizon = cstate.horizon
-                # offset-positioned forms (mirror compiler.py:274-294)
-                if cstate.form == "fixed_masq":
-                    resume = cstate.pos
-                elif cstate.form == "isa_it":
-                    resume = cstate.offset
-            elif cur.startswith("position:"):
-                try:
-                    resume = int(cur.split(":", 1)[1].split("/")[0])
-                except ValueError:
-                    resume = 0
-            else:
-                body = cur
-                is_sort = body.lower().startswith("sort:")
-                if is_sort:
-                    body = body[5:]
-                else:
-                    m = _re.match(r"(?i)cursor:[0-9a-f]+:", body)
-                    if m:
-                        body = body[m.end():]
-                saw_offset = False
-                while body.startswith("["):
-                    close = body.find("]")
-                    if close < 0:
-                        break
-                    m = _re.match(r"\[([onON]):(\d+)\]", body[: close + 1])
-                    if m:
-                        if m.group(1).lower() == "o":
-                            resume = int(m.group(2))
-                            saw_offset = True
-                        else:
-                            horizon = int(m.group(2))
-                    body = body[close + 1:]
-                if is_sort:
-                    # sort state: resume after the serialized last
-                    # element (guid tiebreak identifies it) — the
-                    # reference re-enters through the boundary KEY
-                    # (the sortsim cursor grid); [o:] carries the
-                    # cumulative emitted count for count bookkeeping
-                    m = _re.search(r"g([0-9a-f]{32})$", body)
-                    if m:
-                        resume_guid = m.group(1)
-                        sort_body = body  # full frozen key payload
-                        sort_o = resume
-                        resume = 0
-                elif not saw_offset and horizon is None:
-                    m = _re.search(r"/(\d+)/$", cur)
-                    if m:
-                        resume = int(m.group(1))
+        cstate, resume, horizon, resume_guid, sort_body, sort_o = (
+            thaw_envelope(con, self.types.resolve, self.asof_mode)
+        )
+        if cstate is not None and cstate.form not in (
+            "all", "without", "fixed", "gmap", "hmap",
+            "and_it", "or_it", "isa_it", "fixed_masq",
+        ):
+            raise Unsupported("cursor-form")
         # per-node candidate high bounds from every cursor [n:H] in
         # the tree, propagated exactly like the reference's
         # set_boundary (a primitive only points at smaller ids):
@@ -821,8 +746,6 @@ class FastReader:
         # write-into-window fuzz, round 9).  self.horizon itself
         # stays asof-only; chain bounds are per node.
         if flags["any_cursor"]:
-            from graphd_spark.cursor import cursor_high_bounds
-
             self._node_high = cursor_high_bounds(con)
             root_high = self._node_high.get(id(con))
         else:
@@ -865,14 +788,13 @@ class FastReader:
             matches = [
                 (p, r) for p, r in matches if p.id < root_high
             ]
-        # iterator-position resume (mirror compiler.py:218-282)
+        # iterator-position resume (the Compiler.run filters' mirror)
         masq_raw = False
         if cstate is not None:
             if cstate.form == "fixed_masq":
                 # reposition in the RAW masqueraded array (bin false
-                # positives counted; mirror compiler.py fixed_masq
-                # branch) — inline ids ride the cursor, cached states
-                # regenerate from the constraint
+                # positives counted) — inline ids ride the cursor,
+                # cached states regenerate from the constraint
                 _prev_ch = self._cur_high
                 if cstate.horizon is not None:
                     self._cur_high = cstate.horizon
@@ -897,87 +819,23 @@ class FastReader:
             else:
                 matches = self._resume_filter(cstate, matches)
         matches = self._number_sort_drop(con, matches)
-        # graphd_sort_needed mirror (compiler.py perfect-sort skip): a
-        # leading timestamp/guid key over a sorted producer needs no
-        # sort — id order, reversed for a descending key (backward
-        # iterator).  Value/name RANGES keep the real sort (vrange
-        # producers are bin-ordered/unsorted in the reference).
-        sort_skipped = False
-        perfect_backward = False
+        skipped = backward = simulated = False
         if con.sort:
-            first0 = con.sort[0]
-            # check-only value ranges keep production id-ordered, so
-            # the perfect skip still applies (mirror of Compiler.run;
-            # probed: script seed 1427)
-            _vranges = any(
-                sc.op in ("<", "<=", ">", ">=")
-                for sc in con.value_strcons
-            )
-            _nranges = any(
-                sc.op in ("<", "<=", ">", ">=")
-                for sc in con.name_strcons
-            )
-            _range_checked = bool(
-                con.type_strcons or con.links or con.name_strcons
-                or con.guid
-                or any(
-                    (s.linkage or (None, None))[0] in ("iam", "my")
-                    and not s.is_optional
-                    and s.count_eq != 0
-                    for s in con.subs
-                )
-            )
-            if first0.pattern.kind in ("timestamp", "guid") and not (
-                _nranges
-            ) and (not _vranges or _range_checked):
-                sort_skipped = True
-                perfect_backward = bool(first0.descending)
+            skipped, backward, simulated = sort_production(con)
         sim_info = None
-        from graphd_spark.sortsim import production_is_id_ordered
-
-        if sort_skipped:
-            if perfect_backward:
+        rps = result_pagesize(con)
+        if skipped:
+            if backward:
                 matches = matches[::-1]
-        elif con.sort and not (
-            (_vranges or _nranges) and not _range_checked
-        ) and production_is_id_ordered(con):
+        elif simulated:
             # real sort over id-ordered production: the reference's
             # bounded incremental sorter (sortsim.py) — tight pages
             # whose candidates interleave null keys truncate exactly
             # like graphd-sort.c, and cursor resumes replay the grid
             # rules (the round-5 null-class model is its special case)
-            from graphd_spark.sortsim import simulate
-
-            _ps0 = (
-                con.pagesize
-                if con.pagesize is not None
-                else DEFAULT_PAGESIZE
-            )
-            _rps0 = (
-                con.resultpagesize
-                if con.resultpagesize is not None
-                else _ps0
-            )
-            P_sim = con.start + _rps0
+            P_sim = con.start + rps
             if P_sim > 0:
-                keyfns = []
-                for i0, sk in enumerate(con.sort):
-                    comp = None
-                    if con.sort_comparators and i0 < len(
-                        con.sort_comparators
-                    ):
-                        comp = con.sort_comparators[i0]
-                    comp = resolve_comparator(
-                        comp or con.comparator or "default"
-                    )
-                    fn = self._sort_key_fn(sk.pattern, comp, plan)
-                    if fn is None:
-                        continue
-                    keyfns.append(
-                        (fn, sk.descending,
-                         sk.pattern.kind not in ("variable", "contents"))
-                    )
-                keyfns.append((lambda p, row: p.id, False, True))
+                keyfns = self._root_keyfns(con, plan)
                 specs = [(d, pre) for _f, d, pre in keyfns]
                 entries = [
                     (tuple(f(p, r) for f, _d, _p in keyfns), (p, r))
@@ -1006,7 +864,7 @@ class FastReader:
                 )
                 matches = [payload for _k, payload in arr]
                 resume = 0
-                sim_info = (accepted, trailing, P_sim)
+                sim_info = (accepted, trailing)
             else:
                 self._apply_sort(con, plan, matches)
         else:
@@ -1032,27 +890,7 @@ class FastReader:
             if b_row is None and con.sort:
                 frozen = self._frozen_sort_grid(con, plan, sort_body)
                 if frozen is not None:
-                    keyfns = []
-                    for i0, sk in enumerate(con.sort):
-                        comp = None
-                        if con.sort_comparators and i0 < len(
-                            con.sort_comparators
-                        ):
-                            comp = con.sort_comparators[i0]
-                        comp = resolve_comparator(
-                            comp or con.comparator or "default"
-                        )
-                        fn = self._sort_key_fn(sk.pattern, comp, plan)
-                        if fn is None:
-                            continue
-                        keyfns.append(
-                            (fn, sk.descending,
-                             sk.pattern.kind
-                             not in ("variable", "contents"))
-                        )
-                        if sk.pattern.kind == "guid":
-                            break
-                    keyfns.append((lambda p, row: p.id, False, True))
+                    keyfns = self._root_keyfns(con, plan, to_guid=True)
                     specs = [(d, pre) for _f, d, pre in keyfns]
                     if keyfns and len(frozen) == len(keyfns):
                         b_null = frozen[0] is None
@@ -1070,19 +908,8 @@ class FastReader:
                             ) <= 0
                         )
             if b_row is not None and con.sort:
-                fn0 = None
-                for i0, sk in enumerate(con.sort):
-                    comp = None
-                    if con.sort_comparators and i0 < len(
-                        con.sort_comparators
-                    ):
-                        comp = con.sort_comparators[i0]
-                    comp = resolve_comparator(
-                        comp or con.comparator or "default"
-                    )
-                    fn0 = self._sort_key_fn(sk.pattern, comp, plan)
-                    if fn0 is not None:
-                        break
+                keyfns = self._root_keyfns(con, plan)
+                fn0 = keyfns[0][0] if len(keyfns) > 1 else None
                 if fn0 is not None:
                     b_null = fn0(b_row[0], b_row[1]) is None
                     matches = [
@@ -1093,86 +920,26 @@ class FastReader:
                 if p.id == sid:
                     resume = i + 1
                     break
-        # mirror of the pagination / count-check tail of Compiler.run
-        # (compiler.py:486-612), with the full match count exact
-        pagesize = (
-            con.pagesize if con.pagesize is not None else DEFAULT_PAGESIZE
-        )
-        rps = (
-            con.resultpagesize
-            if con.resultpagesize is not None
-            else pagesize
-        )
         start = con.start + resume
         limit = start + rps
         # under the incremental-sorter sim, the set count is the
         # ACCEPTED count — prefilter-rejected candidates are invisible
         # (grsc_one_deliver_count_success fires on accept only)
-        full = sim_info[0] if sim_info is not None else len(matches)
+        if sim_info is not None:
+            full, trailing = sim_info
+        else:
+            full, trailing, sort_o = len(matches), None, None
         rows = [row for _p, row in matches[start:limit]] if rps > 0 else []
-        n_prefix = min(full, limit)
-        pat = con.result if con.result is not None else default_read_pattern()
-        need_total = (
-            wants_cursor
-            or flags["count_kind"]
-            or con.count_eq is not None
-            or con.count_max is not None
-            or (con.count_min or 0) > 1
+        need_total = needs_total(
+            con, wants_cursor or flags["count_kind"]
         )
-        # iterator-state resumes count the REMAINING tail; o_base
-        # converts to the absolute frame for count-bound checks and
-        # count rendering (mirror of Compiler.run)
-        o_base = (
-            cstate.offset
-            if cstate is not None
-            and (
-                cstate.form in (
-                    "all", "without", "fixed", "gmap", "hmap",
-                    "and_it", "or_it",
-                )
-                or (cstate.form == "fixed_masq" and masq_raw)
-            )
-            else (sort_o if sim_info is not None else 0)
+        total, shown = count_root_set(
+            self, matches, full, con, plan,
+            cstate=cstate, masq_raw=masq_raw, sort_o=sort_o,
+            resume=resume, rps=rps, start=start, limit=limit,
+            n_prefix=min(full, limit), need_total=need_total,
+            wants_estimate=flags["wants_estimate"],
         )
-        count_min_chk = (
-            con.count_min
-            if con.count_min is not None
-            else (o_base + 1 if (o_base or rps == 0) else start + 1)
-        )
-        # the implicit countlimit (start + pagesize) follows the
-        # cursor offset on resume (graphd-constraint-cursor.c:52-55)
-        countlimit = con.countlimit
-        if countlimit is not None and getattr(
-            con, "countlimit_defaulted", False
-        ):
-            countlimit += sort_o if sim_info is not None else resume
-        plan.countlimit = countlimit
-        wants_estimate = flags["wants_estimate"]
-        verify_need = max(count_min_chk - o_base, 0)
-        if con.count_eq is not None:
-            verify_need = max(verify_need, con.count_eq + 1 - o_base)
-        if con.count_max is not None:
-            verify_need = max(verify_need, con.count_max + 1 - o_base)
-        if n_prefix < limit:
-            total = n_prefix
-        elif need_total:
-            if countlimit is not None and not wants_estimate:
-                total = min(full, max(countlimit, verify_need))
-            else:
-                total = full
-        elif verify_need > n_prefix:
-            total = min(full, verify_need)
-        else:
-            total = n_prefix
-        total_abs = o_base + total
-        if con.count_eq is not None:
-            ok = total_abs == con.count_eq
-        else:
-            ok = total_abs >= count_min_chk and (
-                con.count_max is None or total_abs <= con.count_max
-            )
-        if not ok:
-            raise GraphdError("EMPTY", "not found")
         # one-shot sort-cursor thaw (sorted cursor subs): when the
         # reference's root scan evaluates the thawed sub under TWO OR
         # MORE parents, the first parent's frozen sort: cursor is
@@ -1212,142 +979,57 @@ class FastReader:
             # the override had every parent accepted)
             if accepts >= 2:
                 ssim.sim.pop(ssim.first_key, None)
-        # cursor emission (mirror of Compiler.run, compiler.py:600-686)
-        if wants_cursor and sim_info is not None:
-            # the exact cursor-nullness rule of the incremental
-            # sorter (graphd_sort_cursor_get:1478-1481 after
-            # graphd_sort_finish drops the con_start prefix): null
-            # unless the final array still holds P - con_start
-            # elements AND a condense truncated (trailing) — so
-            # start > 0 sorted chains always end after one page, and
-            # countlimit never changes cursor nullness
-            _acc, _trail, _P = sim_info
-            if (
-                rows
-                and con.start == 0
-                and start + len(rows) == _P
-                and _trail
-            ):
-                if self.store.count() >= 1000:
-                    # mirror the large-scan suspension stamp of the
-                    # non-sim sort branch below
-                    from graphd_spark.freeze import resource_stamp
-
-                    members = self._and_members_f(con)
-                    if members is not None and len(members) >= 2:
-                        resource_stamp(
-                            self.store,
-                            key="suspend:" + ";".join(
-                                f"{lk}->{src}" for lk, src in members
-                            ),
-                        )
-                plan.cursor = self._sort_cursor_f(
-                    con, plan, rows, start + len(rows) + sort_o, horizon
-                )
-            else:
-                plan.cursor = "null:"
-        elif wants_cursor:
-            consumed = start + len(rows)
-            page_prims = [p for p, _r in matches[start:limit]]
-            if (
-                not rows
-                and con.pagesize == 0
-                and total > consumed
-                and (not con.sort or sort_skipped)
-            ):
-                # the count-min probe runs FORWARD even under a
-                # skipped descending sort, and consumes `total`
-                # elements — the count scan's consumption (probed:
-                # pagesize=0 countlimit=9 freezes [o:3] all:0-3/3/)
-                asc = matches[::-1] if perfect_backward else matches
-                probe_prims = [p for p, _r in asc[: max(total, 1)]]
-                plan.cursor = (
-                    self._iterator_cursor(
-                        con, cstate, probe_prims, matches, resume
-                    )
-                    if probe_prims
-                    else None
-                ) or "null:"
-            elif consumed >= total or not rows:
-                if (
-                    rows
-                    and countlimit is not None
-                    and total >= countlimit
-                    and n_prefix >= limit
-                    and full > limit
-                ):
-                    if con.sort and not sort_skipped:
-                        plan.cursor = self._sort_cursor_f(
-                            con, plan, rows, consumed, horizon
-                        )
-                    else:
-                        plan.cursor = self._iterator_cursor(
-                            con, cstate, page_prims, matches, resume,
-                            backward=perfect_backward,
-                            delivered=(
-                                cstate.offset
-                                if cstate is not None
-                                else resume
-                            ) + con.start + len(rows),
-                        ) or f"position:{consumed}/{total}"
-                else:
-                    plan.cursor = "null:"
-            elif con.sort and not sort_skipped:
-                if self.store.count() >= 1000:
-                    # a sorted scan this large suspends, freezing the
-                    # iterator's state into the resource cache once
-                    # per query shape (mirror compiler.py:665-678;
-                    # graphd-stack.c:139, graphd-iterator-state.c)
-                    from graphd_spark.freeze import resource_stamp
-
-                    members = self._and_members_f(con)
-                    if members is not None and len(members) >= 2:
-                        resource_stamp(
-                            self.store,
-                            key="suspend:" + ";".join(
-                                f"{lk}->{src}" for lk, src in members
-                            ),
-                        )
-                plan.cursor = self._sort_cursor_f(
-                    con, plan, rows, consumed, horizon
-                )
-            else:
-                plan.cursor = self._iterator_cursor(
-                    con, cstate, page_prims, matches, resume,
-                    backward=perfect_backward,
-                    delivered=(
-                        cstate.offset if cstate is not None else resume
-                    ) + con.start + len(rows),
-                ) or f"position:{consumed}/{total}"
-        if (
-            self.asof_mode
-            and plan.cursor
-            and plan.cursor != "null:"
-        ):
-            # asof pages omit the [n:] block (probed); re-sign since
-            # the checksum spans the body
-            from graphd_spark.cursor import strip_cursor_horizon
-
-            plan.cursor = strip_cursor_horizon(
-                plan.cursor, con, self.types.resolve
+        if wants_cursor:
+            emit_root_cursor(
+                self, matches, con, plan,
+                cstate=cstate, rows=rows,
+                page=[p for p, _r in matches[start:limit]],
+                resume=resume, start=start, limit=limit, total=total,
+                horizon=horizon, sort_o=sort_o, trailing=trailing,
+                skipped=skipped, backward=backward,
             )
-        # rendered counts clamp at the ORIGINAL (unshifted) countlimit
-        # (mirror of Compiler.run; probed against the reference)
-        if (
-            con.countlimit is not None
-            and not wants_estimate
-            and total_abs > con.countlimit
-        ):
-            return plan, rows, con.countlimit
-        return plan, rows, total_abs
+        return plan, rows, shown
 
-    def _sort_cursor_f(self, con, plan, rows, consumed, horizon):
-        from graphd_spark.compiler import sort_cursor_string
+    # -- the data-plane steps of cursor.emit_root_cursor ------------------
 
-        return sort_cursor_string(
-            self.store, self.types, self.asof, con, plan, rows,
-            consumed, horizon,
-        )
+    def _root_keyfns(self, con, plan, to_guid: bool = False) -> list:
+        """The root sort's (key fn, descending, precompares) triples
+        that have a key function, then the id tiebreak; ``to_guid``
+        ends the keys at a guid key, which is decisive."""
+        keyfns = []
+        for i0, sk in enumerate(con.sort):
+            comp = None
+            if con.sort_comparators and i0 < len(con.sort_comparators):
+                comp = con.sort_comparators[i0]
+            fn = self._sort_key_fn(
+                sk.pattern,
+                resolve_comparator(comp or con.comparator or "default"),
+                plan,
+            )
+            if fn is None:
+                continue
+            keyfns.append(
+                (fn, sk.descending,
+                 sk.pattern.kind not in ("variable", "contents"))
+            )
+            if to_guid and sk.pattern.kind == "guid":
+                break
+        keyfns.append((_id_key, False, True))
+        return keyfns
+
+    def _more_than(self, matches, limit: int) -> bool:
+        return len(matches) > limit
+
+    def _probe_cursor(self, con, cstate, matches, resume, total,
+                      backward):
+        # the count-min probe consumes `total` elements — the count
+        # scan's consumption (probed: pagesize=0 countlimit=9 freezes
+        # [o:3] all:0-3/3/), forward even under a backward sort
+        asc = matches[::-1] if backward else matches
+        probe = [p for p, _r in asc[: max(total, 1)]]
+        if not probe:
+            return None
+        return self._iterator_cursor(con, cstate, probe, matches, resume)
 
     def _resume_filter(self, cstate, matches):
         """Scope wrapper: a thawed iterator repositions within the
@@ -1365,8 +1047,7 @@ class FastReader:
 
     def _resume_filter_inner(self, cstate, matches):
         """Reposition the candidate set at a thawed iterator state
-        (mirror of Compiler.run's cstate branches,
-        compiler.py:218-282)."""
+        (mirror of Compiler.run's cstate branches)."""
         form = cstate.form
         if form in ("all", "without"):
             if cstate.backward:
@@ -1570,14 +1251,9 @@ class FastReader:
         ``prefix`` enumerates — driver mirror of _prefix_bin_ids
         (libpdb/pdb-prefix.c candidate arrays, hash-bucket membership
         rather than true matches)."""
-        from graphd_spark.wordhash import prefix_mask, word_hash
-
-        mask = prefix_mask(prefix)
-        want = word_hash(prefix) & mask
         ids: set[int] = set()
-        for code, lst in self.store._word_ids.items():
-            if (code & mask) == want:
-                ids.update(lst)
+        for lst in prefix_bins(self.store._word_ids, prefix):
+            ids.update(lst)
         _hb = self._helper_high()
         if _hb is not None:
             # asof/chain: bins only hold ids under the bound
@@ -1589,15 +1265,12 @@ class FastReader:
         mirror of freeze.prefix_stats (one or-member per existing
         hash bin; hmap cost rollup)."""
         from graphd_spark.freeze import PrefixStats, hmap_costs
-        from graphd_spark.wordhash import prefix_mask, word_hash
 
-        mask = prefix_mask(prefix)
-        want = word_hash(prefix) & mask
         total_n = total_nc = total_fc = 0
         low = None
         bins = 0
-        for code, lst in self.store._word_ids.items():
-            if (code & mask) != want or not lst:
+        for lst in prefix_bins(self.store._word_ids, prefix):
+            if not lst:
                 continue
             bins += 1
             if bins > 10000:
@@ -1634,7 +1307,7 @@ class FastReader:
             return None
         return sm[0][0].id
 
-    def _and_members_f(self, con) -> Optional[list]:
+    def _and_members(self, con) -> Optional[list]:
         """The root's AND-iterator members as (linkage letter, source
         id) gmaps — driver mirror of Compiler._and_members
         (compiler.py:888-939)."""
@@ -1926,13 +1599,7 @@ class FastReader:
         low = max(m["lo"] for m in members)
         high = min(m["hi"] for m in members)
         last_id = page_prims[-1].id
-        rps = con.resultpagesize
-        if rps is None:
-            rps = (
-                con.pagesize
-                if con.pagesize is not None
-                else DEFAULT_PAGESIZE
-            )
+        rps = result_pagesize(con)
         if backward:
             subs = "".join(
                 m["set_str"](low, high).replace(
@@ -2998,12 +2665,11 @@ class FastReader:
         )
 
     def _number_sort_drop(self, con: Constraint, matches):
-        """Mirror of the NUMBERS-binset sort-root drop in Compiler.run
-        (compiler.py:349-439): a first-key number-comparator value
-        sort iterates the NUMBERS binset, so nulls and non-number
-        values never surface — unless a fixed producer (guid=), a
-        1-element name bin, a string vrange producer, or a
-        render-free result short-circuits it."""
+        """Mirror of the NUMBERS-binset sort-root drop in Compiler.run:
+        a first-key number-comparator value sort iterates the NUMBERS
+        binset, so nulls and non-number values never surface — unless
+        a fixed producer (guid=), a 1-element name bin, a string
+        vrange producer, or a render-free result short-circuits it."""
         if not con.sort:
             return matches
         first = con.sort[0]
@@ -3059,7 +2725,7 @@ class FastReader:
 
         Unsorted reads whose only producer is a value RANGE surface in
         the reference's value-bin scan order — mirror of the order
-        override in Compiler.run (compiler.py:405-470)."""
+        override in Compiler.run."""
         if con.sort is None:
             self._apply_scan_order(con, matches)
             return
@@ -3392,13 +3058,7 @@ class FastReader:
                 self._n += 1
                 cnt, arr = f"n{self._n}", f"c{self._n}"
                 sp = SubPlan("agg", sub_plan, cnt_col=cnt, arr_col=arr)
-                rps = sub.resultpagesize
-                if rps is None:
-                    rps = (
-                        sub.pagesize
-                        if sub.pagesize is not None
-                        else DEFAULT_PAGESIZE
-                    )
+                rps = result_pagesize(sub)
                 lo = sub.start or 0
                 outer = count_min == 0 or sub.count_eq == 0
                 # sub-var imports (mirror _import_sub_vars): scalar
@@ -3559,13 +3219,7 @@ class FastReader:
             )
             plan.or_sub_plans.append(sp)
             sub_sps.append(sp)
-            rps = sub.resultpagesize
-            if rps is None:
-                rps = (
-                    sub.pagesize
-                    if sub.pagesize is not None
-                    else DEFAULT_PAGESIZE
-                )
+            rps = result_pagesize(sub)
             cm = (
                 sub.count_min
                 if sub.count_min is not None
@@ -3748,15 +3402,7 @@ class FastReader:
                 ))
             ):
                 raise Unsupported("thaw-sort-root-shape")
-            rps = (
-                con.resultpagesize
-                if con.resultpagesize is not None
-                else (
-                    con.pagesize
-                    if con.pagesize is not None
-                    else DEFAULT_PAGESIZE
-                )
-            )
+            rps = result_pagesize(con)
             stop_at = (con.start or 0) + rps
         matches = []
         ncand = 0
@@ -3989,15 +3635,7 @@ class FastReader:
             "backward": sub_sort_backward(sub),
             "resolve": self.types.resolve,
         }
-        rps0 = (
-            sub.resultpagesize
-            if sub.resultpagesize is not None
-            else (
-                sub.pagesize
-                if sub.pagesize is not None
-                else DEFAULT_PAGESIZE
-            )
-        )
+        rps0 = result_pagesize(sub)
         if rps0 == 0 and (
             sub.value_comparator or sub.comparator
         ) is None:
@@ -4074,15 +3712,7 @@ class FastReader:
             keyfns.append(
                 (fn, sk.descending, comp, sk.pattern.kind)
             )
-        P = (sub.start or 0) + (
-            sub.resultpagesize
-            if sub.resultpagesize is not None
-            else (
-                sub.pagesize
-                if sub.pagesize is not None
-                else DEFAULT_PAGESIZE
-            )
-        )
+        P = (sub.start or 0) + result_pagesize(sub)
         if P <= 0:
             raise Unsupported("sub-sort-pagesize0")
         specs = [(d, True) for _f, d, _c, _k in keyfns]
@@ -4291,7 +3921,7 @@ class FastReader:
         in producer order, grid-resumed (sortsim.simulate); later
         parents of a resumed read get the degraded producer-order
         grid filter.  Returns (n, page_kids, trailing)."""
-        from graphd_spark.sortsim import _pre_cmp, simulate
+        from graphd_spark.sortsim import _pre_cmp
 
         ssim = ss.ssim
         if ssim.ended:
@@ -5536,15 +5166,10 @@ class FastReader:
             pfx = body[:-1]
             if not pfx or not pfx.isalnum() or not pfx.isascii():
                 continue
-            from graphd_spark.wordhash import prefix_mask, word_hash
-
-            mask = prefix_mask(pfx.lower())
-            want = word_hash(pfx.lower()) & mask
             ids = sorted(
                 {
                     i
-                    for code, lst in st._word_ids.items()
-                    if (code & mask) == want
+                    for lst in prefix_bins(st._word_ids, pfx.lower())
                     for i in lst
                 }
             )

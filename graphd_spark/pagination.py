@@ -1,37 +1,17 @@
-"""Key-set pagination: scale-safe cursors over a deterministic order.
+"""Key-set continuation predicates for scale-safe deep paging.
 
-The reference resumes paged reads from frozen iterator state
-(ref graphd/graphd-read-set-cursor.c:33-87, freeze/thaw
-graphd/graphd-iterator-and-freeze.c).  The Spark-native equivalent is
-**key-set continuation**: given a total order (sort keys + a unique
-tiebreaker), a cursor is the last row's key tuple, and the next page
-is ``WHERE (k1, k2, ...) > (last...) ORDER BY k LIMIT page`` — a plan
-that stays TakeOrderedAndProject-shaped at any offset, instead of the
-single-partition global window an OFFSET plan degenerates to.
-
-Cursor tokens serialize the key tuple as JSON (prefixed like the
-reference's ``fixed:``/``sort:`` cursor forms).
+Given a total order (sort keys + a unique tiebreaker), the next page
+after a row is ``WHERE (k1, k2, ...) > (last...) ORDER BY k LIMIT
+page`` — a plan that stays TakeOrderedAndProject-shaped at any offset,
+instead of the single-partition global window an OFFSET plan
+degenerates to (``inventory.page_offset``).
 """
 
 from __future__ import annotations
 
-import json
-from typing import Optional, Sequence
+from typing import Sequence
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-CURSOR_PREFIX = "keyset:"
-
-
-def cursor_token(values: Sequence) -> str:
-    return CURSOR_PREFIX + json.dumps(list(values), separators=(",", ":"))
-
-
-def parse_cursor(token: str) -> Optional[list]:
-    if not token.startswith(CURSOR_PREFIX):
-        return None
-    return json.loads(token[len(CURSOR_PREFIX):])
 
 
 def after_predicate(key_cols: Sequence[str], last: Sequence):
@@ -51,30 +31,3 @@ def after_predicate(key_cols: Sequence[str], last: Sequence):
         clause = gt if clause is None else (clause & gt)
         pred = clause if pred is None else (pred | clause)
     return pred
-
-
-def keyset_page(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    page_size: int,
-    cursor: Optional[str] = None,
-) -> tuple[list, Optional[str]]:
-    """Fetch one page; returns (rows, next_cursor).
-
-    The plan is always orderBy(keys).limit(page) over a filtered scan —
-    no global window, no offset skew, no state between pages beyond
-    the token.
-    """
-    if cursor is not None:
-        last = parse_cursor(cursor)
-        if last is not None:
-            df = df.filter(after_predicate(key_cols, last))
-    rows = (
-        df.orderBy(*[F.col(c).asc() for c in key_cols])
-        .limit(page_size)
-        .collect()
-    )
-    if len(rows) < page_size:
-        return rows, None
-    tail = rows[-1]
-    return rows, cursor_token([tail[c] for c in key_cols])

@@ -45,6 +45,68 @@ the component.  The trailing id component is never null.
 from __future__ import annotations
 
 
+DEFAULT_PAGESIZE = 1024  # ref graphd/graphd-sort.c:21-22
+
+_RANGE_OPS = ("<", "<=", ">", ">=")
+
+
+def result_pagesize(con) -> int:
+    """The rendered page size: resultpagesize, defaulting to pagesize
+    (ref graphd.h con_resultpagesize, test slip).  The sorter's P is
+    ``con.start + result_pagesize(con)``."""
+    if con.resultpagesize is not None:
+        return con.resultpagesize
+    return con.pagesize if con.pagesize is not None else DEFAULT_PAGESIZE
+
+
+def range_is_checked(con) -> bool:
+    """Does another indexed constraint produce the candidates, so a
+    value/name range is only a check?  That covers gmap/hmap
+    producers and the linkage members propagated from mandatory
+    pinned subconstraints: an 'iam' sub contributes an isa member, a
+    'my' sub a linksto member (test/unit/david_6.sh; differential
+    seeds 64/109/1427).  Optional and count=0 subs produce nothing."""
+    return bool(
+        con.type_strcons or con.links or con.name_strcons or con.guid
+        or any(
+            (s.linkage or (None, None))[0] in ("iam", "my")
+            and not s.is_optional
+            and s.count_eq != 0
+            for s in con.subs
+        )
+    )
+
+
+def sort_production(con):
+    """How a sorted read's production meets its sort, as
+    ``(skipped, backward, simulated)``.
+
+    ``skipped``: graphd_sort_needed (graphd-sort.c:1722-1758) — a
+    leading timestamp/guid key over a SORTED iterator needs no sort;
+    production is id order, reversed for a descending key (the
+    iterator runs backward, graphd_sort_iterator_direction;
+    ``backward``).  Probed: explicit out-of-order timestamps surface
+    in id order under sort=(timestamp), and sort=(-timestamp) pages
+    freeze backward all:~ / hmap:~ / gmap:~ / fixed:~ iterators.
+    Value/name RANGE producers are bin-ordered, so there the sort is
+    real; a range another index produces for is only checked.
+
+    ``simulated``: a real sort over id-ordered production runs the
+    reference's bounded incremental sorter (``simulate``)."""
+    vranges = any(sc.op in _RANGE_OPS for sc in con.value_strcons)
+    nranges = any(sc.op in _RANGE_OPS for sc in con.name_strcons)
+    checked = (vranges or nranges) and range_is_checked(con)
+    first = con.sort[0]
+    if first.pattern.kind in ("timestamp", "guid") and not nranges and (
+        not vranges or checked
+    ):
+        return True, bool(first.descending), False
+    return False, False, (
+        not ((vranges or nranges) and not checked)
+        and production_is_id_ordered(con)
+    )
+
+
 def production_is_id_ordered(con) -> bool:
     """Does an INDEXED producer drive this sorted read in id order?
 

@@ -34,6 +34,7 @@ disk and analytical readers only ever see committed state.
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import fcntl
 import functools
@@ -816,21 +817,43 @@ class ParquetLogStore(PrimitiveStore):
             return None if row is None else (row["id"], row["guid"], None)
         if not spans:
             return None
-        start, _, f = spans[-1]
+        last, i, nbytes = self._span_rows(spans[-1], ["id", "guid"])
+        return (
+            last.column("id")[i].as_py(), last.column("guid")[i].as_py(),
+            nbytes,
+        )
+
+    def _span_rows(self, span: tuple, columns: list, id=None) -> tuple:
+        """(the rows of the log file ``span`` — an _fs_spans entry —
+        that hold row ``id``, its index in them, the tail's byte
+        offset after its last complete message or None for a part),
+        read through pyarrow: one parquet row group, or one tail
+        record batch.  ``id`` None is the span's last row."""
+        start, _, f = span
         if f.endswith(".parquet"):
             import pyarrow.parquet as pq
 
             with pq.ParquetFile(os.path.join(self.path, f)) as pf:
-                last = pf.read_row_group(
-                    pf.num_row_groups - 1, columns=["id", "guid"]
-                )
-            nbytes = None
-        else:
+                g, i = pf.num_row_groups - 1, -1
+                if id is not None:
+                    g, i = 0, id - start
+                    while i >= pf.metadata.row_group(g).num_rows:
+                        i -= pf.metadata.row_group(g).num_rows
+                        g += 1
+                return pf.read_row_group(g, columns=columns), i, None
+        if id is None:
             last, nbytes = self._tail_last(start)
-        return (
-            last.column("id")[-1].as_py(), last.column("guid")[-1].as_py(),
-            nbytes,
-        )
+            return last, -1, nbytes
+        import pyarrow as pa
+
+        msgs, nbytes = _read_tail(self._tail_path(start))
+        i = id - start
+        for m in msgs:
+            batch = pa.ipc.read_record_batch(m, _arrow_schema())
+            if i < batch.num_rows:
+                return batch, i, nbytes
+            i -= batch.num_rows
+        raise IndexError(f"id {id} is past {f}")
 
     # -- helpers ----------------------------------------------------------
 
@@ -1355,10 +1378,23 @@ class ParquetLogStore(PrimitiveStore):
         return nxt
 
     def ts_of_id(self, id: int) -> int:
-        """Timestamp point read (the bsearch reads ~log2(n) of these)."""
+        """Timestamp point read (the bsearch reads ~log2(n) of these):
+        below the mirror, from the log file that holds ``id`` through
+        pyarrow, or through Spark for a foreign layout."""
         if id >= self._base:
             return super().ts_of_id(id)
-        return next(self._below(F.col("id") == id)).timestamp
+        spans = self._fs_spans()
+        if spans is None:
+            return next(self._below(F.col("id") == id)).timestamp
+        span = spans[bisect.bisect_right([s[0] for s in spans], id) - 1]
+        try:
+            rows, i, _ = self._span_rows(span, ["id", "timestamp"], id)
+        except FileNotFoundError:  # rolled or compacted since the listing
+            return self.ts_of_id(id)
+        if rows.column("id")[i].as_py() != id:
+            raise StoreError(f"parquet log {self.path}: {span[2]} "
+                             f"does not hold id {id} at its place")
+        return rows.column("timestamp")[i].as_py()
 
     def last_primitive(self) -> Optional[Primitive]:
         if self.rows or not self._base:

@@ -82,6 +82,15 @@ def prefix_mask(prefix: str) -> int:
     return ((1 << (n * 5)) - 1) << (5 * (5 - n))
 
 
+def prefix_bins(word_ids: dict, prefix: str):
+    """The id lists of the word-index bins (``code -> ids``) a prefix
+    scan for ``prefix`` enumerates: hash-bucket membership, a superset
+    of the true matches (libpdb/pdb-prefix.c candidate arrays)."""
+    mask = prefix_mask(prefix)
+    want = word_hash(prefix) & mask
+    return (lst for code, lst in word_ids.items() if (code & mask) == want)
+
+
 def chop_words(value: str) -> list[str]:
     """The words pdb_word_chop indexes for one value (may repeat;
     the index dedups per (code, id))."""

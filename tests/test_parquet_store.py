@@ -920,6 +920,42 @@ def test_own_layout_opens_and_hydrates_without_spark(spark, monkeypatch):
     )
 
 
+def test_timestamp_bounds_below_the_mirror_run_no_spark_job(
+    spark, monkeypatch
+):
+    """On an attached, un-hydrated log of parts and a tail, the
+    bsearch of a timestamp-bounded read reads its probes through
+    pyarrow: with _log_df raising once the read's frame is built, the
+    reply is the in-memory session's."""
+    from graphd_spark.store import ParquetLogStore
+
+    mem = GraphSession(spark)
+    writer = _parquet_session(spark)
+    for i in range(12):
+        line = f'write (name="n" value="v{i}")'
+        assert writer.request(line) == mem.request(line)
+        if i == 6:
+            writer.store.compact()
+    assert [n[:5] for n in _log_names(writer.log_path)] == ["_tail", "part-"]
+    reader = GraphSession.attach(spark, writer.log_path)
+    assert reader.store.rows == []
+    reader.store.to_df(spark)  # the read's frame, built once per version
+
+    def no_spark(self):
+        pytest.fail("the log was read through Spark")
+
+    monkeypatch.setattr(ParquetLogStore, "_log_df", no_spark)
+    for bound in (">=", "<"):
+        for ts in ("0003", "0009", "0011"):
+            q = (f'read (name="n" timestamp{bound}'
+                 f'1970-01-01T00:00:00.{ts} result=count)')
+            assert reader.request(q) == mem.request(q), q
+    for ts in range(14):
+        assert reader.store.timestamp_to_id(ts, "ge") == (
+            mem.store.timestamp_to_id(ts, "ge")
+        )
+
+
 def test_attach_refuses_a_part_whose_rows_disagree_with_its_name(spark):
     """A part named for more rows than it holds ends the listed
     horizon past its last row: attach raises StoreError."""
