@@ -13,6 +13,10 @@ Spark-first:
 - ``typesys``     — type-system bootstrap + has_key name binding
 - ``compiler``    — constraint tree -> DataFrame plan (ref
                     graphd/graphd-read*.c, graphd-constraint-iterator.c)
+- ``fastread``    — the same reads from the driver mirror's indexes,
+                    no Spark job (the serving path)
+- ``cursor`` / ``freeze`` — the root page, count and cursor policy and
+                    the iterator freeze both read evaluators share
 - ``comparators`` — default/case/octet/number/datetime orderings as
                     order-preserving binary sort keys
 - ``glob``        — the ``~=`` word-aware glob (regex + numeric rules)

@@ -31,6 +31,7 @@ horizons.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
 from dataclasses import dataclass, field as dfield
 from typing import Optional
 
@@ -63,6 +64,12 @@ from graphd_spark.cursor import (
     needs_total,
     thaw_envelope,
 )
+from graphd_spark import freeze
+from graphd_spark.freeze import (
+    GMAP_COLS,
+    _FIXED_MATERIALIZE_MAX,
+    _ISA_SMALL_SET_MAX,
+)
 from graphd_spark.model import guid_serial, su_encode, ts_from_string
 from graphd_spark.sortsim import (
     range_is_checked,
@@ -80,12 +87,6 @@ PRIM_ELEM_FIELDS = [
     "guid", "typeguid", "left", "right", "scope", "prev", "name",
     "datatype", "value", "live", "archival", "timestamp", "generation",
 ]
-
-#: candidate sets up to this size pre-evaluate into a fixed iterator
-#: (the reference bounds this by budget, GRAPHD_AND_PREEVALUATE_COST_MAX,
-#: graphd-iterator-and-optimize.c:740; colors2 materializes 11)
-_FIXED_MATERIALIZE_MAX = 100
-
 
 # py4j round-trip caches: cached F.col/F.lit/constant-expression
 # handles — see jexpr.py
@@ -513,11 +514,6 @@ class SetPlan:
         new.__dict__.update(self.__dict__)
         return new
 
-
-#: isa small-set window for hmap-driven subs: GRAPHD_ISA_INLINE_BUDGET
-#: (15000) / (PDB_COST_PRIMITIVE 12 + hmap next cost 4) — see
-#: Compiler._isa_materialize_cap
-_ISA_SMALL_SET_MAX = 937
 
 #: sorted-page simulation cap: the incremental-sorter mirror collects
 #: one (id, key...) tuple per candidate, so an unselective sorted read
@@ -990,7 +986,7 @@ class Compiler:
     def _more_than(self, df, limit: int) -> bool:
         return df.limit(limit + 1).count() > limit
 
-    def _probe_cursor(self, con, cstate, df, resume, total, backward):
+    def _probe_cursor(self, con, cstate, df, total, delivered, backward):
         # only the LAST probed element positions the cursor ([o:]
         # carries the consumed count separately), so fetch one row at
         # offset total-1 instead of collecting `total` rows — total
@@ -1002,595 +998,208 @@ class Compiler:
         )
         if not probe:
             return None
-        return self._iterator_cursor(
-            con, cstate, probe, df, resume, delivered=resume + total,
+        return freeze._iterator_cursor(
+            self, con, cstate, probe, df, delivered
         )
 
-    def _iterator_cursor(self, con, cstate, rows, df, prior=0,
-                         backward=False,
-                         delivered=None) -> Optional[str]:
-        """Reference-format frozen cursor for an unsorted root page
-        (ref graphd_read_set_cursor_get_value + constraint_cursor_
-        from_iterator).  Returns None when the plan's iterator shape
-        isn't one we freeze (caller falls back to a position token).
+    # -- the index probes of freeze._iterator_cursor ----------------------
 
-        ``prior`` is the offset already consumed by earlier pages
-        ([o:] is cumulative, graphd-read-set-cursor.c:39-43)."""
-        from graphd_spark.cursor import CursorState, freeze_cursor
+    def _freeze_scope(self, con, cstate):
+        return nullcontext()  # _raw_df already clamps at the chain
 
-        if cstate is not None:
-            prior = cstate.offset
-        if delivered is None:
-            # [o:] counts consumed elements: prior pages + this page's
-            # start= skip + the delivered rows (probed: start=1
-            # pagesize=1 freezes [o:2], [o:4], ...)
-            delivered = prior + len(rows)
-        prior = delivered - len(rows)
-        last_id = guid_serial(rows[-1]["guid"])
+    def _frozen_count(self, con, cstate) -> int:
         count = self.store.count()
         if self.asof is not None:
             # asof pages clamp every frozen bound at the id horizon
-            # and omit [n:] (probed; mirror fastread._iterator_cursor)
             count = min(count, asof_horizon(self.store, self.asof) + 1)
         if self._chain_h is not None:
             # a resumed chain re-freezes [n:] and every bound at ITS
-            # frozen horizon, not the grown store count (round 8)
+            # frozen horizon, not the grown store count
             count = min(count, self._chain_h)
-        if cstate is not None and cstate.form in (
-            "all", "without", "fixed", "gmap"
-        ):
-            if cstate.backward:
-                # backward iterators freeze pos = PRODUCER elements
-                # consumed, rejections included — the descending
-                # distance of the last delivered element from the top
-                # of the structure (probed: all:~ over value!= pages
-                # /1/ /2/ /4/ when a non-matching id sits between;
-                # fixed:~ prefix bins count hash false positives)
-                if cstate.form == "fixed":
-                    try:
-                        cstate.pos = len(
-                            cstate.fixed_ids
-                        ) - cstate.fixed_ids.index(last_id)
-                    except ValueError:
-                        return None
-                elif cstate.form == "gmap":
-                    # pos = distance of last_id from the TOP of the
-                    # index = #elements with id >= last_id (ids are
-                    # unique).  Two scalar aggregates in one job — a
-                    # VIP-scale endpoint's index holds millions of
-                    # elements, so collecting it to rank one id is a
-                    # driver OOM hazard at scale
-                    row = self._gmap_index_df(
-                        cstate.lk, cstate.src
-                    ).agg(
-                        F.sum(
-                            F.when(_c("id") >= last_id, 1)
-                            .otherwise(0)
-                        ).alias("tail"),
-                        F.max(
-                            F.when(_c("id") == last_id, 1)
-                            .otherwise(0)
-                        ).alias("hit"),
-                    ).head()
-                    if row is None or not row["hit"]:
-                        return None
-                    cstate.pos = int(row["tail"])
-                else:  # all / without: dense id span
-                    cstate.pos = (
-                        cstate.high
-                        if cstate.high is not None
-                        else count
-                    ) - last_id
-            elif cstate.form == "fixed":
-                try:
-                    cstate.pos = cstate.fixed_ids.index(last_id) + 1
-                except ValueError:
-                    return None
-            elif cstate.form == "gmap":
-                _lo, _hi, pos = self._gmap_stats(
-                    cstate.lk, cstate.src, last_id
-                )
-                if pos is None:
-                    return None
-                cstate.pos = pos
-            else:
-                cstate.pos = last_id + 1
-            n = cstate.horizon if cstate.horizon is not None else count
-            return freeze_cursor(
-                con, cstate, delivered, n, self.types.resolve
-            )
-        gc = con.guid[0] if len(con.guid) == 1 else None
-        if (
-            gc is not None
-            and gc.op == "="
-            and gc.guids
-            and all(g is not None for g in gc.guids)
-            and not con.subs
-            and not con.or_chains
-        ):
-            # guid= sets materialize as a fixed iterator in list order
-            # (ref graphd-iterator-fixed.c; test cursor5)
-            ids = [guid_serial(g) for g in gc.guids]
-            try:
-                pos = (
-                    len(ids) - ids.index(last_id)
-                    if backward
-                    else ids.index(last_id) + 1
-                )
-            except ValueError:
-                return None
-            st = CursorState(
-                form="fixed", fixed_ids=ids, pos=pos, backward=backward
-            )
-            return freeze_cursor(
-                con, st, delivered, count, self.types.resolve
-            )
-        if not con.subs and not con.or_chains:
-            gm = self._gmap_source(con)
-            if gm is not None:
-                # single-linkage roots collapse to the linkage's gmap
-                # index iterator (ref pdb-iterator-gmap.c:339,
-                # graphd's and-iterator drops its redundant hull;
-                # tests will5, brendan4)
-                lk, src = gm
-                low, high, pos = self._gmap_stats(lk, src, last_id)
-                if low is not None:
-                    # [n:] echoes con_high, which narrows to the
-                    # index span only once the producer is exhausted
-                    # (graphd-read-set-cursor.c:51; brendan4 n:10 on
-                    # a drained one-element gmap vs the store count
-                    # on partial pages — differential probes)
-                    if backward:
-                        # consumed from the top, rejections included
-                        total = self._gmap_stats(lk, src, 1 << 62)[2]
-                        pos = total - pos + 1
-                    st = CursorState(
-                        form="gmap", low=low, high=high, pos=pos,
-                        lk=lk, src=src, backward=backward,
-                    )
-                    n = (
-                        count
-                        if backward
-                        else (high if last_id == high - 1 else count)
-                    )
-                    return freeze_cursor(
-                        con, st, delivered, n, self.types.resolve
-                    )
-                return None
-            hm = self._hmap_cursor_source(con)
-            if hm is not None:
-                # a single name=/value= equality IS the hmap bin —
-                # frozen by hash key, position = elements consumed
-                # (pdb-iterator-hmap.c:146-186; differential seed 9)
-                from graphd_spark.freeze import hmap_set_str
+        return count
 
-                tname, key, lo, hi, pos_df = hm
-                row = pos_df.agg(
-                    F.sum(
-                        F.when(_c("id") <= last_id, 1).otherwise(0)
-                    ).alias("pos"),
-                    F.max("id").alias("mx"),
-                ).head()
-                if row is not None and row["mx"] is not None:
-                    if backward:
-                        # consumed from the top of the bin,
-                        # rejections included
-                        n_bin = pos_df.count()
-                        pos = n_bin - int(row["pos"] or 0) + 1
-                        n_echo = count
-                    else:
-                        pos = int(row["pos"] or 0)
-                        n_echo = hi if last_id == int(row["mx"]) else count
-                    hset = hmap_set_str(tname, key, lo, hi)
-                    if backward:
-                        hset = hset.replace("hmap:", "hmap:~", 1)
-                    body = "[o:{}][n:{}]{}/{}/".format(
-                        delivered, n_echo, hset, pos,
-                    )
-                    from graphd_spark.cursor import sign_cursor
+    def _row_id(self, row) -> int:
+        return guid_serial(row["guid"])
 
-                    return sign_cursor(con, body, self.types.resolve)
-            if any(
-                sc.op in ("=", "~=")
-                and any(v is not None for v in sc.values)
-                for sc in (*con.value_strcons, *con.name_strcons)
-            ):
-                # positive value/name matches drive an hmap/prefix
-                # iterator; small candidate sets materialize as a
-                # fixed iterator (ref graphd-iterator-fixed.c;
-                # test/unit/nick6.sh: value~="a*" -> fixed:6:...)
-                prefix = self._prefix_pattern(con)
-                if prefix is not None and not (
-                    con.guid or con.links or con.type_strcons
-                    or con.next or con.prev or con.timestamps
-                ):
-                    # a bare word-prefix root materializes the PREFIX
-                    # BIN contents — hash-bucket candidates, false
-                    # positives included (pdb-prefix.c enumeration;
-                    # '7' and 'z' share 5-bit slot 28, so "007" rides
-                    # in "z*"'s array; differential cursor seed 29)
-                    ids = self._prefix_bin_ids(prefix)
-                else:
-                    ids = [
-                        r["id"]
-                        for r in df.select("id").orderBy("id")
-                        .limit(_FIXED_MATERIALIZE_MAX + 1).collect()
-                    ]
-                if len(ids) > _FIXED_MATERIALIZE_MAX or (
-                    last_id not in ids
-                ):
-                    return None
-                st = CursorState(
-                    form="fixed", fixed_ids=ids,
-                    pos=(
-                        len(ids) - ids.index(last_id)
-                        if backward
-                        else ids.index(last_id) + 1
-                    ),
-                    backward=backward,
-                )
-                return freeze_cursor(
-                    con, st, delivered, count, self.types.resolve
-                )
-            # multi-index roots (two+ direct linkage equalities)
-            # intersect like sub-driven ands: pre-evaluated fixed sets
-            # or the and:/and:- freeze (probed: left=G right=G chains)
-            and_cursor = self._and_cursor(
-                con, cstate, rows, prior, count, backward=backward
-            )
-            if and_cursor is not None:
-                return and_cursor
-            # unindexed roots scan everything (pdb all-iterator)
-            st = CursorState(
-                form="all", low=0, high=count,
-                pos=(count - last_id) if backward else last_id + 1,
-                backward=backward,
-            )
-            return freeze_cursor(
-                con, st, delivered, count, self.types.resolve
-            )
-        if backward:
-            # backward multi-index roots: pre-evaluated small sets
-            # freeze fixed:~; bigger intersections freeze the backward
-            # and:- form with gmap:~ members (probed; isa:~ expansion
-            # freezes stay unmodeled -> position fallback)
-            members = self._and_members_ext(con)
-            if members is not None and len(members) >= 2:
-                pre = self._preevaluate_small_set(
-                    con, members, rows, prior, count, backward=True
-                )
-                if pre is not None:
-                    return pre
-                return self._and_cursor(
-                    con, cstate, rows, prior, count, backward=True
-                )
-            sub_gmap = self._sub_gmap_cursor(
-                con, rows, prior, count, last_id, backward=True
-            )
-            if sub_gmap is not None:
-                return sub_gmap
-            cap = self._isa_materialize_cap(con)
-            if cap == 0:
-                return None
-            ids = self._isa_expansion_ids(con) or [
-                r["id"]
-                for r in df.select("id").orderBy("id")
-                .limit(cap + 1).collect()
-            ]
-            if len(ids) > cap or last_id not in ids:
-                return None
-            # backward masquerade: /POS/~ tail; the inner fixed-isa:~
-            # marker follows the CACHED resource's direction
-            masq = (
-                self._isa_masquerade(con, ids)
-                if len(ids) > 5
-                else None
-            )
-            if masq is not None:
-                from graphd_spark.freeze import masq_resource
+    def _first_ids(self, df, n: int) -> list[int]:
+        return [
+            r["id"] for r in df.select("id").orderBy("id").limit(n).collect()
+        ]
 
-                st = CursorState(
-                    form="fixed_masq", masq=masq,
-                    pos=len(ids) - ids.index(last_id), backward=True,
-                )
-                if len(ids) >= 10:  # GRAPHD_ITERATOR_FIXED_CACHE_MIN
-                    stamp, res_bwd = masq_resource(
-                        self.store, masq, True,
-                        reuse=cstate.cache_stamp if cstate else None,
-                    )
-                    st.cache_stamp = stamp
-                else:
-                    st.fixed_ids = ids
-                    res_bwd = True  # inline state: the running direction
-                if res_bwd:
-                    st.masq = masq.replace("fixed-isa:", "fixed-isa:~", 1)
-                return freeze_cursor(
-                    con, st, delivered, count, self.types.resolve
-                )
-            st = CursorState(
-                form="fixed", fixed_ids=ids,
-                pos=len(ids) - ids.index(last_id), backward=True,
-            )
-            return freeze_cursor(
-                con, st, delivered, count, self.types.resolve
-            )
-        and_cursor = self._and_cursor(con, cstate, rows, prior, count)
-        if and_cursor is not None:
-            return and_cursor
-        sub_gmap = self._sub_gmap_cursor(
-            con, rows, prior, count, last_id
-        )
-        if sub_gmap is not None:
-            return sub_gmap
-        # linkage-driven roots: the optimizer materializes small
-        # candidate sets into a fixed iterator (graphd-iterator-fixed.c;
-        # tests cursor3/cursor4); larger sets keep their and/gmap shape,
-        # which we don't freeze
-        cap = self._isa_materialize_cap(con)
-        lto_ids = None
-        if getattr(self.store, "mirror_current", None) and (
-            self.store.mirror_current()
-        ):
-            from graphd_spark.fastread import FastReader
-
-            fr0 = FastReader(
-                self.store, self.types, asof=self.asof
-            )
-            if self._chain_h is not None:
-                # the thawed-chain horizon clamps the mirror's index
-                # expansions exactly like asof (fastread.run)
-                fr0.horizon = (
-                    self._chain_h - 1
-                    if fr0.horizon is None
-                    else min(fr0.horizon, self._chain_h - 1)
-                )
-            lto_ids = fr0._linksto_expansion_ids_f(con)
-        ids = (
-            self._isa_expansion_ids(con)
-            or lto_ids
-            or [
-                r["id"]
-                for r in df.select("id").orderBy("id")
-                .limit(cap + 1).collect()
-            ]
-            if cap
-            else []
-        )
-        if not cap or len(ids) > cap or last_id not in ids:
-            # too big to materialize: the expansion keeps its
-            # isa / or-linksto iterator shape (graphd-iterator-isa.c,
-            # graphd-iterator-linksto.c; test/unit/isa.sh)
-            return self._isa_prefix_cursor(
-                con, cstate, rows, prior, count
-            ) or self._or_linksto_cursor(con, cstate, rows, prior, count)
-        masq = self._isa_masquerade(con, ids) if len(ids) > 5 else None
-        if masq is None and len(ids) > 7:
-            # iam-expansion fixed sets keep linksto provenance past
-            # 7 elements (cursor fuzz seed 2354)
-            masq = self._linksto_masquerade(con, ids)
-        if masq is not None:
-            # isa-produced fixed sets remember their provenance
-            # instead of the raw ids (isa_set_fixed_masquerade,
-            # graphd-iterator-isa.c:723-769; test/unit/colors3.sh)
-            from graphd_spark.freeze import masq_resource
-
-            st = CursorState(
-                form="fixed_masq", masq=masq,
-                pos=ids.index(last_id) + 1,
-            )
-            if len(ids) >= 10:  # GRAPHD_ITERATOR_FIXED_CACHE_MIN
-                stamp, res_bwd = masq_resource(
-                    self.store, masq, False,
-                    reuse=cstate.cache_stamp if cstate else None,
-                )
-                st.cache_stamp = stamp
-                if res_bwd:
-                    st.masq = masq.replace(
-                        "fixed-isa:", "fixed-isa:~", 1
-                    )
-            else:
-                st.fixed_ids = ids
-            return freeze_cursor(
-                con, st, delivered, count, self.types.resolve
-            )
-        st = CursorState(
-            form="fixed", fixed_ids=ids, pos=ids.index(last_id) + 1
-        )
-        return freeze_cursor(
-                con, st, delivered, count, self.types.resolve
-            )
-
-    def _linksto_masquerade(self, con, ids) -> Optional[str]:
-        """fixed-linksto provenance for an IAM-expansion root whose
-        pre-evaluated fixed set has MORE THAN 7 elements
-        (graphd_iterator_linksto_set_fixed_masquerade,
-        graphd-iterator-linksto.c:3573-3609 — "don\'t bother if it\'s
-        small", n <= 7 keeps the raw fixed; probed round 7, cursor
-        fuzz seed 2354): ``fixed-linksto:+LOW:L->(SUBSET)`` with the
-        high bound omitted at HIGH_ANY and \'+\' the forward
-        direction marker (linksto_freeze_set)."""
-        if len(con.subs) != 1 or con.or_chains:
+    def _gmap_tail(self, lk: str, src: int, last_id: int) -> Optional[int]:
+        # two scalar aggregates in one job — a VIP-scale endpoint's
+        # index holds millions of elements, so collecting it to rank
+        # one id is a driver OOM hazard at scale
+        row = self._gmap_index_df(lk, src).agg(
+            F.sum(F.when(_c("id") >= last_id, 1).otherwise(0)).alias("tail"),
+            F.max(F.when(_c("id") == last_id, 1).otherwise(0)).alias("hit"),
+        ).head()
+        if row is None or not row["hit"]:
             return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        kind, lk = sub.linkage or (None, None)
-        if kind != "iam" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        if (
-            sub.subs or sub.or_chains or sub.type_strcons
-            or any(sub.links.values()) or sub.guid or sub.next
-            or sub.prev or sub.timestamps
-        ):
-            return None
-        hm = self._hmap_source(sub)
-        if hm is None:
-            return None
-        from graphd_spark.freeze import hmap_set_str
+        return int(row["tail"])
 
-        tname, key, slo, shi, _n, _flt = hm
-        # LOW = sub bin low + 1 (graphd-iterator-linksto.c:3343;
-        # cursor fuzz seed 3343 — mirror of fastread)
-        return "fixed-linksto:+{}:{}->({})".format(
-            slo + 1, lk[0], hmap_set_str(tname, key, slo, shi),
+    def _hmap_bin(self, tname: str, key: str) -> Optional[tuple]:
+        # the value hash buckets by pdb_hmap_value_normalize
+        # (normalize_value): full numbers index under their canonical
+        # scientific form ("12", "12.0" and "+12" share "12e1";
+        # differential seeds 21/22) and embedded number FRAGMENTS
+        # string-normalize ("2006-01-02" freezes and matches as
+        # "2006-1-2"; cursor-fuzz seed 81 against the reference)
+        from graphd_spark.comparators import normalize_value
+
+        if tname == "value":
+            flt = _c("value_norm") == su_encode(value_norm_key(key))
+            key = normalize_value(key)
+        else:
+            flt = F.lower(_c("name")) == key.lower()
+        row = self._raw_df().filter(flt).agg(
+            F.min("id").alias("lo"),
+            F.max("id").alias("hi"),
+            F.count("*").alias("n"),
+        ).head()
+        if row is None or row["lo"] is None:
+            return None
+        return (
+            tname, key, int(row["lo"]), int(row["hi"]) + 1,
+            int(row["n"]), flt,
         )
 
-    def _and_members(self, con) -> Optional[list]:
-        """The root's AND-iterator members as (linkage letter, source
-        id) gmaps — direct linkage equalities plus subconstraints whose
-        child resolves to a single primitive (GUID-consequence
-        propagation, graphd-constraint-iterator.c:321-404,1815-1841).
-        None when any predicate falls outside this shape."""
-        if con.or_chains or con.guid or con.next or con.prev:
-            return None
-        if any(
-            sc.op in ("=", "~=") and any(v is not None for v in sc.values)
-            for sc in (*con.value_strcons, *con.name_strcons)
-        ):
-            return None  # would add an hmap/prefix member we don't freeze
-        members = []
-        for sc in con.type_strcons:
-            if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                return None
-            g = self.types.resolve(sc.values[0])
-            if g is None:
-                return None
-            members.append(("t", guid_serial(g)))
-        # gmap member order follows the linkage enum (pdb.h:77-105)
-        for lk in ("typeguid", "right", "left", "scope"):
-            for gc in con.links.get(lk, []):
-                if (
-                    gc.op != "=" or len(gc.guids) != 1
-                    or gc.guids[0] is None
-                ):
-                    return None
-                members.append((lk[0], guid_serial(gc.guids[0])))
-            for sub in con.subs:
-                if sub.linkage != ("iam", lk):
-                    continue
-                try:
-                    _plan, sdf = self._compile(sub, exists_only=True)
-                except GraphdError:
-                    return None
-                sids = [
-                    r["id"] for r in
-                    sdf.select("id").orderBy("id").limit(2).collect()
-                ]
-                if len(sids) != 1:
-                    return None
-                members.append((lk[0], sids[0]))
-        for sub in con.subs:
-            kind, lk = sub.linkage or (None, None)
-            if kind == "iam" and lk in (
-                "typeguid", "right", "left", "scope"
-            ):
-                continue  # handled above (or rejected there)
-            return None  # 'my'-side subs make isa/linksto members
-        return members
+    def _bin_rank(self, flt, last_id: int) -> int:
+        row = self._raw_df().filter(flt).agg(
+            F.sum(F.when(_c("id") <= last_id, 1).otherwise(0)).alias("pos")
+        ).head()
+        return int(row["pos"] or 0)
 
-    def _prefix_pattern(self, con) -> Optional[str]:
-        """The pure word-prefix P when the constraint's only value
-        predicate is ``value~="P*"`` (the shape the reference routes
-        to the prefix iterator, graphd-iterator-prefix.c)."""
-        if len(con.value_strcons) != 1 or con.name_strcons:
-            return None
-        sc = con.value_strcons[0]
-        if sc.op != "~=" or len(sc.values) != 1 or not sc.values[0]:
-            return None
-        pat = sc.values[0]
-        body = pat[1:] if pat.startswith("^") else pat
-        if not body.endswith("*"):
-            return None
-        p = body[:-1]
-        if not p or not p.isalnum() or not p.isascii():
-            return None
-        return p.lower()
+    def _live_sources(self, lk: str, hm) -> list[int]:
+        # the caller admits bins of at most 50 members; limit(51) keeps
+        # this driver-side collect bounded even if that gate moves
+        from graphd_spark.model import guid_compose
 
-    def _sub_gmap_cursor(self, con, rows, prior, count, last_id,
-                         backward=False):
-        """A root whose only predicate is one ``L->(sub)`` where the
-        sub resolves to a SINGLE primitive collapses to that linkage's
-        gmap iterator — the reference's linksto optimization replaces a
-        one-id subiterator with a plain gmap (graphd-iterator-linksto.c;
-        differential cursor seed 36 froze gmap:27-29:l->26 where we
-        materialized fixed:2)."""
-        delivered = prior + len(rows)
-        if (
-            con.value_strcons or con.name_strcons or con.guid
-            or con.next or con.prev or con.timestamps
-            or con.dateline is not None or con.type_strcons
-            or any(con.links.values()) or con.or_chains
-            or len(con.subs) != 1
-        ):
-            return None
-        sub = con.subs[0]
-        if sub.linkage is None or sub.linkage[0] != "iam":
-            return None
-        lk = sub.linkage[1]
-        if lk not in ("typeguid", "left", "right", "scope"):
-            return None
-        if (
-            sub.subs or sub.or_chains or sub.count_eq is not None
-            or sub.count_min not in (None, 1) or sub.count_max is not None
-        ):
-            return None
-        hm = self._hmap_source(sub)
-        if hm is None:
-            return None
-        _tname, _key, _lo, _hi, n, flt = hm
-        if n > 50:
-            return None
-        # the linksto's or drops sources with EMPTY gmap bins (null
-        # iterators); only a single surviving gmap collapses
-        from graphd_spark.model import guid_compose, guid_serial as _gs
-
-        # ``n <= 50`` above already bounds the value-matched set; the
-        # limit(51) is defense in depth so this driver-side collect stays
-        # bounded even if the hmap gate moves (51 > 50 ids would only mean
-        # hmap stats undercounted — treat as "not a single survivor").
         cand = [
             r["id"]
-            for r in self._raw_df()
-            .filter(flt).select("id").limit(51).collect()
+            for r in self._raw_df().filter(hm[5]).select("id")
+            .limit(51).collect()
         ]
         if len(cand) > 50:
-            return None
+            return []
         guids = {guid_compose(self.store.db_id, i): i for i in cand}
-        col = self._GMAP_COLS[lk[0]]
-        live = [
-            guids[r[col]]
-            for r in self._raw_df()
-            .filter(_c(col).isin(*guids))
-            .select(col).distinct().collect()
+        return [
+            guids[r[lk]]
+            for r in self._raw_df().filter(_c(lk).isin(*guids))
+            .select(lk).distinct().collect()
         ]
-        if len(live) != 1:
-            return None
-        from graphd_spark.cursor import CursorState, freeze_cursor
 
-        src = live[0]
-        low, high, pos = self._gmap_stats(lk[0], src, last_id)
-        if low is None:
+    def _linksto_span(self, lk: str, hm) -> Optional[tuple]:
+        raw = self._raw_df()
+        srcs = raw.filter(hm[5]).select(_c("guid").alias("__src"))
+        span = (
+            raw.join(srcs, raw[lk] == _c("__src"))
+            .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
+            .head()
+        )
+        if span is None or span["lo"] is None:
             return None
-        if backward:
-            total = self._gmap_stats(lk[0], src, 1 << 62)[2]
-            pos = total - pos + 1
-        st = CursorState(
-            form="gmap", low=low, high=high, pos=pos, lk=lk[0], src=src,
-            backward=backward,
+        return int(span["lo"]), int(span["hi"]) + 1, hm[5]
+
+    def _endpoint_span(self, pairs) -> Optional[tuple]:
+        cond = None
+        for col, g in pairs:
+            cond = _c(col) == g if cond is None else cond & (_c(col) == g)
+        span = self._raw_df().filter(cond).agg(
+            F.min("id").alias("lo"), F.max("id").alias("hi")
+        ).head()
+        if span is None or span["lo"] is None:
+            return None
+        return int(span["lo"]), int(span["hi"]) + 1
+
+    def _sub_single_id(self, sub) -> Optional[int]:
+        try:
+            _plan, sdf = self._compile(sub, exists_only=True)
+        except GraphdError:
+            return None
+        sids = [
+            r["id"]
+            for r in sdf.select("id").orderBy("id").limit(2).collect()
+        ]
+        return sids[0] if len(sids) == 1 else None
+
+    def _sub_targets(self, sub, lk: str, n: int) -> Optional[list]:
+        try:
+            _plan, sdf = self._compile(sub, exists_only=True)
+        except GraphdError:
+            return None
+        return [
+            r[lk]
+            for r in sdf.select("id", lk).orderBy("id").limit(n).collect()
+        ]
+
+    def _mirror_reader(self):
+        """A FastReader over the driver mirror at this read's horizon
+        (callers check that the mirror covers the log)."""
+        from graphd_spark.fastread import FastReader
+
+        fr = FastReader(self.store, self.types, asof=self.asof)
+        if self._chain_h is not None:
+            # the thawed-chain horizon clamps the mirror's indexes
+            # exactly like asof (fastread.run)
+            fr.horizon = (
+                self._chain_h - 1
+                if fr.horizon is None
+                else min(fr.horizon, self._chain_h - 1)
+            )
+        return fr
+
+    def _linksto_expansion_ids(self, con) -> Optional[list]:
+        if not self.store.mirror_current():
+            return None
+        return self._mirror_reader()._linksto_expansion_ids(con)
+
+    def _or_union_ids(self, con) -> Optional[list]:
+        if not self.store.mirror_current():
+            return None
+        return self._mirror_reader()._or_union_ids(con)
+
+    def _prefix_stats(self, prefix: str):
+        """The prefix iterator's statistics from the word index (the
+        tokenized value column, libpdb/pdb-word.c)."""
+        from pyspark.sql.types import ArrayType, LongType
+
+        from graphd_spark.model import su_decode
+        from graphd_spark.wordhash import (
+            prefix_mask,
+            value_word_codes,
+            word_hash,
         )
-        n_echo = (
-            count
-            if backward
-            else (high if last_id == high - 1 else count)
+
+        mask = prefix_mask(prefix)
+        want = word_hash(prefix) & mask
+
+        @F.pandas_udf(ArrayType(LongType()))
+        def _codes(vals: pd.Series) -> pd.Series:
+            return vals.map(
+                lambda v: []
+                if v is None
+                else [
+                    c
+                    for c in value_word_codes(su_decode(v))
+                    if (c & mask) == want
+                ]
+            )
+
+        words = (
+            self.store.to_df(self.spark)
+            .select("id", F.explode(_codes(F.col("value"))).alias("w"))
+            .distinct()
         )
-        return freeze_cursor(
-            con, st, delivered, n_echo, self.types.resolve
+        rows = (
+            words.groupBy("w")
+            .agg(F.count("*").alias("n"), F.min("id").alias("lo"))
+            .limit(10001)
+            .collect()
+        )
+        return freeze._prefix_rollup(
+            prefix, [(int(r["n"]), r["lo"]) for r in rows],
+            self.store.count(),
         )
 
     def _prefix_bin_ids(self, prefix: str) -> list[int]:
@@ -1622,304 +1231,6 @@ class Compiler:
             .collect()
         ]
 
-    def _hmap_cursor_source(self, con) -> Optional[tuple]:
-        """The root's own hmap bin when its only indexed predicate is
-        one name=/value= equality (the shape pdb compiles to a bare
-        hmap iterator; differential seed 9)."""
-        hm = self._hmap_source(con)
-        if hm is None:
-            return None
-        tname, key, lo, hi, _n, flt = hm
-        pos_df = self._raw_df().filter(flt).select("id")
-        return tname, key, lo, hi, pos_df
-
-    def _hmap_source(self, sub) -> Optional[tuple]:
-        """(hmap type name, key, low, high, n_sources) when the
-        subconstraint's only indexed predicate is one name=/value=
-        string equality — the shape that compiles to a single hmap
-        bin (libpdb/pdb-iterator-hmap.c)."""
-        if (
-            sub.subs or sub.or_chains or sub.guid or sub.links
-            or sub.type_strcons or sub.next or sub.prev or sub.timestamps
-        ):
-            return None
-        cands = []
-        for tname, scs in (
-            ("name", sub.name_strcons), ("value", sub.value_strcons)
-        ):
-            for sc in scs:
-                if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                    return None
-                cands.append((tname, sc.values[0]))
-        if len(cands) != 1:
-            return None
-        tname, key = cands[0]
-        key, flt = self._hmap_bin_filter(tname, key)
-        raw = self._raw_df()
-        row = (
-            raw
-            .filter(flt)
-            .agg(
-                F.min("id").alias("lo"),
-                F.max("id").alias("hi"),
-                F.count("*").alias("n"),
-            )
-            .head()
-        )
-        if row is None or row["lo"] is None:
-            return None
-        return (
-            tname, key, int(row["lo"]), int(row["hi"]) + 1,
-            int(row["n"]), flt,
-        )
-
-    def _hmap_bin_filter(self, tname: str, key: str):
-        """(stored key, membership column) of an hmap bin.  The value
-        hash buckets by pdb_hmap_value_normalize (normalize_value):
-        full numbers index under their canonical scientific form
-        ("12", "12.0" and "+12" share "12e1"; differential seeds
-        21/22) and embedded number FRAGMENTS string-normalize
-        ("2006-01-02" freezes and matches as "2006-1-2"; cursor-fuzz
-        seed 81 against the reference binary)."""
-        from graphd_spark.comparators import (
-            normalize_value,
-            value_norm_key,
-        )
-
-        if tname == "value":
-            return (
-                normalize_value(key),
-                _c("value_norm") == su_encode(value_norm_key(key)),
-            )
-        return key, F.lower(_c("name")) == key.lower()
-
-    def _linksto_member(self, sub, lk) -> Optional[dict]:
-        """An or-of-gmaps linksto member: links whose ``lk`` column
-        points at any of the subconstraint's (multiple) matches
-        (graphd_iterator_linksto_or + or masquerade,
-        graphd-iterator-linksto.c:3610-3750)."""
-        from graphd_spark.freeze import hmap_set_str
-
-        hm = self._hmap_source(sub)
-        if hm is None:
-            return None
-        tname, key, hlo, hhi, n_src, src_flt = hm
-        if n_src < 2:
-            return None
-        raw = self._raw_df()
-        srcs = raw.filter(src_flt).select(_c("guid").alias("__src"))
-        span = (
-            raw.join(srcs, raw[lk] == _c("__src"))
-            .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
-            .head()
-        )
-        if span is None or span["lo"] is None:
-            return None
-        hset = hmap_set_str(tname, key, hlo, hhi)
-        letter = lk[0]
-        return {
-            "kind": "linksto",
-            "lk": lk,
-            "hmap_n": n_src,
-            "src_flt": src_flt,
-            "lo": int(span["lo"]),
-            "hi": int(span["hi"]) + 1,
-            "set_str": lambda lo, hi: (
-                f"(or:(or-linksto:+{lo}-{hi}:{letter}->({hset})))"
-            ),
-            "standalone": lambda lo, hi: (
-                f"or:(or-linksto:+{lo}-{hi}:{letter}->({hset}))"
-            ),
-        }
-
-    def _and_members_ext(self, con) -> Optional[list]:
-        """AND members in the constraint-iterator's build order
-        (graphd-constraint-iterator.c:1723-2030): linkage gmaps (with
-        single-source subconstraints propagated in, ordered by the
-        linkage enum), the value-prefix iterator, then multi-source
-        linksto subconstraints.  None when any predicate falls outside
-        the shapes this engine freezes."""
-        if con.or_chains or con.guid or con.next or con.prev:
-            return None
-        prefix = self._prefix_pattern(con)
-        if prefix is None and any(
-            sc.op in ("=", "~=") and any(v is not None for v in sc.values)
-            for sc in (*con.value_strcons, *con.name_strcons)
-        ):
-            return None  # an hmap member form we don't freeze
-        members = []
-        handled = set()
-
-        def _gmap_member(letter, src):
-            return {
-                "kind": "gmap",
-                "src": src,
-                "letter": letter,
-                "set_str": lambda lo, hi: (
-                    f"(gmap:{lo}-{hi}:{letter}->{src})"
-                ),
-            }
-
-        for sc in con.type_strcons:
-            if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                return None
-            g = self.types.resolve(sc.values[0])
-            if g is None:
-                return None
-            members.append(_gmap_member("t", guid_serial(g)))
-        linksto = []
-        for lk in ("typeguid", "right", "left", "scope"):
-            for gc in con.links.get(lk, []):
-                if (
-                    gc.op != "=" or len(gc.guids) != 1
-                    or gc.guids[0] is None
-                ):
-                    return None
-                members.append(
-                    _gmap_member(lk[0], guid_serial(gc.guids[0]))
-                )
-            for i, sub in enumerate(con.subs):
-                if sub.linkage != ("iam", lk):
-                    continue
-                handled.add(i)
-                hm = self._hmap_source(sub)
-                if hm is not None and hm[4] >= 2:
-                    m = self._linksto_member(sub, lk)
-                    if m is None:
-                        return None
-                    linksto.append(m)
-                    continue
-                try:
-                    _plan, sdf = self._compile(sub, exists_only=True)
-                except GraphdError:
-                    return None
-                sids = [
-                    r["id"] for r in
-                    sdf.select("id").orderBy("id").limit(2).collect()
-                ]
-                if len(sids) != 1:
-                    return None
-                members.append(_gmap_member(lk[0], sids[0]))
-        if any(i not in handled for i in range(len(con.subs))):
-            return None  # 'my'-side subs make isa members
-        # gmap spans narrow each member; the and intersects them
-        for m in members:
-            lo, hi, _ = self._gmap_stats(m["letter"], m["src"], 0)
-            if lo is None:
-                return None
-            m["lo"], m["hi"] = lo, hi
-        if prefix is not None:
-            from graphd_spark.freeze import prefix_stats
-
-            ps = prefix_stats(self.spark, self.store, prefix)
-            if ps is None:
-                return None
-            members.append(
-                {
-                    "kind": "prefix",
-                    "lo": ps.low,
-                    "hi": ps.high,
-                    "stats": ps,
-                    "prefix": prefix,
-                    "set_str": (
-                        lambda lo, hi, p=prefix: f"(prefix:{lo}-{hi}:{p})"
-                    ),
-                }
-            )
-        members.extend(linksto)
-        return members
-
-    def _and_cursor(self, con, cstate, rows, prior, count,
-                    backward=False) -> Optional[str]:
-        """Frozen and-iterator cursor for multi-index roots:
-        ``and:#LOW-HIGH:N:[psz:..][ov:0](SUB)..(SUB)[pro:0]/POS
-        [pp:..]/@STAMP`` (graphd-iterator-and-freeze.c:619-805;
-        tests slip, isa).  The long subiterator state is replaced by
-        a cached-resource ticket (graphd-iterator-state.c:75-127)."""
-        from graphd_spark.cursor import sign_cursor
-
-        delivered = prior + len(rows)
-
-        members = self._and_members_ext(con)
-        if members is None or len(members) < 2:
-            return None
-        pre = self._preevaluate_small_set(
-            con, members, rows, prior, count, backward=backward
-        )
-        if pre is not None:
-            return pre
-        low = max(m["lo"] for m in members)
-        high = min(m["hi"] for m in members)
-        last_id = guid_serial(rows[-1]["guid"])
-        rps = result_pagesize(con)
-        if backward:
-            subs = "".join(
-                m["set_str"](low, high).replace(
-                    "(gmap:", "(gmap:~", 1
-                ).replace("(prefix:", "(prefix:~", 1)
-                for m in members
-            )
-            head = f"and:-{low}-{high}"
-        else:
-            subs = "".join(m["set_str"](low, high) for m in members)
-            head = f"and:#{low}-{high}"
-        # [psz:] always prints on fresh builds; on RESUME it persists
-        # only when the producer is a gmap (probed: resumed gmap-led
-        # and chains keep [psz:2]; the isa golden's prefix-led and
-        # drops it — gia_context_pagesize_valid)
-        resumed = cstate is not None and cstate.form == "and_it"
-        psz = (
-            f"[psz:{rps}]"
-            if not resumed or members[0]["kind"] == "gmap"
-            else ""
-        )
-        set_part = (
-            f"{head}:{len(members)}:{psz}[ov:0]"
-            f"{subs}[pro:0]"
-        )
-        # producer position: a gmap producer freezes one once the
-        # statistics have run — [pp:N] appears at position >= 5, and
-        # crossing the 6th pull mints one extra resource stamp before
-        # the freeze (probed: ps2 chains stamp ab1,ab2,ab4,ab5...; ps5
-        # chains ab1,ab3,ab4...; pp:4 never prints, pp:5 does)
-        ppos = None
-        prior_ppos = 0
-        if members[0]["kind"] == "gmap":
-            ppos = self._and_producer_pos(
-                members[0], last_id, backward
-            )
-            if cstate is not None and cstate.form == "and_it" and (
-                cstate.pos >= 0
-            ):
-                prior_ppos = self._and_producer_pos(
-                    members[0], cstate.pos, backward
-                )
-        if ppos is not None and prior_ppos < 6 <= ppos:
-            # the statistics resource stores once per shape: a sorted
-            # suspension already stored it under the same content key
-            # (slip: suspend mints ab1, the and freeze prints ab2 with
-            # no crossing mint between)
-            skey = "suspend:" + ";".join(
-                f"{m['letter']}->{m['src']}"
-                for m in members
-                if m["kind"] == "gmap"
-            )
-            if skey not in getattr(
-                self.store, "cursor_resources", {}
-            ):
-                self._resource_stamp()  # the statistics resource
-        if ppos is not None and ppos >= 5:
-            pos_part = f"/{last_id}[pp:{ppos}]/"
-        else:
-            pos_part = f"/{last_id}/"
-        # every and freeze mints a FRESH stamp (probed: resumed pages
-        # never echo the incoming one)
-        stamp = self._resource_stamp()
-        body = "[o:{}][n:{}]{}{}@{}".format(
-            delivered, count, set_part, pos_part, stamp
-        )
-        return sign_cursor(con, body, self.types.resolve)
-
     def _and_producer_pos(self, member, boundary_id, backward):
         """Elements the gmap producer has pulled through boundary_id
         (index elements <= boundary forward, >= boundary backward)."""
@@ -1937,99 +1248,6 @@ class Compiler:
             member["letter"], member["src"], boundary_id
         )
         return ppos
-
-    def _preevaluate_small_set(
-        self, con, members, rows, prior, count, backward=False
-    ) -> Optional[str]:
-        """Mirror of and_become_small_set (graphd-iterator-and-
-        optimize.c:747-1030): when the cheapest member's full
-        production plus checking its candidates against every other
-        member fits inside GRAPHD_AND_PREEVALUATE_COST_MAX, the and
-        pre-evaluates into a FIXED iterator over the intersection of
-        the member candidate sets (check-only predicates like
-        timestamps don't narrow it) — differential cursor seed 476.
-        Returns the frozen fixed cursor, or None to keep the and
-        form."""
-        delivered = prior + len(rows)
-        from graphd_spark.cursor import CursorState, freeze_cursor
-        from graphd_spark.freeze import (
-            COST_FUNCTION_CALL,
-            COST_GMAP_ARRAY,
-            COST_GMAP_ELEMENT,
-            COST_PRIMITIVE,
-            bsearch_cost,
-            hmap_costs,
-        )
-
-        COST_MAX = 1024 * 10  # GRAPHD_AND_PREEVALUATE_COST_MAX
-        stats = []  # (n | None, next_cost | None, check_cost)
-        for m in members:
-            if m["kind"] == "gmap":
-                n = self._gmap_stats(m["letter"], m["src"], 1 << 62)[2]
-                if n is None:
-                    return None
-                nc = COST_FUNCTION_CALL + COST_GMAP_ELEMENT
-                bs = COST_FUNCTION_CALL + bsearch_cost(
-                    n, 32 * 1024 // 5, COST_GMAP_ARRAY, COST_GMAP_ELEMENT
-                )
-                cc = min(bs, COST_PRIMITIVE + COST_FUNCTION_CALL)
-                stats.append((n, nc, cc))
-            elif m["kind"] == "prefix":
-                ps = m.get("stats")
-                if ps is None:
-                    return None
-                stats.append((ps.n, ps.next_cost, ps.check_cost))
-            elif m["kind"] == "linksto":
-                # linksto statistics aren't valid this early (the
-                # reference computes them under budget later), so it
-                # can't be the producer; its check cost is one
-                # primitive read + the sub's hmap check
-                # (graphd-iterator-linksto.c:2072-2075)
-                hn = m.get("hmap_n")
-                if hn is None:
-                    return None
-                hc, _n, _f = hmap_costs(hn)
-                stats.append((None, None, COST_PRIMITIVE + hc))
-            else:
-                return None
-        best = None
-        for i, (n, nc, _cc) in enumerate(stats):
-            if n is None or nc is None:
-                continue
-            total = (1 + n) * nc
-            if best is None or total < best[0]:
-                best = (total, n, i)
-        if best is None:
-            return None
-        best_total, best_n, bi = best
-        if best_total > COST_MAX // 2:
-            return None
-        for i, (_n, _nc, cc) in enumerate(stats):
-            if i == bi:
-                continue
-            if cc is None:
-                return None
-            best_total += best_n * cc
-        if best_total >= COST_MAX:
-            return None
-        ids = self._member_intersection(members, bi)
-        if ids is None:
-            return None
-        last_id = guid_serial(rows[-1]["guid"])
-        if len(ids) > _FIXED_MATERIALIZE_MAX or last_id not in ids:
-            return None
-        st = CursorState(
-            form="fixed", fixed_ids=ids,
-            pos=(
-                len(ids) - ids.index(last_id)
-                if backward
-                else ids.index(last_id) + 1
-            ),
-            backward=backward,
-        )
-        return freeze_cursor(
-            con, st, delivered, count, self.types.resolve
-        )
 
     #: producer-set defense bound for the and-freeze materialization:
     #: the cost gate above admits producers of at most
@@ -2074,11 +1292,12 @@ class Compiler:
             )
             return {r["id"] for r in df.select("id").collect()}
         if m["kind"] == "prefix":
-            # prefix bins live in the driver mirror — no Spark job
+            # the word-bin scan: one pandas-UDF Spark job, bounded at
+            # _FIXED_MATERIALIZE_MAX + 1 ids
             return set(self._prefix_bin_ids(m["prefix"]))
         if m["kind"] == "linksto":
             raw = self._raw_df()
-            srcs = raw.filter(m["src_flt"]).select(
+            srcs = raw.filter(m["index"]).select(
                 _c("guid").alias("__src")
             )
             df = raw.join(srcs, raw[m["lk"]] == _c("__src"))
@@ -2090,209 +1309,6 @@ class Compiler:
             return {r["id"] for r in df.select("id").collect()}
         return None
 
-    def _isa_prefix_cursor(
-        self, con, cstate, rows, prior, count
-    ) -> Optional[str]:
-        """Frozen isa-iterator cursor: distinct ids pointed to through
-        one linkage by a word-prefix candidate set too large to
-        materialize (graphd-iterator-isa.c isa_freeze; test/unit/
-        isa.sh).  The statistics in the state are computed from the
-        engine's own data via the reference cost model (see freeze.py);
-        a resumed cursor keeps its thawed statistics
-        (isa_statistics_thaw)."""
-        delivered = prior + len(rows)
-        from graphd_spark.cursor import sign_cursor
-        from graphd_spark.freeze import isa_stats, prefix_stats
-
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        kind, lk = sub.linkage or (None, None)
-        if kind != "my" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        if (
-            sub.subs or sub.or_chains or sub.guid or sub.links
-            or sub.type_strcons or sub.next or sub.prev or sub.timestamps
-        ):
-            return None
-        prefix = self._prefix_pattern(sub)
-        if prefix is None:
-            return None
-        ps = prefix_stats(self.spark, self.store, prefix)
-        if ps is None:
-            return None
-        # the 5-sample duplication estimate: pull candidates in
-        # production (id) order, map through the linkage, count trials
-        # until 5 distinct targets (GRAPHD_ISA_N_SAMPLES)
-        try:
-            _plan, sdf = self._compile(sub, exists_only=True)
-        except GraphdError:
-            return None
-        sample_rows = (
-            sdf.select("id", lk).orderBy("id").limit(64).collect()
-        )
-        seen: list[int] = []
-        trial_n = 0
-        for r in sample_rows:
-            if len(seen) >= 5:
-                break
-            trial_n += 1
-            tg = r[lk]
-            if tg is None:
-                continue
-            t = guid_serial(tg)
-            if t not in seen:
-                seen.append(t)
-        if len(seen) < 5:
-            return None  # would have become a fixed set
-        ist = isa_stats(
-            store_n=count,
-            sub_n=ps.n,
-            sub_next_cost=ps.next_cost,
-            sub_check_cost=ps.check_cost,
-            sub_low=ps.low,
-            sub_high=ps.high,
-            trial_n=trial_n,
-            sample_n=len(seen),
-        )
-        stats = (
-            cstate.echo
-            if cstate is not None and cstate.echo
-            else ist.stats_str()
-        )
-        o = delivered
-        last_id = guid_serial(rows[-1]["guid"])
-        # the dup tracker's production clone reads 4 subiterator
-        # elements per result produced; short pages still fill the
-        # 5-element inline cache (graphd-iterator-cache.c
-        # GRAPHD_ITERATOR_CACHE_INLINE_N; observed against the
-        # reference across page sizes)
-        sd_pos = 4 * max(5, o)
-        stamp = self._resource_stamp(
-            reuse=cstate.cache_stamp if cstate else None
-        )
-        pset = ps.set_str()
-        pst = ps.st_str()
-        body = (
-            "[o:{o}][n:{n}]isa:{ilo}-{ihi}:{L}<-({pset})"
-            "/{last}:~-[sp:{o}]/0:(-/{pst})-:{stats}:-:"
-            "[sd:({pset}/{sd}/{pst})@{stamp}]"
-        ).format(
-            o=o,
-            n=cstate.horizon if cstate and cstate.horizon else count,
-            ilo=ist.low,
-            ihi=ist.high,
-            L=lk[0],
-            pset=pset,
-            last=last_id,
-            pst=pst,
-            stats=stats,
-            sd=sd_pos,
-            stamp=stamp,
-        )
-        return sign_cursor(con, body, self.types.resolve)
-
-    def _or_linksto_cursor(
-        self, con, cstate, rows, prior, count
-    ) -> Optional[str]:
-        """Frozen or-of-gmaps cursor for a links-to expansion whose
-        source set is plural: the or wears the linksto masquerade
-        (graphd_iterator_linksto_set_or_masquerade,
-        graphd-iterator-linksto.c:3610-3655; test/unit/isa.sh q4/q5)."""
-        delivered = prior + len(rows)
-        from graphd_spark.cursor import sign_cursor
-
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        kind, lk = sub.linkage or (None, None)
-        if kind != "iam" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        m = self._linksto_member(sub, lk)
-        if m is None:
-            return None
-        last_id = guid_serial(rows[-1]["guid"])
-        stamp = self._resource_stamp(
-            reuse=cstate.cache_stamp if cstate else None
-        )
-        body = "[o:{}][n:{}]{}/{}/@{}".format(
-            delivered,
-            cstate.horizon if cstate and cstate.horizon else count,
-            m["standalone"](m["lo"], m["hi"]),
-            last_id,
-            stamp,
-        )
-        return sign_cursor(con, body, self.types.resolve)
-
-    def _resource_stamp(self, key: str = None, reuse: str = None) -> str:
-        """Session stamp for a cached iterator resource — shared with
-        the serving fast path (freeze.resource_stamp) so both paths
-        mint one stamp sequence from the store's session counters."""
-        from graphd_spark.freeze import resource_stamp
-
-        return resource_stamp(self.store, key=key, reuse=reuse)
-
-    def _isa_sub_hmap(self, con):
-        """The (sub, hmap source) pair when the root is a single-'my'-
-        sub expansion whose sub compiles to one hmap bin."""
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        if sub.linkage is None or sub.subs or sub.or_chains:
-            return None
-        kind, lk = sub.linkage
-        if kind != "my" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        hm = self._hmap_source(sub)
-        if hm is None:
-            return None
-        return sub, hm
-
-    def _isa_materialize_cap(self, con) -> int:
-        """Materialize window for a linkage-expansion root.  The
-        reference's isa small-set drains the SUB iterator under
-        GRAPHD_ISA_INLINE_BUDGET_TOTAL = 15000
-        (graphd-iterator-isa.c:43-53, isa_become_small_set:767-905),
-        each candidate costing PDB_COST_PRIMITIVE (12) plus the sub's
-        next cost — for an hmap-driven sub (one value=/name= equality)
-        that's FUNCTION_CALL + HMAP_ELEMENT = 4, so exactly
-        15000 // 16 = 937 SUB candidates fit (probed: 937 links ->
-        fixed, 938 -> and:#; the gate counts sub candidates, not
-        distinct targets — 1000 links over 50 targets stay and:#).
-        Prefix-driven subs wrap in an and(all, prefix) whose per-next
-        budget varies with the store (probed thresholds 522 vs >530),
-        so they keep the conservative default window, as do all other
-        shapes.  Returns 0 when the shape must NOT materialize."""
-        sh = self._isa_sub_hmap(con)
-        if sh is None:
-            return _FIXED_MATERIALIZE_MAX
-        n_sub = sh[1][4]
-        return _ISA_SMALL_SET_MAX if n_sub <= _ISA_SMALL_SET_MAX else 0
-
     def _isa_expansion_ids(self, con) -> Optional[list]:
         """RAW materialized target set of an hmap-sub expansion: every
         bin member's linkage target, deduped and sorted — INCLUDING
@@ -2303,7 +1319,7 @@ class Compiler:
         then-rejected candidates too (probed: a "100" write sharing
         the "1e2" bin shifts the bounds and offsets every position
         by one)."""
-        sh = self._isa_sub_hmap(con)
+        sh = freeze._isa_sub_hmap(self, con)
         if sh is None:
             return None
         sub, hm = sh
@@ -2324,187 +1340,6 @@ class Compiler:
         ]
         return sorted({guid_serial(g) for g in tg if g is not None})
 
-    def _isa_masquerade(self, con, ids, backward: bool = False
-                        ) -> Optional[str]:
-        """The fixed-isa provenance string when the root's candidates
-        were produced by expanding one subconstraint's linkage — the
-        shape ``fixed-isa:LOW-HIGH:L<-(SUB)[hint:0]`` where SUB is the
-        child's own index iterator (vip when typeguid + one endpoint
-        are pinned, gmap for a single linkage, hmap for one
-        value=/name= equality)
-        (graphd-iterator-isa.c:656-769; test/unit/colors3.sh).
-        ``backward`` adds the descending marker (``fixed-isa:~``)."""
-        from graphd_spark.model import guid_compose
-
-        t = "~" if backward else ""
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        if sub.linkage is None:
-            return None
-        kind, lk = sub.linkage
-        if kind != "my" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        if not (sub.subs or sub.or_chains):
-            # a sub whose only predicate is one value=/name= equality
-            # keeps its hmap bin as the isa's subiterator (probed:
-            # fixed-isa:LO-HI:L<-(hmap:...) at >= 6 distinct targets;
-            # 5 or fewer freeze the raw unmasqueraded fixed set)
-            hm = self._hmap_source(sub)
-            if hm is not None:
-                from graphd_spark.freeze import hmap_set_str
-
-                tname, key, slo, shi, _n, _flt = hm
-                return "fixed-isa:{}{}-{}:{}<-({})[hint:0]".format(
-                    t, ids[0], ids[-1] + 1, lk[0],
-                    hmap_set_str(tname, key, slo, shi),
-                )
-        if sub.or_chains or sub.value_strcons or sub.name_strcons or (
-            sub.guid or sub.next or sub.prev or sub.timestamps
-        ):
-            return None
-        # the child's index shape: typeguid plus at most one pinned
-        # endpoint (direct linkage= or a grandchild resolving to a
-        # single primitive)
-        typeguid = None
-        for sc in sub.type_strcons:
-            if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                return None
-            g = self.types.resolve(sc.values[0])
-            if g is None or typeguid is not None:
-                return None
-            typeguid = g
-        endpoint = None  # (linkage letter, source id)
-        for elk in ("left", "right", "scope"):
-            for gc in sub.links.get(elk, []):
-                if (
-                    gc.op != "="
-                    or len(gc.guids) != 1
-                    or gc.guids[0] is None
-                    or endpoint is not None
-                ):
-                    return None
-                endpoint = (elk, guid_serial(gc.guids[0]))
-        for gc in sub.links.get("typeguid", []):
-            if (
-                gc.op != "=" or len(gc.guids) != 1
-                or gc.guids[0] is None or typeguid is not None
-            ):
-                return None
-            typeguid = gc.guids[0]
-        for gsub in sub.subs:
-            # a grandchild pinning one of the child's endpoints
-            # (GUID-consequence propagation,
-            # graphd-constraint-iterator.c:321-404)
-            if gsub.linkage is None:
-                return None
-            gkind, glk = gsub.linkage
-            # 'iam': child.glk == grandchild.guid — a pinned endpoint
-            # once the grandchild resolves to a single primitive
-            if gkind != "iam" or endpoint is not None or glk not in (
-                "left", "right", "scope"
-            ):
-                return None
-            try:
-                _plan, gdf = self._compile(gsub, exists_only=True)
-            except GraphdError:
-                return None
-            gids = [
-                r["id"] for r in
-                gdf.select("id").orderBy("id").limit(2).collect()
-            ]
-            if len(gids) != 1:
-                return None
-            endpoint = (glk, gids[0])
-        raw = self._raw_df()
-        if typeguid is not None and endpoint is not None:
-            elk, src = endpoint
-            span = raw.filter(
-                (_c("typeguid") == typeguid)
-                & (
-                    _c(elk)
-                    == guid_compose(self.store.db_id, src)
-                )
-            ).agg(
-                F.min("id").alias("lo"), F.max("id").alias("hi")
-            ).head()
-            if span is None or span["lo"] is None:
-                return None
-            sub_freeze = "vip:{}-{}:{}+{}->{}".format(
-                span["lo"], span["hi"] + 1, elk[0], typeguid, src
-            )
-        elif typeguid is not None or endpoint is not None:
-            elk, src = (
-                ("typeguid", guid_serial(typeguid))
-                if typeguid is not None
-                else endpoint
-            )
-            span = raw.filter(
-                _c(elk) == guid_compose(self.store.db_id, src)
-            ).agg(
-                F.min("id").alias("lo"), F.max("id").alias("hi")
-            ).head()
-            if span is None or span["lo"] is None:
-                return None
-            sub_freeze = "gmap:{}-{}:{}->{}".format(
-                span["lo"], span["hi"] + 1, elk[0], src
-            )
-        else:
-            return None
-        # the fixed iterator narrowed its bounds to the actual id span
-        # (fixed_optimize, graphd-iterator-fixed.c:1016-1019); hint 0
-        # differs from HINT_DEFAULT so it prints
-        return "fixed-isa:{}{}-{}:{}<-({})[hint:0]".format(
-            t, ids[0], ids[-1] + 1, lk[0], sub_freeze
-        )
-
-    #: gmap linkage letter -> primitive column (pdb_linkage_to_string)
-    _GMAP_COLS = {"t": "typeguid", "l": "left", "r": "right", "s": "scope"}
-
-    def _gmap_source(self, con) -> Optional[tuple]:
-        """(linkage letter, source id) when the root constraint's only
-        indexed predicate is a single linkage equality — the shape the
-        reference compiles to a bare gmap iterator.  Any second indexed
-        predicate (value/name/guid/timestamp, another linkage) makes an
-        and-iterator, whose freeze we don't model."""
-        if (
-            con.value_strcons or con.name_strcons or con.guid
-            or con.next or con.prev or con.timestamps
-            or con.dateline is not None
-        ):
-            return None
-        cands = []
-        for lk in ("typeguid", "right", "left", "scope"):
-            for gc in con.links.get(lk, []):
-                if (
-                    gc.op == "="
-                    and len(gc.guids) == 1
-                    and gc.guids[0] is not None
-                ):
-                    cands.append((lk, guid_serial(gc.guids[0])))
-                else:
-                    return None
-        for sc in con.type_strcons:
-            if sc.op == "=" and len(sc.values) == 1 and sc.values[0]:
-                g = self.types.resolve(sc.values[0])
-                if g is None:
-                    return None
-                cands.append(("typeguid", guid_serial(g)))
-            else:
-                return None
-        if len(cands) != 1:
-            return None
-        lk, src = cands[0]
-        return lk[0], src
-
     def _gmap_index_df(self, lk: str, src: int):
         """The linkage index set: ids whose raw linkage column equals
         the source guid (index order == id order); asof clamps at the
@@ -2513,7 +1348,7 @@ class Compiler:
 
         g = guid_compose(self.store.db_id, src)
         df = self._raw_df().filter(
-            _c(self._GMAP_COLS[lk]) == g
+            _c(GMAP_COLS[lk]) == g
         )
         return df
 
@@ -3097,7 +1932,7 @@ class Compiler:
                     # (endpoint, typeguid) index past the consumed
                     # boundary id (probed: other parents' mandatory
                     # subs then yield nothing and drop them)
-                    lk_col = self._GMAP_COLS[cstate.lk]
+                    lk_col = GMAP_COLS[cstate.lk]
                     child_df = child_df.filter(
                         (_c(lk_col) == guid_compose(
                             self.store.db_id, cstate.src))
@@ -3115,7 +1950,7 @@ class Compiler:
                 elif cstate.form == "gmap":
                     # the thawed per-parent iterator: only that
                     # parent's children, past the consumed prefix
-                    lk_col = self._GMAP_COLS[cstate.lk]
+                    lk_col = GMAP_COLS[cstate.lk]
                     child_df = child_df.filter(
                         _c(lk_col)
                         == guid_compose(self.store.db_id, cstate.src)
@@ -3159,18 +1994,9 @@ class Compiler:
             and self.store.mirror_current()
         )
         if mode is not None and mode != "sort" and mirror:
-            from graphd_spark.fastread import FastReader
-
-            fr = FastReader(self.store, self.types, asof=self.asof)
-            if self._chain_h is not None:
-                # the thawed-chain horizon clamps the per-parent
-                # producer indexes exactly like asof (fastread.run)
-                fr.horizon = (
-                    self._chain_h - 1
-                    if fr.horizon is None
-                    else min(fr.horizon, self._chain_h - 1)
-                )
-            ctx.update(fr.sub_cursor_index(sub, mode, cstate))
+            ctx.update(
+                self._mirror_reader().sub_cursor_index(sub, mode, cstate)
+            )
             sub_plan.cursor_ctx = ctx
             return child_df
         # legacy fallback: materialize the accepted candidate set

@@ -1095,10 +1095,10 @@ def _suspend_stamp(ev, con: Constraint) -> None:
     once per query shape (graphd-stack.c:139, graphd-iterator-
     state.c; the slip golden's stamp sequence)."""
     if ev.store.count() >= 1000:
-        members = ev._and_members(con)
-        if members is not None and len(members) >= 2:
-            from graphd_spark.freeze import resource_stamp
+        from graphd_spark.freeze import _and_members, resource_stamp
 
+        members = _and_members(ev, con)
+        if members is not None and len(members) >= 2:
             resource_stamp(
                 ev.store,
                 key="suspend:" + ";".join(
@@ -1122,14 +1122,14 @@ def emit_root_cursor(ev, src, con: Constraint, plan, *, cstate, rows,
     (ref graphd-read-set-cursor.c).
 
     ``rows`` is the rendered page, ``page`` the same elements in the
-    form ``ev._iterator_cursor`` freezes.  The evaluator's steps:
-    ``_iterator_cursor(con, cstate, page, src, prior, backward=,
-    delivered=)``; ``_probe_cursor(con, cstate, src, resume, total,
-    backward)`` for the count-min probe of an empty pagesize=0 page;
-    ``_more_than(src, limit)``; ``_and_members(con)``.  ``trailing``
-    is the incremental sorter's truncation flag, None when it did not
-    run; ``sort_o`` its cumulative [o:].  Runs after count_root_set,
-    which set ``plan.countlimit``."""
+    form freeze._iterator_cursor freezes (through the evaluator's
+    index probes, see freeze.py).  The evaluator's other steps:
+    ``_probe_cursor(con, cstate, src, total, delivered, backward)`` for
+    the count-min probe of an empty pagesize=0 page and
+    ``_more_than(src, limit)``.  ``trailing`` is the incremental
+    sorter's truncation flag, None when it did not run; ``sort_o`` its
+    cumulative [o:].  Runs after count_root_set, which set
+    ``plan.countlimit``."""
     if trailing is not None:
         # the exact cursor-nullness rule of the incremental sorter
         # (graphd_sort_cursor_get:1478-1481 after graphd_sort_finish
@@ -1147,10 +1147,14 @@ def emit_root_cursor(ev, src, con: Constraint, plan, *, cstate, rows,
         else:
             plan.cursor = "null:"
     else:
+        from graphd_spark.freeze import _iterator_cursor
+
         consumed = start + len(rows)
-        delivered = (
-            cstate.offset if cstate is not None else resume
-        ) + con.start + len(rows)
+        # [o:] is cumulative: the thawed offset (or the resumed one)
+        # plus this page's start= skip and delivered rows (probed:
+        # start=1 pagesize=1 freezes [o:2], [o:4], ...)
+        o_base = cstate.offset if cstate is not None else resume
+        delivered = o_base + con.start + len(rows)
         if (
             not rows
             and con.pagesize == 0
@@ -1163,7 +1167,7 @@ def emit_root_cursor(ev, src, con: Constraint, plan, *, cstate, rows,
             # probe runs FORWARD even under a skipped descending sort
             # (probed: sort=(-timestamp) pagesize=0 freezes all:0-N/1/)
             plan.cursor = ev._probe_cursor(
-                con, cstate, src, resume, total, backward
+                con, cstate, src, total, o_base + total, backward
             ) or "null:"
         elif consumed >= total or not rows:
             # countlimit caps the count, not the scan: a full page
@@ -1183,9 +1187,8 @@ def emit_root_cursor(ev, src, con: Constraint, plan, *, cstate, rows,
                         ev, con, plan, rows, consumed, horizon
                     )
                 else:
-                    plan.cursor = ev._iterator_cursor(
-                        con, cstate, page, src, resume,
-                        backward=backward, delivered=delivered,
+                    plan.cursor = _iterator_cursor(
+                        ev, con, cstate, page, src, delivered, backward
                     ) or f"position:{consumed}/{total}"
             else:
                 plan.cursor = "null:"
@@ -1195,9 +1198,8 @@ def emit_root_cursor(ev, src, con: Constraint, plan, *, cstate, rows,
                 ev, con, plan, rows, consumed, horizon
             )
         else:
-            plan.cursor = ev._iterator_cursor(
-                con, cstate, page, src, resume,
-                backward=backward, delivered=delivered,
+            plan.cursor = _iterator_cursor(
+                ev, con, cstate, page, src, delivered, backward
             ) or f"position:{consumed}/{total}"
     if ev.asof is not None and plan.cursor != "null:":
         # asof pages omit the [n:] block (probed)

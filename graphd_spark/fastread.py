@@ -1,85 +1,45 @@
-"""Driver-side serving fast path for simple reads.
+"""Driver-side serving fast path for template reads.
 
 The reference is a serving engine: simple template reads are answered
 from in-process indexes at thousands of queries/second/core
-(doc/a-brief-tour-of-graphd.md:196-199).  Spark's execution model
-amortizes scheduling over batch work, so routing every point read
-through a Spark action pays ~100ms of fixed cost per request.  This
-module serves the reference's bread-and-butter query shape — literal
-template reads with linkage subconstraints over a driver-resident
-working set — directly from the store's point indexes, with NO Spark
-job, mirroring the DataFrame compiler's semantics expression by
-expression (each mirrored site cites the compiler line it mirrors).
+(doc/a-brief-tour-of-graphd.md:196-199).  Spark schedules per action,
+so a point read through a Spark action pays ~100ms of fixed cost.
+:class:`FastReader` answers the reads whose working set the driver
+mirror holds straight from the store's point indexes, with NO Spark
+job, and produces the exact (plan, rows, total) triple
+``Compiler.run`` would, feeding the same ``Assembler``.  The root
+page, count and cursor policy (cursor.py) and the root iterator freeze
+(freeze.py) are shared with the compiler; this module is the driver
+data plane under them.
 
-Safety model: :class:`FastReader` first WALKS the constraint tree and
-raises :class:`Unsupported` for any feature outside its mirror
-(round 7 closed the round-6 residual list — nested intrinsic
-or-chains fold as recursive disjunctions, cursor-valued assignments
-inline as aliases, sorted and pagesize-0 cursor subs inside
-or-branches run the same sorter/thaw model as root-level subs; round
-8 closed sub-bearing BARE nested chains: ``{ {A | B} | C }`` with
-branch subs splices into the enclosing chain at parse
-(gql/parser.py parse_con), probed byte-identical against the
-reference — replies, winner slots, $vars, and cursor checksums —
-so the only refused or-family left is a branch conjoining a nested
-chain whose INNER branches carry subs or assignments — mixed
-branches themselves (intrinsics AND chain AND subs with slots and
-$vars) serve as the plain conjunction they are, pinned by
-``test_mixed_branch_conjunction``; the residual needs the recursive
-inner-slot machinery; and ``sub_cursor_mode``'s family
-widened to the probed iterator/check split — NON-iterator clauses
-(counted sub-subs, newest/oldest, the prev=null -> oldest=0
-conversion, value!=, prefix-less globs) ride as acceptance checks
-over the bare gmap/vip/fixed freezes, while BIN predicates
-(equalities, word prefixes, ranges at bin-span granularity,
-or-chains including branch-sub existence) pre-evaluate — pinned by
-``test_sub_cursor_clause_families``'s 78-page byte-exact matrix and
-the round-8 cursor generator); the caller then falls back to the
-Spark compiler.  THAWED sorted cursor subs at ANY depth run the
-exact reference model (:class:`_ThawScan`): the global sort-root
-producer (value bins + null tail, forward or backward; the all-scan
-for name keys), the per-constraint 5-slot bad-id ring shared across
-parents, the verify/defer/resume evaluation order, and the
-median-gated sort-window exit whose verdict is the comparator's
-value_in_range port (``comparators.vrange_value_beyond``).  NESTED
-(depth >= 2) sorted cursor subs (round 7, spew-trace-derived) add
-the reference's deferred-set structure: every ancestor set defers at
-its count minimum during verify, the remaining candidates evaluate
-at render-resume (``_resume_deferred_set``), and rendered parents'
-leaf thaws resume recursively in render order — pinned by directed
-differential tests and the nested dense-cluster shapes of the cursor
-fuzz generator.  Sorts, globs,
-value ranges
-(including the reference's value-bin scan order for unsorted range
-reads), variables, or-chains (branch subconstraints, first-match
-bindings, contents slots), number-comparator value sorts
-(NUMBERS-binset drop), datelines, asof time travel, and the FULL
-root cursor family — all-scan / guid-fixed / single-linkage gmap /
-single-equality hmap / eq-glob and prefix-bin fixed materialization /
-and-iterator freezes (multi-index roots incl. propagated
-subconstraints, pre-evaluated small sets, linksto members) /
-sub-gmap collapses / isa masquerades / isa and or-linksto expansion
-freezes, frozen and thawed in the reference's byte format, plus
-sorted-page ``sort:`` cursors (shared serializer with the compiler,
-incl. the ≥1000-primitive suspension stamps), asof'd cursor chains,
-and the FULL sub-level cursor family (per-parent gmap / vip /
-pre-evaluated fixed / iam / per-parent ``sort:`` boundary keys with
-the one-shot thaw, pagesize-0 count-min probes, or-branch subs) —
-ARE mirrored.  For
-the supported subset it produces the exact (plan, rows, total)
-triple ``Compiler.run`` would, feeding the same ``Assembler`` — so
-the golden suite and the differential fuzz campaigns (which replay
-through ``GraphSession.request`` against the reference binary)
-exercise BOTH paths and pin them to each other.
+Safety model: :class:`FastReader` first walks the constraint tree and
+raises :class:`Unsupported` for any shape outside its model; the
+caller then falls back to the Spark compiler.  Modeled: literal
+template reads with linkage subconstraints, sorts, globs, value
+ranges (including the value-bin scan order of unsorted range reads),
+variables, or-chains (branch subconstraints, first-match bindings,
+contents slots), number-comparator value sorts (the NUMBERS-binset
+drop), datelines, asof time travel, every root cursor form freeze.py
+freezes plus sorted-page ``sort:`` cursors, and the sub-level cursor
+family (per-parent gmap / vip / pre-evaluated fixed / iam freezes,
+per-parent ``sort:`` boundary keys, pagesize-0 count-min probes,
+or-branch subs).  Thawed sorted cursor subs at any depth run the
+reference's sorter model (:class:`_ThawScan`: the sort-root producer,
+the per-constraint bad-id ring, the verify/defer/resume order and the
+median-gated window exit), nested ones with their deferred sets
+(``_resume_deferred_set``).  The one refused or-family is a branch
+conjoining a nested chain whose inner branches carry subs or
+assignments.
 
-Scale stance: this is the hot-working-set path (the reference's
-single-node serving analog).  Reads whose working set exceeds the
-driver mirror — or that use any analytical feature — take the
-Spark path, where Catalyst + the cluster do what the fast path can't.
+Scale stance: this is the hot-working-set path.  Reads whose working
+set exceeds the driver mirror, or that use an analytical feature,
+take the Spark path.
 """
 
 from __future__ import annotations
 
+import bisect
+from contextlib import contextmanager
 from typing import Iterable, Optional
 
 from graphd_spark.comparators import (
@@ -94,14 +54,8 @@ from graphd_spark.comparators import (
     string_bin_order,
     value_norm_key,
 )
-from graphd_spark.compiler import (
-    PRIM_ELEM_FIELDS,
-    SetPlan,
-    SubPlan,
-    _FIXED_MATERIALIZE_MAX,
-    _ISA_SMALL_SET_MAX,
-    _OPS,
-)
+from graphd_spark import freeze
+from graphd_spark.compiler import PRIM_ELEM_FIELDS, SetPlan, SubPlan, _OPS
 from graphd_spark.cursor import (
     asof_horizon,
     count_root_set,
@@ -110,9 +64,20 @@ from graphd_spark.cursor import (
     needs_total,
     thaw_envelope,
 )
+from graphd_spark.freeze import (
+    GMAP_COLS,
+    _FIXED_MATERIALIZE_MAX,
+    _prefix_pattern,
+    _prefix_rollup,
+)
 from graphd_spark.glob import glob_match
 from graphd_spark.gql.ir import Constraint, StrCon, TRUE, FALSE
-from graphd_spark.model import Primitive, ts_from_string
+from graphd_spark.model import (
+    Primitive,
+    guid_compose,
+    guid_serial,
+    ts_from_string,
+)
 from graphd_spark.sortsim import result_pagesize, simulate, sort_production
 from graphd_spark.wordhash import prefix_bins
 from graphd_spark.pattern import (
@@ -394,8 +359,6 @@ class _NodeSpec:
         self.chains = chains or []
 
 
-#: gmap/vip cursor linkage letters (mirror of Compiler._GMAP_COLS)
-_GMAP_NAMES = {"t": "typeguid", "l": "left", "r": "right", "s": "scope"}
 
 
 def _deserialize_sort_values(body: str):
@@ -561,26 +524,6 @@ def shape_flags(con: Constraint) -> dict:
     if "unsupported" in memo:
         raise Unsupported(memo["unsupported"])
     return memo
-
-
-def _prefix_pattern_f(con: Constraint) -> Optional[str]:
-    """The pure word-prefix P when the constraint's only value
-    predicate is ``value~="P*"`` — mirror of Compiler._prefix_pattern
-    (the shape the reference routes to the prefix iterator,
-    graphd-iterator-prefix.c)."""
-    if len(con.value_strcons) != 1 or con.name_strcons:
-        return None
-    sc = con.value_strcons[0]
-    if sc.op != "~=" or len(sc.values) != 1 or not sc.values[0]:
-        return None
-    pat = sc.values[0]
-    body = pat[1:] if pat.startswith("^") else pat
-    if not body.endswith("*"):
-        return None
-    p = body[:-1]
-    if not p or not p.isalnum() or not p.isascii():
-        return None
-    return p.lower()
 
 
 def _nested_intrinsic(b) -> bool:
@@ -801,7 +744,7 @@ class FastReader:
                 try:
                     raw = (
                         cstate.fixed_ids
-                        or self._isa_expansion_ids_f(con)
+                        or self._isa_expansion_ids(con)
                     )
                 finally:
                     self._cur_high = _prev_ch
@@ -1020,16 +963,19 @@ class FastReader:
     def _more_than(self, matches, limit: int) -> bool:
         return len(matches) > limit
 
-    def _probe_cursor(self, con, cstate, matches, resume, total,
+    def _probe_cursor(self, con, cstate, matches, total, delivered,
                       backward):
         # the count-min probe consumes `total` elements — the count
         # scan's consumption (probed: pagesize=0 countlimit=9 freezes
-        # [o:3] all:0-3/3/), forward even under a backward sort
+        # [o:3] all:0-3/3/), forward even under a backward sort; the
+        # last one positions the cursor
         asc = matches[::-1] if backward else matches
-        probe = [p for p, _r in asc[: max(total, 1)]]
+        probe = [p for p, _r in asc[:total][-1:]]
         if not probe:
             return None
-        return self._iterator_cursor(con, cstate, probe, matches, resume)
+        return freeze._iterator_cursor(
+            self, con, cstate, probe, matches, delivered
+        )
 
     def _resume_filter(self, cstate, matches):
         """Scope wrapper: a thawed iterator repositions within the
@@ -1116,82 +1062,102 @@ class FastReader:
         # fixed_masq / isa_it: resume by offset (run() sets it)
         return matches
 
-    # -- cursor emission helpers (driver-side probes) ----------------------
+    # -- the index probes of freeze._iterator_cursor ----------------------
 
-    _GMAP_WORDS = {"t": "typeguid", "l": "left", "r": "right",
-                   "s": "scope"}
+    @contextmanager
+    def _freeze_scope(self, con, cstate):
+        """A refrozen iterator regenerates its provenance (expansions,
+        producer positions, masquerades) within the bound it lives at —
+        the incoming [n:H] / the node's propagated bound — never the
+        grown live store (write-interleaved chains re-freeze the
+        original fixed-isa provenance verbatim)."""
+        prev = self._cur_high
+        bounds = [
+            b for b in (
+                prev,
+                cstate.horizon if cstate is not None else None,
+                self._node_high.get(id(con)) if self._node_high else None,
+            )
+            if b is not None
+        ]
+        if bounds:
+            self._cur_high = min(bounds)
+        try:
+            yield
+        finally:
+            self._cur_high = prev
 
-    def _gmap_index_ids(self, lk_letter: str, src: int) -> list[int]:
-        """The linkage index set's ids (index order == id order) —
-        driver mirror of _gmap_index_df; asof clamps at the horizon."""
-        from graphd_spark.model import guid_compose
+    def _frozen_count(self, con, cstate) -> int:
+        # the asof id horizon, a resumed chain's frozen [n:H] and the
+        # node's propagated bound clamp every frozen bound
+        count = self.store.count()
+        for b in (
+            None if self.horizon is None else self.horizon + 1,
+            cstate.horizon if cstate is not None else None,
+            self._node_high.get(id(con)) if self._node_high else None,
+        ):
+            if b is not None:
+                count = min(count, b)
+        return count
 
+    def _row_id(self, p: Primitive) -> int:
+        return p.id
+
+    def _first_ids(self, matches, n: int) -> list[int]:
+        return sorted(p.id for p, _r in matches)[:n]
+
+    def _gmap_index_ids(self, lk: str, src: int) -> list[int]:
+        """The linkage index set's ids (index order == id order),
+        clamped at the helper bound."""
         g = guid_compose(self.store.db_id, src)
-        ids = list(self.store._ptr_ids.get(
-            (self._GMAP_WORDS[lk_letter], g), ()
-        ))
+        ids = list(self.store._ptr_ids.get((GMAP_COLS[lk], g), ()))
         _hb = self._helper_high()
         if _hb is not None:
             ids = [i for i in ids if i < _hb]
         return ids
 
-    def _gmap_stats_f(self, lk_letter: str, src: int, last_id: int):
-        """(low, high, #elements <= last_id) — mirror of _gmap_stats."""
-        import bisect
-
-        ids = self._gmap_index_ids(lk_letter, src)
+    def _gmap_stats(self, lk: str, src: int, last_id: int):
+        ids = self._gmap_index_ids(lk, src)
         if not ids:
             return None, None, None
         return ids[0], ids[-1] + 1, bisect.bisect_right(ids, last_id)
 
-    def _gmap_source_f(self, con: Constraint):
-        """Mirror of Compiler._gmap_source (single-linkage root)."""
-        from graphd_spark.model import guid_serial
-
-        if (
-            con.value_strcons or con.name_strcons or con.guid
-            or con.next or con.prev or con.timestamps
-            or con.dateline is not None
-        ):
+    def _gmap_tail(self, lk: str, src: int, last_id: int) -> Optional[int]:
+        ids = self._gmap_index_ids(lk, src)
+        if last_id not in ids:
             return None
-        cands = []
-        for lk in ("typeguid", "right", "left", "scope"):
-            for gc in con.links.get(lk, []):
-                if (
-                    gc.op == "="
-                    and len(gc.guids) == 1
-                    and gc.guids[0] is not None
-                ):
-                    cands.append((lk, guid_serial(gc.guids[0])))
-                else:
-                    return None
-        for sc in con.type_strcons:
-            if sc.op == "=" and len(sc.values) == 1 and sc.values[0]:
-                g = self.types.resolve(sc.values[0])
-                if g is None:
-                    return None
-                cands.append(("typeguid", guid_serial(g)))
-            else:
-                return None
-        if len(cands) != 1:
-            return None
-        lk, src = cands[0]
-        return lk[0], src
+        return len(ids) - ids.index(last_id)
 
-    def _hmap_bin_ids(self, tname: str, key: str) -> list[int]:
-        """Driver mirror of _hmap_bin_filter's membership: the value
-        hash buckets by pdb_hmap_value_normalize, i.e. the stored
-        value_norm column ("12"/"12.0"/"+12" share one bin, and so do
-        "2006-01-02"/"2006-1-2"; cursor-fuzz seed 81)."""
+    def _and_producer_pos(self, member, boundary_id, backward):
+        ids = self._gmap_index_ids(member["letter"], member["src"])
+        if not ids:
+            return None
+        if backward:
+            return len(ids) - bisect.bisect_right(ids, boundary_id - 1)
+        return bisect.bisect_right(ids, boundary_id)
+
+    def _hmap_bin(self, tname: str, key: str) -> Optional[tuple]:
+        # the value hash buckets by pdb_hmap_value_normalize, i.e. the
+        # stored value_norm column ("12"/"12.0"/"+12" share one bin,
+        # and so do "2006-01-02"/"2006-1-2"; cursor-fuzz seed 81); the
+        # set string carries the normalized key
+        from graphd_spark.comparators import normalize_value
+
         st = self.store
         if tname == "name":
             ids = list(st._name_ids.get(key.lower(), ()))
         else:
             ids = sorted(st._vnorm_ids.get(value_norm_key(key), ()))
+            key = normalize_value(key)
         _hb = self._helper_high()
         if _hb is not None:
             ids = [i for i in ids if i < _hb]
-        return ids
+        if not ids:
+            return None
+        return tname, key, ids[0], ids[-1] + 1, len(ids), ids
+
+    def _bin_rank(self, ids, last_id: int) -> int:
+        return bisect.bisect_right(ids, last_id)
 
     def _hmap_resume_ids(self, tname: str, masq: str) -> list[int]:
         """Bin members for a THAWED hmap key.  The thawed key IS the
@@ -1211,46 +1177,47 @@ class FastReader:
             ids = [i for i in ids if i < _hb]
         return ids
 
-    def _hmap_cursor_source_f(self, con: Constraint):
-        """Mirror of _hmap_cursor_source/_hmap_source: the root's own
-        hmap bin when its only indexed predicate is one name=/value=
-        equality."""
-        if (
-            con.subs or con.or_chains or con.guid or con.links
-            or con.type_strcons or con.next or con.prev
-            or con.timestamps
-        ):
-            return None
-        cands = []
-        for tname, scs in (
-            ("name", con.name_strcons), ("value", con.value_strcons)
-        ):
-            for sc in scs:
-                if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                    return None
-                cands.append((tname, sc.values[0]))
-        if len(cands) != 1:
-            return None
-        tname, key = cands[0]
-        ids = self._hmap_bin_ids(tname, key)  # normalizes the RAW key
-        if tname == "value":
-            from graphd_spark.comparators import normalize_value
+    def _live_sources(self, lk: str, hm) -> list[int]:
+        return [i for i in hm[5] if self._gmap_index_ids(lk[0], i)]
 
-            # the set string carries the normalized key (canonical
-            # scientific form for numbers, word-normalized fragments
-            # otherwise — "2006-01-02" freezes as "2006-1-2")
-            key = normalize_value(key)
-        if not ids:
+    def _linksto_span(self, lk: str, hm) -> Optional[tuple]:
+        st = self.store
+        tgt: set[int] = set()
+        for i in hm[5]:
+            tgt.update(st._ptr_ids.get((lk, st.rows[i - st._base].guid), ()))
+        if not tgt:
             return None
-        return tname, key, ids[0], ids[-1] + 1, ids
+        return min(tgt), max(tgt) + 1, tgt
 
-    # -- word-index mirror (prefix-bin iterators) --------------------------
+    def _endpoint_span(self, pairs) -> Optional[tuple]:
+        ptr = self.store._ptr_ids
+        span = set(ptr.get(pairs[0], ()))
+        for key in pairs[1:]:
+            span &= set(ptr.get(key, ()))
+        if not span:
+            return None
+        return min(span), max(span) + 1
 
-    def _prefix_bin_ids_f(self, prefix: str) -> list[int]:
+    def _sub_single_id(self, sub: Constraint) -> Optional[int]:
+        try:
+            _plan, sm = self._eval_set(sub, exists_only=True)
+        except GraphdError:
+            return None
+        if len(sm) != 1:
+            return None
+        return sm[0][0].id
+
+    def _sub_targets(self, sub, lk: str, n: int) -> Optional[list]:
+        try:
+            _plan, sm = self._eval_set(sub, exists_only=True)
+        except GraphdError:
+            return None
+        return [getattr(p, lk) for p, _r in sm[:n]]
+
+    def _prefix_bin_ids(self, prefix: str) -> list[int]:
         """Ascending ids in the word-index bins a prefix scan for
-        ``prefix`` enumerates — driver mirror of _prefix_bin_ids
-        (libpdb/pdb-prefix.c candidate arrays, hash-bucket membership
-        rather than true matches)."""
+        ``prefix`` enumerates (libpdb/pdb-prefix.c candidate arrays,
+        hash-bucket membership rather than true matches)."""
         ids: set[int] = set()
         for lst in prefix_bins(self.store._word_ids, prefix):
             ids.update(lst)
@@ -1260,532 +1227,38 @@ class FastReader:
             ids = {i for i in ids if i < _hb}
         return sorted(ids)[: _FIXED_MATERIALIZE_MAX + 1]
 
-    def _prefix_stats_f(self, prefix: str):
-        """Prefix-iterator statistics from the driver word index —
-        mirror of freeze.prefix_stats (one or-member per existing
-        hash bin; hmap cost rollup)."""
-        from graphd_spark.freeze import PrefixStats, hmap_costs
-
-        total_n = total_nc = total_fc = 0
-        low = None
-        bins = 0
-        for lst in prefix_bins(self.store._word_ids, prefix):
-            if not lst:
-                continue
-            bins += 1
-            if bins > 10000:
-                return None
-            n_i = len(lst)
-            cc, nc, fc = hmap_costs(n_i)
-            total_n += n_i
-            total_nc += n_i * nc
-            total_fc += fc
-            lo_i = min(lst)
-            low = lo_i if low is None else min(low, lo_i)
-        if total_n == 0:
-            return None
-        return PrefixStats(
-            prefix=prefix.lower(),
-            low=int(low),
-            high=self.store.count(),
-            n=total_n,
-            next_cost=total_nc // total_n,
-            find_cost=total_fc,
-        )
-
-    # -- and / sub-level cursor mirrors ------------------------------------
-
-    def _sub_single_id(self, sub: Constraint) -> Optional[int]:
-        """The sub's single matching id, or None (mirror of the
-        compiler's GUID-consequence propagation probe: compile the sub
-        standalone and require exactly one match)."""
-        try:
-            _plan, sm = self._eval_set(sub, exists_only=True)
-        except GraphdError:
-            return None
-        if len(sm) != 1:
-            return None
-        return sm[0][0].id
-
-    def _and_members(self, con) -> Optional[list]:
-        """The root's AND-iterator members as (linkage letter, source
-        id) gmaps — driver mirror of Compiler._and_members
-        (compiler.py:888-939)."""
-        from graphd_spark.model import guid_serial
-
-        if con.or_chains or con.guid or con.next or con.prev:
-            return None
-        if any(
-            sc.op in ("=", "~=") and any(v is not None for v in sc.values)
-            for sc in (*con.value_strcons, *con.name_strcons)
-        ):
-            return None  # would add an hmap/prefix member
-        members = []
-        for sc in con.type_strcons:
-            if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                return None
-            g = self.types.resolve(sc.values[0])
-            if g is None:
-                return None
-            members.append(("t", guid_serial(g)))
-        for lk in ("typeguid", "right", "left", "scope"):
-            for gc in con.links.get(lk, []):
-                if (
-                    gc.op != "=" or len(gc.guids) != 1
-                    or gc.guids[0] is None
-                ):
-                    return None
-                members.append((lk[0], guid_serial(gc.guids[0])))
-            for sub in con.subs:
-                if sub.linkage != ("iam", lk):
-                    continue
-                sid = self._sub_single_id(sub)
-                if sid is None:
-                    return None
-                members.append((lk[0], sid))
-        for sub in con.subs:
-            kind, lk = sub.linkage or (None, None)
-            if kind == "iam" and lk in (
-                "typeguid", "right", "left", "scope"
-            ):
-                continue
-            return None  # 'my'-side subs make isa/linksto members
-        return members
-
-    def _linksto_member_f(self, sub, lk) -> Optional[dict]:
-        """An or-of-gmaps linksto member — driver mirror of
-        Compiler._linksto_member (compiler.py:1117-1154)."""
-        from graphd_spark.freeze import hmap_set_str
-
-        hm = self._hmap_cursor_source_f(sub)
-        if hm is None:
-            return None
-        tname, key, hlo, hhi, src_ids = hm
-        n_src = len(src_ids)
-        if n_src < 2:
-            return None
-        st = self.store
-        tgt: set[int] = set()
-        for i in src_ids:
-            g = st.rows[i - st._base].guid
-            tgt.update(st._ptr_ids.get((lk, g), ()))
-        if not tgt:
-            return None
-        hset = hmap_set_str(tname, key, hlo, hhi)
-        letter = lk[0]
-        return {
-            "kind": "linksto",
-            "lk": lk,
-            "hmap_n": n_src,
-            "tgt_ids": tgt,
-            "lo": min(tgt),
-            "hi": max(tgt) + 1,
-            "set_str": lambda lo, hi: (
-                f"(or:(or-linksto:+{lo}-{hi}:{letter}->({hset})))"
-            ),
-            "standalone": lambda lo, hi: (
-                f"or:(or-linksto:+{lo}-{hi}:{letter}->({hset}))"
-            ),
-        }
-
-    def _and_members_ext_f(self, con) -> Optional[list]:
-        """AND members in the constraint-iterator's build order —
-        driver mirror of Compiler._and_members_ext
-        (compiler.py:1156-1251)."""
-        from graphd_spark.model import guid_serial
-
-        if con.or_chains or con.guid or con.next or con.prev:
-            return None
-        prefix = _prefix_pattern_f(con)
-        if prefix is None and any(
-            sc.op in ("=", "~=") and any(v is not None for v in sc.values)
-            for sc in (*con.value_strcons, *con.name_strcons)
-        ):
-            return None  # an hmap member form we don't freeze
-        members = []
-        handled = set()
-
-        def _gmap_member(letter, src):
-            return {
-                "kind": "gmap",
-                "src": src,
-                "letter": letter,
-                "set_str": lambda lo, hi: (
-                    f"(gmap:{lo}-{hi}:{letter}->{src})"
-                ),
-            }
-
-        for sc in con.type_strcons:
-            if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                return None
-            g = self.types.resolve(sc.values[0])
-            if g is None:
-                return None
-            members.append(_gmap_member("t", guid_serial(g)))
-        linksto = []
-        for lk in ("typeguid", "right", "left", "scope"):
-            for gc in con.links.get(lk, []):
-                if (
-                    gc.op != "=" or len(gc.guids) != 1
-                    or gc.guids[0] is None
-                ):
-                    return None
-                members.append(
-                    _gmap_member(lk[0], guid_serial(gc.guids[0]))
-                )
-            for i, sub in enumerate(con.subs):
-                if sub.linkage != ("iam", lk):
-                    continue
-                handled.add(i)
-                hm = self._hmap_cursor_source_f(sub)
-                if hm is not None and len(hm[4]) >= 2:
-                    m = self._linksto_member_f(sub, lk)
-                    if m is None:
-                        return None
-                    linksto.append(m)
-                    continue
-                sid = self._sub_single_id(sub)
-                if sid is None:
-                    return None
-                members.append(_gmap_member(lk[0], sid))
-        if any(i not in handled for i in range(len(con.subs))):
-            return None  # 'my'-side subs make isa members
-        for m in members:
-            lo, hi, _ = self._gmap_stats_f(m["letter"], m["src"], 0)
-            if lo is None:
-                return None
-            m["lo"], m["hi"] = lo, hi
-        if prefix is not None:
-            ps = self._prefix_stats_f(prefix)
-            if ps is None:
-                return None
-            members.append(
-                {
-                    "kind": "prefix",
-                    "lo": ps.low,
-                    "hi": ps.high,
-                    "stats": ps,
-                    "prefix": prefix,
-                    "set_str": (
-                        lambda lo, hi, p=prefix: f"(prefix:{lo}-{hi}:{p})"
-                    ),
-                }
-            )
-        members.extend(linksto)
-        return members
-
-    def _member_id_sets_f(self, members) -> Optional[list]:
-        """Candidate id set of each and-member — driver mirror of
-        Compiler._member_id_sets (prefix bins keep their hash false
-        positives)."""
-        out = []
-        for m in members:
-            if m["kind"] == "gmap":
-                out.append(
-                    set(self._gmap_index_ids(m["letter"], m["src"]))
-                )
-            elif m["kind"] == "prefix":
-                out.append(set(self._prefix_bin_ids_f(m["prefix"])))
-            elif m["kind"] == "linksto":
-                out.append(set(m["tgt_ids"]))
-            else:
-                return None
-        return out
-
-    def _preevaluate_small_set_f(
-        self, con, members, page_prims, prior, count, backward=False
-    ) -> Optional[str]:
-        """Mirror of Compiler._preevaluate_small_set
-        (and_become_small_set, graphd-iterator-and-optimize.c:747-1030):
-        a cheap-enough and pre-evaluates into a FIXED iterator over the
-        intersection of the member candidate sets."""
-        delivered = prior + len(page_prims)
-        from graphd_spark.cursor import CursorState, freeze_cursor
-        from graphd_spark.freeze import (
-            COST_FUNCTION_CALL,
-            COST_GMAP_ARRAY,
-            COST_GMAP_ELEMENT,
-            COST_PRIMITIVE,
-            bsearch_cost,
-            hmap_costs,
-        )
-
-        COST_MAX = 1024 * 10  # GRAPHD_AND_PREEVALUATE_COST_MAX
-        stats = []  # (n | None, next_cost | None, check_cost)
-        for m in members:
-            if m["kind"] == "gmap":
-                n = self._gmap_stats_f(m["letter"], m["src"], 1 << 62)[2]
-                if n is None:
-                    return None
-                nc = COST_FUNCTION_CALL + COST_GMAP_ELEMENT
-                bs = COST_FUNCTION_CALL + bsearch_cost(
-                    n, 32 * 1024 // 5, COST_GMAP_ARRAY, COST_GMAP_ELEMENT
-                )
-                cc = min(bs, COST_PRIMITIVE + COST_FUNCTION_CALL)
-                stats.append((n, nc, cc))
-            elif m["kind"] == "prefix":
-                ps = m.get("stats")
-                if ps is None:
-                    return None
-                stats.append((ps.n, ps.next_cost, ps.check_cost))
-            elif m["kind"] == "linksto":
-                hn = m.get("hmap_n")
-                if hn is None:
-                    return None
-                hc, _n, _f = hmap_costs(hn)
-                stats.append((None, None, COST_PRIMITIVE + hc))
-            else:
-                return None
-        best = None
-        for i, (n, nc, _cc) in enumerate(stats):
-            if n is None or nc is None:
-                continue
-            total = (1 + n) * nc
-            if best is None or total < best[0]:
-                best = (total, n, i)
-        if best is None:
-            return None
-        best_total, best_n, bi = best
-        if best_total > COST_MAX // 2:
-            return None
-        for i, (_n, _nc, cc) in enumerate(stats):
-            if i == bi:
-                continue
-            if cc is None:
-                return None
-            best_total += best_n * cc
-        if best_total >= COST_MAX:
-            return None
-        id_sets = self._member_id_sets_f(members)
-        if id_sets is None:
-            return None
-        ids = sorted(set.intersection(*id_sets))
-        last_id = page_prims[-1].id
-        # no separate id cap: the cost budget bounds materialization
-        # (mirror of Compiler._preevaluate_small_set; probed 639/640)
-        if last_id not in ids:
-            return None
-        st = CursorState(
-            form="fixed", fixed_ids=ids,
-            pos=(
-                len(ids) - ids.index(last_id)
-                if backward
-                else ids.index(last_id) + 1
-            ),
-            backward=backward,
-        )
-        return freeze_cursor(
-            con, st, delivered, count, self.types.resolve
-        )
-
-    def _and_cursor_f(
-        self, con, cstate, page_prims, prior, count, backward=False
-    ) -> Optional[str]:
-        """Frozen and-iterator cursor for multi-index roots — driver
-        mirror of Compiler._and_cursor (compiler.py:1253-1307;
-        graphd-iterator-and-freeze.c:619-805)."""
-        delivered = prior + len(page_prims)
-        from graphd_spark.cursor import sign_cursor
-        from graphd_spark.freeze import resource_stamp
-
-        members = self._and_members_ext_f(con)
-        if members is None or len(members) < 2:
-            return None
-        pre = self._preevaluate_small_set_f(
-            con, members, page_prims, prior, count, backward=backward
-        )
-        if pre is not None:
-            return pre
-        low = max(m["lo"] for m in members)
-        high = min(m["hi"] for m in members)
-        last_id = page_prims[-1].id
-        rps = result_pagesize(con)
-        if backward:
-            subs = "".join(
-                m["set_str"](low, high).replace(
-                    "(gmap:", "(gmap:~", 1
-                ).replace("(prefix:", "(prefix:~", 1)
-                for m in members
-            )
-            head = f"and:-{low}-{high}"
-        else:
-            subs = "".join(m["set_str"](low, high) for m in members)
-            head = f"and:#{low}-{high}"
-        # [psz:] always prints on fresh builds; on RESUME it persists
-        # only when the producer is a gmap (probed: resumed gmap-led
-        # and chains keep [psz:2]; the isa golden's prefix-led and
-        # drops it — gia_context_pagesize_valid)
-        resumed = cstate is not None and cstate.form == "and_it"
-        psz = (
-            f"[psz:{rps}]"
-            if not resumed or members[0]["kind"] == "gmap"
-            else ""
-        )
-        set_part = (
-            f"{head}:{len(members)}:{psz}[ov:0]"
-            f"{subs}[pro:0]"
-        )
-        ppos = None
-        prior_ppos = 0
-        if members[0]["kind"] == "gmap":
-            ppos = self._and_producer_pos_f(
-                members[0], last_id, backward
-            )
-            if cstate is not None and cstate.form == "and_it" and (
-                cstate.pos >= 0
-            ):
-                prior_ppos = self._and_producer_pos_f(
-                    members[0], cstate.pos, backward
-                )
-        if ppos is not None and prior_ppos < 6 <= ppos:
-            # the statistics resource stores once per shape: a sorted
-            # suspension already stored it under the same content key
-            # (slip: suspend mints ab1, the and freeze prints ab2 with
-            # no crossing mint between)
-            skey = "suspend:" + ";".join(
-                f"{m['letter']}->{m['src']}"
-                for m in members
-                if m["kind"] == "gmap"
-            )
-            if skey not in getattr(
-                self.store, "cursor_resources", {}
-            ):
-                resource_stamp(self.store)  # the statistics resource
-        if ppos is not None and ppos >= 5:
-            pos_part = f"/{last_id}[pp:{ppos}]/"
-        else:
-            pos_part = f"/{last_id}/"
-        stamp = resource_stamp(self.store)
-        body = "[o:{}][n:{}]{}{}@{}".format(
-            delivered, count, set_part, pos_part, stamp
-        )
-        return sign_cursor(con, body, self.types.resolve)
-
-    def _and_producer_pos_f(self, member, boundary_id, backward):
-        """Mirror of Compiler._and_producer_pos over the driver
-        linkage index."""
-        import bisect
-
-        ids = self._gmap_index_ids(member["letter"], member["src"])
-        if not ids:
-            return None
-        if backward:
-            return len(ids) - bisect.bisect_right(ids, boundary_id - 1)
-        return bisect.bisect_right(ids, boundary_id)
-
-    def _sub_gmap_cursor_f(
-        self, con, page_prims, prior, count, last_id, backward=False
-    ) -> Optional[str]:
-        """A root whose only predicate is one ``L->(sub)`` resolving
-        to a SINGLE pointed-at source collapses to that linkage's gmap
-        iterator — driver mirror of Compiler._sub_gmap_cursor
-        (compiler.py:959-1022; graphd-iterator-linksto.c)."""
-        delivered = prior + len(page_prims)
-        from graphd_spark.cursor import CursorState, freeze_cursor
-
-        if (
-            con.value_strcons or con.name_strcons or con.guid
-            or con.next or con.prev or con.timestamps
-            or con.dateline is not None or con.type_strcons
-            or any(con.links.values()) or con.or_chains
-            or len(con.subs) != 1
-        ):
-            return None
-        sub = con.subs[0]
-        if sub.linkage is None or sub.linkage[0] != "iam":
-            return None
-        lk = sub.linkage[1]
-        if lk not in ("typeguid", "left", "right", "scope"):
-            return None
-        if (
-            sub.subs or sub.or_chains or sub.count_eq is not None
-            or sub.count_min not in (None, 1) or sub.count_max is not None
-        ):
-            return None
-        hm = self._hmap_cursor_source_f(sub)
-        if hm is None:
-            return None
-        src_ids = hm[4]
-        if len(src_ids) > 50:
-            return None
-        # the linksto's or drops sources with EMPTY gmap bins; only a
-        # single surviving gmap collapses
-        live = [
-            i for i in src_ids if self._gmap_index_ids(lk[0], i)
+    def _prefix_stats(self, prefix: str):
+        bins = [
+            (len(lst), min(lst))
+            for lst in prefix_bins(self.store._word_ids, prefix)
+            if lst
         ]
-        if len(live) != 1:
-            return None
-        src = live[0]
-        low, high, pos = self._gmap_stats_f(lk[0], src, last_id)
-        if low is None:
-            return None
-        if backward:
-            total = self._gmap_stats_f(lk[0], src, 1 << 62)[2]
-            pos = total - pos + 1
-        st = CursorState(
-            form="gmap", low=low, high=high, pos=pos, lk=lk[0], src=src,
-            backward=backward,
-        )
-        n_echo = (
-            count
-            if backward
-            else (high if last_id == high - 1 else count)
-        )
-        return freeze_cursor(
-            con, st, delivered, n_echo, self.types.resolve
-        )
+        return _prefix_rollup(prefix, bins, self.store.count())
 
-    def _isa_sub_hmap_f(self, con):
-        """Mirror of Compiler._isa_sub_hmap: (sub, hmap source) when
-        the root is a single-'my'-sub expansion over one hmap bin."""
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        if sub.linkage is None or sub.subs or sub.or_chains:
-            return None
-        kind, lk = sub.linkage
-        if kind != "my" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        hm = self._hmap_cursor_source_f(sub)
-        if hm is None:
-            return None
-        return sub, hm
+    def _member_intersection(self, members, bi) -> list[int]:
+        """Sorted id intersection of the and-members' candidate sets
+        (prefix bins keep their hash false positives)."""
+        sets = []
+        for m in members:
+            if m["kind"] == "gmap":
+                sets.append(set(self._gmap_index_ids(m["letter"], m["src"])))
+            elif m["kind"] == "prefix":
+                sets.append(set(self._prefix_bin_ids(m["prefix"])))
+            else:
+                sets.append(set(m["index"]))
+        return sorted(set.intersection(*sets))
 
-    def _isa_materialize_cap_f(self, con) -> int:
-        """Mirror of Compiler._isa_materialize_cap: hmap-driven subs
-        materialize up to the isa small-set budget window (937 sub
-        candidates; probed 937/938), other shapes keep the default;
-        0 = never materialize."""
-        sh = self._isa_sub_hmap_f(con)
-        if sh is None:
-            return _FIXED_MATERIALIZE_MAX
-        n_sub = len(sh[1][4])
-        return (
-            _ISA_SMALL_SET_MAX if n_sub <= _ISA_SMALL_SET_MAX else 0
-        )
-
-    def _isa_expansion_ids_f(self, con) -> Optional[list]:
-        """Mirror of Compiler._isa_expansion_ids: the RAW materialized
-        target set of an hmap-sub expansion (bin false positives and
-        later-rejected targets included — the reference's fixed
-        iterator bounds and /POS/ count them)."""
-        from graphd_spark.model import guid_compose, guid_serial
-
-        sh = self._isa_sub_hmap_f(con)
+    def _isa_expansion_ids(self, con) -> Optional[list]:
+        """The RAW materialized target set of an hmap-sub expansion
+        (bin false positives and later-rejected targets included — the
+        reference's fixed iterator bounds and /POS/ count them)."""
+        sh = freeze._isa_sub_hmap(self, con)
         if sh is None:
             return None
         sub, hm = sh
         lk = sub.linkage[1]
         out = set()
-        for i in hm[4]:
+        for i in hm[5]:
             p = self.store.get(guid_compose(self.store.db_id, i))
             if p is None:
                 continue
@@ -1794,187 +1267,23 @@ class FastReader:
                 out.add(guid_serial(g))
         return sorted(out)
 
-    def _isa_masquerade_f(self, con, ids, backward: bool = False
-                          ) -> Optional[str]:
-        """The fixed-isa provenance string — driver mirror of
-        Compiler._isa_masquerade (compiler.py:1601-1723;
-        graphd-iterator-isa.c:656-769)."""
-        from graphd_spark.model import guid_compose, guid_serial
-
-        t = "~" if backward else ""
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        if sub.linkage is None:
-            return None
-        kind, lk = sub.linkage
-        if kind != "my" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        if not (sub.subs or sub.or_chains):
-            # hmap-driven sub: the bin stays the isa's subiterator
-            # (mirror of Compiler._isa_masquerade's hmap branch)
-            hm = self._hmap_cursor_source_f(sub)
-            if hm is not None:
-                from graphd_spark.freeze import hmap_set_str
-
-                tname, key, slo, shi, _bin_ids = hm
-                return "fixed-isa:{}{}-{}:{}<-({})[hint:0]".format(
-                    t, ids[0], ids[-1] + 1, lk[0],
-                    hmap_set_str(tname, key, slo, shi),
-                )
-        if sub.or_chains or sub.value_strcons or sub.name_strcons or (
-            sub.guid or sub.next or sub.prev or sub.timestamps
-        ):
-            return None
-        typeguid = None
-        for sc in sub.type_strcons:
-            if sc.op != "=" or len(sc.values) != 1 or not sc.values[0]:
-                return None
-            g = self.types.resolve(sc.values[0])
-            if g is None or typeguid is not None:
-                return None
-            typeguid = g
-        endpoint = None  # (linkage name, source id)
-        for elk in ("left", "right", "scope"):
-            for gc in sub.links.get(elk, []):
-                if (
-                    gc.op != "="
-                    or len(gc.guids) != 1
-                    or gc.guids[0] is None
-                    or endpoint is not None
-                ):
-                    return None
-                endpoint = (elk, guid_serial(gc.guids[0]))
-        for gc in sub.links.get("typeguid", []):
-            if (
-                gc.op != "=" or len(gc.guids) != 1
-                or gc.guids[0] is None or typeguid is not None
-            ):
-                return None
-            typeguid = gc.guids[0]
-        for gsub in sub.subs:
-            if gsub.linkage is None:
-                return None
-            gkind, glk = gsub.linkage
-            if gkind != "iam" or endpoint is not None or glk not in (
-                "left", "right", "scope"
-            ):
-                return None
-            gid = self._sub_single_id(gsub)
-            if gid is None:
-                return None
-            endpoint = (glk, gid)
-        ptr = self.store._ptr_ids
-        if typeguid is not None and endpoint is not None:
-            elk, src = endpoint
-            span = set(ptr.get(("typeguid", typeguid), ())) & set(
-                ptr.get((elk, guid_compose(self.store.db_id, src)), ())
-            )
-            if not span:
-                return None
-            sub_freeze = "vip:{}-{}:{}+{}->{}".format(
-                min(span), max(span) + 1, elk[0], typeguid, src
-            )
-        elif typeguid is not None or endpoint is not None:
-            elk, src = (
-                ("typeguid", guid_serial(typeguid))
-                if typeguid is not None
-                else endpoint
-            )
-            span = ptr.get(
-                (elk, guid_compose(self.store.db_id, src)), ()
-            )
-            if not span:
-                return None
-            sub_freeze = "gmap:{}-{}:{}->{}".format(
-                min(span), max(span) + 1, elk[0], src
-            )
-        else:
-            return None
-        return "fixed-isa:{}{}-{}:{}<-({})[hint:0]".format(
-            t, ids[0], ids[-1] + 1, lk[0], sub_freeze
-        )
-
-    def _linksto_masquerade_f(self, con, ids) -> Optional[str]:
-        """Driver mirror of Compiler._linksto_masquerade (fixed sets
-        from iam expansions keep linksto provenance past 7 elements;
-        graphd-iterator-linksto.c:3573-3609, cursor fuzz seed 2354)."""
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or any(con.links.values()) or con.next
-            or con.prev or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        kind, lk = sub.linkage or (None, None)
-        if kind != "iam" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        if (
-            sub.subs or sub.or_chains or sub.type_strcons
-            or any(sub.links.values()) or sub.guid or sub.next
-            or sub.prev or sub.timestamps
-        ):
-            return None
-        hm = self._hmap_cursor_source_f(sub)
-        if hm is None:
-            return None
-        from graphd_spark.freeze import hmap_set_str
-
-        tname, key, hlo, hhi, _src = hm
-        # LOW is the linksto iterator's low = the sub bin's low + 1
-        # (a pointer's id always exceeds its target's in the
-        # append-only log; graphd-iterator-linksto.c:3343) — NOT the
-        # expansion's first id, which merely coincided in the round-7
-        # probes (cursor fuzz seed 3343)
-        return "fixed-linksto:+{}:{}->({})".format(
-            hlo + 1, lk[0], hmap_set_str(tname, key, hlo, hhi),
-        )
-
-    def _linksto_expansion_ids_f(self, con) -> Optional[list]:
+    def _linksto_expansion_ids(self, con) -> Optional[list]:
         """RAW candidate set of an IAM-form value/name-bin expansion:
         every pointer whose linkage hits the sub's NORM-HASH bucket —
         hash-collision false positives included, exactly the set the
         reference's linksto pre-evaluation materializes (probed:
         sortcursor fuzz seed 1402, where three bucket collisions the
         checks later reject still occupy frozen positions)."""
-        if len(con.subs) != 1 or con.or_chains:
+        ls = freeze._lone_sub(con, "iam")
+        if ls is None:
             return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or any(con.links.values()) or con.next
-            or con.prev or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        kind, lk = sub.linkage or (None, None)
-        if kind != "iam" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        if (
-            sub.subs or sub.or_chains or sub.type_strcons
-            or any(sub.links.values()) or sub.guid or sub.next
-            or sub.prev or sub.timestamps
-        ):
-            return None
-        hm = self._hmap_cursor_source_f(sub)
+        sub, lk = ls
+        hm = freeze._hmap_source(self, sub)
         if hm is None:
             return None
         st = self.store
         out: set = set()
-        for i in hm[4]:
+        for i in hm[5]:
             g = st.rows[i - st._base].guid
             out.update(st._ptr_ids.get((lk, g), ()))
         _hb = self._helper_high()
@@ -1982,104 +1291,7 @@ class FastReader:
             out = {i for i in out if i < _hb}
         return sorted(out) or None
 
-    def _isa_prefix_cursor_f(
-        self, con, cstate, page_prims, prior, count
-    ) -> Optional[str]:
-        """Frozen isa-iterator cursor for a word-prefix expansion too
-        large to materialize — driver mirror of
-        Compiler._isa_prefix_cursor (compiler.py:1425-1532;
-        graphd-iterator-isa.c isa_freeze)."""
-        delivered = prior + len(page_prims)
-        from graphd_spark.cursor import sign_cursor
-        from graphd_spark.freeze import isa_stats, resource_stamp
-        from graphd_spark.model import guid_serial
-
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        kind, lk = sub.linkage or (None, None)
-        if kind != "my" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        if (
-            sub.subs or sub.or_chains or sub.guid or sub.links
-            or sub.type_strcons or sub.next or sub.prev or sub.timestamps
-        ):
-            return None
-        prefix = _prefix_pattern_f(sub)
-        if prefix is None:
-            return None
-        ps = self._prefix_stats_f(prefix)
-        if ps is None:
-            return None
-        try:
-            _plan, sm = self._eval_set(sub, exists_only=True)
-        except GraphdError:
-            return None
-        seen: list[int] = []
-        trial_n = 0
-        for p, _r in sm[:64]:
-            if len(seen) >= 5:
-                break
-            trial_n += 1
-            tg = getattr(p, lk)
-            if tg is None:
-                continue
-            t = guid_serial(tg)
-            if t not in seen:
-                seen.append(t)
-        if len(seen) < 5:
-            return None  # would have become a fixed set
-        ist = isa_stats(
-            store_n=count,
-            sub_n=ps.n,
-            sub_next_cost=ps.next_cost,
-            sub_check_cost=ps.check_cost,
-            sub_low=ps.low,
-            sub_high=ps.high,
-            trial_n=trial_n,
-            sample_n=len(seen),
-        )
-        stats = (
-            cstate.echo
-            if cstate is not None and cstate.echo
-            else ist.stats_str()
-        )
-        o = delivered
-        last_id = page_prims[-1].id
-        sd_pos = 4 * max(5, o)
-        stamp = resource_stamp(
-            self.store, reuse=cstate.cache_stamp if cstate else None
-        )
-        pset = ps.set_str()
-        pst = ps.st_str()
-        body = (
-            "[o:{o}][n:{n}]isa:{ilo}-{ihi}:{L}<-({pset})"
-            "/{last}:~-[sp:{o}]/0:(-/{pst})-:{stats}:-:"
-            "[sd:({pset}/{sd}/{pst})@{stamp}]"
-        ).format(
-            o=o,
-            n=cstate.horizon if cstate and cstate.horizon else count,
-            ilo=ist.low,
-            ihi=ist.high,
-            L=lk[0],
-            pset=pset,
-            last=last_id,
-            pst=pst,
-            stats=stats,
-            sd=sd_pos,
-            stamp=stamp,
-        )
-        return sign_cursor(con, body, self.types.resolve)
-
-    def _or_union_ids_f(self, con) -> Optional[list]:
+    def _or_union_ids(self, con) -> Optional[list]:
         """Iterator-level pre-evaluated candidate ids of an or-chain
         ROOT (ascending, deduped): the union over branches of each
         branch's iterator — hmap bins for value=/name= equalities
@@ -2090,8 +1302,6 @@ class FastReader:
         None when the root shape or a branch clause falls outside the
         modeled family, or the union exceeds the materialization cap
         — callers keep their existing fallbacks."""
-        from graphd_spark.compiler import _FIXED_MATERIALIZE_MAX
-
         if len(con.or_chains) != 1 or con.subs:
             return None
         if con.sort is not None:
@@ -2248,421 +1458,6 @@ class FastReader:
         except Exception:
             return None
         return None
-
-    def _or_linksto_cursor_f(
-        self, con, cstate, page_prims, prior, count
-    ) -> Optional[str]:
-        """Frozen or-of-gmaps cursor for a plural links-to expansion —
-        driver mirror of Compiler._or_linksto_cursor
-        (compiler.py:1534-1571; graphd-iterator-linksto.c:3610-3655)."""
-        delivered = prior + len(page_prims)
-        from graphd_spark.cursor import sign_cursor
-        from graphd_spark.freeze import resource_stamp
-
-        if len(con.subs) != 1 or con.or_chains:
-            return None
-        if (
-            con.value_strcons or con.name_strcons or con.type_strcons
-            or con.guid or con.links or con.next or con.prev
-            or con.timestamps or con.dateline is not None
-        ):
-            return None
-        sub = con.subs[0]
-        kind, lk = sub.linkage or (None, None)
-        if kind != "iam" or lk not in (
-            "left", "right", "typeguid", "scope"
-        ):
-            return None
-        m = self._linksto_member_f(sub, lk)
-        if m is None:
-            return None
-        last_id = page_prims[-1].id
-        stamp = resource_stamp(
-            self.store, reuse=cstate.cache_stamp if cstate else None
-        )
-        body = "[o:{}][n:{}]{}/{}/@{}".format(
-            delivered,
-            cstate.horizon if cstate and cstate.horizon else count,
-            m["standalone"](m["lo"], m["hi"]),
-            last_id,
-            stamp,
-        )
-        return sign_cursor(con, body, self.types.resolve)
-
-    def _iterator_cursor(self, con, cstate, page_prims, matches,
-                         prior=0, backward=False, delivered=None):
-        """Scope wrapper for _iterator_cursor_inner: a refrozen
-        iterator regenerates its provenance (expansions, producer
-        positions, masquerades) within the bound it lives at — the
-        incoming [n:H] / the node's propagated bound — never the
-        grown live store (round 8: write-interleaved chains re-freeze
-        the original fixed-isa provenance verbatim)."""
-        prev = self._cur_high
-        bounds = [
-            b for b in (
-                prev,
-                cstate.horizon if cstate is not None else None,
-                self._node_high.get(id(con))
-                if self._node_high else None,
-            )
-            if b is not None
-        ]
-        if bounds:
-            self._cur_high = min(bounds)
-        try:
-            return self._iterator_cursor_inner(
-                con, cstate, page_prims, matches,
-                prior=prior, backward=backward, delivered=delivered,
-            )
-        finally:
-            self._cur_high = prev
-
-    def _iterator_cursor_inner(self, con, cstate, page_prims, matches,
-                         prior=0, backward=False, delivered=None):
-        """Reference-format frozen cursor for an unsorted root page —
-        full driver mirror of Compiler._iterator_cursor
-        (compiler.py:688-886): continuations, guid= fixed sets,
-        single-linkage gmaps, hmap bins, eq/glob/prefix-bin fixed
-        materialization, all-scan, and-iterator freezes, sub-gmap
-        collapses, isa masquerades, and isa/or-linksto expansion
-        freezes.  Returns None for a shape neither path freezes
-        (caller falls back to a position token)."""
-        import bisect
-
-        from graphd_spark.cursor import CursorState, freeze_cursor
-        from graphd_spark.model import guid_serial
-
-        if cstate is not None:
-            prior = cstate.offset
-        if delivered is None:
-            # [o:] counts consumed elements: prior pages + this page's
-            # start= skip + the delivered rows (callers pass the exact
-            # value; the default covers start=0 probes)
-            delivered = prior + len(page_prims)
-        prior = delivered - len(page_prims)
-        last_id = page_prims[-1].id
-        count = self.store.count()
-        if self.horizon is not None:
-            # asof pages clamp every frozen bound at the id horizon
-            # and omit [n:] entirely (probed: asof'd chains freeze
-            # all:0-H / hmap:0-H with no [n:] block)
-            count = min(count, self.horizon + 1)
-        if cstate is not None and cstate.horizon is not None:
-            # a resumed chain re-freezes [n:] and every bound at ITS
-            # frozen horizon, not the grown store count (round 8:
-            # write-interleaved chains re-freeze [n:H] verbatim)
-            count = min(count, cstate.horizon)
-        _rb = self._node_high.get(id(con)) if self._node_high else None
-        if _rb is not None:
-            count = min(count, _rb)
-        if cstate is not None and cstate.form in (
-            "all", "without", "fixed", "gmap"
-        ):
-            if cstate.backward:
-                # backward iterators freeze pos = PRODUCER elements
-                # consumed, rejections included (mirror compiler)
-                if cstate.form == "fixed":
-                    try:
-                        cstate.pos = len(
-                            cstate.fixed_ids
-                        ) - cstate.fixed_ids.index(last_id)
-                    except ValueError:
-                        return None
-                elif cstate.form == "gmap":
-                    idx = self._gmap_index_ids(cstate.lk, cstate.src)
-                    if last_id not in idx:
-                        return None
-                    cstate.pos = len(idx) - idx.index(last_id)
-                else:  # all / without: dense id span
-                    cstate.pos = (
-                        cstate.high
-                        if cstate.high is not None
-                        else count
-                    ) - last_id
-            elif cstate.form == "fixed":
-                try:
-                    cstate.pos = cstate.fixed_ids.index(last_id) + 1
-                except ValueError:
-                    return None
-            elif cstate.form == "gmap":
-                _lo, _hi, pos = self._gmap_stats_f(
-                    cstate.lk, cstate.src, last_id
-                )
-                if pos is None:
-                    return None
-                cstate.pos = pos
-            else:
-                cstate.pos = last_id + 1
-            n = cstate.horizon if cstate.horizon is not None else count
-            return freeze_cursor(
-                con, cstate, delivered, n, self.types.resolve
-            )
-        gc = con.guid[0] if len(con.guid) == 1 else None
-        if (
-            gc is not None
-            and gc.op == "="
-            and gc.guids
-            and all(g is not None for g in gc.guids)
-            and not con.subs
-            and not con.or_chains
-        ):
-            ids = [guid_serial(g) for g in gc.guids]
-            try:
-                pos = (
-                    len(ids) - ids.index(last_id)
-                    if backward
-                    else ids.index(last_id) + 1
-                )
-            except ValueError:
-                return None
-            st = CursorState(
-                form="fixed", fixed_ids=ids, pos=pos, backward=backward
-            )
-            return freeze_cursor(
-                con, st, delivered, count,
-                self.types.resolve,
-            )
-        if not con.subs and not con.or_chains:
-            gm = self._gmap_source_f(con)
-            if gm is not None:
-                lk, src = gm
-                low, high, pos = self._gmap_stats_f(lk, src, last_id)
-                if low is None:
-                    return None
-                if backward:
-                    total = self._gmap_stats_f(lk, src, 1 << 62)[2]
-                    pos = total - pos + 1
-                st = CursorState(
-                    form="gmap", low=low, high=high, pos=pos, lk=lk,
-                    src=src, backward=backward,
-                )
-                n = (
-                    count
-                    if backward
-                    else (high if last_id == high - 1 else count)
-                )
-                return freeze_cursor(
-                    con, st, delivered, n,
-                    self.types.resolve,
-                )
-            hm = self._hmap_cursor_source_f(con)
-            if hm is not None:
-                from graphd_spark.cursor import sign_cursor
-                from graphd_spark.freeze import hmap_set_str
-
-                tname, key, lo, hi, bin_ids = hm
-                if backward:
-                    # consumed from the top of the bin
-                    pos = len(bin_ids) - bisect.bisect_left(
-                        bin_ids, last_id
-                    )
-                    n_echo = count
-                else:
-                    pos = bisect.bisect_right(bin_ids, last_id)
-                    n_echo = hi if last_id == bin_ids[-1] else count
-                hset = hmap_set_str(tname, key, lo, hi)
-                if backward:
-                    hset = hset.replace("hmap:", "hmap:~", 1)
-                body = "[o:{}][n:{}]{}/{}/".format(
-                    delivered, n_echo, hset, pos,
-                )
-                return sign_cursor(con, body, self.types.resolve)
-            if any(
-                sc.op in ("=", "~=")
-                and any(v is not None for v in sc.values)
-                for sc in (*con.value_strcons, *con.name_strcons)
-            ):
-                # positive value/name matches drive an hmap/prefix
-                # iterator; small candidate sets materialize as a
-                # fixed iterator (mirror compiler.py:795-831) — a
-                # bare word-prefix root materializes its PREFIX BIN
-                # contents, hash false positives included
-                prefix = _prefix_pattern_f(con)
-                if prefix is not None and not (
-                    con.guid or con.links or con.type_strcons
-                    or con.next or con.prev or con.timestamps
-                ):
-                    ids = self._prefix_bin_ids_f(prefix)
-                else:
-                    ids = sorted(p.id for p, _r in matches)[
-                        : _FIXED_MATERIALIZE_MAX + 1
-                    ]
-                if len(ids) > _FIXED_MATERIALIZE_MAX or (
-                    last_id not in ids
-                ):
-                    return None
-                st = CursorState(
-                    form="fixed", fixed_ids=ids,
-                    pos=(
-                        len(ids) - ids.index(last_id)
-                        if backward
-                        else ids.index(last_id) + 1
-                    ),
-                    backward=backward,
-                )
-                return freeze_cursor(
-                    con, st, delivered, count,
-                    self.types.resolve,
-                )
-            # multi-index roots (two+ direct linkage equalities)
-            # intersect like sub-driven ands (mirror of the compiler)
-            and_cursor = self._and_cursor_f(
-                con, cstate, page_prims, prior, count,
-                backward=backward,
-            )
-            if and_cursor is not None:
-                return and_cursor
-            st = CursorState(
-                form="all", low=0, high=count,
-                pos=(count - last_id) if backward else last_id + 1,
-                backward=backward,
-            )
-            return freeze_cursor(
-                con, st, delivered, count,
-                self.types.resolve,
-            )
-        if backward:
-            # backward multi-index roots (mirror of the compiler's
-            # backward block): pre-evaluated small sets freeze
-            # fixed:~; bigger intersections the backward and:- form;
-            # isa:~ expansion freezes stay unmodeled
-            members = self._and_members_ext_f(con)
-            if members is not None and len(members) >= 2:
-                pre = self._preevaluate_small_set_f(
-                    con, members, page_prims, prior, count,
-                    backward=True,
-                )
-                if pre is not None:
-                    return pre
-                return self._and_cursor_f(
-                    con, cstate, page_prims, prior, count,
-                    backward=True,
-                )
-            sub_gmap = self._sub_gmap_cursor_f(
-                con, page_prims, prior, count, last_id, backward=True
-            )
-            if sub_gmap is not None:
-                return sub_gmap
-            cap = self._isa_materialize_cap_f(con)
-            if cap == 0:
-                return None
-            ids = self._isa_expansion_ids_f(con) or sorted(
-                p.id for p, _r in matches
-            )[: cap + 1]
-            if len(ids) > cap or last_id not in ids:
-                return None
-            # backward masquerade: /POS/~ tail; the inner fixed-isa:~
-            # marker follows the CACHED resource's direction (mirror
-            # compiler.py backward materialize site)
-            masq = (
-                self._isa_masquerade_f(con, ids)
-                if len(ids) > 5
-                else None
-            )
-            if masq is not None:
-                from graphd_spark.freeze import masq_resource
-
-                st = CursorState(
-                    form="fixed_masq", masq=masq,
-                    pos=len(ids) - ids.index(last_id), backward=True,
-                )
-                if len(ids) >= 10:  # GRAPHD_ITERATOR_FIXED_CACHE_MIN
-                    stamp, res_bwd = masq_resource(
-                        self.store, masq, True,
-                        reuse=cstate.cache_stamp if cstate else None,
-                    )
-                    st.cache_stamp = stamp
-                else:
-                    st.fixed_ids = ids
-                    res_bwd = True  # inline: the running direction
-                if res_bwd:
-                    st.masq = masq.replace("fixed-isa:", "fixed-isa:~", 1)
-                return freeze_cursor(
-                    con, st, delivered, count, self.types.resolve
-                )
-            st = CursorState(
-                form="fixed", fixed_ids=ids,
-                pos=len(ids) - ids.index(last_id), backward=True,
-            )
-            return freeze_cursor(
-                con, st, delivered, count,
-                self.types.resolve,
-            )
-        and_cursor = self._and_cursor_f(
-            con, cstate, page_prims, prior, count
-        )
-        if and_cursor is not None:
-            return and_cursor
-        sub_gmap = self._sub_gmap_cursor_f(
-            con, page_prims, prior, count, last_id
-        )
-        if sub_gmap is not None:
-            return sub_gmap
-        # or-chain roots freeze the ITERATOR-LEVEL union of the
-        # branch candidate sets as a plain fixed iterator — bin
-        # members and linksto expansions, acceptance-rejected ids
-        # included (round 9, cursor seeds 4160/4209: the accepted-set
-        # fallback froze fixed:4 where the reference emits fixed:11)
-        or_ids = self._or_union_ids_f(con)
-        if or_ids is not None and last_id in or_ids:
-            st = CursorState(
-                form="fixed", fixed_ids=or_ids,
-                pos=or_ids.index(last_id) + 1,
-            )
-            return freeze_cursor(
-                con, st, delivered, count, self.types.resolve
-            )
-        # linkage-driven roots: small candidate sets materialize into
-        # a fixed iterator; larger ones keep their isa/linksto shape
-        # (mirror compiler.py:847-886)
-        cap = self._isa_materialize_cap_f(con)
-        ids = (
-            self._isa_expansion_ids_f(con)
-            or self._linksto_expansion_ids_f(con)
-            or sorted(p.id for p, _r in matches)[: cap + 1]
-            if cap
-            else []
-        )
-        if not cap or len(ids) > cap or last_id not in ids:
-            return self._isa_prefix_cursor_f(
-                con, cstate, page_prims, prior, count
-            ) or self._or_linksto_cursor_f(
-                con, cstate, page_prims, prior, count
-            )
-        masq = self._isa_masquerade_f(con, ids) if len(ids) > 5 else None
-        if masq is None and len(ids) > 7:
-            # iam-expansion fixed sets keep linksto provenance past
-            # 7 elements (cursor fuzz seed 2354)
-            masq = self._linksto_masquerade_f(con, ids)
-        if masq is not None:
-            from graphd_spark.freeze import masq_resource
-
-            st = CursorState(
-                form="fixed_masq", masq=masq,
-                pos=ids.index(last_id) + 1,
-            )
-            if len(ids) >= 10:  # GRAPHD_ITERATOR_FIXED_CACHE_MIN
-                stamp, res_bwd = masq_resource(
-                    self.store, masq, False,
-                    reuse=cstate.cache_stamp if cstate else None,
-                )
-                st.cache_stamp = stamp
-                if res_bwd:
-                    st.masq = masq.replace(
-                        "fixed-isa:", "fixed-isa:~", 1
-                    )
-            else:
-                st.fixed_ids = ids
-            return freeze_cursor(
-                con, st, delivered, count,
-                self.types.resolve,
-            )
-        st = CursorState(
-            form="fixed", fixed_ids=ids, pos=ids.index(last_id) + 1
-        )
-        return freeze_cursor(
-            con, st, delivered, count, self.types.resolve
-        )
 
     def _number_sort_drop(self, con: Constraint, matches):
         """Mirror of the NUMBERS-binset sort-root drop in Compiler.run:
@@ -3671,9 +2466,9 @@ class FastReader:
             # (probed: my-subs and iam subs both pin element+1; the
             # prefix-bin bound outranks the iam parent-id pin —
             # cursor fuzz seed 2120's root shape)
-            pfx = _prefix_pattern_f(sub)
+            pfx = _prefix_pattern(sub)
             if pfx is not None:
-                b = self._prefix_bin_ids_f(pfx)
+                b = self._prefix_bin_ids(pfx)
                 if len(b) == 1:
                     hb = b[0] + 1
                     ph = hb if ph is None else min(ph, hb)
@@ -4060,7 +2855,7 @@ class FastReader:
             span = [
                 i
                 for i in self.store._ptr_ids.get(
-                    (_GMAP_NAMES[cst.lk], g), ()
+                    (GMAP_COLS[cst.lk], g), ()
                 )
                 if i >= (cst.low or 0)
                 and (cst.high is None or i < cst.high)
@@ -4106,7 +2901,7 @@ class FastReader:
             )
             checks.append(lambda c: c.id in allowed)
         elif cstate.form == "vip":
-            lkname = _GMAP_NAMES[cstate.lk]
+            lkname = GMAP_COLS[cstate.lk]
             src_g = guid_compose(self.store.db_id, cstate.src)
             tg = cstate.tg
             pos = cstate.pos
@@ -4124,7 +2919,7 @@ class FastReader:
             lo = max(cstate.pos, cstate.low)
             checks.append(lambda c: c.id >= lo)
         elif cstate.form == "gmap":
-            lkname = _GMAP_NAMES[cstate.lk]
+            lkname = GMAP_COLS[cstate.lk]
             src_g = guid_compose(self.store.db_id, cstate.src)
             checks.append(lambda c: getattr(c, lkname) == src_g)
             if cstate.pos:
@@ -4149,7 +2944,7 @@ class FastReader:
         g = guid_compose(self.store.db_id, cstate.src)
         ids = sorted(
             i for i in self.store._ptr_ids.get(
-                (_GMAP_NAMES[cstate.lk], g), ()
+                (GMAP_COLS[cstate.lk], g), ()
             )
             if (self.horizon is None or i <= self.horizon)
             and i >= cstate.low
@@ -4596,7 +3391,7 @@ class FastReader:
             ids = [
                 i
                 for i in self.store._ptr_ids.get(
-                    (_GMAP_NAMES[cst.lk], g), ()
+                    (GMAP_COLS[cst.lk], g), ()
                 )
                 if i >= (cst.low or 0)
                 and (cst.high is None or i < cst.high)
@@ -5234,8 +4029,8 @@ class FastReader:
 
     def _guid_include_ids(self, con: Constraint) -> Optional[set]:
         """Resolved id set when guid constraints pin an include set
-        (mirror of _guid_col_pred's include algebra, compiler.py:2430+;
-        None = no pinning include set)."""
+        (Compiler._guid_col_pred's include algebra; None = no pinning
+        include set)."""
         include = None
         for gc in con.guid:
             if gc.op == "=":
@@ -5287,7 +4082,7 @@ class FastReader:
                          in_branch: bool = False) -> bool:
         if not self._iter_intrinsic(p, con, in_branch=in_branch):
             return False
-        # generation: default newest=0 (compiler.py:2340-2352)
+        # generation: default newest=0 (Compiler._intrinsic_pred)
         dist = self._maxgen(p) - p.generation
         if con.gens:
             for g in con.gens:
@@ -5563,7 +4358,7 @@ class FastReader:
         return out
 
     def _guid_pred(self, val: Optional[str], gcs) -> bool:
-        """Mirror of _guid_col_pred's set algebra (compiler.py:2430+)."""
+        """Compiler._guid_col_pred's set algebra."""
         include = None
         standalone = []
         excludes = []
@@ -5605,7 +4400,7 @@ class FastReader:
         return True
 
     def _next_pred(self, p: Primitive, gc) -> bool:
-        """Mirror of _next_cond (compiler.py:2380+)."""
+        """Compiler._next_cond."""
         has_null = any(g is None for g in gc.guids)
         prevs = []
         for g in gc.guids:
@@ -5634,7 +4429,7 @@ class FastReader:
     def _merged_strcons(self, scs, comparator):
         """Shared with the compiler: _merged_strcons is pure logic —
         re-mirrored here to avoid importing a bound method (the logic
-        is identical; compiler.py:2392-2430)."""
+        is identical)."""
         from graphd_spark.comparators import value_eq
 
         eqs = [sc for sc in scs if sc.op == "="]

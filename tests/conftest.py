@@ -37,3 +37,35 @@ def duck():
             )
     yield con
     con.close()
+
+
+_GOLDEN_SKIPS = pytest.StashKey[int]()
+
+
+def pytest_collection_modifyitems(config, items):
+    """Skip the reference-corpus goldens (test_golden.py and the
+    test_golden_parquet_* cases) when the corpus is absent, the rule
+    test_differential.py applies to the reference binary."""
+    from golden import GOLDEN_DIR
+
+    if os.path.isdir(GOLDEN_DIR):
+        return
+    skip = pytest.mark.skip(reason=f"reference corpus {GOLDEN_DIR} absent")
+    n = 0
+    for item in items:
+        if item.path.name == "test_golden.py" or item.name.startswith(
+            "test_golden_parquet_"
+        ):
+            item.add_marker(skip)
+            n += 1
+    config.stash[_GOLDEN_SKIPS] = n
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    n = config.stash.get(_GOLDEN_SKIPS, 0)
+    if n:
+        from golden import GOLDEN_DIR
+
+        terminalreporter.write_line(
+            f"{n} golden tests skipped: reference corpus {GOLDEN_DIR} absent"
+        )

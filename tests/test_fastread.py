@@ -665,6 +665,53 @@ def test_two_path_or_sweep(spark, seed):
     _two_path_pages(spark, gen_or_script(seed))
 
 
+def test_two_path_count_min_probe_chains(spark):
+    """A resumed pagesize=0 root chain freezes the cumulative [o:]: the
+    thawed offset plus the count-min probe's consumption, on both
+    paths (the compiler used to restart from the resumed offset and
+    froze [o:1] on every hop), for the all-scan, an hmap bin, a
+    countlimit and a skipped descending sort."""
+    lines = [f'write (name="x" value="v{i}")' for i in range(8)]
+    _two_path_pages(spark, lines, [
+        "read (any pagesize=0 result=(cursor count))",
+        "read (any pagesize=0 countlimit=3 result=(cursor count))",
+        'read (name="x" pagesize=0 result=(cursor count))',
+        "read (any sort=(-timestamp) pagesize=0 result=(cursor count))",
+    ])
+
+
+def test_two_path_large_preevaluated_intersection(spark):
+    """The and pre-evaluation is bounded by its cost model alone: 150
+    shared ids still freeze one fixed set, forward and backward, on
+    both paths (the compiler kept a separate 100-id cap and froze the
+    and:# form)."""
+    a = "00000012400034568000000000000000"
+    b = "00000012400034568000000000000001"
+    lines = ['write (value="a")', 'write (value="b")'] + [
+        f'write (value="{i}" left={a} right={b})' for i in range(150)
+    ]
+    _two_path_pages(spark, lines, [
+        f"read (left={a} right={b} pagesize=2 result=(cursor (value)))",
+        f"read (left={a} right={b} sort=(-timestamp) pagesize=2 "
+        "result=(cursor (value)))",
+    ])
+
+
+def test_two_path_or_union_keeps_rejected_candidates(spark):
+    """An or-chain root freezes the iterator-level union of its branch
+    bins — candidates the octet comparator later rejects ("12.0",
+    "+12" share the "12" bin) included — on both paths (the compiler
+    froze the accepted set)."""
+    lines = [
+        f'write (name="n" value="{v}")'
+        for v in ("12", "12.0", "+12", "y", "y")
+    ]
+    _two_path_pages(spark, lines, [
+        'read ({value="12" comparator="octet"} | {value="y"} pagesize=1 '
+        "result=(cursor (value)))",
+    ])
+
+
 def test_vrange_value_beyond_rules():
     """Unit pins for the comparator value_in_range port that drives
     the sorter's window exit (graphd-comparator-default.c:2031-2196,

@@ -226,6 +226,7 @@ def test_isa_expansion_gate_no_job(monkeypatch):
     """An over-budget hmap bin never collects: the bin count is known
     driver-side (hm[4]) and the gate fires before any Spark access —
     store.to_df raising proves no job was even planned."""
+    from graphd_spark import freeze
     from graphd_spark.compiler import Compiler, _ISA_SMALL_SET_MAX
 
     c = object.__new__(Compiler)
@@ -239,7 +240,7 @@ def test_isa_expansion_gate_no_job(monkeypatch):
     c.asof = None
     hm = ("value", "k", 0, 10, _ISA_SMALL_SET_MAX + 1, None)
     monkeypatch.setattr(
-        Compiler, "_isa_sub_hmap", lambda self, con: (object(), hm)
+        freeze, "_isa_sub_hmap", lambda ev, con: (object(), hm)
     )
     assert c._isa_expansion_ids(object()) is None
 
