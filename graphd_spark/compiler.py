@@ -31,7 +31,7 @@ horizons.
 
 from __future__ import annotations
 
-from contextlib import nullcontext
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field as dfield
 from typing import Optional
 
@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from graphd_spark.comparators import (
+    _ascii_lower,
     decode_number,
     fuzzy_key,
     literal_key,
@@ -69,6 +70,7 @@ from graphd_spark.freeze import (
     GMAP_COLS,
     _FIXED_MATERIALIZE_MAX,
     _ISA_SMALL_SET_MAX,
+    Thaw,
 )
 from graphd_spark.model import guid_serial, su_encode, ts_from_string
 from graphd_spark.sortsim import (
@@ -362,17 +364,6 @@ def effective_sub_cursor_mode(sub) -> Optional[str]:
     return mode
 
 
-def sub_sort_backward(sub) -> bool:
-    """True when a modeled sorted sub runs its producer backward
-    (descending timestamp/guid first key -> the '~' iterator
-    freezes)."""
-    return bool(
-        sub.sort
-        and sub.sort[0].pattern.kind in ("timestamp", "guid")
-        and sub.sort[0].descending
-    )
-
-
 @dataclass
 class SubPlan:
     mode: str  # 'anti' | 'semi' | 'skip' | 'agg'
@@ -635,130 +626,16 @@ class Compiler:
         cstate, resume, horizon, resume_guid, sort_body, sort_o = (
             thaw_envelope(con, self.types.resolve, self.asof is not None)
         )
-        masq_raw = False
-        if cstate is not None:
-            # a modeled iterator freeze (all / fixed / without):
-            # resume by iterator position, not offset (ref
-            # pdb-iterator-all.c, graphd-iterator-fixed.c)
-            if cstate.form in ("all", "without"):
-                if cstate.backward:
-                    # backward scan: skip the first `pos` elements of
-                    # the DESCENDING id range (ids are dense in an
-                    # all-span, so the boundary is high - pos)
-                    df = df.filter(
-                        (_c("id") >= cstate.low)
-                        & (_c("id") < cstate.high - cstate.pos)
-                    )
-                else:
-                    df = df.filter(
-                        _c("id") >= max(cstate.pos, cstate.low)
-                    )
-                    if cstate.high is not None:
-                        df = df.filter(_c("id") < cstate.high)
-            elif cstate.form == "fixed":
-                allowed = (
-                    cstate.fixed_ids[: len(cstate.fixed_ids) - cstate.pos]
-                    if cstate.backward
-                    else cstate.fixed_ids[cstate.pos:]
-                )
-                df = df.filter(_c("id").isin(allowed))
-            elif cstate.form == "gmap":
-                # resume past the first `pos` elements of the linkage
-                # index (index order == id order; ref
-                # pdb-iterator-gmap.c it_gmap_offset); backward scans
-                # consume from the top of the index
-                if cstate.high is not None:
-                    df = df.filter(_c("id") < cstate.high)
-                if cstate.pos:
-                    b = self._gmap_pos_boundary(cstate)
-                    if b is None:
-                        df = df.filter(_l(False))
-                    elif cstate.backward:
-                        df = df.filter(_c("id") < b)
-                    else:
-                        df = df.filter(_c("id") > b)
-            elif cstate.form == "hmap":
-                # skip the bin's first `pos` elements (bin order ==
-                # id order; pdb-iterator-hmap.c it_hmap_offset).  The
-                # thawed key is the STORED form — number bins match it
-                # against value_num directly (the scientific notation
-                # is the reference's own, not re-decodable)
-                if cstate.pos:
-                    if cstate.lk == "value":
-                        # the thawed key IS the stored normalization
-                        # (case preserved) — only case-fold it;
-                        # re-normalizing is NOT idempotent ("12e1"
-                        # re-parses as the number 120 -> "12e2")
-                        from graphd_spark.comparators import (
-                            _ascii_lower as _alow,
-                        )
-
-                        flt = (
-                            _c("value_norm")
-                            == su_encode(_alow(cstate.masq))
-                        )
-                    else:
-                        flt = (
-                            F.lower(_c("name"))
-                            == cstate.masq.lower()
-                        )
-                    pool = self._raw_df().filter(flt)
-                    if cstate.backward:
-                        b = (
-                            pool.orderBy(_c("id").desc())
-                            .limit(cstate.pos)
-                            .agg(F.min("id").alias("b"))
-                            .head()
-                        )
-                        df = (
-                            df.filter(_c("id") < int(b["b"]))
-                            if b is not None and b["b"] is not None
-                            else df.filter(_l(False))
-                        )
-                    else:
-                        b = (
-                            pool.orderBy("id")
-                            .limit(cstate.pos)
-                            .agg(F.max("id").alias("b"))
-                            .head()
-                        )
-                        df = (
-                            df.filter(_c("id") > int(b["b"]))
-                            if b is not None and b["b"] is not None
-                            else df.filter(_l(False))
-                        )
-            elif cstate.form == "fixed_masq":
-                # a masqueraded fixed set repositions in its RAW id
-                # array (bin false positives and rejected targets
-                # counted; graphd-iterator-fixed.c fixed_iterator_next;
-                # test/unit/colors3.sh) — inline ids ride the cursor,
-                # cached states regenerate from the provenance.  With
-                # no raw set recoverable, position == offset into the
-                # compiled result
-                raw = cstate.fixed_ids or self._isa_expansion_ids(con)
-                if raw:
-                    allowed = (
-                        raw[: len(raw) - cstate.pos]
-                        if cstate.backward
-                        else raw[cstate.pos:]
-                    )
-                    df = df.filter(_c("id").isin(allowed))
-                    masq_raw = True
-                    resume = 0
-            elif cstate.form in ("and_it", "or_it"):
-                # and/or iterators resume after their last delivered
-                # candidate id — a state-cache miss replays the scan
-                # and skips until the last known id floats past
-                # (graphd-iterator-and-freeze.c thaw,
-                # graphd-iterator-or.c:3009; tests slip, isa)
-                if cstate.tail == "$":
-                    df = df.filter(_l(False))
-                elif cstate.backward:
-                    df = df.filter(_c("id") < cstate.pos)
-                else:
-                    df = df.filter(_c("id") > cstate.pos)
-        if horizon is not None:
-            df = df.filter(_c("id") < horizon)
+        # a modeled iterator freeze resumes by iterator position, not
+        # offset; a masqueraded fixed set by offset unless its raw
+        # array is recovered (freeze.thaw)
+        t = freeze.thaw(self, con, cstate) if cstate else Thaw(hi=horizon)
+        masq_raw = cstate is not None and (
+            cstate.form == "fixed_masq" and t.ids is not None
+        )
+        if masq_raw:
+            resume = 0
+        df = self._restrict(df, t)
         order = self._sort_exprs(con, plan)
         skipped = backward = simulated = False
         if con.sort:
@@ -1309,7 +1186,7 @@ class Compiler:
             return {r["id"] for r in df.select("id").collect()}
         return None
 
-    def _isa_expansion_ids(self, con) -> Optional[list]:
+    def _isa_expansion_ids(self, con, sh=None) -> Optional[list]:
         """RAW materialized target set of an hmap-sub expansion: every
         bin member's linkage target, deduped and sorted — INCLUDING
         bin false positives whose value only bin-merges with the
@@ -1318,8 +1195,8 @@ class Compiler:
         this raw set, so the frozen bounds and /POS/ count produced-
         then-rejected candidates too (probed: a "100" write sharing
         the "1e2" bin shifts the bounds and offsets every position
-        by one)."""
-        sh = freeze._isa_sub_hmap(self, con)
+        by one).  ``sh``: the root's freeze._isa_sub_hmap, when known."""
+        sh = sh or freeze._isa_sub_hmap(self, con)
         if sh is None:
             return None
         sub, hm = sh
@@ -1366,32 +1243,58 @@ class Compiler:
             return None, None, None
         return int(row["lo"]), int(row["hi"]) + 1, int(row["pos"] or 0)
 
-    def _gmap_pos_boundary(self, cstate) -> Optional[int]:
-        """Id of the cstate.pos-th index element in scan order (the
-        resume boundary): ascending for forward scans, from the top
-        of the index for backward ones."""
-        idx = self._gmap_index_df(cstate.lk, cstate.src).filter(
-            _c("id") >= cstate.low
-        )
-        if cstate.backward:
-            if cstate.high is not None:
-                idx = idx.filter(_c("id") < cstate.high)
-            row = (
-                idx.orderBy(_c("id").desc())
-                .limit(cstate.pos)
-                .agg(F.min("id").alias("b"))
-                .head()
+    @contextmanager
+    def _thaw_scope(self, horizon):
+        """freeze.thaw's probes see the log at the asof horizon and the
+        thawed cursor's own [n:H] (_raw_df), not the root chain's."""
+        prev, self._chain_h = self._chain_h, horizon
+        try:
+            yield
+        finally:
+            self._chain_h = prev
+
+    def _thaw_boundary(self, cstate) -> Optional[int]:
+        """freeze.thaw's probe: the id of the cstate.pos-th element of
+        the thawed gmap/hmap index within [low, high), in scan order
+        (from the top for backward scans), or None."""
+        if cstate.form == "gmap":
+            idx = self._gmap_index_df(cstate.lk, cstate.src)
+        elif cstate.lk == "value":
+            # the thawed key IS the stored normalization (case
+            # preserved) — only case-fold it; re-normalizing is NOT
+            # idempotent ("12e1" re-parses as the number 120 -> "12e2")
+            idx = self._raw_df().filter(
+                _c("value_norm") == su_encode(_ascii_lower(cstate.masq))
             )
         else:
-            row = (
-                idx.orderBy("id")
-                .limit(cstate.pos)
-                .agg(F.max("id").alias("b"))
-                .head()
+            idx = self._raw_df().filter(
+                F.lower(_c("name")) == cstate.masq.lower()
             )
-        if row is None or row["b"] is None:
-            return None
-        return int(row["b"])
+        idx = idx.filter(_c("id") >= cstate.low)
+        if cstate.high is not None:
+            idx = idx.filter(_c("id") < cstate.high)
+        order, pick = (
+            (_c("id").desc(), F.min) if cstate.backward
+            else (_c("id").asc(), F.max)
+        )
+        row = (
+            idx.orderBy(order).limit(cstate.pos)
+            .agg(pick("id").alias("b")).head()
+        )
+        return None if row is None or row["b"] is None else int(row["b"])
+
+    @staticmethod
+    def _restrict(df, t: Thaw):
+        """``df`` narrowed to freeze.thaw's candidate restriction."""
+        if t.ids is not None:
+            df = df.filter(_c("id").isin(list(t.ids)) if t.ids else _l(False))
+        if t.lo:
+            df = df.filter(_c("id") >= t.lo)
+        if t.hi is not None:
+            df = df.filter(_c("id") < t.hi)
+        for col, v in t.eq:
+            df = df.filter(_c(col) == v)
+        return df
 
     def _key_resume_offset(self, df, con, plan, guid: str,
                            sort_body=None):
@@ -1461,91 +1364,14 @@ class Compiler:
         return n_before + (1 if present else 0), df
 
     def _frozen_sort_tuple(self, con, plan, body):
-        """Mirror of FastReader._frozen_sort_grid in the Spark-path
-        key domain (_sort_key_col: binary comparator keys, id ints,
-        guid strings): the cursor boundary's sort-key tuple
-        reconstructed from the FROZEN serialized payload, for resumes
-        whose boundary element was tombstoned or versioned away
-        between pages (round-9 writeinto family — the reference
-        repositions by comparing the frozen keys, graphd-sort.c
-        graphd_sort_cursor_set; restarting re-delivers page 1).
-        Returns a tuple aligned with _sort_components (id tiebreak
-        last) or None to fall back to the restart."""
-        if body is None or not con.sort:
-            return None
-        from graphd_spark.fastread import _deserialize_sort_values
-        from graphd_spark.model import ts_from_string
-
-        vals, bid = _deserialize_sort_values(body)
-        if vals is None:
-            return None
-        fail = object()
-
-        def conv(sk, comp, tag, raw):
-            if tag == "null":
-                return None
-            k = sk.pattern.kind
-            if k in ("value", "name"):
-                if tag not in ("s", "a"):
-                    return fail
-                return (
-                    fuzzy_key(raw)
-                    if k == "value" and comp == "default"
-                    else literal_key(raw, comp)
-                )
-            if k == "guid":
-                return guid_serial(raw) if tag == "g" else fail
-            if k == "timestamp":
-                if tag != "t":
-                    return fail
-                try:
-                    return ts_from_string(raw)
-                except Exception:
-                    return fail
-            if k in ("generation", "datatype"):
-                try:
-                    return (
-                        int(raw) if tag in ("#", "d") else fail
-                    )
-                except ValueError:
-                    return fail
-            if k in ("live", "archival"):
-                return raw == "1" if tag == "b" else fail
-            if k in ("left", "right", "typeguid", "scope",
-                     "previous", "next", "type"):
-                return raw if tag == "g" else fail
-            if k == "variable":
-                if (
-                    plan.var_cols.get(sk.pattern.var) is not None
-                    and plan.var_kind_cols.get(sk.pattern.var) is None
-                    and plan.var_kinds.get(sk.pattern.var)
-                    in ("value", "name", "type", "literal")
-                    and tag in ("s", "a")
-                ):
-                    return literal_key(raw, comp)
-                return fail
-            return fail
-
-        out = []
-        for i0, sk in enumerate(con.sort):
-            if i0 >= len(vals):
-                return None
-            comp = None
-            if con.sort_comparators and i0 < len(con.sort_comparators):
-                comp = con.sort_comparators[i0]
-            comp = resolve_comparator(comp or con.comparator or "default")
-            col = self._sort_key_col(sk.pattern, con, plan, comp)
-            if col is None:
-                continue
-            tag, raw = vals[i0]
-            kv = conv(sk, comp, tag, raw)
-            if kv is fail:
-                return None
-            out.append(kv)
-            if sk.pattern.kind == "guid":
-                break
-        out.append(bid)
-        return tuple(out)
+        """freeze.frozen_sort_tuple in the _sort_key_col key domain
+        (binary comparator keys, id ints, guid strings), aligned with
+        _sort_components (id tiebreak last)."""
+        return freeze.frozen_sort_tuple(
+            con, plan, body,
+            lambda pat, comp: self._sort_key_col(pat, con, plan, comp)
+            is not None,
+        )
 
     def _sortsim_run(self, con, plan, df, P_sim: int, resume_guid,
                      sort_body=None):
@@ -1882,11 +1708,11 @@ class Compiler:
 
     def _sub_cursor_setup(self, sub, sub_plan, child_df):
         """Subconstraint cursors (per-parent contents pagination, ref
-        graphd-read-set-cursor.c; test/unit/cursor6.sh): thaw a
-        cursor= resume into a candidate-set restriction, and when the
-        sub's result wants a cursor, build the per-parent iterator
-        context the shared assembler freezes from (see
-        sub_cursor_mode for the probed freeze family).
+        graphd-read-set-cursor.c; test/unit/cursor6.sh): narrow the
+        children to freeze.thaw_sub's restriction, and when the sub's
+        result wants a cursor, build the per-parent iterator context
+        the shared assembler freezes from (see sub_cursor_mode for the
+        probed freeze family).
 
         The per-parent index sets come from the store's in-memory
         index mirror via a FastReader helper, so both execution paths
@@ -1896,107 +1722,21 @@ class Compiler:
         accepted rather than raw producer elements, which only
         differs once candidates are rejected by the generational
         newest test (versioned children)."""
-        wants_cursor = sub.result is not None and any(
-            p.kind == "cursor" for p in sub.result.walk()
-        )
-        cstate = None
-        from graphd_spark.model import guid_compose
-
-        if sub.cursor is not None and sub.cursor != "null:":
-            from graphd_spark.cursor import BadCursor, parse_cursor
-
-            try:
-                cstate = parse_cursor(
-                    sub.cursor, sub, self.types.resolve,
-                    asof=self.asof is not None,
-                )
-            except BadCursor as e:
-                raise GraphdError("BADCURSOR", e.message)
-            if cstate is not None:
-                if cstate.horizon is not None:
-                    child_df = child_df.filter(
-                        _c("id") < cstate.horizon
-                    )
-                if cstate.form == "fixed":
-                    ids = cstate.fixed_ids
-                    allowed = (
-                        ids[: len(ids) - cstate.pos]
-                        if cstate.backward
-                        else ids[cstate.pos:]
-                    )
-                    child_df = child_df.filter(
-                        _c("id").isin(allowed)
-                    )
-                elif cstate.form == "vip":
-                    # a thawed vip pins the sub to that parent's
-                    # (endpoint, typeguid) index past the consumed
-                    # boundary id (probed: other parents' mandatory
-                    # subs then yield nothing and drop them)
-                    lk_col = GMAP_COLS[cstate.lk]
-                    child_df = child_df.filter(
-                        (_c(lk_col) == guid_compose(
-                            self.store.db_id, cstate.src))
-                        & (_c("typeguid") == cstate.tg)
-                        & (
-                            _c("id") < cstate.pos
-                            if cstate.backward
-                            else _c("id") > cstate.pos
-                        )
-                    )
-                elif cstate.form in ("all", "without"):
-                    child_df = child_df.filter(
-                        _c("id") >= max(cstate.pos, cstate.low)
-                    )
-                elif cstate.form == "gmap":
-                    # the thawed per-parent iterator: only that
-                    # parent's children, past the consumed prefix
-                    lk_col = GMAP_COLS[cstate.lk]
-                    child_df = child_df.filter(
-                        _c(lk_col)
-                        == guid_compose(self.store.db_id, cstate.src)
-                    )
-                    if cstate.pos:
-                        b = self._gmap_pos_boundary(cstate)
-                        if b is None:
-                            child_df = child_df.filter(_l(False))
-                        else:
-                            child_df = child_df.filter(
-                                _c("id") < b
-                                if cstate.backward
-                                else _c("id") > b
-                            )
-        elif sub.cursor == "null:":
-            child_df = child_df.filter(_l(False))
-        if not wants_cursor:
+        cstate, t, ctx = freeze.thaw_sub(self, sub)
+        child_df = self._restrict(child_df, t)
+        if ctx is None:
             return child_df
-        if self.asof is not None:
-            horizon = min(
-                self.store.count(), asof_horizon(self.store, self.asof) + 1
-            )
-        else:
-            horizon = (
-                cstate.horizon
-                if cstate is not None and cstate.horizon is not None
-                else self.store.count()
-            )
-        ctx = {
-            "con": sub,
-            "offset": cstate.offset if cstate is not None else 0,
-            "lo": sub.start or 0,
-            "horizon": horizon,
-            "asof": self.asof is not None,
-            "backward": sub_sort_backward(sub),
-            "resolve": self.types.resolve,
-        }
         mode = effective_sub_cursor_mode(sub)
         mirror = (
             getattr(self.store, "_covers_all", True)
             and self.store.mirror_current()
         )
         if mode is not None and mode != "sort" and mirror:
-            ctx.update(
-                self._mirror_reader().sub_cursor_index(sub, mode, cstate)
-            )
+            # the sub's index as the fast path freezes it: within the
+            # asof horizon, not the bound the sub's [n:] gives the root
+            with self._thaw_scope(None):
+                fr = self._mirror_reader()
+            ctx.update(fr.sub_cursor_index(sub, mode, cstate))
             sub_plan.cursor_ctx = ctx
             return child_df
         # legacy fallback: materialize the accepted candidate set

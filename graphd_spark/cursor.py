@@ -606,6 +606,32 @@ def _old_style(text: str) -> BadCursor:
     return BadCursor(f'cannot parse old-style cursor "{shown}"')
 
 
+_PREFIX_BLOCK = re.compile(r"\[([onON]):(\d+)\]")
+
+
+def scan_prefix(body: str, skip_unknown: bool = False) -> tuple:
+    """``(offset, horizon, rest)`` of a cursor body's leading
+    ``[o:N][n:N]`` blocks (graphd-constraint-cursor.c
+    graphd_constraint_cursor_scan_prefix); a block not seen is None.
+    An unrecognized ``[...]`` block ends the scan, or is skipped with
+    ``skip_unknown``."""
+    offset = horizon = None
+    while body.startswith("["):
+        close = body.find("]")
+        if close < 0:
+            break
+        m = _PREFIX_BLOCK.fullmatch(body, 0, close + 1)
+        if m is None:
+            if not skip_unknown:
+                break
+        elif m.group(1) in "oO":
+            offset = int(m.group(2))
+        else:
+            horizon = int(m.group(2))
+        body = body[close + 1:]
+    return offset, horizon, body
+
+
 def parse_cursor(text: str, con: Constraint,
                  resolve=None, asof: bool = False) -> Optional[CursorState]:
     """Parse + validate a cursor= value.
@@ -638,19 +664,8 @@ def parse_cursor(text: str, con: Constraint,
         return st
 
     st = CursorState(form="other")
-    # leading [o:..][n:..] prefix blocks (scan_prefix)
-    while body.startswith("["):
-        close = body.find("]")
-        if close < 0:
-            break
-        mm = re.match(r"\[([onON]):(\d+)\]$", body[: close + 1])
-        if not mm:
-            break
-        if mm.group(1).lower() == "o":
-            st.offset = int(mm.group(2))
-        else:
-            st.horizon = int(mm.group(2))
-        body = body[close + 1:]
+    offset, st.horizon, body = scan_prefix(body)
+    st.offset = offset or 0
 
     mm = re.match(r"^all:(~?)(\d+)-(\d+)/(\d+)/$", body)
     if mm:
@@ -948,8 +963,6 @@ def thaw_envelope(con: Constraint, resolve=None, asof: bool = False):
         except ValueError:
             resume = 0
         return None, resume, None, None, None, 0
-    resume = 0
-    horizon = None
     body = cur
     is_sort = body.lower().startswith("sort:")
     if is_sort:
@@ -958,24 +971,13 @@ def thaw_envelope(con: Constraint, resolve=None, asof: bool = False):
         m = re.match(r"(?i)cursor:[0-9a-f]+:", body)
         if m:
             body = body[m.end():]
-    saw_offset = False
-    while body.startswith("["):
-        close = body.find("]")
-        if close < 0:
-            break
-        m = re.match(r"\[([onON]):(\d+)\]", body[: close + 1])
-        if m:
-            if m.group(1).lower() == "o":
-                resume = int(m.group(2))
-                saw_offset = True
-            else:
-                horizon = int(m.group(2))
-        body = body[close + 1:]
+    offset, horizon, body = scan_prefix(body, skip_unknown=True)
+    resume = offset or 0
     if is_sort:
         m = re.search(r"g([0-9a-f]{32})$", body)
         if m:
             return None, 0, horizon, m.group(1), body, resume
-    elif not saw_offset and horizon is None:
+    elif offset is None and horizon is None:
         m = re.search(r"/(\d+)/$", cur)
         if m:
             resume = int(m.group(1))
@@ -1224,16 +1226,7 @@ def cursor_envelope_horizon(cur: str) -> Optional[int]:
         m = re.match(r"(?i)cursor:[0-9a-f]{1,4}:", body)
         if m:
             body = body[m.end():]
-    horizon = None
-    while body.startswith("["):
-        close = body.find("]")
-        if close < 0:
-            break
-        m = re.match(r"\[([onON]):(\d+)\]$", body[: close + 1])
-        if m and m.group(1).lower() == "n":
-            horizon = int(m.group(2))
-        body = body[close + 1:]
-    return horizon
+    return scan_prefix(body, skip_unknown=True)[1]
 
 
 def _boundary_mandatory(con: Constraint) -> bool:

@@ -43,6 +43,7 @@ from contextlib import contextmanager
 from typing import Iterable, Optional
 
 from graphd_spark.comparators import (
+    _ascii_lower,
     datetime_scan_order,
     decode_number,
     delimited_match,
@@ -62,6 +63,7 @@ from graphd_spark.cursor import (
     cursor_high_bounds,
     emit_root_cursor,
     needs_total,
+    scan_prefix,
     thaw_envelope,
 )
 from graphd_spark.freeze import (
@@ -76,7 +78,6 @@ from graphd_spark.model import (
     Primitive,
     guid_compose,
     guid_serial,
-    ts_from_string,
 )
 from graphd_spark.sortsim import result_pagesize, simulate, sort_production
 from graphd_spark.wordhash import prefix_bins
@@ -361,68 +362,24 @@ class _NodeSpec:
 
 
 
-def _deserialize_sort_values(body: str):
-    """Invert compiler.sort_cursor_string's value serialization: a
-    sequence of tagged components ending in the guid tiebreak
-    (graphd-value.c graphd_value_serialize).  Returns
-    ([(tag, raw)], boundary_guid_serial) or (None, None)."""
-    import re as _re
+def _thaw_pred(t: freeze.Thaw):
+    """freeze.thaw's restriction ``t`` as a test over a primitive,
+    built once per request; None restricts nothing.  A fixed set
+    tests one set membership."""
+    lo, hi = t.lo, t.hi
+    if t.ids is not None and not t.eq:
+        allowed = {i for i in t.ids if lo <= i and (hi is None or i < hi)}
+        return lambda c: c.id in allowed
+    if not (lo or t.eq) and hi is None and t.ids is None:
+        return None
+    hi = float("inf") if hi is None else hi
+    allowed = None if t.ids is None else set(t.ids)
+    return lambda c: (
+        lo <= c.id < hi
+        and (allowed is None or c.id in allowed)
+        and all(getattr(c, col) == v for col, v in t.eq)
+    )
 
-    from graphd_spark.model import guid_serial
-
-    b = body.encode("utf-8", "surrogateescape")
-    vals = []
-    i = 0
-    while i < len(b):
-        t = b[i:i + 1]
-        if t == b"n":
-            vals.append(("null", None))
-            i += 1
-        elif t in (b"s", b"a"):
-            mm = _re.match(rb"[sa](\d+):", b[i:])
-            if not mm:
-                return None, None
-            ln = int(mm.group(1))
-            start = i + mm.end()
-            raw = b[start:start + ln]
-            if len(raw) != ln:
-                return None, None
-            vals.append((
-                t.decode(), raw.decode("utf-8", "surrogateescape")
-            ))
-            i = start + ln
-        elif t == b"g":
-            mm = _re.match(rb"g([0-9a-f]{32})", b[i:])
-            if not mm:
-                return None, None
-            vals.append(("g", mm.group(1).decode()))
-            i += mm.end()
-        elif t == b"t":
-            mm = _re.match(rb"t([0-9TZ:.\-]+)", b[i:])
-            if not mm:
-                return None, None
-            vals.append(("t", mm.group(1).decode()))
-            i += mm.end()
-        elif t == b"d":
-            mm = _re.match(rb"d(\d+)\.", b[i:])
-            if not mm:
-                return None, None
-            vals.append(("d", mm.group(1).decode()))
-            i += mm.end()
-        elif t == b"#":
-            mm = _re.match(rb"#([^.]*)\.", b[i:])
-            if not mm:
-                return None, None
-            vals.append(("#", mm.group(1).decode()))
-            i += mm.end()
-        elif t == b"b":
-            vals.append(("b", b[i + 1:i + 2].decode()))
-            i += 2
-        else:
-            return None, None
-    if not vals or vals[-1][0] != "g":
-        return None, None
-    return vals, guid_serial(vals[-1][1])
 
 #: mirror of Compiler._var_expr's scalar assignment kinds
 _VAR_ATTRS = {
@@ -731,36 +688,18 @@ class FastReader:
             matches = [
                 (p, r) for p, r in matches if p.id < root_high
             ]
-        # iterator-position resume (the Compiler.run filters' mirror)
+        # a modeled iterator freeze resumes by iterator position, a
+        # masqueraded fixed set by offset unless its raw array is
+        # recovered (freeze.thaw)
         masq_raw = False
         if cstate is not None:
-            if cstate.form == "fixed_masq":
-                # reposition in the RAW masqueraded array (bin false
-                # positives counted) — inline ids ride the cursor,
-                # cached states regenerate from the constraint
-                _prev_ch = self._cur_high
-                if cstate.horizon is not None:
-                    self._cur_high = cstate.horizon
-                try:
-                    raw = (
-                        cstate.fixed_ids
-                        or self._isa_expansion_ids(con)
-                    )
-                finally:
-                    self._cur_high = _prev_ch
-                if raw:
-                    if cstate.backward:
-                        n = len(raw) - cstate.pos
-                        allowed = set(raw[:n]) if n > 0 else set()
-                    else:
-                        allowed = set(raw[cstate.pos:])
-                    matches = [
-                        (p, r) for p, r in matches if p.id in allowed
-                    ]
-                    masq_raw = True
-                    resume = 0
-            else:
-                matches = self._resume_filter(cstate, matches)
+            t = freeze.thaw(self, con, cstate)
+            masq_raw = cstate.form == "fixed_masq" and t.ids is not None
+            if masq_raw:
+                resume = 0
+            keep = _thaw_pred(t)
+            if keep is not None:
+                matches = [(p, r) for p, r in matches if keep(p)]
         matches = self._number_sort_drop(con, matches)
         skipped = backward = simulated = False
         if con.sort:
@@ -977,90 +916,42 @@ class FastReader:
             self, con, cstate, probe, matches, delivered
         )
 
-    def _resume_filter(self, cstate, matches):
-        """Scope wrapper: a thawed iterator repositions within the
-        index state it froze ([n:H])."""
-        prev = self._cur_high
-        if cstate.horizon is not None:
-            self._cur_high = (
-                cstate.horizon if prev is None
-                else min(prev, cstate.horizon)
-            )
+    @contextmanager
+    def _thaw_scope(self, horizon):
+        """freeze.thaw's probes see the indexes at the asof horizon and
+        the thawed cursor's own [n:H] (_helper_high)."""
+        prev, self._cur_high = self._cur_high, horizon
         try:
-            return self._resume_filter_inner(cstate, matches)
+            yield
         finally:
             self._cur_high = prev
 
-    def _resume_filter_inner(self, cstate, matches):
-        """Reposition the candidate set at a thawed iterator state
-        (mirror of Compiler.run's cstate branches)."""
-        form = cstate.form
-        if form in ("all", "without"):
-            if cstate.backward:
-                # skip the first `pos` of the DESCENDING dense span
-                hi = (cstate.high or 0) - cstate.pos
-                return [
-                    (p, r) for p, r in matches
-                    if cstate.low <= p.id < hi
-                ]
-            lo = max(cstate.pos, cstate.low)
-            return [
-                (p, r) for p, r in matches
-                if p.id >= lo
-                and (cstate.high is None or p.id < cstate.high)
-            ]
-        if form == "fixed":
-            if cstate.backward:
-                n = len(cstate.fixed_ids) - cstate.pos
-                allowed = set(cstate.fixed_ids[:n]) if n > 0 else set()
+    def _thaw_boundary(self, cstate) -> Optional[int]:
+        """freeze.thaw's probe: the id of the cstate.pos-th element of
+        the thawed gmap/hmap index within [low, high), in scan order
+        (from the top for backward scans), or None."""
+        st = self.store
+        if cstate.form == "gmap":
+            ids = self._gmap_index_ids(cstate.lk, cstate.src)
+        else:
+            if cstate.lk == "value":
+                # the thawed key IS the stored normalization (case
+                # preserved) — only case-fold it; re-normalizing is NOT
+                # idempotent ("12e1" re-parses as the number 120 -> "12e2")
+                ids = st._vnorm_ids.get(_ascii_lower(cstate.masq), ())
             else:
-                allowed = set(cstate.fixed_ids[cstate.pos:])
-            return [(p, r) for p, r in matches if p.id in allowed]
-        if form == "gmap":
-            out = matches
-            if cstate.high is not None:
-                out = [(p, r) for p, r in out if p.id < cstate.high]
-            if cstate.pos:
-                ids = [
-                    i for i in self._gmap_index_ids(cstate.lk, cstate.src)
-                    if i >= cstate.low
-                    and (
-                        not cstate.backward
-                        or cstate.high is None
-                        or i < cstate.high
-                    )
-                ]
-                if not ids:
-                    return []
-                if cstate.backward:
-                    b = ids[-cstate.pos:][0]
-                    out = [(p, r) for p, r in out if p.id < b]
-                else:
-                    b = ids[: cstate.pos][-1]
-                    out = [(p, r) for p, r in out if p.id > b]
-            return out
-        if form == "hmap":
-            if not cstate.pos:
-                return matches
-            ids = self._hmap_resume_ids(cstate.lk, cstate.masq)
-            if not ids:
-                return []
-            if cstate.backward:
-                b = ids[-cstate.pos:][0]
-                return [(p, r) for p, r in matches if p.id < b]
-            b = ids[: cstate.pos][-1]
-            return [(p, r) for p, r in matches if p.id > b]
-        if form in ("and_it", "or_it"):
-            # and/or iterators resume after their last delivered
-            # candidate id — before it for backward iterators (mirror
-            # compiler.py; graphd-iterator-and-freeze.c thaw)
-            if cstate.tail == "$":
-                return []
-            if cstate.backward:
-                return [(p, r) for p, r in matches if p.id < cstate.pos]
-            return [(p, r) for p, r in matches if p.id > cstate.pos]
-        # fixed_masq / isa_it: resume by offset (run() sets it)
-        return matches
+                ids = st._name_ids.get(cstate.masq.lower(), ())
+            hb = self._helper_high()
+            ids = sorted(i for i in ids if hb is None or i < hb)
+        ids = [
+            i for i in ids
+            if cstate.low <= i and (cstate.high is None or i < cstate.high)
+        ]
+        if not ids:
+            return None
+        if cstate.backward:
+            return ids[-cstate.pos:][0]
+        return ids[:cstate.pos][-1]
 
     # -- the index probes of freeze._iterator_cursor ----------------------
 
@@ -1159,24 +1050,6 @@ class FastReader:
     def _bin_rank(self, ids, last_id: int) -> int:
         return bisect.bisect_right(ids, last_id)
 
-    def _hmap_resume_ids(self, tname: str, masq: str) -> list[int]:
-        """Bin members for a THAWED hmap key.  The thawed key IS the
-        stored normalization (case preserved) — only case-fold it;
-        re-normalizing is NOT idempotent ("12e1" the canonical form
-        re-parses as the number 120 -> "12e2").  Non-value pools
-        ('name', 'word') match on the name column."""
-        from graphd_spark.comparators import _ascii_lower
-
-        st = self.store
-        if tname != "value":
-            ids = list(st._name_ids.get(masq.lower(), ()))
-        else:
-            ids = sorted(st._vnorm_ids.get(_ascii_lower(masq), ()))
-        _hb = self._helper_high()
-        if _hb is not None:
-            ids = [i for i in ids if i < _hb]
-        return ids
-
     def _live_sources(self, lk: str, hm) -> list[int]:
         return [i for i in hm[5] if self._gmap_index_ids(lk[0], i)]
 
@@ -1248,11 +1121,11 @@ class FastReader:
                 sets.append(set(m["index"]))
         return sorted(set.intersection(*sets))
 
-    def _isa_expansion_ids(self, con) -> Optional[list]:
+    def _isa_expansion_ids(self, con, sh=None) -> Optional[list]:
         """The RAW materialized target set of an hmap-sub expansion
         (bin false positives and later-rejected targets included — the
         reference's fixed iterator bounds and /POS/ count them)."""
-        sh = freeze._isa_sub_hmap(self, con)
+        sh = sh or freeze._isa_sub_hmap(self, con)
         if sh is None:
             return None
         sub, hm = sh
@@ -1583,104 +1456,12 @@ class FastReader:
         matches.sort(key=key)
 
     def _frozen_sort_grid(self, con, plan, body):
-        """Reconstruct the cursor boundary's sort-key tuple from the
-        FROZEN serialized payload, for resumes whose boundary element
-        no longer exists in the candidate set (tombstoned or
-        versioned between pages — the round-9 writeinto family).
-        The reference repositions by comparing the frozen keys
-        (graphd-sort.c graphd_sort_cursor_set prefilter), so losing
-        the element must not restart the chain (probed: writeinto
-        seed 62 — a name-sorted chain whose delivered parent is
-        tombstoned between pages resumes past (key, guid); restarting
-        re-delivers page 1).  Returns a tuple aligned with
-        _sort_key_fn's key domain + the id tiebreak, or None when a
-        component can't be reconstructed (caller falls back to the
-        pre-round-9 restart)."""
-        if body is None or not con.sort:
-            return None
-        vals, bid = _deserialize_sort_values(body)
-        if vals is None:
-            return None
-        from graphd_spark.model import guid_serial, ts_from_string
-
-        fail = object()
-
-        def conv(sk, comp, tag, raw):
-            if tag == "null":
-                return None
-            k = sk.pattern.kind
-            if k == "value":
-                if tag not in ("s", "a"):
-                    return fail
-                return (
-                    fuzzy_key(raw) if comp == "default"
-                    else literal_key(raw, comp)
-                )
-            if k == "name":
-                return (
-                    literal_key(raw, comp)
-                    if tag in ("s", "a") else fail
-                )
-            if k == "guid":
-                return guid_serial(raw) if tag == "g" else fail
-            if k == "timestamp":
-                if tag != "t":
-                    return fail
-                try:
-                    return ts_from_string(raw)
-                except Exception:
-                    return fail
-            if k == "generation":
-                try:
-                    return int(raw) if tag == "#" else fail
-                except ValueError:
-                    return fail
-            if k == "datatype":
-                try:
-                    return int(raw) if tag == "d" else fail
-                except ValueError:
-                    return fail
-            if k in ("live", "archival"):
-                return raw == "1" if tag == "b" else fail
-            if k in ("left", "right", "typeguid", "scope",
-                     "previous", "next", "type"):
-                # these key fns yield the raw guid STRING (hex order
-                # == id order, fixed length)
-                return raw if tag == "g" else fail
-            if k == "variable":
-                if (
-                    plan.var_cols.get(sk.pattern.var) is not None
-                    and plan.var_kind_cols.get(sk.pattern.var) is None
-                    and plan.var_kinds.get(sk.pattern.var)
-                    in ("value", "name", "type", "literal")
-                    and tag in ("s", "a")
-                ):
-                    return literal_key(raw, comp)
-                return fail
-            return fail
-
-        out = []
-        for i0, sk in enumerate(con.sort):
-            if i0 >= len(vals):
-                return None
-            comp = None
-            if con.sort_comparators and i0 < len(con.sort_comparators):
-                comp = con.sort_comparators[i0]
-            comp = resolve_comparator(
-                comp or con.comparator or "default"
-            )
-            fn = self._sort_key_fn(sk.pattern, comp, plan)
-            if fn is None:
-                continue
-            tag, raw = vals[i0]
-            kv = conv(sk, comp, tag, raw)
-            if kv is fail:
-                return None
-            out.append(kv)
-            if sk.pattern.kind == "guid":
-                break
-        out.append(bid)
-        return tuple(out)
+        """freeze.frozen_sort_tuple in the _sort_key_fn key domain, id
+        tiebreak last."""
+        return freeze.frozen_sort_tuple(
+            con, plan, body,
+            lambda pat, comp: self._sort_key_fn(pat, comp, plan) is not None,
+        )
 
     def _sort_key_fn(self, pat, comparator: str, plan: SetPlan):
         k = pat.kind
@@ -2358,29 +2139,15 @@ class FastReader:
         return None
 
     def _sub_cursor_setup_f(self, sub, sub_plan):
-        """Subconstraint cursors, driver mirror of
-        Compiler._sub_cursor_setup (ref graphd-read-set-cursor.c;
-        test/unit/cursor6.sh): thaw a cursor= resume into a
+        """Subconstraint cursors (ref graphd-read-set-cursor.c;
+        test/unit/cursor6.sh): freeze.thaw_sub's restriction as a
         per-parent child filter (returned with the cstate, applied in
         _row_for's candidate loop), and when the sub's result wants a
-        cursor build the cursor_ctx the shared assembler freezes
-        from (see compiler.sub_cursor_mode for the probed family)."""
-        wants_cursor = sub.result is not None and any(
-            p.kind == "cursor" for p in sub.result.walk()
-        )
-        cstate = None
-        if sub.cursor is not None and sub.cursor != "null:":
-            from graphd_spark.cursor import BadCursor, parse_cursor
-
-            try:
-                cstate = parse_cursor(
-                    sub.cursor, sub, self.types.resolve,
-                    asof=self.asof_mode,
-                )
-            except BadCursor as e:
-                raise GraphdError("BADCURSOR", e.message)
-        cfilter = self._sub_child_filter(sub, cstate)
-        if not wants_cursor:
+        cursor the cursor_ctx the shared assembler freezes from (see
+        compiler.sub_cursor_mode for the probed family)."""
+        cstate, t, ctx = freeze.thaw_sub(self, sub)
+        cfilter = _thaw_pred(t)
+        if ctx is None:
             return cstate, cfilter, None
         from graphd_spark.compiler import effective_sub_cursor_mode
 
@@ -2391,45 +2158,14 @@ class FastReader:
             # value/name sorted sub: per-parent incremental sorter
             # with a raw-value grid thawed from the sort: cursor
             ssim, thawed_n = self._sub_sort_setup(sub, sub_plan)
-            if self.horizon is not None:
-                horizon = min(self.store.count(), self.horizon + 1)
-            elif thawed_n is not None:
-                horizon = thawed_n
-            else:
-                horizon = self.store.count()
             sort_cfilter = None
             if thawed_n is not None:
                 sort_cfilter = lambda c, _n=thawed_n: c.id < _n
-            sub_plan.cursor_ctx = {
-                "con": sub,
-                "mode": "sort",
-                "offset": ssim.offset,
-                "lo": sub.start or 0,
-                "horizon": horizon,
-                "asof": self.asof_mode,
-                "sim": ssim.sim,
-                "resolve": self.types.resolve,
-            }
+                if self.horizon is None:
+                    ctx["horizon"] = thawed_n
+            ctx.update(mode="sort", offset=ssim.offset, sim=ssim.sim)
+            sub_plan.cursor_ctx = ctx
             return None, sort_cfilter, ssim
-        if self.horizon is not None:
-            horizon = min(self.store.count(), self.horizon + 1)
-        else:
-            horizon = (
-                cstate.horizon
-                if cstate is not None and cstate.horizon is not None
-                else self.store.count()
-            )
-        from graphd_spark.compiler import sub_sort_backward
-
-        ctx = {
-            "con": sub,
-            "offset": cstate.offset if cstate is not None else 0,
-            "lo": sub.start or 0,
-            "horizon": horizon,
-            "asof": self.asof_mode,
-            "backward": sub_sort_backward(sub),
-            "resolve": self.types.resolve,
-        }
         rps0 = result_pagesize(sub)
         if rps0 == 0 and (
             sub.value_comparator or sub.comparator
@@ -2521,27 +2257,14 @@ class FastReader:
             if cur == "null:":
                 ended = True
             elif cur.lower().startswith("sort:"):
-                body = cur[5:]
-                import re as _re
-
-                while body.startswith("["):
-                    close = body.find("]")
-                    mm = _re.match(
-                        r"\[([onON]):(\d+)\]$", body[: close + 1]
-                    ) if close >= 0 else None
-                    if mm is None:
-                        break
-                    if mm.group(1).lower() == "o":
-                        offset = int(mm.group(2))
-                    else:
-                        thawed_n = int(mm.group(2))
-                    body = body[close + 1:]
+                offset, thawed_n, body = scan_prefix(cur[5:])
+                offset = offset or 0
                 if body == "END":
                     ended = True
                 elif body == "START":
                     pass
                 else:
-                    vals, bguid = _deserialize_sort_values(body)
+                    vals, bguid = freeze.deserialize_sort_values(body)
                     if vals is None:
                         raise Unsupported("sub-sort-cursor")
                     grid = self._sort_grid_keys(keyfns, vals, bguid)
@@ -2658,55 +2381,24 @@ class FastReader:
         sort keys the simulator compares (the serializer truncates at
         the first guid key; a trailing guid tiebreak always closes)."""
         keys = []
-        vi = 0
-        for _fn, _d, comp, kind in keyfns:
-            if vi >= len(vals):
+        for (_fn, _d, comp, kind), (tag, raw) in zip(keyfns, vals):
+            k = freeze.frozen_sort_key(kind, comp, tag, raw)
+            if k is freeze.UNKEYED or (kind == "guid" and k is None):
                 return None
-            tag, raw = vals[vi]
-            vi += 1
-            if kind in ("value", "name"):
-                if tag == "null":
-                    keys.append(None)
-                elif tag in ("s", "a"):
-                    keys.append(literal_key(raw, comp))
-                else:
-                    return None
-            elif kind == "timestamp":
-                if tag == "null":
-                    keys.append(None)
-                elif tag == "t":
-                    try:
-                        keys.append(ts_from_string(raw))
-                    except ValueError:
-                        return None
-                else:
-                    return None
-            elif kind == "guid":
-                if tag != "g":
-                    return None
-                from graphd_spark.model import guid_serial
-
-                s = guid_serial(raw)
-                keys.append(s)
+            keys.append(k)
+            if kind == "guid":
                 # the serializer truncates at the first guid key
                 # (decisive order); recompute the remaining grid
                 # components from the boundary element itself
                 if len(keys) < len(keyfns):
-                    bi = s - self.store._base
+                    bi = k - self.store._base
                     if not (0 <= bi < len(self.store.rows)):
                         return None
                     bp = self.store.rows[bi]
                     for fn2, _d2, _c2, _k2 in keyfns[len(keys):]:
                         keys.append(fn2(bp, None))
-                return tuple(keys) + (s,)
-            elif kind == "datatype":
-                if tag == "d":
-                    keys.append(int(raw))
-                else:
-                    return None
-            else:
-                return None
-        if vi != len(vals) - 1 or vals[vi][0] != "g":
+                return tuple(keys) + (k,)
+        if len(vals) != len(keyfns) + 1:
             return None
         return tuple(keys) + (bguid,)
 
@@ -2877,85 +2569,6 @@ class FastReader:
         if crow is _NO_MATCH:
             return None
         return (c, crow)
-
-    def _sub_child_filter(self, sub, cstate):
-        """Thawed-resume candidate restriction, mirror of the
-        child_df filters in Compiler._sub_cursor_setup.  None = no
-        restriction; otherwise a predicate over child primitives."""
-        if sub.cursor == "null:":
-            return lambda c: False
-        if cstate is None:
-            return None
-        from graphd_spark.model import guid_compose
-
-        checks = []
-        if cstate.horizon is not None:
-            hz = cstate.horizon
-            checks.append(lambda c: c.id < hz)
-        if cstate.form == "fixed":
-            ids = cstate.fixed_ids
-            allowed = set(
-                ids[: len(ids) - cstate.pos]
-                if cstate.backward
-                else ids[cstate.pos:]
-            )
-            checks.append(lambda c: c.id in allowed)
-        elif cstate.form == "vip":
-            lkname = GMAP_COLS[cstate.lk]
-            src_g = guid_compose(self.store.db_id, cstate.src)
-            tg = cstate.tg
-            pos = cstate.pos
-            if cstate.backward:
-                checks.append(
-                    lambda c: getattr(c, lkname) == src_g
-                    and c.typeguid == tg and c.id < pos
-                )
-            else:
-                checks.append(
-                    lambda c: getattr(c, lkname) == src_g
-                    and c.typeguid == tg and c.id > pos
-                )
-        elif cstate.form in ("all", "without"):
-            lo = max(cstate.pos, cstate.low)
-            checks.append(lambda c: c.id >= lo)
-        elif cstate.form == "gmap":
-            lkname = GMAP_COLS[cstate.lk]
-            src_g = guid_compose(self.store.db_id, cstate.src)
-            checks.append(lambda c: getattr(c, lkname) == src_g)
-            if cstate.pos:
-                b = self._gmap_pos_boundary_f(cstate)
-                if b is None:
-                    return lambda c: False
-                if cstate.backward:
-                    checks.append(lambda c: c.id < b)
-                else:
-                    checks.append(lambda c: c.id > b)
-        if not checks:
-            return None
-        if len(checks) == 1:
-            return checks[0]
-        return lambda c: all(ck(c) for ck in checks)
-
-    def _gmap_pos_boundary_f(self, cstate):
-        """Id of the cstate.pos-th raw index element in scan order
-        (mirror of Compiler._gmap_pos_boundary)."""
-        from graphd_spark.model import guid_compose
-
-        g = guid_compose(self.store.db_id, cstate.src)
-        ids = sorted(
-            i for i in self.store._ptr_ids.get(
-                (GMAP_COLS[cstate.lk], g), ()
-            )
-            if (self.horizon is None or i <= self.horizon)
-            and i >= cstate.low
-        )
-        if cstate.backward:
-            if cstate.high is not None:
-                ids = [i for i in ids if i < cstate.high]
-            take = ids[-cstate.pos:] if cstate.pos else []
-            return take[0] if take else None
-        take = ids[:cstate.pos]
-        return take[-1] if take else None
 
     def _row_for(self, p: Primitive, con: Constraint, spec: "_NodeSpec",
                  build_row: bool):
@@ -3218,10 +2831,7 @@ class FastReader:
                     # a descending timestamp/guid sort runs the
                     # BACKWARD producer, so the probe consumes from
                     # the top (the frozen '~' forms; probed round 7)
-                    from graphd_spark.compiler import (
-                        sub_sort_backward as _ssb,
-                    )
-                    ki = n - k if _ssb(sub) else k - 1
+                    ki = n - k if freeze.sub_sort_backward(sub) else k - 1
                     probe_entry = (kids[ki][0].id, p.guid, k)
                 if sub.sort is not None:
                     self._apply_sort(sub, sp.plan, kids)
@@ -3722,10 +3332,7 @@ class FastReader:
                 # seed 612)
                 if kids and ss.lo < n:
                     k = max(1, ss.lo)
-                    from graphd_spark.compiler import (
-                        sub_sort_backward as _ssb,
-                    )
-                    ki = n - k if _ssb(sub) else k - 1
+                    ki = n - k if freeze.sub_sort_backward(sub) else k - 1
                     probe_entry = (
                         kids[ki][0].id, p.guid, k,
                     )

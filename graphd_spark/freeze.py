@@ -1,6 +1,7 @@
 """The iterator a root page freezes into, and how it prints, for both
-read evaluators; plus the cost-model arithmetic the frozen statistics
-embed.
+read evaluators; the thaw that turns a resumed cursor back into a
+candidate restriction; plus the cost-model arithmetic the frozen
+statistics embed.
 
 graphd keeps one freeze routine per iterator above whichever index
 produced the ids (graphd-iterator-and-freeze.c, graphd-iterator-isa.c
@@ -30,8 +31,26 @@ answers the index probes under one name and return shape:
 - ``_prefix_bin_ids(prefix)``, ``_prefix_stats(prefix)``;
   ``_linksto_span(lk, hm)``: (low, high, index) of the primitives
   pointing at a bin's members; ``_member_intersection(members, bi)``;
-- ``_isa_expansion_ids(con)``, ``_linksto_expansion_ids(con)`` and
+- ``_isa_expansion_ids(con, sh=None)`` (``sh`` the root's
+  _isa_sub_hmap when known), ``_linksto_expansion_ids(con)`` and
   ``_or_union_ids(con)``: the raw pre-evaluated candidate sets.
+
+The thaw (``thaw``, ``thaw_sub``; ref pdb_iterator_thaw, one thaw
+beside each freeze) maps a ``CursorState`` to one backend-neutral
+``Thaw`` restriction — an id interval, an optional id list, column
+equalities — for a root and a subconstraint alike; the Spark compiler
+applies it as a filter, the fast path as a predicate built once per
+request.  Its probes:
+
+- ``_thaw_scope(horizon)``: the context they run in (the asof horizon
+  and the cursor's own [n:H]);
+- ``_thaw_boundary(cstate)``: the id of the pos-th element of a
+  thawed gmap/hmap index in scan order (a Spark ``orderBy().limit()
+  .agg()``, a list slice);
+- ``_isa_expansion_ids(con)``: a masqueraded fixed set's raw array.
+
+A resumed ``sort:`` cursor's boundary keys come from its frozen
+payload through ``frozen_sort_tuple`` / ``frozen_sort_key``.
 
 The frozen statistics derive closed-form from the cost model —
 
@@ -55,10 +74,20 @@ replayed from the reference.
 
 from __future__ import annotations
 
-from typing import Optional
+import re
+from typing import NamedTuple, Optional
 
-from graphd_spark.cursor import CursorState, freeze_cursor, sign_cursor
-from graphd_spark.model import guid_compose, guid_serial
+from graphd_spark.comparators import literal_key, resolve_comparator
+from graphd_spark.cursor import (
+    BadCursor,
+    CursorState,
+    asof_horizon,
+    freeze_cursor,
+    parse_cursor,
+    sign_cursor,
+)
+from graphd_spark.model import guid_compose, guid_serial, ts_from_string
+from graphd_spark.pattern import GraphdError
 from graphd_spark.sortsim import result_pagesize
 
 # libpdb/pdb.h:362-370
@@ -372,14 +401,18 @@ def _root_freeze(ev, con, cstate, last_id, src, delivered, backward):
         )
         if sub_gmap is not None:
             return sub_gmap
-        cap = _isa_materialize_cap(ev, con)
+        sh = _isa_sub_hmap(ev, con)
+        cap = _isa_materialize_cap(sh)
         if cap == 0:
             return None
-        ids = ev._isa_expansion_ids(con) or ev._first_ids(src, cap + 1)
+        ids = (
+            sh and ev._isa_expansion_ids(con, sh)
+        ) or ev._first_ids(src, cap + 1)
         if len(ids) > cap or last_id not in ids:
             return None
         return _expansion_cursor(
-            ev, con, cstate, ids, last_id, delivered, count, backward=True
+            ev, con, cstate, sh, ids, last_id, delivered, count,
+            backward=True,
         )
     and_cursor = _and_cursor(
         ev, con, cstate, _and_members_ext(ev, con), last_id, delivered,
@@ -403,9 +436,10 @@ def _root_freeze(ev, con, cstate, last_id, src, delivered, backward):
     # cursor3/cursor4); larger sets keep their isa / or-linksto
     # iterator shape (graphd-iterator-isa.c, graphd-iterator-
     # linksto.c; test/unit/isa.sh)
-    cap = _isa_materialize_cap(ev, con)
+    sh = _isa_sub_hmap(ev, con)
+    cap = _isa_materialize_cap(sh)
     ids = (
-        ev._isa_expansion_ids(con)
+        (sh and ev._isa_expansion_ids(con, sh))
         or ev._linksto_expansion_ids(con)
         or ev._first_ids(src, cap + 1)
         if cap
@@ -416,7 +450,7 @@ def _root_freeze(ev, con, cstate, last_id, src, delivered, backward):
             ev, con, cstate, last_id, delivered, count
         ) or _or_linksto_cursor(ev, con, cstate, last_id, delivered, count)
     return _expansion_cursor(
-        ev, con, cstate, ids, last_id, delivered, count
+        ev, con, cstate, sh, ids, last_id, delivered, count
     )
 
 
@@ -569,7 +603,7 @@ def _gmap_cursor(ev, con, lk, src, last_id, delivered, count,
     return freeze_cursor(con, st, delivered, n, ev.types.resolve)
 
 
-def _expansion_cursor(ev, con, cstate, ids, last_id, delivered, count,
+def _expansion_cursor(ev, con, cstate, sh, ids, last_id, delivered, count,
                       backward=False) -> Optional[str]:
     """A materialized expansion set.  An isa-produced set of 6+
     elements remembers its provenance instead of the raw ids
@@ -580,7 +614,7 @@ def _expansion_cursor(ev, con, cstate, ids, last_id, delivered, count,
     resource ticket whose direction marker is the CACHED resource's
     (a backward chain ends its position in /POS/~); smaller ones carry
     their ids inline and the running direction."""
-    masq = _isa_masquerade(ev, con, ids) if len(ids) > 5 else None
+    masq = _isa_masquerade(ev, con, sh, ids) if len(ids) > 5 else None
     if masq is None and len(ids) > 7 and not backward:
         masq = _linksto_masquerade(ev, con)
     if masq is None:
@@ -746,12 +780,11 @@ def _and_members(ev, con) -> Optional[list]:
     return members
 
 
-def _linksto_member(ev, sub, lk) -> Optional[dict]:
+def _linksto_member(ev, hm, lk) -> Optional[dict]:
     """An or-of-gmaps linksto member: links whose ``lk`` column points
-    at any of the subconstraint's (multiple) matches
-    (graphd_iterator_linksto_or + or masquerade,
+    at any of the (multiple) members of a subconstraint's hmap bin
+    ``hm`` (_hmap_source) (graphd_iterator_linksto_or + or masquerade,
     graphd-iterator-linksto.c:3610-3750)."""
-    hm = _hmap_source(ev, sub)
     if hm is None or hm[4] < 2:
         return None
     span = ev._linksto_span(lk, hm)
@@ -821,7 +854,7 @@ def _and_members_ext(ev, con) -> Optional[list]:
             handled.add(i)
             hm = _hmap_source(ev, sub)
             if hm is not None and hm[4] >= 2:
-                m = _linksto_member(ev, sub, lk)
+                m = _linksto_member(ev, hm, lk)
                 if m is None:
                     return None
                 linksto.append(m)
@@ -1034,7 +1067,7 @@ def _isa_sub_hmap(ev, con) -> Optional[tuple]:
     return None if hm is None else (ls[0], hm)
 
 
-def _isa_materialize_cap(ev, con) -> int:
+def _isa_materialize_cap(sh) -> int:
     """Materialize window for a linkage-expansion root.  The
     reference's isa small-set drains the SUB iterator under
     GRAPHD_ISA_INLINE_BUDGET_TOTAL = 15000 (graphd-iterator-isa.c:43-53,
@@ -1047,14 +1080,14 @@ def _isa_materialize_cap(ev, con) -> int:
     and:#).  Prefix-driven subs wrap in an and(all, prefix) whose
     per-next budget varies with the store (probed thresholds 522 vs
     >530), so they keep the conservative default window, as do all
-    other shapes.  Returns 0 when the shape must NOT materialize."""
-    sh = _isa_sub_hmap(ev, con)
+    other shapes.  ``sh`` is the root's _isa_sub_hmap.  Returns 0
+    when the shape must NOT materialize."""
     if sh is None:
         return _FIXED_MATERIALIZE_MAX
     return _ISA_SMALL_SET_MAX if sh[1][4] <= _ISA_SMALL_SET_MAX else 0
 
 
-def _isa_masquerade(ev, con, ids) -> Optional[str]:
+def _isa_masquerade(ev, con, sh, ids) -> Optional[str]:
     """The fixed-isa provenance string when the root's candidates were
     produced by expanding one subconstraint's linkage — the shape
     ``fixed-isa:LOW-HIGH:L<-(SUB)[hint:0]`` where SUB is the child's
@@ -1063,20 +1096,18 @@ def _isa_masquerade(ev, con, ids) -> Optional[str]:
     (graphd-iterator-isa.c:656-769; test/unit/colors3.sh).  The fixed
     iterator narrowed its bounds to the actual id span (fixed_optimize,
     graphd-iterator-fixed.c:1016-1019); hint 0 differs from
-    HINT_DEFAULT so it prints."""
+    HINT_DEFAULT so it prints.  ``sh`` is the root's _isa_sub_hmap."""
     ls = _lone_sub(con, "my")
     if ls is None:
         return None
     sub, lk = ls
     head = f"fixed-isa:{ids[0]}-{ids[-1] + 1}:{lk[0]}<-"
-    if not (sub.subs or sub.or_chains):
+    if sh is not None:
         # a sub whose only predicate is one value=/name= equality keeps
         # its hmap bin as the isa's subiterator (probed: fixed-isa:LO-
         # HI:L<-(hmap:...) at >= 6 distinct targets; 5 or fewer freeze
         # the raw unmasqueraded fixed set)
-        hm = _hmap_source(ev, sub)
-        if hm is not None:
-            return f"{head}({hmap_set_str(*hm[:4])})[hint:0]"
+        return f"{head}({hmap_set_str(*sh[1][:4])})[hint:0]"
     if sub.or_chains or sub.value_strcons or sub.name_strcons or (
         sub.guid or sub.next or sub.prev or sub.timestamps
     ):
@@ -1264,7 +1295,7 @@ def _or_linksto_cursor(ev, con, cstate, last_id, delivered,
     ls = _lone_sub(con, "iam")
     if ls is None:
         return None
-    m = _linksto_member(ev, *ls)
+    m = _linksto_member(ev, _hmap_source(ev, ls[0]), ls[1])
     if m is None:
         return None
     stamp = resource_stamp(
@@ -1278,3 +1309,280 @@ def _or_linksto_cursor(ev, con, cstate, last_id, delivered,
         stamp,
     )
     return sign_cursor(con, body, ev.types.resolve)
+
+
+# -- the thaw: a resumed cursor as a candidate restriction -----------------
+
+
+class Thaw(NamedTuple):
+    """The candidates a thawed iterator state leaves: ids in
+    ``[lo, hi)``, among ``ids`` unless it is None, whose columns equal
+    the ``eq`` (column, value) pairs.  ``Thaw()`` restricts nothing."""
+    lo: int = 0
+    hi: Optional[int] = None
+    ids: Optional[list] = None
+    eq: tuple = ()
+
+
+#: the restriction of an exhausted cursor (``null:``, ``and:…/$``)
+NOTHING = Thaw(ids=())
+
+
+def thaw(ev, con, cstate) -> Thaw:
+    """The candidate restriction a thawed ``cstate`` puts on ``con``'s
+    set, root or subconstraint alike (ref pdb_iterator_thaw: one thaw
+    per iterator, beside its freeze).  The index probes run within
+    the asof horizon and the cursor's own [n:H] (``ev._thaw_scope``):
+    a thawed iterator repositions in the index state it froze."""
+    with ev._thaw_scope(cstate.horizon):
+        t = _thaw_form(ev, con, cstate)
+    h = cstate.horizon
+    if h is not None and (t.hi is None or h < t.hi):
+        t = t._replace(hi=h)
+    return t
+
+
+def _thaw_form(ev, con, cstate) -> Thaw:
+    form, pos, bwd = cstate.form, cstate.pos, cstate.backward
+    if form in ("all", "without"):
+        # a dense id span; backward scans consume it from the top
+        # (pdb-iterator-all.c)
+        if bwd:
+            return Thaw(cstate.low, (cstate.high or 0) - pos)
+        return Thaw(max(pos, cstate.low), cstate.high)
+    if form in ("fixed", "fixed_masq"):
+        # a fixed set repositions in its id array; a masqueraded one
+        # in its RAW array (bin false positives and rejected targets
+        # counted; graphd-iterator-fixed.c fixed_iterator_next;
+        # test/unit/colors3.sh) — inline ids ride the cursor, cached
+        # states regenerate from the provenance; with no raw set
+        # recoverable it resumes by offset (thaw_envelope)
+        ids = cstate.fixed_ids
+        if form == "fixed_masq" and not ids:
+            ids = ev._isa_expansion_ids(con)
+            if not ids:
+                return Thaw()
+        return Thaw(ids=ids[:max(len(ids) - pos, 0)] if bwd else ids[pos:])
+    if form in ("gmap", "vip"):
+        # one parent's linkage index (vip: with the typeguid): past
+        # the consumed prefix, from the top for backward scans
+        # (pdb-iterator-gmap.c it_gmap_offset, libpdb/pdb-vip.c)
+        eq = ((GMAP_COLS[cstate.lk], guid_compose(ev.store.db_id,
+                                                  cstate.src)),)
+        if form == "vip":
+            # POS is the last consumed id
+            eq += (("typeguid", cstate.tg),)
+            return Thaw(0, pos, eq=eq) if bwd else Thaw(pos + 1, eq=eq)
+        return _past_boundary(ev, cstate, Thaw(0, cstate.high, eq=eq))
+    if form == "hmap":
+        # a hash bin, by its STORED key (pdb-iterator-hmap.c
+        # it_hmap_offset)
+        return _past_boundary(ev, cstate, Thaw())
+    if form in ("and_it", "or_it"):
+        # and/or iterators resume after their last delivered candidate
+        # id, before it backward; '$' is exhausted
+        # (graphd-iterator-and-freeze.c thaw, graphd-iterator-or.c:3009)
+        if cstate.tail == "$":
+            return NOTHING
+        return Thaw(0, pos) if bwd else Thaw(pos + 1)
+    return Thaw()  # isa_it and unmodeled forms resume by offset
+
+
+def _past_boundary(ev, cstate, t: Thaw) -> Thaw:
+    """``t`` past the first ``pos`` elements of a gmap/hmap index
+    (index order == id order)."""
+    if not cstate.pos:
+        return t
+    b = ev._thaw_boundary(cstate)
+    if b is None:
+        return NOTHING
+    if cstate.backward:
+        return t._replace(hi=b if t.hi is None else min(t.hi, b))
+    return t._replace(lo=b + 1)
+
+
+def sub_sort_backward(sub) -> bool:
+    """True when a modeled sorted sub runs its producer backward
+    (descending timestamp/guid first key -> the '~' iterator
+    freezes)."""
+    return bool(
+        sub.sort
+        and sub.sort[0].pattern.kind in ("timestamp", "guid")
+        and sub.sort[0].descending
+    )
+
+
+def thaw_sub(ev, sub) -> tuple:
+    """A subconstraint's cursor= resume (per-parent contents
+    pagination, ref graphd-read-set-cursor.c; test/unit/cursor6.sh):
+    ``(cstate, restriction, ctx)``.  ``ctx`` is None unless the sub's
+    result renders a cursor; then it holds the per-parent freeze
+    context's shared fields (the evaluator adds the index it freezes
+    from, see compiler.sub_cursor_mode)."""
+    cstate, t = None, Thaw()
+    asof = ev.asof is not None
+    if sub.cursor == "null:":
+        t = NOTHING
+    elif sub.cursor is not None:
+        try:
+            cstate = parse_cursor(
+                sub.cursor, sub, ev.types.resolve, asof=asof
+            )
+        except BadCursor as e:
+            raise GraphdError("BADCURSOR", e.message)
+        if cstate is not None:
+            t = thaw(ev, sub, cstate)
+    if sub.result is None or not any(
+        p.kind == "cursor" for p in sub.result.walk()
+    ):
+        return cstate, t, None
+    if asof:
+        horizon = min(
+            ev.store.count(), asof_horizon(ev.store, ev.asof) + 1
+        )
+    elif cstate is not None and cstate.horizon is not None:
+        horizon = cstate.horizon
+    else:
+        horizon = ev.store.count()
+    return cstate, t, {
+        "con": sub,
+        "offset": cstate.offset if cstate is not None else 0,
+        "lo": sub.start or 0,
+        "horizon": horizon,
+        "asof": asof,
+        "backward": sub_sort_backward(sub),
+        "resolve": ev.types.resolve,
+    }
+
+
+# -- frozen sort: boundary keys ----------------------------------------------
+
+
+def deserialize_sort_values(body: str):
+    """Invert compiler.sort_cursor_string's value serialization: a
+    sequence of tagged components ending in the guid tiebreak
+    (graphd-value.c graphd_value_serialize).  Returns
+    ([(tag, raw)], boundary_guid_serial) or (None, None)."""
+    b = body.encode("utf-8", "surrogateescape")
+    vals = []
+    i = 0
+    while i < len(b):
+        t = b[i:i + 1]
+        if t == b"n":
+            vals.append(("null", None))
+            i += 1
+        elif t in (b"s", b"a"):
+            mm = re.match(rb"[sa](\d+):", b[i:])
+            if not mm:
+                return None, None
+            ln = int(mm.group(1))
+            start = i + mm.end()
+            raw = b[start:start + ln]
+            if len(raw) != ln:
+                return None, None
+            vals.append((
+                t.decode(), raw.decode("utf-8", "surrogateescape")
+            ))
+            i = start + ln
+        elif t == b"b":
+            vals.append(("b", b[i + 1:i + 2].decode()))
+            i += 2
+        else:
+            mm = _SORT_TOKEN.get(t) and _SORT_TOKEN[t].match(b, i)
+            if not mm:
+                return None, None
+            vals.append((t.decode(), mm.group(1).decode()))
+            i = mm.end()
+    if not vals or vals[-1][0] != "g":
+        return None, None
+    return vals, guid_serial(vals[-1][1])
+
+
+#: tag byte -> pattern of a serialized sort component (graphd-value.c)
+_SORT_TOKEN = {
+    b"g": re.compile(rb"g([0-9a-f]{32})"),
+    b"t": re.compile(rb"t([0-9TZ:.\-]+)"),
+    b"d": re.compile(rb"d(\d+)\."),
+    b"#": re.compile(rb"#([^.]*)\."),
+}
+
+#: frozen_sort_key's answer for a component it cannot reconstruct
+UNKEYED = object()
+
+#: sort key kind -> the serialization tag its frozen component carries
+_KEY_TAG = {
+    "guid": "g", "timestamp": "t", "generation": "#", "datatype": "d",
+    "live": "b", "archival": "b", "left": "g", "right": "g",
+    "typeguid": "g", "scope": "g", "previous": "g", "next": "g",
+    "type": "g",
+}
+
+
+def frozen_sort_key(kind: str, comp: str, tag: str, raw,
+                    literal_var: bool = False):
+    """One frozen sort component ``(tag, raw)`` as the key the
+    evaluators sort ``kind`` by under comparator ``comp`` (null keys
+    are None), or UNKEYED.  ``literal_var``: a variable bound to a
+    string column, keyed like a value."""
+    if tag == "null":
+        return None
+    if kind in ("value", "name") or (kind == "variable" and literal_var):
+        return literal_key(raw, comp) if tag in ("s", "a") else UNKEYED
+    if _KEY_TAG.get(kind) != tag:
+        return UNKEYED
+    try:
+        if kind == "guid":
+            return guid_serial(raw)
+        if kind == "timestamp":
+            return ts_from_string(raw)
+        if kind in ("generation", "datatype"):
+            return int(raw)
+    except ValueError:
+        return UNKEYED
+    if kind in ("live", "archival"):
+        return raw == "1"
+    # linkage keys sort by the guid STRING (hex order == id order)
+    return raw
+
+
+def frozen_sort_tuple(con, plan, body, keyed) -> Optional[tuple]:
+    """The resumed ``sort:`` cursor's boundary key tuple from its
+    FROZEN payload, for a boundary element tombstoned or versioned
+    away between pages: the reference repositions by comparing the
+    frozen keys (graphd-sort.c graphd_sort_cursor_set; restarting
+    would re-deliver page 1 — writeinto seed 62).  One key per sort
+    component ``keyed(pattern, comp)`` says the evaluator sorts by,
+    up to the first guid key, then the id tiebreak; None when a
+    component cannot be reconstructed."""
+    if body is None or not con.sort:
+        return None
+    vals, bid = deserialize_sort_values(body)
+    if vals is None:
+        return None
+    out = []
+    for i0, sk in enumerate(con.sort):
+        if i0 >= len(vals):
+            return None
+        comp = resolve_comparator(
+            (con.sort_comparators[i0]
+             if con.sort_comparators and i0 < len(con.sort_comparators)
+             else None) or con.comparator or "default"
+        )
+        if not keyed(sk.pattern, comp):
+            continue
+        pat = sk.pattern
+        kv = frozen_sort_key(
+            pat.kind, comp, *vals[i0],
+            literal_var=pat.kind == "variable"
+            and plan.var_cols.get(pat.var) is not None
+            and plan.var_kind_cols.get(pat.var) is None
+            and plan.var_kinds.get(pat.var)
+            in ("value", "name", "type", "literal"),
+        )
+        if kv is UNKEYED:
+            return None
+        out.append(kv)
+        if pat.kind == "guid":
+            break
+    out.append(bid)
+    return tuple(out)
