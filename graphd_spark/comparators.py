@@ -651,26 +651,18 @@ def number_scan_order(s: Optional[str]) -> Optional[int]:
     return 2 * (bisect_right(t["keys"], key) - 1) + 1
 
 
-def string_bin_order_column(col):
+def scan_order_column(fn, col):
+    """Column of a bin-scan position function's values
+    (``string_bin_order``, ``number_scan_order``,
+    ``datetime_scan_order``; Arrow-vectorized)."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
     @F.pandas_udf(LongType())
-    def _sbin(vs: pd.Series) -> pd.Series:
-        return vs.map(string_bin_order)
+    def _order(vs: pd.Series) -> pd.Series:
+        return vs.map(fn)
 
-    return _sbin(col)
-
-
-def number_scan_order_column(col):
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def _nbin(vs: pd.Series) -> pd.Series:
-        return vs.map(number_scan_order)
-
-    return _nbin(col)
+    return _order(col)
 
 
 def delimited_match(pat: str, s: Optional[str]) -> bool:
@@ -699,18 +691,6 @@ def delimited_match(pat: str, s: Optional[str]) -> bool:
             c += 1
         p += 1
     return True
-
-
-def datetime_scan_order_column(col):
-    """Column of datetime bin-traversal positions (Arrow-vectorized)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType
-
-    @F.pandas_udf(LongType())
-    def _dtorder(vs: pd.Series) -> pd.Series:
-        return vs.map(datetime_scan_order)
-
-    return _dtorder(col)
 
 
 def delimited_match_column(col, pattern: str):

@@ -41,20 +41,22 @@ from pyspark.sql.window import Window
 
 from graphd_spark.comparators import (
     _ascii_lower,
+    datetime_scan_order,
     decode_number,
     fuzzy_key,
     literal_key,
     number_bin_lookup,
+    number_scan_order,
     resolve_comparator,
+    scan_order_column,
     sort_key_column,
     value_norm_key,
 )
 from graphd_spark.gql.ir import (
     Constraint,
-    DONTCARE,
     FALSE,
-    LINKAGES,
     Pattern,
+    StrCon,
     TRUE,
 )
 from graphd_spark.cursor import (
@@ -74,9 +76,13 @@ from graphd_spark.freeze import (
 )
 from graphd_spark.model import guid_serial, su_encode, ts_from_string
 from graphd_spark.sortsim import (
-    range_is_checked,
+    number_sort_drops,
+    range_scan_order,
     result_pagesize,
+    resume_offset,
+    sort_components,
     sort_production,
+    sorter_run,
 )
 from graphd_spark.pattern import (
     GraphdError,
@@ -95,39 +101,104 @@ PRIM_ELEM_FIELDS = [
 from graphd_spark.jexpr import _c, _cc, _ctx_id, _l  # noqa: E402
 
 
-def number_sort_root_keep(con, store) -> bool:
-    """True when the NUMBERS sort-root never produces: a 1-element
-    raw NAME bin anywhere in the constraint's mandatory MY-form
-    closure (the node itself or any transitively mandatory my-linkage
-    sub) collapses to a fixed-1/gmap member whose cost pre-evaluates
-    the whole and-iterator before the number vrange spins
-    (and_become_small_set), so non-number values survive a
-    number-comparator value sort.  Probed round 7 (12 directed
-    shapes + sortcursor fuzz seed 866): value=/type= bins, iam-form
-    and optional/count=0 subs, and 2-element bins (raw count,
-    versioned-away members included) do NOT short-circuit; extra
-    predicates, root or-chains, timestamps, and nesting depth don't
-    interfere."""
-    from itertools import islice
+def merged_strcons(scs, comparator):
+    """String constraints merge like guid sets when an '=' include
+    set exists (ref graphd-string-constraint.c set play-off, test
+    guidlist2): '=' sets intersect, '!=' subtracts from the include,
+    and a null-only '~=' reduces the include to its null member.
+    Other operators keep AND semantics."""
+    from graphd_spark.comparators import value_eq
 
-    def walk(c):
-        for sc in c.name_strcons:
-            if sc.op == "=" and len(sc.values) == 1 and sc.values[0]:
-                n = len(list(islice(
-                    store.find_by_name(sc.values[0]), 2
-                )))
-                if n == 1:
-                    return True
-        for s in c.subs:
-            if s.is_optional or s.count_eq == 0:
-                continue
-            if s.linkage is None or s.linkage[0] != "my":
-                continue
-            if walk(s):
-                return True
-        return False
+    eqs = [sc for sc in scs if sc.op == "="]
+    if not eqs:
+        return scs
 
-    return walk(con)
+    def eq(a, b):
+        if a is None or b is None:
+            return a is None and b is None
+        return value_eq(comparator, a, b)
+
+    include = list(eqs[0].values)
+    for sc in eqs[1:]:
+        include = [
+            v for v in include if any(eq(v, w) for w in sc.values)
+        ]
+    rest = []
+    for sc in scs:
+        if sc.op == "=":
+            continue
+        if sc.op == "!=":
+            include = [
+                v for v in include
+                if not any(eq(v, w) for w in sc.values)
+            ]
+        elif sc.op == "~=" and not any(
+            v is not None for v in sc.values
+        ):
+            # ~=() / ~=null against an include: null members only
+            include = [v for v in include if v is None]
+        else:
+            rest.append(sc)
+    return [StrCon("=", include)] + rest
+
+
+def expand_lineage(store, guids) -> list:
+    """All version GUIDs of the listed guids' lineages (~= match)."""
+    out: list[str] = []
+    for g in guids:
+        p = store.get(g)
+        if p is not None:
+            out.extend(store.lineage_members(p.lineage))
+    return out
+
+
+def guid_sets(store, gcs) -> tuple:
+    """All guid constraints on one column, merged with the reference's
+    set algebra (ref graphd-guid-constraint.c:150-330), as ``(include,
+    standalone, excludes)``: a value matches when it is in ``include``
+    (None: no include set) and in every ``standalone`` set, and is
+    not null and outside every ``excludes`` set.  '=' sets intersect,
+    '~=' expands lineages (null expands to null; an empty/null-only
+    match equals =null) and intersects an existing include set, and
+    '!=' subtracts from the include set when one exists — so
+    =(G null) != (G) keeps the null member (test/unit/guidlist3.sh).
+    A standalone '~=' or '!=' keeps its own set."""
+    include: Optional[set] = None
+    standalone = []
+    excludes = []
+    for gc in gcs:
+        if gc.op == "=":
+            s = set(gc.guids)
+            include = s if include is None else (include & s)
+        elif gc.op == "~=":
+            nonnull = [g for g in gc.guids if g is not None]
+            if not nonnull:
+                s = {None}  # ~=() / ~=null reduces to =null
+            else:
+                s = set(expand_lineage(store, nonnull))
+                if len(nonnull) < len(gc.guids):
+                    s.add(None)
+            if include is None and nonnull:
+                standalone.append(s)
+            else:
+                include = s if include is None else (include & s)
+        else:
+            excludes.append(gc.guids)
+    if include is not None:
+        for ex in excludes:
+            include -= set(ex)
+        return include, standalone, []
+    return include, standalone, [
+        {g for g in ex if g is not None} for ex in excludes
+    ]
+
+
+def _key_tuple(row, n: int) -> tuple:
+    """A collected row's ``__k0..`` sort keys (binary keys as bytes)."""
+    return tuple(
+        bytes(v) if isinstance(v, bytearray) else v
+        for v in (row[f"__k{i}"] for i in range(n))
+    )
 
 
 def _iter_branch_ok(b) -> bool:
@@ -642,125 +713,17 @@ class Compiler:
             skipped, backward, simulated = sort_production(con)
         if skipped:
             order = [_c("id").desc() if backward else _c("id").asc()]
-        elif con.sort:
-            first = con.sort[0]
-            comp0 = resolve_comparator(
-                con.sort_comparators[0]
-                if con.sort_comparators
-                else con.comparator or "default"
+        elif number_sort_drops(con, self.store):
+            df = df.filter(
+                _c("value").isNotNull()
+                & (sort_key_column(_c("value"), "number") < _l(b"\x02"))
             )
-            # the NUMBERS-binset production only drives the read when
-            # the sort itself is the producer AND the sorted elements
-            # are rendered: a default-comparator value range keeps the
-            # string vrange as producer, and a count-only result drops
-            # the unused sort entirely (gva_remove_unused_results)
-            # — differential seeds 139/147
-            _value_range = any(
-                sc.op in ("<", "<=", ">", ">=")
-                for sc in con.value_strcons
-            ) and resolve_comparator(
-                con.value_comparator or con.comparator
-            ) != "number"
-            _pat_tmp = (
-                con.result
-                if con.result is not None
-                else default_read_pattern()
-            )
-            _renders = any(
-                p.kind
-                not in (
-                    "count", "cursor", "estimate", "estimate-count",
-                    "iterator", "timeout", "list", "none",
-                )
-                for p in _pat_tmp.walk()
-            )
-            # which producers escape the number sort-root: probed
-            # against the reference (differential seeds 55/142),
-            # non-number values are DROPPED by the sort's number-
-            # vrange for every producer shape EXCEPT (a) a guid=
-            # fixed iterator and (b) a single-element name-hmap bin —
-            # both collapse to fixed-1 sets the sort short-circuits
-            # on, so their lone candidate surfaces unsorted.  A
-            # 2-element name bin, a value= bin, a type gmap, and a
-            # linkage sub all drop (reference probes in seed-142
-            # analysis); a default-comparator value range keeps the
-            # string vrange as producer (seeds 139/147).  The name-bin
-            # probe is a store lookup, so it goes last.
-            if (
-                first.pattern.kind == "value"
-                and comp0 == "number"
-                and not _value_range
-                and not con.guid
-                and _renders
-                and not number_sort_root_keep(con, self.store)
-            ):
-                # number-comparator value sorts iterate the NUMBERS
-                # binset, so values that don't decode as numbers (and
-                # nulls) never surface (ref graphd-comparator-number.c
-                # number_vrange_start, pdb-bins.c:242-280; test
-                # sortnumber r3/r6/r7)
-                key0 = sort_key_column(_c("value"), "number")
-                df = df.filter(
-                    _c("value").isNotNull() & (key0 < _l(b"\x02"))
-                )
-        if con.sort is None and any(
-            sc.op in ("<", "<=", ">", ">=") for sc in con.value_strcons
-        ) and not range_is_checked(con):
-            # the range produces the candidates (sortsim
-            # range_is_checked: otherwise rows surface in id order)
-            vcomp = resolve_comparator(
-                con.value_comparator or con.comparator
-            )
-            if vcomp == "default":
-                # unsorted range reads surface in the reference's
-                # value-bin scan order — STRING_BINS bin index, ids
-                # within a bin (ref comparator_default_range_bins,
-                # libpdb/pdb-bins-strtable.c; tests intrange,
-                # numberequal r2/r3)
-                from graphd_spark.comparators import (
-                    string_bin_order_column,
-                )
-
-                order = [
-                    string_bin_order_column(
-                        _c("value")
-                    ).asc_nulls_last(),
-                    _c("id").asc(),
-                ]
-            elif vcomp == "number" and all(
-                number_bin_lookup(v) is not None
-                for sc in con.value_strcons
-                if sc.op in ("<", "<=", ">", ">=")
-                for v in sc.values
-                if v is not None
-            ):
-                # number scans alternate each bin's exact-value hash
-                # bucket with its strictly-between contents (ref
-                # number_vrange_it_next; test numberequal r6/r9)
-                from graphd_spark.comparators import (
-                    number_scan_order_column,
-                )
-
-                order = [
-                    number_scan_order_column(
-                        _c("value")
-                    ).asc_nulls_last(),
-                    _c("id").asc(),
-                ]
-            elif vcomp == "datetime":
-                # datetime scans traverse negative-year bins in
-                # reverse, then years, then times; ids within a bin
-                # (ref datetime_inc/dec, test/unit/datetime.sh)
-                from graphd_spark.comparators import (
-                    datetime_scan_order_column,
-                )
-
-                order = [
-                    datetime_scan_order_column(
-                        _c("value")
-                    ).asc_nulls_last(),
-                    _c("id").asc(),
-                ]
+        scan = range_scan_order(con)
+        if scan is not None:
+            order = [
+                scan_order_column(scan, _c("value")).asc_nulls_last(),
+                _c("id").asc(),
+            ]
         # the reference's bounded incremental sorter over id-ordered
         # production (sortsim.py): tight sorted pages whose candidates
         # interleave null keys truncate exactly like graphd-sort.c.
@@ -780,8 +743,8 @@ class Compiler:
         if sim_info is not None:
             resume = 0
         elif resume_guid is not None:
-            resume, df = self._key_resume_offset(
-                df, con, plan, resume_guid, sort_body
+            resume, df = resume_offset(
+                self, df, con, plan, resume_guid, sort_body
             )
         start = con.start + resume
         limit = start + rps
@@ -1296,57 +1259,28 @@ class Compiler:
             df = df.filter(_c(col) == v)
         return df
 
-    def _key_resume_offset(self, df, con, plan, guid: str,
-                           sort_body=None):
-        """(offset, df) for a resumed ``sort:`` cursor: the offset of
-        the element AFTER the cursor element in this query's total
-        order — computed as a distributed count of rows ordering
-        strictly before it (plus the element itself), never a global
-        window.  Null keys sort greatest (asc_nulls_last /
-        desc_nulls_first), so comparisons treat null as +inf.
+    # -- the steps of sortsim.resume_offset -------------------------------
 
-        The returned df is narrowed to the boundary's FIRST-KEY NULL
-        CLASS: the reference's thawed sort scan re-enters through the
-        first key's index — a non-null boundary resumes in the key
-        index, where null-key rows don't exist, and a null boundary
-        resumes in the null bin (probed: sort=(name) chains drop
-        null-name rows after a named boundary, answer EMPTY when only
-        null-name rows remain, and vice versa).
+    _id_key = property(lambda self: _c("id"))
 
-        A boundary element tombstoned/versioned away between pages
-        (round-9 writeinto family) repositions by comparing its
-        FROZEN serialized keys instead (no +1: the element itself is
-        no longer in df)."""
-        comps = self._sort_components(con, plan)
-        tagged = df.select(
-            _c("id"),
-            *[c.alias(f"__k{i}") for i, (c, _d, _k) in enumerate(comps)],
-        )
-        cur = tagged.filter(
-            _c("id") == guid_serial(guid)
+    def _boundary_keys(self, df, comps, bid: int):
+        row = df.filter(_c("id") == bid).select(
+            *[c.alias(f"__k{i}") for i, (c, _d, _p) in enumerate(comps)]
         ).head()
-        present = cur is not None
-        if cur is None:
-            frozen = self._frozen_sort_tuple(con, plan, sort_body)
-            if frozen is None or len(frozen) != len(comps):
-                return 0, df
-            cur = {f"__k{i}": v for i, v in enumerate(frozen)}
-        if comps:
-            k0 = cur["__k0"]
-            c0 = comps[0][0]
-            df = df.filter(c0.isNull() if k0 is None else c0.isNotNull())
-            tagged = tagged.filter(
-                _c("__k0").isNull()
-                if k0 is None
-                else _c("__k0").isNotNull()
-            )
+        return None if row is None else _key_tuple(row, len(comps))
+
+    @staticmethod
+    def _null_class(df, col, null: bool):
+        return df.filter(col.isNull() if null else col.isNotNull())
+
+    @staticmethod
+    def _count_before(df, comps, keys) -> int:
+        # null keys sort greatest (asc_nulls_last / desc_nulls_first):
+        # a distributed count of the rows ordering strictly before
+        # ``keys``, never a global window
         before = _l(False)
         eq_prefix = _l(True)
-        for i, (_comp_col, desc, _kind) in enumerate(comps):
-            k = _c(f"__k{i}")
-            cv = cur[f"__k{i}"]
-            if isinstance(cv, bytearray):
-                cv = bytes(cv)
+        for (k, desc, _p), cv in zip(comps, keys):
             v = _l(cv)
             if cv is None:
                 # null = +inf: only non-null beats it ascending,
@@ -1358,73 +1292,23 @@ class Compiler:
                 lt = k.isNotNull() & (k < v)
             before = before | (eq_prefix & lt)
             eq_prefix = eq_prefix & k.eqNullSafe(v)
-        n_before = tagged.filter(before).count()
-        # +1 skips the boundary element itself — only when it still
-        # exists in df (a vanished boundary contributes no row)
-        return n_before + (1 if present else 0), df
-
-    def _frozen_sort_tuple(self, con, plan, body):
-        """freeze.frozen_sort_tuple in the _sort_key_col key domain
-        (binary comparator keys, id ints, guid strings), aligned with
-        _sort_components (id tiebreak last)."""
-        return freeze.frozen_sort_tuple(
-            con, plan, body,
-            lambda pat, comp: self._sort_key_col(pat, con, plan, comp)
-            is not None,
-        )
+        return df.filter(before).count()
 
     def _sortsim_run(self, con, plan, df, P_sim: int, resume_guid,
                      sort_body=None):
         """Collect candidate sort keys in producer (id) order and run
-        the incremental-sorter simulation (sortsim.simulate) — the
-        Spark-path mirror of the fast path's call.  Returns
-        (surviving page ids in sort order, accepted count, trailing)
-        or None to fall back to the declarative plan."""
-        from graphd_spark.sortsim import simulate
-
-        comps = self._sort_components(con, plan)
-        tagged = (
-            df.select(
-                _c("id"),
-                *[
-                    c.alias(f"__k{i}")
-                    for i, (c, _d, _k) in enumerate(comps)
-                ],
-            )
-            .orderBy("id")
-            .collect()
-        )
-        specs = [
-            (desc, kind not in ("variable", "contents"))
-            for _c, desc, kind in comps
-        ]
-
-        def keys_of(r):
-            out = []
-            for i in range(len(comps)):
-                v = r[f"__k{i}"]
-                if isinstance(v, bytearray):
-                    v = bytes(v)
-                out.append(v)
-            return tuple(out)
-
-        entries = [(keys_of(r), r["id"]) for r in tagged]
-        grid = None
-        if resume_guid is not None:
-            sid = guid_serial(resume_guid)
-            grid = next((k for k, i in entries if i == sid), None)
-            if grid is None:
-                # boundary tombstoned/versioned between pages: the
-                # reference repositions by COMPARING the frozen keys
-                # (round 9, writeinto family)
-                grid = self._frozen_sort_tuple(con, plan, sort_body)
-                if grid is not None and len(grid) != len(comps):
-                    grid = None
-        arr, accepted, trailing = simulate(
-            entries, P_sim, specs, grid=grid
+        the incremental sorter (sortsim.sorter_run).  Returns
+        (surviving page ids in sort order, accepted count, trailing)."""
+        comps = sort_components(self, con, plan)
+        tagged = df.select(
+            _c("id"),
+            *[c.alias(f"__k{i}") for i, (c, _d, _p) in enumerate(comps)],
+        ).orderBy("id").collect()
+        entries = [(_key_tuple(r, len(comps)), r["id"]) for r in tagged]
+        arr, accepted, trailing = sorter_run(
+            self, con, plan, comps, entries, P_sim, resume_guid, sort_body
         )
         return [pid for _k, pid in arr], accepted, trailing
-
 
     def compile(self, con: Constraint):
         """Public entry: compile a read constraint to its candidate
@@ -2087,39 +1971,19 @@ class Compiler:
 
     # -- sorting -----------------------------------------------------------
 
-    def _sort_components(self, con: Constraint, plan: SetPlan):
-        """(key column, descending, pattern kind) triples of the
-        query's total order, ending in the decisive id tiebreak."""
-        comps = []
-        keys = con.sort or []
-        for i, sk in enumerate(keys):
-            # sort-comparators attach to leading sort keys only; the
-            # rest use the constraint comparator (ref
-            # graphd-semantic.c:452-470, test david_7 id=9)
-            comp = None
-            if con.sort_comparators and i < len(con.sort_comparators):
-                comp = con.sort_comparators[i]
-            if comp is None:
-                comp = con.comparator or "default"
-            col = self._sort_key_col(sk.pattern, con, plan, comp)
-            if col is None:
-                continue
-            comps.append((col, sk.descending, sk.pattern.kind))
-        comps.append((_c("id"), False, "guid"))
-        return comps
-
     def _sort_exprs(self, con: Constraint, plan: SetPlan):
         # graphd sorts SQL-null values last ascending
         # (graph_fuzzycmp: NULL compares greater than any string)
         return [
             col.desc_nulls_first() if desc else col.asc_nulls_last()
-            for col, desc, _k in self._sort_components(con, plan)
+            for col, desc, _p in sort_components(self, con, plan)
         ]
 
-    def _sort_key_col(self, pat: Pattern, con: Constraint, plan: SetPlan,
-                      comparator: str):
+    def _sort_key(self, pat: Pattern, con: Constraint, plan: SetPlan,
+                  comparator: str):
+        """sortsim's key step: the Spark Column one sort key orders by
+        (``comparator`` resolved), None when the plan has none."""
         k = pat.kind
-        comparator = resolve_comparator(comparator)
         if k == "value" and comparator == "default":
             # sorted natively by the stored fuzzy key — no Python in
             # the sort path
@@ -2138,12 +2002,6 @@ class Compiler:
             return _c("typeguid")
         if k in ("live", "archival"):
             return _c(k)
-        if k in (
-            "count", "cursor", "estimate", "iterator", "timeout",
-            "estimate-count",
-        ):
-            # ref graphd-sort-compile.c rejections (test/unit/sort20.sh)
-            raise GraphdError("SEMANTICS", f"cannot sort by {k}")
         if k == "previous":
             return _c("prev")
         if k == "next":
@@ -2175,10 +2033,6 @@ class Compiler:
                     arr = F.transform(_c(acol), lambda x: x[field])
                     return sort_key_column(arr, "__fuzzy_list")
             return None
-        if k == "literal":
-            raise GraphdError(
-                "SEMANTICS", f'cannot sort by "{pat.literal or ""}"'
-            )
         if k == "contents":
             # order elements by their (first) child set's values,
             # compared element-wise (ref sort9.sh)
@@ -2189,8 +2043,6 @@ class Compiler:
                     )
                     return sort_key_column(arr, "__fuzzy_list")
             return None
-        if k == "list":
-            raise GraphdError("SYNTAX", "cannot sort by nested lists.")
         raise GraphdError("SEMANTICS", f"unsupported sort key {k!r}")
 
     def _mixed_var_sort_key(self, vcol: str, kcol: str, comparator: str):
@@ -2277,14 +2129,14 @@ class Compiler:
 
         # value-comparator overrides matching only (david_8.sh)
         match_comp = con.value_comparator or con.comparator
-        for sc in self._merged_strcons(con.type_strcons, match_comp):
+        for sc in merged_strcons(con.type_strcons, match_comp):
             conds.append(self._type_cond(sc))
-        for sc in self._merged_strcons(con.name_strcons, match_comp):
+        for sc in merged_strcons(con.name_strcons, match_comp):
             conds.append(
                 self._string_cond(_c("name"), sc, match_comp,
                                   is_value=False)
             )
-        for sc in self._merged_strcons(con.value_strcons, match_comp):
+        for sc in merged_strcons(con.value_strcons, match_comp):
             conds.append(
                 self._string_cond(_c("value"), sc, match_comp,
                                   is_value=True)
@@ -2382,92 +2234,10 @@ class Compiler:
             ">": c >= n, ">=": c >= n,
         }[op]
 
-    def _merged_strcons(self, scs, comparator):
-        """String constraints merge like guid sets when an '=' include
-        set exists (ref graphd-string-constraint.c set play-off, test
-        guidlist2): '=' sets intersect, '!=' subtracts from the
-        include, and a null-only '~=' reduces the include to its null
-        member.  Other operators keep AND semantics."""
-        from graphd_spark.comparators import value_eq
-        from graphd_spark.gql.ir import StrCon
-
-        eqs = [sc for sc in scs if sc.op == "="]
-        if not eqs:
-            return scs
-
-        def eq(a, b):
-            if a is None or b is None:
-                return a is None and b is None
-            return value_eq(comparator, a, b)
-
-        include = list(eqs[0].values)
-        for sc in eqs[1:]:
-            include = [
-                v for v in include if any(eq(v, w) for w in sc.values)
-            ]
-        rest = []
-        for sc in scs:
-            if sc.op == "=":
-                continue
-            if sc.op == "!=":
-                include = [
-                    v for v in include
-                    if not any(eq(v, w) for w in sc.values)
-                ]
-            elif sc.op == "~=" and not any(
-                v is not None for v in sc.values
-            ):
-                # ~=() / ~=null against an include: null members only
-                include = [v for v in include if v is None]
-            else:
-                rest.append(sc)
-        return [StrCon("=", include)] + rest
-
-    def _expand_lineage(self, guids):
-        """All version GUIDs of the listed guids' lineages (~= match)."""
-        out: list[str] = []
-        for g in guids:
-            p = self.store.get(g)
-            if p is not None:
-                out.extend(self.store.lineage_members(p.lineage))
-        return out
-
     def _guid_col_pred(self, col, gcs):
-        """All guid constraints on one column, merged with the
-        reference's set algebra (ref graphd-guid-constraint.c:150-330):
-        '=' sets intersect, '~=' expands lineages (null expands to
-        null; an empty/null-only match equals =null) and intersects an
-        existing include set, and '!=' subtracts from the include set
-        when one exists — so =(G null) != (G) keeps the null member
-        (test/unit/guidlist3.sh).  Standalone '~='/'!=' keep their
-        direct predicate forms."""
-        include: Optional[set] = None
-        standalone = []
-        excludes = []
-        for gc in gcs:
-            if gc.op == "=":
-                s = set(gc.guids)
-                include = s if include is None else (include & s)
-            elif gc.op == "~=":
-                nonnull = [g for g in gc.guids if g is not None]
-                has_null = any(g is None for g in gc.guids)
-                if not nonnull:
-                    # ~=() / ~=null reduces to =null
-                    s = {None}
-                else:
-                    s = set(self._expand_lineage(nonnull))
-                    if has_null:
-                        s.add(None)
-                if include is None and nonnull:
-                    standalone.append(s)
-                else:
-                    include = s if include is None else (include & s)
-            else:
-                excludes.append(gc)
-        if include is not None:
-            for gc in excludes:
-                include -= set(gc.guids)
-            excludes = []
+        """guid_sets' merge of one column's guid constraints as a
+        predicate."""
+        include, standalone, excludes = guid_sets(self.store, gcs)
         parts = []
         if include is not None:
             nonnull = [g for g in include if g is not None]
@@ -2483,51 +2253,15 @@ class Compiler:
             if None in s:
                 p = p | col.isNull()
             parts.append(p)
-        for gc in excludes:
+        for ex in excludes:
             # standalone '!=': the linkage must exist and differ
-            nonnull = [g for g in gc.guids if g is not None]
             p = col.isNotNull()
-            if nonnull:
-                p = p & ~col.isin(nonnull)
+            if ex:
+                p = p & ~col.isin(list(ex))
             parts.append(p)
         pred = parts[0]
         for p in parts[1:]:
             pred = pred & p
-        return pred
-
-    def _guid_cond(self, col, gc, nullable: bool):
-        if gc.op == "~=":
-            # lineage match (ref graphd-guid-constraint.c): any version
-            # in the lineage of each listed GUID
-            guids: list[str] = []
-            for g in gc.guids:
-                if g is None:
-                    continue
-                p = self.store.get(g)
-                if p is not None:
-                    guids.extend(self.store.lineage_members(p.lineage))
-            if not guids:
-                return _l(False)
-            return col.isin(guids)
-        nonnull = [g for g in gc.guids if g is not None]
-        has_null = any(g is None for g in gc.guids)
-        if gc.op == "=":
-            parts = []
-            if nonnull:
-                parts.append(col.isin(nonnull))
-            if has_null:
-                parts.append(col.isNull())
-            if not parts:
-                return _l(False)
-            pred = parts[0]
-            for p in parts[1:]:
-                pred = pred | p
-            return pred
-        # '!=': the linkage must exist and differ (null left doesn't
-        # satisfy left!=G, but guid!=null means "exists" trivially)
-        pred = col.isNotNull()
-        if nonnull:
-            pred = pred & ~col.isin(nonnull)
         return pred
 
     def _next_cond(self, gc):
@@ -2699,11 +2433,9 @@ class Compiler:
                 # segments only (negative years / years / times, ref
                 # datetime_inc/dec/skip) — values outside them (and
                 # nulls) never surface
-                from graphd_spark.comparators import (
-                    datetime_scan_order_column,
-                )
-
-                return pred & datetime_scan_order_column(col).isNotNull()
+                return pred & scan_order_column(
+                    datetime_scan_order, col
+                ).isNotNull()
             if comp == "number":
                 lo_bin = (
                     number_bin_lookup(lit) if is_value else None
@@ -2720,11 +2452,7 @@ class Compiler:
                     # the boundary's canonical string (' 0' -> '0',
                     # ref number_vrange_it_next + pdb_hash_number_
                     # iterator; test numberequal r6)
-                    from graphd_spark.comparators import (
-                        number_scan_order_column,
-                    )
-
-                    scan = number_scan_order_column(col)
+                    scan = scan_order_column(number_scan_order, col)
                     pred = pred & scan.isNotNull()
                     if sc.op in (">", ">="):
                         pred = pred & (scan >= _l(2 * lo_bin))

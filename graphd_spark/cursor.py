@@ -552,7 +552,7 @@ def signature_checksum(con: Constraint, resolve=None,
 _KNOWN_PREFIXES = (
     "and:", "or:", "vrange:", "gmap:", "hmap:", "isa:", "linksto:",
     "prefix:", "bgmap:", "null:", "sort:", "position:", "all:",
-    "fixed:", "without:", "cursor:", "vip:",
+    "fixed:", "without:", "vip:",
 )
 
 

@@ -51,12 +51,20 @@ from graphd_spark.comparators import (
     literal_key,
     number_bin_lookup,
     number_scan_order,
+    number_sort_key,
     resolve_comparator,
     string_bin_order,
     value_norm_key,
 )
 from graphd_spark import freeze
-from graphd_spark.compiler import PRIM_ELEM_FIELDS, SetPlan, SubPlan, _OPS
+from graphd_spark.compiler import (
+    PRIM_ELEM_FIELDS,
+    SetPlan,
+    SubPlan,
+    _OPS,
+    guid_sets,
+    merged_strcons,
+)
 from graphd_spark.cursor import (
     asof_horizon,
     count_root_set,
@@ -73,13 +81,24 @@ from graphd_spark.freeze import (
     _prefix_rollup,
 )
 from graphd_spark.glob import glob_match
-from graphd_spark.gql.ir import Constraint, StrCon, TRUE, FALSE
+from graphd_spark.gql.ir import Constraint, TRUE, FALSE
 from graphd_spark.model import (
     Primitive,
     guid_compose,
     guid_serial,
 )
-from graphd_spark.sortsim import result_pagesize, simulate, sort_production
+from graphd_spark.sortsim import (
+    _full_cmp,
+    number_sort_drops,
+    range_scan_order,
+    result_pagesize,
+    resume_offset,
+    simulate,
+    sort_components,
+    sort_keys,
+    sort_production,
+    sorter_run,
+)
 from graphd_spark.wordhash import prefix_bins
 from graphd_spark.pattern import (
     GraphdError,
@@ -576,10 +595,11 @@ class FastReader:
         self._ts_id_bounds: dict = {}
         self._ts_envelopes: dict = {}
         #: per-request cache of merged string-constraint lists, keyed
-        #: by (constraint identity, iter_level): _iter_intrinsic runs
-        #: once per CANDIDATE, but the merge depends only on the
-        #: node's (rebound-per-request) strcons — constant within one
-        #: reader, which lives for exactly one request
+        #: by (constraint identity, iter_level), and of merged guid
+        #: sets, keyed by (constraint identity, column): _iter_intrinsic
+        #: runs once per CANDIDATE, but the merge depends only on the
+        #: node's (rebound-per-request) constraints — constant within
+        #: one reader, which lives for exactly one request
         self._msc_cache: dict = {}
         #: store-level (plan, matches) cache for repeated template
         #: shapes — the serving analog of the reference's iterator
@@ -700,7 +720,12 @@ class FastReader:
             keep = _thaw_pred(t)
             if keep is not None:
                 matches = [(p, r) for p, r in matches if keep(p)]
-        matches = self._number_sort_drop(con, matches)
+        if number_sort_drops(con, self.store):
+            matches = [
+                (p, row) for p, row in matches
+                if p.value is not None
+                and number_sort_key(p.value) < b"\x02"
+            ]
         skipped = backward = simulated = False
         if con.sort:
             skipped, backward, simulated = sort_production(con)
@@ -709,99 +734,30 @@ class FastReader:
         if skipped:
             if backward:
                 matches = matches[::-1]
-        elif simulated:
+        elif simulated and con.start + rps > 0:
             # real sort over id-ordered production: the reference's
             # bounded incremental sorter (sortsim.py) — tight pages
             # whose candidates interleave null keys truncate exactly
             # like graphd-sort.c, and cursor resumes replay the grid
             # rules (the round-5 null-class model is its special case)
-            P_sim = con.start + rps
-            if P_sim > 0:
-                keyfns = self._root_keyfns(con, plan)
-                specs = [(d, pre) for _f, d, pre in keyfns]
-                entries = [
-                    (tuple(f(p, r) for f, _d, _p in keyfns), (p, r))
-                    for p, r in matches
-                ]
-                grid = None
-                if resume_guid is not None:
-                    from graphd_spark.model import guid_serial
-
-                    sid = guid_serial(resume_guid)
-                    b = next(
-                        (k for k, pr in entries if pr[0].id == sid), None
-                    )
-                    if b is None:
-                        # boundary tombstoned/versioned between pages
-                        # (writeinto seed 62): the reference
-                        # repositions by COMPARING the frozen
-                        # serialized keys, not by finding the element
-                        # — reconstruct its key tuple from the payload
-                        b = self._frozen_sort_grid(con, plan, sort_body)
-                        if b is not None and len(b) != len(keyfns):
-                            b = None
-                    grid = b
-                arr, accepted, trailing = simulate(
-                    entries, P_sim, specs, grid=grid
-                )
-                matches = [payload for _k, payload in arr]
-                resume = 0
-                sim_info = (accepted, trailing)
-            else:
-                self._apply_sort(con, plan, matches)
+            comps = sort_components(self, con, plan)
+            entries = [
+                (tuple(f(p, r) for f, _d, _p in comps), (p, r))
+                for p, r in matches
+            ]
+            arr, accepted, trailing = sorter_run(
+                self, con, plan, comps, entries, con.start + rps,
+                resume_guid, sort_body,
+            )
+            matches = [payload for _k, payload in arr]
+            resume = 0
+            sim_info = (accepted, trailing)
         else:
             self._apply_sort(con, plan, matches)
         if resume_guid is not None and sim_info is None:
-            # sort-root-ordered production (bare scans, vrange
-            # producers): the ordered producer truncates losslessly,
-            # and the thawed scan re-enters through the boundary's
-            # FIRST-KEY NULL CLASS — the key's index (non-null
-            # boundary, where null-key rows don't exist) or the null
-            # bin (null boundary); probed round 5.  A boundary
-            # element tombstoned/versioned away between pages resumes
-            # by COMPARING the frozen serialized keys (round 9,
-            # writeinto family — restarting re-delivers page 1).
-            from graphd_spark.model import guid_serial
-            from graphd_spark.sortsim import _full_cmp
-
-            sid = guid_serial(resume_guid)
-            resume = 0
-            b_row = next(
-                ((p, r) for p, r in matches if p.id == sid), None
+            resume, matches = resume_offset(
+                self, matches, con, plan, resume_guid, sort_body
             )
-            if b_row is None and con.sort:
-                frozen = self._frozen_sort_grid(con, plan, sort_body)
-                if frozen is not None:
-                    keyfns = self._root_keyfns(con, plan, to_guid=True)
-                    specs = [(d, pre) for _f, d, pre in keyfns]
-                    if keyfns and len(frozen) == len(keyfns):
-                        b_null = frozen[0] is None
-                        matches = [
-                            (p, r) for p, r in matches
-                            if (keyfns[0][0](p, r) is None) == b_null
-                        ]
-                        resume = sum(
-                            1 for p, r in matches
-                            if _full_cmp(
-                                tuple(
-                                    f(p, r) for f, _d, _p in keyfns
-                                ),
-                                frozen, specs,
-                            ) <= 0
-                        )
-            if b_row is not None and con.sort:
-                keyfns = self._root_keyfns(con, plan)
-                fn0 = keyfns[0][0] if len(keyfns) > 1 else None
-                if fn0 is not None:
-                    b_null = fn0(b_row[0], b_row[1]) is None
-                    matches = [
-                        (p, r) for p, r in matches
-                        if (fn0(p, r) is None) == b_null
-                    ]
-            for i, (p, _r) in enumerate(matches):
-                if p.id == sid:
-                    resume = i + 1
-                    break
         start = con.start + resume
         limit = start + rps
         # under the incremental-sorter sim, the set count is the
@@ -874,30 +830,29 @@ class FastReader:
 
     # -- the data-plane steps of cursor.emit_root_cursor ------------------
 
-    def _root_keyfns(self, con, plan, to_guid: bool = False) -> list:
-        """The root sort's (key fn, descending, precompares) triples
-        that have a key function, then the id tiebreak; ``to_guid``
-        ends the keys at a guid key, which is decisive."""
-        keyfns = []
-        for i0, sk in enumerate(con.sort):
-            comp = None
-            if con.sort_comparators and i0 < len(con.sort_comparators):
-                comp = con.sort_comparators[i0]
-            fn = self._sort_key_fn(
-                sk.pattern,
-                resolve_comparator(comp or con.comparator or "default"),
-                plan,
-            )
-            if fn is None:
-                continue
-            keyfns.append(
-                (fn, sk.descending,
-                 sk.pattern.kind not in ("variable", "contents"))
-            )
-            if to_guid and sk.pattern.kind == "guid":
-                break
-        keyfns.append((_id_key, False, True))
-        return keyfns
+    # -- the steps of sortsim.resume_offset -------------------------------
+
+    _id_key = staticmethod(_id_key)
+
+    @staticmethod
+    def _boundary_keys(matches, comps, bid: int):
+        for p, r in matches:
+            if p.id == bid:
+                return tuple(f(p, r) for f, _d, _p in comps)
+        return None
+
+    @staticmethod
+    def _null_class(matches, fn, null: bool):
+        return [(p, r) for p, r in matches if (fn(p, r) is None) == null]
+
+    @staticmethod
+    def _count_before(matches, comps, keys) -> int:
+        specs = [(d, pre) for _f, d, pre in comps]
+        return sum(
+            1 for p, r in matches
+            if _full_cmp(tuple(f(p, r) for f, _d, _p in comps), keys,
+                         specs) < 0
+        )
 
     def _more_than(self, matches, limit: int) -> bool:
         return len(matches) > limit
@@ -1332,138 +1287,33 @@ class FastReader:
             return None
         return None
 
-    def _number_sort_drop(self, con: Constraint, matches):
-        """Mirror of the NUMBERS-binset sort-root drop in Compiler.run:
-        a first-key number-comparator value sort iterates the NUMBERS
-        binset, so nulls and non-number values never surface — unless
-        a fixed producer (guid=), a 1-element name bin, a string
-        vrange producer, or a render-free result short-circuits it."""
-        if not con.sort:
-            return matches
-        first = con.sort[0]
-        comp0 = resolve_comparator(
-            con.sort_comparators[0]
-            if con.sort_comparators
-            else con.comparator or "default"
-        )
-        if first.pattern.kind != "value" or comp0 != "number":
-            return matches
-        if con.guid:
-            return matches  # fixed producer short-circuits
-        if any(
-            sc.op in _RANGE_OPS for sc in con.value_strcons
-        ) and resolve_comparator(
-            con.value_comparator or con.comparator
-        ) != "number":
-            return matches  # string vrange stays producer
-        pat = (
-            con.result if con.result is not None
-            else default_read_pattern()
-        )
-        if not any(
-            p.kind not in (
-                "count", "cursor", "estimate", "estimate-count",
-                "iterator", "timeout", "list", "none",
-            )
-            for p in pat.walk()
-        ):
-            return matches  # count-only result drops the unused sort
-        # 1-element raw NAME bin anywhere in the mandatory my-form
-        # closure: the and pre-evaluates before the number vrange
-        # spins (shared rule, probed round 7 incl. sortcursor fuzz
-        # seed 866 — a my-sub with a 1-element label bin)
-        from graphd_spark.compiler import number_sort_root_keep
-        if number_sort_root_keep(con, self.store):
-            return matches
-        from graphd_spark.comparators import number_sort_key
-        return [
-            (p, row) for p, row in matches
-            if p.value is not None
-            and number_sort_key(p.value) < b"\x02"
-        ]
-
-    # -- sorting (mirror of _sort_components/_sort_exprs) -----------------
+    # -- sorting (one key function per _sort_key column) ------------------
 
     def _apply_sort(self, con: Constraint, plan: SetPlan, matches) -> None:
-        """In-place multi-key sort, id tiebreak last.  Key functions
-        mirror _sort_key_col's per-kind columns (the comparator sort
-        keys are the SAME Python functions the Spark path wraps in
-        pandas UDFs, so byte order is identical); null placement
-        mirrors asc_nulls_last / desc_nulls_first.
-
-        Unsorted reads whose only producer is a value RANGE surface in
-        the reference's value-bin scan order — mirror of the order
-        override in Compiler.run."""
+        """In-place multi-key sort, id tiebreak last, null placement as
+        asc_nulls_last / desc_nulls_first (the comparator sort keys
+        are the Python functions the Spark path wraps in pandas UDFs,
+        so byte order is identical).  An unsorted read a value range
+        produces surfaces in that range's scan order."""
         if con.sort is None:
-            self._apply_scan_order(con, matches)
+            scan = range_scan_order(con)
+            if scan is not None:
+                def key(m):
+                    k = scan(m[0].value)
+                    return (k is None, 0 if k is None else k, m[0].id)
+
+                matches.sort(key=key)
             return
-        comps = []
-        for i, sk in enumerate(con.sort or []):
-            comp = None
-            if con.sort_comparators and i < len(con.sort_comparators):
-                comp = con.sort_comparators[i]
-            comp = resolve_comparator(comp or con.comparator or "default")
-            fn = self._sort_key_fn(sk.pattern, comp, plan)
-            if fn is None:
-                continue
-            comps.append((fn, sk.descending))
-        comps.append((lambda p, row: p.id, False))
         # stable passes from the least-significant key up
-        for fn, desc in reversed(comps):
+        for fn, desc, _p in reversed(sort_components(self, con, plan)):
             def key(m, fn=fn):
                 k = fn(m[0], m[1])
                 return (k is None, 0 if k is None else k)
             matches.sort(key=key, reverse=desc)
 
-    def _apply_scan_order(self, con: Constraint, matches) -> None:
-        if not any(
-            sc.op in _RANGE_OPS for sc in con.value_strcons
-        ):
-            return  # id order (matches are already id-ordered)
-        if (
-            con.type_strcons or con.links or con.name_strcons
-            or con.guid
-            or any(
-                (sb.linkage or (None, None))[0] in ("iam", "my")
-                and not sb.is_optional
-                and sb.count_eq != 0
-                for sb in con.subs
-            )
-        ):
-            return  # another indexed producer: id order
-        vcomp = resolve_comparator(
-            con.value_comparator or con.comparator
-        )
-        if vcomp == "default":
-            fn = string_bin_order
-        elif vcomp == "number" and all(
-            number_bin_lookup(v) is not None
-            for sc in con.value_strcons
-            if sc.op in _RANGE_OPS
-            for v in sc.values
-            if v is not None
-        ):
-            fn = number_scan_order
-        elif vcomp == "datetime":
-            fn = datetime_scan_order
-        else:
-            return
-
-        def key(m):
-            k = fn(m[0].value)
-            return (k is None, 0 if k is None else k, m[0].id)
-
-        matches.sort(key=key)
-
-    def _frozen_sort_grid(self, con, plan, body):
-        """freeze.frozen_sort_tuple in the _sort_key_fn key domain, id
-        tiebreak last."""
-        return freeze.frozen_sort_tuple(
-            con, plan, body,
-            lambda pat, comp: self._sort_key_fn(pat, comp, plan) is not None,
-        )
-
-    def _sort_key_fn(self, pat, comparator: str, plan: SetPlan):
+    def _sort_key(self, pat, con, plan: SetPlan, comparator: str):
+        """sortsim's key step: the ``(primitive, row)`` function one
+        sort key orders by, None when the plan has none."""
         k = pat.kind
         if k == "value" and comparator == "default":
             return lambda p, row: p.value_fkey
@@ -1485,11 +1335,6 @@ class FastReader:
             return lambda p, row: p.typeguid
         if k in ("live", "archival"):
             return lambda p, row, f=k: getattr(p, f)
-        if k in (
-            "count", "cursor", "estimate", "iterator", "timeout",
-            "estimate-count",
-        ):
-            raise GraphdError("SEMANTICS", f"cannot sort by {k}")
         if k == "previous":
             return lambda p, row: p.prev
         if k == "next":
@@ -1560,12 +1405,6 @@ class FastReader:
                         )
                     return vkey
             return None
-        if k == "literal":
-            raise GraphdError(
-                "SEMANTICS", f'cannot sort by "{pat.literal or ""}"'
-            )
-        if k == "list":
-            raise GraphdError("SYNTAX", "cannot sort by nested lists.")
         raise GraphdError("SEMANTICS", f"unsupported sort key {k!r}")
 
     # -- set evaluation ---------------------------------------------------
@@ -2230,19 +2069,11 @@ class FastReader:
         reference's one-shot sort-cursor thaw; graphd-read-set.c
         grsc_initialize_sort + graphd-sort.c graphd_sort_cursor_set)."""
         keyfns = []
-        for i0, sk in enumerate(sub.sort):
-            comp = None
-            if sub.sort_comparators and i0 < len(sub.sort_comparators):
-                comp = sub.sort_comparators[i0]
-            comp = resolve_comparator(
-                comp or sub.comparator or "default"
-            )
-            fn = self._sort_key_fn(sk.pattern, comp, sub_plan)
+        for pat, comp, desc in sort_keys(sub):
+            fn = self._sort_key(pat, sub, sub_plan, comp)
             if fn is None:
                 raise Unsupported("sub-sort-key")
-            keyfns.append(
-                (fn, sk.descending, comp, sk.pattern.kind)
-            )
+            keyfns.append((fn, desc, comp, pat.kind))
         P = (sub.start or 0) + result_pagesize(sub)
         if P <= 0:
             raise Unsupported("sub-sort-pagesize0")
@@ -2378,8 +2209,8 @@ class FastReader:
 
     def _sort_grid_keys(self, keyfns, vals, bguid):
         """Map the deserialized boundary VALUES onto the comparator
-        sort keys the simulator compares (the serializer truncates at
-        the first guid key; a trailing guid tiebreak always closes)."""
+        sort keys the simulator compares (a trailing guid tiebreak
+        always closes)."""
         keys = []
         for (_fn, _d, comp, kind), (tag, raw) in zip(keyfns, vals):
             k = freeze.frozen_sort_key(kind, comp, tag, raw)
@@ -2387,16 +2218,8 @@ class FastReader:
                 return None
             keys.append(k)
             if kind == "guid":
-                # the serializer truncates at the first guid key
-                # (decisive order); recompute the remaining grid
-                # components from the boundary element itself
-                if len(keys) < len(keyfns):
-                    bi = k - self.store._base
-                    if not (0 <= bi < len(self.store.rows)):
-                        return None
-                    bp = self.store.rows[bi]
-                    for fn2, _d2, _c2, _k2 in keyfns[len(keys):]:
-                        keys.append(fn2(bp, None))
+                # the keys end at the first guid key, as the
+                # serializer's do
                 return tuple(keys) + (k,)
         if len(vals) != len(keyfns) + 1:
             return None
@@ -3636,24 +3459,11 @@ class FastReader:
 
     def _guid_include_ids(self, con: Constraint) -> Optional[set]:
         """Resolved id set when guid constraints pin an include set
-        (Compiler._guid_col_pred's include algebra; None = no pinning
-        include set)."""
-        include = None
-        for gc in con.guid:
-            if gc.op == "=":
-                s = set(gc.guids)
-                include = s if include is None else (include & s)
-            elif gc.op == "~=":
-                nonnull = [g for g in gc.guids if g is not None]
-                has_null = any(g is None for g in gc.guids)
-                if not nonnull:
-                    s = {None}
-                else:
-                    s = set(self._expand_lineage(nonnull))
-                    if has_null:
-                        s.add(None)
-                if include is not None or not nonnull:
-                    include = s if include is None else (include & s)
+        (guid_sets' include before any '!=' subtracts from it; None =
+        no pinning include set)."""
+        include = guid_sets(
+            self.store, [gc for gc in con.guid if gc.op in ("=", "~=")]
+        )[0]
         if include is None:
             return None
         out = set()
@@ -3755,10 +3565,10 @@ class FastReader:
             return False
         if con.dateline is not None and not self._dateline_pred(p, con):
             return False
-        if con.guid and not self._guid_pred(p.guid, con.guid):
+        if con.guid and not self._guid_pred(p.guid, con, "guid", con.guid):
             return False
         for lk, gcs in con.links.items():
-            if gcs and not self._guid_pred(getattr(p, lk), gcs):
+            if gcs and not self._guid_pred(getattr(p, lk), con, lk, gcs):
                 return False
         if not iter_level:
             # prev/next are lineage-generational: acceptance-level
@@ -3767,7 +3577,9 @@ class FastReader:
             # rewrite markers (parser._normalize_version_pointers):
             # they sign "=()" but match nothing-in-particular
             live_prev = [gc for gc in con.prev if gc.guids]
-            if live_prev and not self._guid_pred(p.prev, live_prev):
+            if live_prev and not self._guid_pred(
+                p.prev, con, "prev", live_prev
+            ):
                 return False
             for gc in con.next:
                 if gc.guids and not self._next_pred(p, gc):
@@ -3790,9 +3602,9 @@ class FastReader:
                 nscs = [sc for sc in nscs if _strcon_is_bin(sc)]
                 vscs = [sc for sc in vscs if _strcon_is_bin(sc)]
             merged = self._msc_cache[mk] = (
-                self._merged_strcons(tscs, match_comp),
-                self._merged_strcons(nscs, match_comp),
-                self._merged_strcons(vscs, match_comp),
+                merged_strcons(tscs, match_comp),
+                merged_strcons(nscs, match_comp),
+                merged_strcons(vscs, match_comp),
                 # is a value RANGE the producer?  Only when no other
                 # bin predicate (type/name/value equality or prefix)
                 # can produce
@@ -3956,53 +3768,22 @@ class FastReader:
             ">": c >= n, ">=": c >= n,
         }[op]
 
-    def _expand_lineage(self, guids):
-        out = []
-        for g in guids:
-            p = self.store.get(g)
-            if p is not None:
-                out.extend(self.store.lineage_members(p.lineage))
-        return out
-
-    def _guid_pred(self, val: Optional[str], gcs) -> bool:
-        """Compiler._guid_col_pred's set algebra."""
-        include = None
-        standalone = []
-        excludes = []
-        for gc in gcs:
-            if gc.op == "=":
-                s = set(gc.guids)
-                include = s if include is None else (include & s)
-            elif gc.op == "~=":
-                nonnull = [g for g in gc.guids if g is not None]
-                has_null = any(g is None for g in gc.guids)
-                if not nonnull:
-                    s = {None}
-                else:
-                    s = set(self._expand_lineage(nonnull))
-                    if has_null:
-                        s.add(None)
-                if include is None and nonnull:
-                    standalone.append(s)
-                else:
-                    include = s if include is None else (include & s)
-            else:
-                excludes.append(gc)
-        if include is not None:
-            for gc in excludes:
-                include -= set(gc.guids)
-            excludes = []
-        if include is not None:
-            if val not in include:
+    def _guid_pred(self, val: Optional[str], con, col: str, gcs) -> bool:
+        """``val`` against guid_sets' merge of ``gcs``, ``con``'s guid
+        constraints on ``col``, merged once per request."""
+        key = (id(con), col)
+        sets = self._msc_cache.get(key)
+        if sets is None:
+            sets = self._msc_cache[key] = guid_sets(self.store, gcs)
+        include, standalone, excludes = sets
+        if include is not None and val not in include:
+            return False
+        for st in standalone:
+            if val not in st:
                 return False
-        for s in standalone:
-            if val not in s:
-                return False
-        for gc in excludes:
+        for ex in excludes:
             # standalone '!=': the linkage must exist and differ
-            if val is None:
-                return False
-            if val in {g for g in gc.guids if g is not None}:
+            if val is None or val in ex:
                 return False
         return True
 
@@ -4032,43 +3813,6 @@ class FastReader:
         if newest:
             return False
         return p.guid not in prevs
-
-    def _merged_strcons(self, scs, comparator):
-        """Shared with the compiler: _merged_strcons is pure logic —
-        re-mirrored here to avoid importing a bound method (the logic
-        is identical)."""
-        from graphd_spark.comparators import value_eq
-
-        eqs = [sc for sc in scs if sc.op == "="]
-        if not eqs:
-            return scs
-
-        def eq(a, b):
-            if a is None or b is None:
-                return a is None and b is None
-            return value_eq(comparator, a, b)
-
-        include = list(eqs[0].values)
-        for sc in eqs[1:]:
-            include = [
-                v for v in include if any(eq(v, w) for w in sc.values)
-            ]
-        rest = []
-        for sc in scs:
-            if sc.op == "=":
-                continue
-            if sc.op == "!=":
-                include = [
-                    v for v in include
-                    if not any(eq(v, w) for w in sc.values)
-                ]
-            elif sc.op == "~=" and not any(
-                v is not None for v in sc.values
-            ):
-                include = [v for v in include if v is None]
-            else:
-                rest.append(sc)
-        return [StrCon("=", include)] + rest
 
     def _type_pred(self, p: Primitive, sc) -> bool:
         """Mirror of _type_cond (lineage-canonical type matching)."""

@@ -77,7 +77,7 @@ from __future__ import annotations
 import re
 from typing import NamedTuple, Optional
 
-from graphd_spark.comparators import literal_key, resolve_comparator
+from graphd_spark.comparators import literal_key
 from graphd_spark.cursor import (
     BadCursor,
     CursorState,
@@ -88,7 +88,7 @@ from graphd_spark.cursor import (
 )
 from graphd_spark.model import guid_compose, guid_serial, ts_from_string
 from graphd_spark.pattern import GraphdError
-from graphd_spark.sortsim import result_pagesize
+from graphd_spark.sortsim import result_pagesize, sort_keys
 
 # libpdb/pdb.h:362-370
 COST_GMAP_ELEMENT = 2
@@ -1551,26 +1551,20 @@ def frozen_sort_tuple(con, plan, body, keyed) -> Optional[tuple]:
     away between pages: the reference repositions by comparing the
     frozen keys (graphd-sort.c graphd_sort_cursor_set; restarting
     would re-deliver page 1 — writeinto seed 62).  One key per sort
-    component ``keyed(pattern, comp)`` says the evaluator sorts by,
-    up to the first guid key, then the id tiebreak; None when a
-    component cannot be reconstructed."""
+    key (sortsim.sort_keys, which end at the first guid key) that
+    ``keyed(pattern, comp)`` says the evaluator sorts by, then the id
+    tiebreak; None when a component cannot be reconstructed."""
     if body is None or not con.sort:
         return None
     vals, bid = deserialize_sort_values(body)
     if vals is None:
         return None
     out = []
-    for i0, sk in enumerate(con.sort):
+    for i0, (pat, comp, _desc) in enumerate(sort_keys(con)):
         if i0 >= len(vals):
             return None
-        comp = resolve_comparator(
-            (con.sort_comparators[i0]
-             if con.sort_comparators and i0 < len(con.sort_comparators)
-             else None) or con.comparator or "default"
-        )
-        if not keyed(sk.pattern, comp):
+        if not keyed(pat, comp):
             continue
-        pat = sk.pattern
         kv = frozen_sort_key(
             pat.kind, comp, *vals[i0],
             literal_var=pat.kind == "variable"
@@ -1582,7 +1576,5 @@ def frozen_sort_tuple(con, plan, body, keyed) -> Optional[tuple]:
         if kv is UNKEYED:
             return None
         out.append(kv)
-        if pat.kind == "guid":
-            break
     out.append(bid)
     return tuple(out)

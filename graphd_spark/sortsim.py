@@ -40,14 +40,251 @@ after one page.
 
 Keys are compared per component: ``None`` is null; descending flips
 the component.  The trailing id component is never null.
+
+The root sort's decisions live here too, once for both read
+evaluators (graphd-sort.c): which keys order the set (``sort_keys``),
+whether the number sort-root drops non-numbers
+(``number_sort_drops``), an unsorted range's scan order
+(``range_scan_order``), and how a ``sort:`` cursor repositions
+(``sorter_run`` under the simulation, ``resume_offset`` under
+sort-root-ordered production, both through ``boundary_keys``).  Each
+evaluator keeps its data plane and hands in its steps:
+
+- ``_sort_key(pattern, con, plan, comparator)``: one key's Spark
+  Column or ``(primitive, row)`` function, None when it has none;
+  ``_id_key``: the id tiebreak's;
+- ``_boundary_keys(src, comps, id)``: the key tuple of the live
+  element ``id`` in ``src``, None when it is gone;
+- ``_null_class(src, key, null)``: ``src`` narrowed to the rows whose
+  ``key`` is (not) null;
+- ``_count_before(src, comps, keys)``: how many rows of ``src`` order
+  strictly before ``keys``.
 """
 
 from __future__ import annotations
 
+from graphd_spark.comparators import (
+    datetime_scan_order,
+    number_bin_lookup,
+    number_scan_order,
+    resolve_comparator,
+    string_bin_order,
+)
+from graphd_spark.model import guid_serial
+from graphd_spark.pattern import GraphdError, default_read_pattern
 
 DEFAULT_PAGESIZE = 1024  # ref graphd/graphd-sort.c:21-22
 
 _RANGE_OPS = ("<", "<=", ">", ">=")
+
+#: result kinds that render no element (a sort under them is unused)
+_NO_RENDER = (
+    "count", "cursor", "estimate", "estimate-count", "iterator",
+    "timeout", "list", "none",
+)
+#: sort key kinds graphd-sort-compile.c rejects (test/unit/sort20.sh)
+_UNSORTABLE = (
+    "count", "cursor", "estimate", "iterator", "timeout",
+    "estimate-count",
+)
+
+
+def sort_keys(con) -> list:
+    """``(pattern, comparator, descending)`` per significant sort key.
+
+    sort-comparators attach to the leading keys only; the rest use the
+    constraint comparator (ref graphd-semantic.c:452-470, test david_7
+    id=9).  The list ends at the first guid key, which is decisive (the
+    ``sort:`` cursor serializes no further); the keys after it are
+    still checked sortable (ref graphd-sort-compile.c rejections)."""
+    out: list = []
+    comps = con.sort_comparators or ()
+    for i, sk in enumerate(con.sort or ()):
+        k = sk.pattern.kind
+        if k in _UNSORTABLE:
+            raise GraphdError("SEMANTICS", f"cannot sort by {k}")
+        if k == "literal":
+            raise GraphdError(
+                "SEMANTICS", f'cannot sort by "{sk.pattern.literal or ""}"'
+            )
+        if k == "list":
+            raise GraphdError("SYNTAX", "cannot sort by nested lists.")
+        if out and out[-1][0].kind == "guid":
+            continue
+        comp = (comps[i] if i < len(comps) else None) or con.comparator
+        out.append(
+            (sk.pattern, resolve_comparator(comp or "default"),
+             sk.descending)
+        )
+    return out
+
+
+def sort_components(ev, con, plan) -> list:
+    """The total order as ``(key, descending, precompares)``: one per
+    sort key the evaluator keys, then the decisive id tiebreak.  A
+    variable or contents key cannot be precompared
+    (sort_precompare_pr_loc)."""
+    out = []
+    for pat, comp, desc in sort_keys(con):
+        key = ev._sort_key(pat, con, plan, comp)
+        if key is not None:
+            out.append(
+                (key, desc, pat.kind not in ("variable", "contents"))
+            )
+    out.append((ev._id_key, False, True))
+    return out
+
+
+def number_sort_drops(con, store) -> bool:
+    """Does a first-key number-comparator value sort drop the nulls
+    and the values that are not numbers?  It iterates the NUMBERS
+    binset (ref graphd-comparator-number.c number_vrange_start,
+    pdb-bins.c:242-280; test sortnumber r3/r6/r7) — unless another
+    producer drives the read: a guid= fixed set or a one-element name
+    bin (``number_sort_root_keep``), both fixed-1 sets the sort
+    short-circuits on, or a default-comparator value range, which
+    keeps the string vrange as producer (differential seeds 55/142,
+    139/147; a two-element name bin, a value= bin, a type gmap and a
+    linkage sub all drop); and a result that renders no element drops
+    the unused sort (gva_remove_unused_results)."""
+    if not con.sort:
+        return False
+    pat, comp, _desc = sort_keys(con)[0]
+    if pat.kind != "value" or comp != "number" or con.guid:
+        return False
+    if any(
+        sc.op in _RANGE_OPS for sc in con.value_strcons
+    ) and resolve_comparator(
+        con.value_comparator or con.comparator
+    ) != "number":
+        return False
+    res = con.result if con.result is not None else default_read_pattern()
+    if not any(p.kind not in _NO_RENDER for p in res.walk()):
+        return False
+    # the name-bin probe is a store lookup, so it goes last
+    return not number_sort_root_keep(con, store)
+
+
+def number_sort_root_keep(con, store) -> bool:
+    """True when the NUMBERS sort-root never produces: a 1-element
+    raw NAME bin anywhere in the constraint's mandatory MY-form
+    closure (the node itself or any transitively mandatory my-linkage
+    sub) collapses to a fixed-1/gmap member whose cost pre-evaluates
+    the whole and-iterator before the number vrange spins
+    (and_become_small_set), so non-number values survive a
+    number-comparator value sort.  Probed round 7 (12 directed
+    shapes + sortcursor fuzz seed 866): value=/type= bins, iam-form
+    and optional/count=0 subs, and 2-element bins (raw count,
+    versioned-away members included) do NOT short-circuit; extra
+    predicates, root or-chains, timestamps, and nesting depth don't
+    interfere."""
+    from itertools import islice
+
+    def walk(c):
+        for sc in c.name_strcons:
+            if sc.op == "=" and len(sc.values) == 1 and sc.values[0]:
+                n = len(list(islice(
+                    store.find_by_name(sc.values[0]), 2
+                )))
+                if n == 1:
+                    return True
+        for s in c.subs:
+            if s.is_optional or s.count_eq == 0:
+                continue
+            if s.linkage is None or s.linkage[0] != "my":
+                continue
+            if walk(s):
+                return True
+        return False
+
+    return walk(con)
+
+
+def range_scan_order(con):
+    """The bin-scan position function an unsorted read surfaces in
+    when a value range produces its candidates, ids within a bin; None
+    for id order.  Default: the STRING_BINS bin (ref
+    comparator_default_range_bins, libpdb/pdb-bins-strtable.c; tests
+    intrange, numberequal r2/r3).  Number: each bin's exact-value hash
+    bucket, then its strictly-between contents (ref
+    number_vrange_it_next; test numberequal r6/r9), when every literal
+    decodes.  Datetime: negative-year bins in reverse, then years, then
+    times (ref datetime_inc/dec, test/unit/datetime.sh)."""
+    if con.sort is not None or not con.value_strcons:
+        return None
+    ranges = [sc for sc in con.value_strcons if sc.op in _RANGE_OPS]
+    if not ranges or range_is_checked(con):
+        return None
+    vcomp = resolve_comparator(con.value_comparator or con.comparator)
+    if vcomp == "default":
+        return string_bin_order
+    if vcomp == "number" and all(
+        number_bin_lookup(v) is not None
+        for sc in ranges for v in sc.values if v is not None
+    ):
+        return number_scan_order
+    if vcomp == "datetime":
+        return datetime_scan_order
+    return None
+
+
+def boundary_keys(ev, con, plan, comps, body, live):
+    """``(keys, present)`` of a resumed ``sort:`` cursor's boundary:
+    ``live``, the live element's key tuple from the evaluator, else the
+    keys FROZEN in the cursor payload — an element tombstoned or
+    versioned away between pages repositions by comparing them (ref
+    graphd-sort.c graphd_sort_cursor_set; restarting would re-deliver
+    page 1, writeinto seed 62).  ``(None, False)`` when neither
+    fits ``comps``."""
+    if live is not None:
+        return live, True
+    from graphd_spark.freeze import frozen_sort_tuple
+
+    frozen = frozen_sort_tuple(
+        con, plan, body,
+        lambda pat, comp: ev._sort_key(pat, con, plan, comp) is not None,
+    )
+    if frozen is None or len(frozen) != len(comps):
+        return None, False
+    return frozen, False
+
+
+def sorter_run(ev, con, plan, comps, entries, P: int, resume_guid, body):
+    """``simulate`` over ``entries`` — ``(keys, payload)`` in producer
+    order, keys aligned with ``comps`` — with a resumed cursor's
+    boundary as the grid."""
+    grid = None
+    if resume_guid is not None:
+        bid = guid_serial(resume_guid)
+        grid, _present = boundary_keys(
+            ev, con, plan, comps, body,
+            next((k for k, _pl in entries if k[-1] == bid), None),
+        )
+    return simulate(
+        entries, P, [(d, pre) for _k, d, pre in comps], grid=grid
+    )
+
+
+def resume_offset(ev, src, con, plan, resume_guid, body) -> tuple:
+    """``(offset, src)`` of a resumed ``sort:`` cursor under
+    sort-root-ordered production (bare scans, vrange producers), whose
+    ordered producer truncates losslessly.  The thawed scan re-enters
+    through the boundary's FIRST-KEY NULL CLASS — the key's index for a
+    non-null boundary, where null-key rows don't exist, the null bin
+    for a null one (probed: sort=(name) chains drop null-name rows
+    after a named boundary, answer EMPTY when only null-name rows
+    remain, and vice versa) — so ``src`` narrows to it.  The offset
+    counts the rows ordered before the boundary, and the boundary
+    itself while it is live."""
+    comps = sort_components(ev, con, plan)
+    keys, present = boundary_keys(
+        ev, con, plan, comps, body,
+        ev._boundary_keys(src, comps, guid_serial(resume_guid)),
+    )
+    if keys is None:
+        return 0, src
+    src = ev._null_class(src, comps[0][0], keys[0] is None)
+    return ev._count_before(src, comps, keys) + present, src
 
 
 def result_pagesize(con) -> int:

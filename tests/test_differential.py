@@ -2063,9 +2063,9 @@ def test_writeinto_vanished_boundary(spark, ref_bin, seed):
     empty.  The reference repositions by COMPARING the frozen
     serialized sort keys (graphd-sort.c graphd_sort_cursor_set), so
     the element need not exist — fixed by reconstructing the key
-    tuple from the cursor payload (freeze.frozen_sort_tuple, shared
-    by both read paths) in the sortsim grid, sort-root resume, and
-    Spark _key_resume_offset paths."""
+    tuple from the cursor payload (sortsim.boundary_keys over
+    freeze.frozen_sort_tuple, shared by both read paths) for the
+    incremental sorter's grid and the key-offset resume."""
     problems = check_writeinto_seed(spark, seed)
     assert not problems, "\n".join(p[:500] for p in problems)
 

@@ -26,8 +26,13 @@ subiterators) ``fixed:(...)`` sets; ``_or_linksto_cursor``; and
 subconstraint's ``null:`` resume, an unrecognized ``[...]`` block in
 each cursor envelope scanner's input, pasted iterator cursors the
 thaw resumes (a subconstraint's ``hmap``, ``and`` and masqueraded
-``fixed``, a root's ``vip``), and a sort: cursor in a sub sorted by
-a generation key.
+``fixed``, a root's ``vip``), a sort: cursor in a sub sorted by
+a generation key, and the root sort's number-comparator drop and
+unsorted range order.  ``SORT_CASES`` pins the root sort policy
+(``sortsim.py``) on small stores of their own: the number drop and
+the producers that keep non-numbers, each comparator's range scan
+order, and ``sort:`` chains over rows with and without the key, with
+a boundary tombstoned between pages.
 """
 
 from __future__ import annotations
@@ -339,6 +344,24 @@ REPLIES = [
      '0000000a "ab0") (0000001240003456800000000000000b "ab1") (00000012400034'
      '568000000000000014 "ab10") (00000012400034568000000000000015 "ab11") (00'
      '00001240003456800000000000000c "ab2"))))'),
+    # a number-comparator value sort drops non-number values ...
+    ('read (name="lnk" sort=(value) sort-comparator="number" pagesize=5 res'
+     'ult=((value)))', 'error EMPTY "not found"'),
+    # ... unless a guid= set, a render-free result or a default-comparator
+    # value range produces the candidates
+    ('read (guid=($G0 $G1) sort=(value) sort-comparator="number" result=(('
+     'value)))', 'ok (("ab0") ("ab1"))'),
+    ('read (name="lnk" sort=(value) sort-comparator="number" result=(count'
+     '))', 'ok (12)'),
+    ('read (name="lnk" value>="ab5" sort=(value) sort-comparator="number" '
+     'result=((value)))', 'ok (("ab5") ("ab6") ("ab7") ("ab8") ("ab9"))'),
+    # an unsorted default-comparator value range surfaces in string-bin
+    # order, ids within a bin
+    ('read (value>="ab5" pagesize=30 result=((value)))',
+     'ok (("ab5") ("ab6") ("ab7") ("ab8") ("ab9") ("abc0 x") ("abc1 x") ("a'
+     'bc2 x") ("abc3 x") ("abc4 x") ("abc5 x") ("abc6 x") ("abc7 x") ("b") '
+     '("boot") ("h3") ("has_key") ("p0") ("p1") ("p2") ("p3") ("p4") ("p5")'
+     ' ("p6") ("p7") ("p8") ("p9") ("q") ("root_namespace") ("tt"))'),
 ]
 
 
@@ -474,3 +497,190 @@ def test_root_and_sub_thaw_one_restriction(hub_sessions):
     ):
         assert fast.request(read) == want, read
         assert slow.request(read) == want, read
+
+
+def _G(n: int) -> str:
+    """The guid of the ``n``-th primitive of a fresh store."""
+    return f"{0x12400034568000000000000000 + n:032x}"
+
+
+#: six values, three of them named (v0 "n3", v2 "n1", v4 "n2")
+_NAMED = [
+    'write (value="v0" name="n3")', 'write (value="v1")',
+    'write (value="v2" name="n1")', 'write (value="v3")',
+    'write (value="v4" name="n2")', 'write (value="v5")',
+]
+#: numbers, a date, a word, a null value; one "only"-named value
+_NUMS = [
+    'write (value="10")', 'write (value="9")', 'write (value="1e2")',
+    'write (value="apple")', 'write (value="2006-01-02" name="only")',
+    'write (value=" 0")', 'write (value="0")', 'write (value="-0044")',
+    'write (value="T12:00")', 'write (name="novalue")',
+]
+
+#: (writes, read, value tombstoned after the first page or None,
+#: replies of the cursor chain) — literals recorded on both read paths
+SORT_CASES = [
+    # a number-comparator value sort drops non-numbers and nulls ...
+    (_NUMS, 'read (sort=(value) sort-comparator="number" pagesize=20 resul'
+     't=((value)))', None, ['ok (("-0044") ("0") ("9") ("10") ("1e2"))']),
+    (_NUMS, 'read (sort=(-value) sort-comparator="number" pagesize=20 resu'
+     'lt=((value)))', None, ['ok (("1e2") ("10") ("9") ("0") ("-0044"))']),
+    # ... unless the result renders no element, a one-element name bin
+    # or a default-comparator range produces, ...
+    (_NUMS, 'read (sort=(value) sort-comparator="number" result=(count))',
+     None, ['ok (10)']),
+    (_NUMS, 'read (name="only" sort=(value) sort-comparator="number" resul'
+     't=((value)))', None, ['ok (("2006-01-02"))']),
+    (_NUMS, 'read (value>="1" sort=(value) sort-comparator="number" pagesi'
+     'ze=20 result=((value)))', None,
+     ['ok (("9") ("10") ("1e2") ("2006-01-02") ("apple") ("T12:00") (null)'
+      ')']),
+    # ... or a one-element name bin in a mandatory my-linkage sub; an
+    # optional sub and a two-element bin keep the drop
+    (['write (value="2006-01-02" (<-right name="label" value="L1"))',
+      'write (value="apple")'],
+     'read (pagesize=5 sort=(-value) sort-comparator="number" result=((val'
+     'ue)) (<-right name="label"))', None, ['ok (("2006-01-02"))']),
+    (['write (value="2006-01-02" (<-right name="label" value="L1"))',
+      'write (value="apple")'],
+     'read (pagesize=5 sort=(-value) sort-comparator="number" result=((val'
+     'ue)) (<-right optional name="label"))', None,
+     ['error EMPTY "not found"']),
+    (['write (value="2006-01-02" (<-right name="two" value="A"))',
+      'write (value="x" (<-right name="two" value="B"))'],
+     'read (pagesize=5 sort=(-value) sort-comparator="number" result=((val'
+     'ue)) (<-right name="two"))', None, ['error EMPTY "not found"']),
+    # unsorted value ranges surface in the comparator's scan order
+    (_NUMS, 'read (value>="5" pagesize=20 result=((value)))', None,
+     ['ok (("10") ("1e2") ("2006-01-02") ("9") ("apple") ("T12:00") (null)'
+      ')']),
+    (_NUMS, 'read (value>="5" comparator="number" pagesize=20 result=((val'
+     'ue)))', None, ['ok (("9") ("10") ("1e2"))']),
+    (_NUMS, 'read (value>="-5" comparator="number" pagesize=20 result=((va'
+     'lue)))', None, ['ok ((" 0") ("0") ("9") ("10") ("1e2"))']),
+    (_NUMS, 'read (value>="2000" comparator="datetime" pagesize=20 result='
+     '((value)))', None, ['ok (("2006-01-02") ("T12:00"))']),
+    (_NUMS, 'read (value>="-1000" comparator="datetime" pagesize=20 result'
+     '=((value)))', None, ['ok (("-0044") ("2006-01-02") ("T12:00"))']),
+    # sort: chains over rows with and without the key: the resume stays
+    # in the boundary's null class, under an indexed producer and a
+    # bare scan alike
+    (_NAMED, 'read (value~="v*" sort=(name) pagesize=2 result=(cursor (val'
+     'ue name)))', None,
+     ['ok ("sort:[o:2][n:6]s2:n2g{g4}" ("v2" "n1") ("v4" "n2"))',
+      'ok ("null:" ("v0" "n3"))']),
+    (_NAMED, 'read (value~="v*" sort=(-name) pagesize=2 result=(cursor (va'
+     'lue name)))', None,
+     ['ok ("sort:[o:2][n:6]ng{g3}" ("v1" null) ("v3" null))',
+      'ok ("null:" ("v5" null))']),
+    (_NAMED, 'read (sort=(name) pagesize=2 result=(cursor (value name)))',
+     None,
+     ['ok ("sort:[o:2][n:6]s2:n2g{g4}" ("v2" "n1") ("v4" "n2"))',
+      'ok ("null:" ("v0" "n3"))']),
+    (_NAMED, 'read (sort=(-name) pagesize=2 result=(cursor (value name)))',
+     None,
+     ['ok ("sort:[o:2][n:6]ng{g3}" ("v1" null) ("v3" null))',
+      'ok ("null:" ("v5" null))']),
+    # a boundary tombstoned between pages resumes by its frozen keys
+    (_NAMED, 'read (value~="v*" sort=(value) pagesize=2 result=(cursor (va'
+     'lue)))', "v1",
+     ['ok ("sort:[o:2][n:6]s2:v1g{g1}" ("v0") ("v1"))',
+      'ok ("sort:[o:4][n:6]s2:v3g{g3}" ("v2") ("v3"))',
+      'ok ("null:" ("v4") ("v5"))']),
+    (_NAMED, 'read (sort=(value) pagesize=2 result=(cursor (value)))', "v1",
+     ['ok ("sort:[o:2][n:6]s2:v1g{g1}" ("v0") ("v1"))',
+      'ok ("sort:[o:3][n:6]s2:v3g{g3}" ("v2") ("v3"))',
+      'ok ("null:" ("v4") ("v5"))']),
+    (_NAMED, 'read (sort=(-value) pagesize=2 result=(cursor (value)))', "v4",
+     ['ok ("sort:[o:2][n:6]s2:v4g{g4}" ("v5") ("v4"))',
+      'ok ("sort:[o:3][n:6]s2:v2g{g2}" ("v3") ("v2"))',
+      'ok ("null:" ("v1") ("v0"))']),
+    (_NAMED, 'read (value~="v*" sort=(value name) pagesize=2 result=(curso'
+     'r (guid value)))', "v1",
+     ['ok ("sort:[o:2][n:6]s2:v1ng{g1}" ({g0} "v0") ({g1} "v1"))',
+      'ok ("sort:[o:4][n:6]s2:v3ng{g3}" ({g2} "v2") ({g3} "v3"))',
+      'ok ("null:" ({g4} "v4") ({g5} "v5"))']),
+    (_NAMED, 'read (sort=(value name) pagesize=2 result=(cursor (guid valu'
+     'e)))', "v1",
+     ['ok ("sort:[o:2][n:6]s2:v1ng{g1}" ({g0} "v0") ({g1} "v1"))',
+      'ok ("sort:[o:3][n:6]s2:v3ng{g3}" ({g2} "v2") ({g3} "v3"))',
+      'ok ("null:" ({g4} "v4") ({g5} "v5"))']),
+]
+SORT_CASES = [
+    (w, r, t, [p.format(**{f"g{i}": _G(i) for i in range(6)}) for p in want])
+    for w, r, t, want in SORT_CASES
+]
+
+
+def _sort_chain(gs: GraphSession, writes, read, tomb) -> list:
+    """``writes`` into a fresh store, then ``read``'s cursor chain;
+    ``tomb`` names a value whose primitive is tombstoned between the
+    first and the second page."""
+    guid = {}
+    for req in writes:
+        m = re.search(r'value="([^"]*)"', req)
+        g = _GUID.search(gs.request(req))
+        if m and g:
+            guid[m.group(1)] = g.group(1)
+    out, req = [], read
+    for _ in range(5):
+        out.append(gs.request(req))
+        m = _CURSOR.search(out[-1])
+        if m is None or m.group(1) == "null:":
+            break
+        if tomb is not None and len(out) == 1:
+            gs.request(f"write (guid~={guid[tomb]} live=false)")
+        esc = m.group(1).replace("\\", "\\\\").replace('"', '\\"')
+        req = read.replace(
+            "result=(cursor", f'cursor="{esc}" result=(cursor', 1
+        )
+    return out
+
+
+@pytest.mark.parametrize("writes,read,tomb,want", SORT_CASES)
+def test_root_sort_policy(spark, writes, read, tomb, want):
+    """The root sort's decisions over small stores, on both read
+    paths: the number-comparator value sort's drop of non-numbers and
+    the producers that keep them, unsorted value ranges in each
+    comparator's scan order, ``sort:`` chains over rows with and
+    without the sort key (an indexed producer runs the incremental
+    sorter, a bare scan resumes by key offset), and a chain whose
+    boundary is tombstoned between pages."""
+    for fast_read in (True, False):
+        gs = GraphSession(spark)
+        gs.fast_read_enabled = fast_read
+        assert _sort_chain(gs, writes, read, tomb) == want, fast_read
+
+
+@pytest.mark.parametrize("producer", ['value~="v*" ', ""])
+def test_vanished_boundary_after_guid_key(spark, producer):
+    """A ``sort:`` chain whose boundary is tombstoned between pages
+    resumes by its frozen keys when a guid key ends the significant
+    keys, under the incremental sorter (an indexed producer) and the
+    key offset (a bare scan) alike, on both read paths: the keys after
+    the guid never decide, so the frozen tuple stops there."""
+    read = (f"read ({producer}sort=(value guid name) pagesize=2 "
+            "result=(cursor (guid value)))")
+    o = "4" if producer else "3"
+    want = [
+        f'ok ("sort:[o:2][n:6]s2:v1g{_G(1)}" ({_G(0)} "v0") ({_G(1)} "v1"))',
+        f'ok ("sort:[o:{o}][n:6]s2:v3g{_G(3)}" ({_G(2)} "v2") ({_G(3)} "v3"'
+        "))",
+        f'ok ("null:" ({_G(4)} "v4") ({_G(5)} "v5"))',
+    ]
+    for fast_read in (True, False):
+        gs = GraphSession(spark)
+        gs.fast_read_enabled = fast_read
+        assert _sort_chain(gs, _NAMED, read, "v1") == want, fast_read
+
+
+def test_bodiless_signed_envelope_is_badcursor(hub_sessions):
+    """A ``cursor:`` envelope without its checksum and body is a cursor
+    the engine cannot parse, on both read paths."""
+    read = ('read (value~="c*" pagesize=2 cursor="cursor:12ab" result=((val'
+            'ue)))')
+    want = ('error BADCURSOR "cannot parse old-style cursor \\"cursor:12ab'
+            '\\""')
+    for gs in hub_sessions:
+        assert gs.request(read) == want

@@ -86,11 +86,12 @@ def test_start_past_end_is_empty(spark):
 
 
 def test_sorted_cursor_resume_key_offset_path(spark, monkeypatch):
-    """A sorted-cursor resume that MISSES the sortsim fast path must
-    reposition through Compiler._key_resume_offset (round-9 ADVICE: a
-    loop variable there shadowed the jexpr _c helper, so every such
-    resume raised UnboundLocalError; the suite only exercised the fast
-    path).  Force the miss by zeroing the sortsim candidate cap."""
+    """A sorted-cursor resume that MISSES the incremental sorter must
+    reposition through sortsim.resume_offset and the compiler's Spark
+    steps (a loop variable there once shadowed the jexpr _c helper, so
+    every such resume raised UnboundLocalError; the suite only
+    exercised the fast path).  Force the miss by zeroing the sortsim
+    candidate cap."""
     import re
 
     import graphd_spark.compiler as compiler_mod
