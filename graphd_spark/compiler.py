@@ -31,8 +31,10 @@ horizons.
 
 from __future__ import annotations
 
+import operator
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field as dfield
+from functools import reduce
 from typing import Optional
 
 import pandas as pd
@@ -41,23 +43,14 @@ from pyspark.sql.window import Window
 
 from graphd_spark.comparators import (
     _ascii_lower,
-    datetime_scan_order,
-    decode_number,
-    fuzzy_key,
-    literal_key,
-    number_bin_lookup,
-    number_scan_order,
-    resolve_comparator,
+    delimited_match_column,
     scan_order_column,
     sort_key_column,
     value_norm_key,
 )
 from graphd_spark.gql.ir import (
     Constraint,
-    FALSE,
     Pattern,
-    StrCon,
-    TRUE,
 )
 from graphd_spark.cursor import (
     asof_horizon,
@@ -74,7 +67,10 @@ from graphd_spark.freeze import (
     _ISA_SMALL_SET_MAX,
     Thaw,
 )
-from graphd_spark.model import guid_serial, su_encode, ts_from_string
+from graphd_spark.glob import glob_column
+from graphd_spark import match
+from graphd_spark.match import _strcon_is_bin, bind, intrinsic_branch
+from graphd_spark.model import guid_serial, su_encode
 from graphd_spark.sortsim import (
     number_sort_drops,
     range_scan_order,
@@ -99,98 +95,6 @@ PRIM_ELEM_FIELDS = [
 # py4j round-trip caches: cached F.col/F.lit/constant-expression
 # handles — see jexpr.py
 from graphd_spark.jexpr import _c, _cc, _ctx_id, _l  # noqa: E402
-
-
-def merged_strcons(scs, comparator):
-    """String constraints merge like guid sets when an '=' include
-    set exists (ref graphd-string-constraint.c set play-off, test
-    guidlist2): '=' sets intersect, '!=' subtracts from the include,
-    and a null-only '~=' reduces the include to its null member.
-    Other operators keep AND semantics."""
-    from graphd_spark.comparators import value_eq
-
-    eqs = [sc for sc in scs if sc.op == "="]
-    if not eqs:
-        return scs
-
-    def eq(a, b):
-        if a is None or b is None:
-            return a is None and b is None
-        return value_eq(comparator, a, b)
-
-    include = list(eqs[0].values)
-    for sc in eqs[1:]:
-        include = [
-            v for v in include if any(eq(v, w) for w in sc.values)
-        ]
-    rest = []
-    for sc in scs:
-        if sc.op == "=":
-            continue
-        if sc.op == "!=":
-            include = [
-                v for v in include
-                if not any(eq(v, w) for w in sc.values)
-            ]
-        elif sc.op == "~=" and not any(
-            v is not None for v in sc.values
-        ):
-            # ~=() / ~=null against an include: null members only
-            include = [v for v in include if v is None]
-        else:
-            rest.append(sc)
-    return [StrCon("=", include)] + rest
-
-
-def expand_lineage(store, guids) -> list:
-    """All version GUIDs of the listed guids' lineages (~= match)."""
-    out: list[str] = []
-    for g in guids:
-        p = store.get(g)
-        if p is not None:
-            out.extend(store.lineage_members(p.lineage))
-    return out
-
-
-def guid_sets(store, gcs) -> tuple:
-    """All guid constraints on one column, merged with the reference's
-    set algebra (ref graphd-guid-constraint.c:150-330), as ``(include,
-    standalone, excludes)``: a value matches when it is in ``include``
-    (None: no include set) and in every ``standalone`` set, and is
-    not null and outside every ``excludes`` set.  '=' sets intersect,
-    '~=' expands lineages (null expands to null; an empty/null-only
-    match equals =null) and intersects an existing include set, and
-    '!=' subtracts from the include set when one exists — so
-    =(G null) != (G) keeps the null member (test/unit/guidlist3.sh).
-    A standalone '~=' or '!=' keeps its own set."""
-    include: Optional[set] = None
-    standalone = []
-    excludes = []
-    for gc in gcs:
-        if gc.op == "=":
-            s = set(gc.guids)
-            include = s if include is None else (include & s)
-        elif gc.op == "~=":
-            nonnull = [g for g in gc.guids if g is not None]
-            if not nonnull:
-                s = {None}  # ~=() / ~=null reduces to =null
-            else:
-                s = set(expand_lineage(store, nonnull))
-                if len(nonnull) < len(gc.guids):
-                    s.add(None)
-            if include is None and nonnull:
-                standalone.append(s)
-            else:
-                include = s if include is None else (include & s)
-        else:
-            excludes.append(gc.guids)
-    if include is not None:
-        for ex in excludes:
-            include -= set(ex)
-        return include, standalone, []
-    return include, standalone, [
-        {g for g in ex if g is not None} for ex in excludes
-    ]
 
 
 def _key_tuple(row, n: int) -> tuple:
@@ -243,31 +147,6 @@ def _iter_expressible(con) -> bool:
         if not _iter_expressible(s):
             return False
     return True
-
-
-def _strcon_is_bin(sc) -> bool:
-    """Does this string constraint contribute an ITERATOR (hmap /
-    prefix-bin / vrange) to the reference's and-tree — pre-evaluating
-    into frozen sub-cursor fixed sets — or only a constraint-level
-    check (graphd_match)?  Probed round 8: ``value!=`` and
-    prefix-less globs leave the BARE gmap freeze (checks don't
-    pre-evaluate); equalities, ranges, word-prefix globs, and
-    wildcard-free ``~=`` patterns pre-evaluate."""
-    if sc.op in ("=", "<", "<=", ">", ">="):
-        return True
-    if sc.op != "~=":
-        return False  # '!=': check-only (probed: bare gmap freeze)
-    if len(sc.values) != 1 or not sc.values[0]:
-        return False
-    pat = sc.values[0]
-    body = pat[1:] if pat.startswith("^") else pat
-    if "*" not in body and "?" not in body:
-        return True  # exact word pattern: hmap bins
-    if body.endswith("*") and "?" not in body:
-        p0 = body[:-1]
-        if p0 and "*" not in p0 and p0.isalnum() and p0.isascii():
-            return True  # word-prefix bins
-    return False
 
 
 def _sub_iter_shape_ok(sub) -> bool:
@@ -446,92 +325,6 @@ class SubPlan:
     #: renders null otherwise (probed: non-winning branch slots are
     #: null, a winning zero-row sub is "()")
     eff_col: Optional[str] = None
-
-
-TS_MIN = 0
-TS_MAX = 0xFFFFFFFFFFFF  # GRAPH_TIMESTAMP_MAX (libgraph/graph.h:399)
-
-
-def timestamp_envelope(con) -> tuple:
-    """EXACT clause_merge_timestamp fold
-    (graphd-constraint-clause.c:100-160): every op compiles against
-    the literal's single expanded instant (a partial stamp expands to
-    its LOWER instant, gdp_token_totime — probed round 7: ts>1970
-    matches .0001 stamps, ts=1970/<=1970 match only the instant,
-    ts!=1970 matches everything away from the envelope edges) into one
-    inclusive [min, max] envelope, folded in PARSE order:
-
-    - '<'  sets max = ts-1 UNCONDITIONALLY (can loosen a prior max —
-      reference quirk), false when ts == MIN;
-    - '<=' lowers max to ts;
-    - '='  narrows both edges to ts;
-    - '!=' nudges only an exactly-equal EDGE inward (order-dependent:
-      a '!=' before the bound that would create the edge is a no-op);
-    - '>=' raises min to ts;
-    - '>'  raises min to ts+1 when min <= ts, false when ts >= MAX.
-
-    Returns (tmin, tmax, false) with tmin/tmax None when unbounded
-    (still at the type extremes).  Raises ValueError on unparseable
-    literals (callers report SYNTAX)."""
-    if not con.timestamps:
-        return None, None, False
-    tmin, tmax = TS_MIN, TS_MAX
-    false = False
-    for tc in con.timestamps:
-        try:
-            ts = ts_from_string(tc.text)
-        except ValueError:
-            raise ValueError(tc.text)
-        if tc.op == "<":
-            if ts == TS_MIN:
-                false = True
-            else:
-                tmax = ts - 1
-        elif tc.op == "<=":
-            if tmax > ts:
-                tmax = ts
-        elif tc.op == "=":
-            if tmin < ts:
-                tmin = ts
-            if tmax > ts:
-                tmax = ts
-        elif tc.op == "!=":
-            if tmin == ts:
-                tmin += 1
-            if tmax == ts:
-                tmax -= 1
-        elif tc.op == ">=":
-            if tmin < ts:
-                tmin = ts
-        elif tc.op == ">":
-            if ts >= TS_MAX:
-                false = True
-            elif tmin <= ts:
-                tmin = ts + 1
-        else:
-            raise GraphdError(
-                "SYNTAX",
-                f"cannot use {tc.op} with timestamps",
-            )
-    if tmax < tmin:
-        false = True
-    return (
-        tmin if tmin > TS_MIN else None,
-        tmax if tmax < TS_MAX else None,
-        false,
-    )
-
-
-def timestamp_bounds(con) -> tuple:
-    """(min, max) view of timestamp_envelope for the id-bsearch
-    compile; a false envelope returns an impossible pair."""
-    try:
-        tmin, tmax, false = timestamp_envelope(con)
-    except ValueError:
-        return None, None  # the row-predicate builder reports it
-    if false:
-        return 1, 0
-    return tmin, tmax
 
 
 @dataclass
@@ -1445,7 +1238,7 @@ class Compiler:
         # target is versioned, and a stored pointer reads back as the
         # guid that was written (no write-time canonicalization).
         # Explicit guid constraints widen via ~= literal-side lineage
-        # expansion instead (_guid_col_pred).
+        # expansion instead (match.guid_sets).
         if kind == "my" and lk == "bi":
             # '<->': the sub link touches the parent from either end.
             # Expressed scale-first as an EXPLODED equi-join — each
@@ -1687,15 +1480,11 @@ class Compiler:
         with '|' too, earlier branches win, matching the reference's
         evaluation order.
         """
-        if all(self._branch_is_intrinsic(b) for b in chain):
+        if all(intrinsic_branch(b) for b in chain):
             plan.or_chain_subs.append([])
-            pred = None
-            for b in chain:
-                p = self._branch_pred(b)
-                if p is None:
-                    return df  # empty branch: chain always true
-                pred = p if pred is None else (pred | p)
-            return df.filter(pred) if pred is not None else df
+            return df.filter(reduce(
+                operator.or_, [self._branch_pred(b) for b in chain]
+            ))
 
         flags = []
         chain_sps: list = []  # this chain's SubPlans, parse order
@@ -1817,8 +1606,8 @@ class Compiler:
                     first-match expr for inner-branch subs
           slot_sps: SubPlans in this branch's parse order
         """
-        pred = self._branch_pred(b, skip_sub_chains=True)
-        flag = pred if pred is not None else _l(True)
+        # never null: a later branch's first-match test negates it
+        flag = F.coalesce(self._branch_pred(b), _l(False))
         cases: dict = {}
         bpats: list = []
         bsps: list = []
@@ -1852,7 +1641,7 @@ class Compiler:
                 cases.setdefault(var, []).append((None, expr, pat.kind))
         for ch in b.or_chains:
             slots_here: list = []
-            if all(self._branch_is_intrinsic(x) for x in ch):
+            if all(intrinsic_branch(x) for x in ch):
                 chain_slots.append(slots_here)
                 continue  # folded into _branch_pred
             cpred = None
@@ -1892,60 +1681,18 @@ class Compiler:
                 n_chain += 1
         return df, flag, cases, bpats, bsps, slot_sps
 
-    def _branch_is_intrinsic(self, b: Constraint) -> bool:
-        # nested or-chains stay intrinsic as long as every branch
-        # below is — their match folds into a recursive disjunction
-        # (_branch_pred); probed: the reference answers
-        # `{ { A | B } | C }` as A|B|C row-wise
-        return (
-            not b.subs
-            and not b.assignments
-            and all(
-                self._branch_is_intrinsic(x)
-                for ch in b.or_chains
-                for x in ch
-            )
-        )
-
-    def _branch_pred(self, b: Constraint, skip_sub_chains: bool = False):
-        """An or-BRANCH's intrinsic match predicate including its
-        NESTED or-chains, folded recursively (None = always true).
-        Post-round-8, bare nested chains splice at parse
-        (parser._is_bare_chain), so a chain surviving INSIDE a branch
-        is always conjoined with other clauses of that branch; its
-        branches fold when intrinsic.  INNER branches carrying subs
-        or assignments take the recursive slot/winner machinery
-        (_branch_flag, round 9) — skip_sub_chains=True leaves those
-        chains to the caller; without it they are a hard error (the
-        pre-round-7 behavior silently ignored nested chains)."""
-        conds = []
-        p = self._intrinsic_pred(b, in_branch=True)
-        if p is not None:
-            conds.append(p)
+    def _branch_pred(self, b: Constraint):
+        """An or-BRANCH's intrinsic match and its intrinsic NESTED
+        or-chains, folded recursively (probed: the reference answers
+        `{ { A | B } | C }` as A|B|C row-wise).  Chains whose branches
+        carry subs or assignments take the recursive slot/winner
+        machinery (_branch_flag)."""
+        pred = self._intrinsic_pred(b, in_branch=True)
         for chain in b.or_chains:
-            if not all(self._branch_is_intrinsic(x) for x in chain):
-                if skip_sub_chains:
-                    continue
-                raise GraphdError(
-                    "SYSTEM",
-                    "nested or-chains with subconstraints or "
-                    "assignments are not supported",
+            if all(intrinsic_branch(x) for x in chain):
+                pred = pred & reduce(
+                    operator.or_, [self._branch_pred(x) for x in chain]
                 )
-            cpred = None
-            always = False
-            for x in chain:
-                xp = self._branch_pred(x)
-                if xp is None:
-                    always = True  # empty branch: chain always true
-                    break
-                cpred = xp if cpred is None else (cpred | xp)
-            if not always and cpred is not None:
-                conds.append(cpred)
-        if not conds:
-            return None
-        pred = conds[0]
-        for c in conds[1:]:
-            pred = pred & c
         return pred
 
     # -- element structs ---------------------------------------------------
@@ -2090,408 +1837,140 @@ class Compiler:
     # -- intrinsic predicates ----------------------------------------------
 
     def _intrinsic_pred(self, con: Constraint, in_branch: bool = False):
-        conds = []
-        if con.false:
-            return _l(False)
-        if con.live == TRUE:
-            conds.append(_c("live"))
-        elif con.live == FALSE:
-            conds.append(~_c("live"))
-        if con.archival == TRUE:
-            conds.append(_c("archival"))
-        elif con.archival == FALSE:
-            conds.append(~_c("archival"))
-        # meta markers never filter at match time: GRAPHD_META_NODE is
-        # read only by constraint-to-string, and the matcher has no
-        # meta check (graphd-match.c; differential seed 4 — the
-        # reference answers `node left->(...)` with left-links).  The
-        # metas act earlier, as linkage-defaulting hints in the
-        # semantic pass (graphd-semantic.c:677-720) and write shaping;
-        # a parentless '->' matches nodes too (test/unit/nullguid2.sh).
+        """``con``'s bound intrinsic match (match.bind) as a Column."""
+        return _column(bind(self.store, self.types, con, in_branch))
 
-        if con.dateline is not None:
-            conds.append(self._dateline_cond(con.dateline))
 
-        if con.guid:
-            conds.append(self._guid_col_pred(_c("guid"), con.guid))
-        for lk, gcs in con.links.items():
-            if gcs:
-                conds.append(self._guid_col_pred(_c(lk), gcs))
-        # empty-set cons are the consumed prev=null/next=null rewrite
-        # markers (parser._normalize_version_pointers): they sign
-        # "=()" in cursor envelopes but carry no match semantics
-        live_prev = [gc for gc in con.prev if gc.guids]
-        if live_prev:
-            conds.append(self._guid_col_pred(_c("prev"), live_prev))
-        for gc in con.next:
-            if gc.guids:
-                conds.append(self._next_cond(gc))
+#: base-frame columns that hold no nulls: tests on them need no guard
+_NOT_NULL = frozenset((
+    "live", "archival", "id", "guid", "datatype", "timestamp", "generation",
+))
 
-        # value-comparator overrides matching only (david_8.sh)
-        match_comp = con.value_comparator or con.comparator
-        for sc in merged_strcons(con.type_strcons, match_comp):
-            conds.append(self._type_cond(sc))
-        for sc in merged_strcons(con.name_strcons, match_comp):
-            conds.append(
-                self._string_cond(_c("name"), sc, match_comp,
-                                  is_value=False)
-            )
-        for sc in merged_strcons(con.value_strcons, match_comp):
-            conds.append(
-                self._string_cond(_c("value"), sc, match_comp,
-                                  is_value=True)
-            )
 
-        if con.valuetype is not None:
-            conds.append(_c("datatype") == con.valuetype)
+def _column(node, cols: Optional[dict] = None):
+    """A ``match.bind`` tree as a boolean Column over the base frame.
 
-        if con.timestamps:
-            # one inclusive [min, max] envelope, NOT per-op row
-            # predicates — ops fold in parse order with the
-            # reference's quirks (timestamp_envelope)
-            try:
-                tmin_e, tmax_e, ts_false = timestamp_envelope(con)
-            except ValueError as e:
-                raise GraphdError(
-                    "SYNTAX",
-                    f"cannot parse timestamp {e.args[0]!r}",
-                )
-            c = _c("timestamp")
-            if ts_false:
-                conds.append(_l(False))
-            else:
-                if tmin_e is not None:
-                    conds.append(c >= tmin_e)
-                if tmax_e is not None:
-                    conds.append(c <= tmax_e)
-        if con.timestamps and not in_branch:
-            # timestamp bounds ALSO compile to id-range datelines via
-            # a bsearch that assumes timestamp order
-            # (graphd_read_compile_timestamps, graphd-read.c:300-420;
-            # graphd-timestamp.c:46).  Explicit timestamp= writes
-            # break monotonicity, so the id bound can exclude rows the
-            # row predicate matches — probed: ts>0 skips an
-            # out-of-order stamp below the boundary id.  Or-BRANCH
-            # timestamps are CHECK-only (no iterator compiles for a
-            # branch), so no id bound applies there (or-chain fuzz
-            # seed 1151: an out-of-order stamp survives a branch's
-            # ts>1970)
-            tmin, tmax = timestamp_bounds(con)
-            if tmin is not None and tmin > 0:
-                b = self.store.timestamp_to_id(tmin, "ge")
-                if b is None:
-                    conds.append(_l(False))
-                else:
-                    conds.append(_c("id") >= b)
-            if tmax is not None:
-                b = self.store.timestamp_to_id(tmax, "le")
-                if b is None:
-                    conds.append(_l(False))
-                else:
-                    conds.append(_c("id") < b + 1)
+    The Column equals the tree's answer wherever it is not null, and
+    is null only where the tree answers false, so a filter keeps
+    exactly the matching rows: a negated leaf states its null result
+    with an explicit null test rather than negating a null.  ``cols``
+    shares one Column per field within one rendering."""
+    if cols is None:
+        cols = {}
+    t = type(node)
+    if t is match.And:
+        return reduce(operator.and_, [
+            c for x in node.parts for c in _conjuncts(x, cols)
+        ])
+    if t is match.Or:
+        return reduce(operator.or_, [_column(x, cols) for x in node.parts])
+    if t is match.Not:
+        return _negated(node.part, cols)
+    if t is match.Const:
+        return _l(node.value)
+    if t is match.Newest:
+        if (node.op, node.n) == ("=", 0):
+            # in every compiled node: one cached JVM expression
+            return _cc("gendist0", lambda: _gendist() == 0)
+        return _OPS[node.op](_gendist(), _l(node.n))
+    if t is match.Bin:
+        return reduce(operator.and_, _conjuncts(node, cols))
+    col = _field(node.field, cols)
+    if t is match.Glob:
+        return glob_column(col, node.pattern,
+                           case_sensitive=node.case_sensitive)
+    if t is match.Delim:
+        return delimited_match_column(col, node.pattern)
+    x = _test(node, col)
+    if not node.null or node.field in _NOT_NULL:
+        return x if x is not None else _l(False)
+    return col.isNull() if x is None else (x | col.isNull())
 
-        # generation: default newest=0 — only current versions match
-        # (ref graphd/graphd.h:458-472).  A next= constraint naming a
-        # real successor implies non-newest candidates, so it lifts
-        # the default (test/unit/guid2.sh: next=G finds the versioned
-        # predecessor)
-        dist = _cc("gendist", lambda: _c("__maxgen") - _c("generation"))
-        if con.gens:
-            for g in con.gens:
-                target = dist if g.field == "newest" else _c("generation")
-                conds.append(_OPS[g.op](target, _l(g.n)))
-        elif not any(
-            g is not None for gc in con.next for g in gc.guids
-        ):
-            # the default newest=0 predicate appears in every compiled
-            # node: one cached JVM expression
-            conds.append(_cc("gendist0", lambda: (
-                _cc("gendist", lambda: _c("__maxgen") - _c("generation"))
-                == 0
-            )))
 
-        if not conds:
-            return None
-        pred = conds[0]
-        for c in conds[1:]:
-            pred = pred & c
-        return pred
+def _negated(node, cols: dict):
+    """``Not(node)`` as a Column (see _column)."""
+    t = type(node)
+    if t is match.Not:
+        return _column(node.part, cols)
+    if t is match.And:
+        return reduce(operator.or_, [_negated(x, cols) for x in node.parts])
+    if t is match.Or:
+        return reduce(operator.and_, [_negated(x, cols) for x in node.parts])
+    if t is match.Const:
+        return _l(not node.value)
+    if t is match.Newest:
+        return ~_column(node, cols)
+    if t is match.Bin:
+        s = _scan(node, cols)
+        if node.op is None:
+            return s.isNull()
+        return s.isNull() | ~_OPS[node.op](s, _l(node.bound))
+    col = _field(node.field, cols)
+    if t in (match.Glob, match.Delim):
+        x, null = _column(node, cols), False
+    else:
+        x, null = _test(node, col), node.null
+    if node.field in _NOT_NULL:
+        return ~x if x is not None else _l(True)
+    if null:
+        return col.isNotNull() if x is None else (col.isNotNull() & ~x)
+    return _l(True) if x is None else (col.isNull() | ~x)
 
-    def _dateline_cond(self, dl):
-        """dateline OP "db.count": id-horizon predicate (ref
-        graphd/graphd-dateline.c; partition-prunable at scale)."""
-        op, text = dl
-        t = text.strip().lower()
-        db, _, count = t.rpartition(".")
-        try:
-            n = int(count, 16)  # dateline counts are hexadecimal
-        except ValueError:
-            return _l(False)  # unparseable dateline matches nothing
-        c = _c("id")
-        return {
-            "=": c == n, "!=": c != n,
-            "<": c < n, "<=": c < n,
-            ">": c >= n, ">=": c >= n,
-        }[op]
 
-    def _guid_col_pred(self, col, gcs):
-        """guid_sets' merge of one column's guid constraints as a
-        predicate."""
-        include, standalone, excludes = guid_sets(self.store, gcs)
-        parts = []
-        if include is not None:
-            nonnull = [g for g in include if g is not None]
-            p = None
-            if nonnull:
-                p = col.isin(nonnull)
-            if None in include:
-                p = col.isNull() if p is None else (p | col.isNull())
-            parts.append(p if p is not None else _l(False))
-        for s in standalone:
-            nonnull = [g for g in s if g is not None]
-            p = col.isin(nonnull) if nonnull else _l(False)
-            if None in s:
-                p = p | col.isNull()
-            parts.append(p)
-        for ex in excludes:
-            # standalone '!=': the linkage must exist and differ
-            p = col.isNotNull()
-            if ex:
-                p = p & ~col.isin(list(ex))
-            parts.append(p)
-        pred = parts[0]
-        for p in parts[1:]:
-            pred = pred & p
-        return pred
+def _conjuncts(node, cols: dict) -> list:
+    """``node``'s Columns as conjuncts of an enclosing And: a bin test
+    contributes its surfacing test and its bound separately."""
+    if type(node) is not match.Bin:
+        return [_column(node, cols)]
+    s = _scan(node, cols)
+    out = [s.isNotNull()]
+    if node.op is not None:
+        out.append(_OPS[node.op](s, _l(node.bound)))
+    return out
 
-    def _next_cond(self, gc):
-        """next=G: this primitive's successor is G <=> G.prev == guid;
-        next~=G widens to the whole lineage of G (any member's prev —
-        ref test/unit/guid2.sh)."""
-        parts = []
-        has_null = any(g is None for g in gc.guids)
-        prevs = []
-        for g in gc.guids:
-            if g is None:
-                continue
-            targets = [g]
-            if gc.op == "~=":
-                p = self.store.get(g)
-                if p is not None:
-                    targets = self.store.lineage_members(p.lineage)
-            for t in targets:
-                tp = self.store.get(t)
-                if tp is not None and tp.prev is not None:
-                    prevs.append(tp.prev)
-        newest = (_c("__maxgen") - _c("generation")) == 0
-        if gc.op in ("=", "~="):
-            if prevs:
-                parts.append(_c("guid").isin(prevs))
-            if has_null:
-                parts.append(newest)  # no successor
-            if not parts:
-                return _l(False)
-            pred = parts[0]
-            for p in parts[1:]:
-                pred = pred | p
-            return pred
-        pred = ~newest  # must have a successor
-        if prevs:
-            pred = pred & ~_c("guid").isin(prevs)
-        return pred
 
-    def _type_cond(self, sc):
-        """type="name": bind names to typeguids pre-plan
-        (ref graphd-read.c:36-135); matching is lineage-canonical."""
-        col = _c("typeguid_lin")
-        guids = []
-        has_null = False
-        for nm in sc.values:
-            if nm is None:
-                has_null = True
-                continue
-            g = self.types.resolve(nm)
-            if g is not None:
-                p = self.store.get(g)
-                guids.append(p.lineage if p is not None else g)
-        if sc.op == "=":
-            parts = []
-            if guids:
-                parts.append(col.isin(guids))
-            if has_null:
-                parts.append(col.isNull())
-            if not parts:
-                return _l(False)
-            pred = parts[0]
-            for p in parts[1:]:
-                pred = pred | p
-            return pred
-        pred = col.isNull() | ~col.isin(guids) if guids else None
-        if has_null:
-            p2 = col.isNotNull()
-            pred = p2 if pred is None else (pred & p2)
-        return pred if pred is not None else _l(True)
+def _test(node, col):
+    """An In or Cmp leaf's test on a non-null field (None: no value
+    can pass)."""
+    su = node.field == "value_norm"  # stored su_encode'd
+    if type(node) is match.Cmp:
+        lit = su_encode(node.lit) if su else node.lit
+        return _OPS[node.op](col, _l(lit))
+    if not node.values:
+        return None
+    if node.values == (True,):
+        return col  # a boolean flag
+    return col.isin([su_encode(v) for v in node.values] if su
+                    else list(node.values))
 
-    def _string_cond(self, col, sc, comparator, is_value: bool = False):
-        comp = resolve_comparator(comparator)
-        nonnull = [v for v in sc.values if v is not None]
-        has_null = any(v is None for v in sc.values)
 
-        # equality column + literal encodings, per comparator:
-        # - default: fuzzy-key equality (word-aware, numbers normalize;
-        #   validated by test/unit/numberequal r1/r8) via the stored
-        #   value_fkey column
-        # - number/datetime: hash-normalized equality (value_norm)
-        # - case/octet: exact bytes
-        if is_value and comp == "default":
-            # candidates come from the value-hash bucket, then check
-            # with the fuzzy comparison (ref comparator_default_
-            # iterator GRAPHD_OP_EQ + vrange_check_value; numberequal
-            # r8: ' 1' fuzzy-equals '1' but hashes as '1', not '1e0',
-            # so it never surfaces) — both must match
-            eq_col = _c("value_fkey")
-            eq_lits = [fuzzy_key(v) for v in nonnull]
-            norm_lits = [su_encode(value_norm_key(v)) for v in nonnull]
-        elif is_value and comp == "number":
-            # strict: only parseable numbers equal a number literal
-            eq_col = _c("value_num")
-            eq_lits = [
-                value_norm_key(v) if decode_number(
-                    v, scientific=True
-                ) is not None else v.lower()
-                for v in nonnull
-            ]
-        elif is_value and comp == "datetime":
-            eq_col = _c("value_norm")
-            eq_lits = [su_encode(value_norm_key(v)) for v in nonnull]
-        elif comp in ("case", "octet"):
-            eq_col = col
-            eq_lits = nonnull
-        else:
-            eq_col = F.lower(col)
-            eq_lits = [v.lower() for v in nonnull]
+def _gendist():
+    """Distance from the lineage's newest generation."""
+    return _cc("gendist", lambda: _c("__maxgen") - _c("generation"))
 
-        if sc.op == "=":
-            parts = []
-            if is_value and "" in nonnull:
-                # value="" also finds string-datatype primitives whose
-                # value is stored null (test/unit/nullvalue.sh); the
-                # literal keeps matching stored empty/whitespace values
-                # through the regular comparator path (david_6.sh)
-                parts.append(
-                    col.isNull() & (_c("datatype") == 2)
-                )
-            if nonnull and is_value and comp == "default":
-                p = None
-                for k, n in zip(eq_lits, norm_lits):
-                    t = (eq_col == _l(k)) & (
-                        _c("value_norm") == _l(n)
-                    )
-                    p = t if p is None else (p | t)
-                parts.append(p)
-            elif nonnull:
-                parts.append(eq_col.isin(eq_lits))
-            if has_null:
-                parts.append(col.isNull())
-            if not parts:
-                return _l(False)
-            pred = parts[0]
-            for p in parts[1:]:
-                pred = pred | p
-            return pred
-        if sc.op == "!=":
-            if not nonnull and not has_null:
-                # != () — the empty exclusion set still demands the
-                # field exist (ref test/unit/ne.sh 'name!=()')
-                return col.isNotNull()
-            # a null field always differs from a non-null literal —
-            # value!="x" matches unvalued primitives exactly like
-            # name!=/type!= match unnamed ones (reference behavior,
-            # verified via differential probes; test_differential)
-            pred = None
-            if nonnull:
-                pred = col.isNull() | ~eq_col.isin(eq_lits)
-            if has_null:
-                p2 = col.isNotNull()
-                pred = p2 if pred is None else (pred & p2)
-            return pred if pred is not None else _l(True)
-        if sc.op in ("<", "<=", ">", ">="):
-            # range under the comparator's ordering: compare
-            # order-preserving sort keys (null values never match —
-            # the reference's vrange iterators scan value indexes,
-            # which don't contain nulls)
-            lit = nonnull[0] if nonnull else None
-            if lit is None:
-                return _l(False)
-            if is_value and comp == "default":
-                key = _c("value_fkey")
-            else:
-                key = sort_key_column(col, comp)
-            pred = _OPS[sc.op](key, _l(literal_key(lit, comp)))
-            if is_value and comp == "datetime":
-                # datetime ranges enumerate the three date bin
-                # segments only (negative years / years / times, ref
-                # datetime_inc/dec/skip) — values outside them (and
-                # nulls) never surface
-                return pred & scan_order_column(
-                    datetime_scan_order, col
-                ).isNotNull()
-            if comp == "number":
-                lo_bin = (
-                    number_bin_lookup(lit) if is_value else None
-                )
-                if lo_bin is None:
-                    # literal doesn't decode: the reference builds no
-                    # vrange (ENOTSUP); only parseable numbers match —
-                    # number keys sort below the \x02 non-number class
-                    pred = pred & (key < _l(b"\x02"))
-                else:
-                    # enumeration = bins from/to the literal's bin;
-                    # each bin's value-hash bucket can carry
-                    # non-numbers whose normalization collides with
-                    # the boundary's canonical string (' 0' -> '0',
-                    # ref number_vrange_it_next + pdb_hash_number_
-                    # iterator; test numberequal r6)
-                    scan = scan_order_column(number_scan_order, col)
-                    pred = pred & scan.isNotNull()
-                    if sc.op in (">", ">="):
-                        pred = pred & (scan >= _l(2 * lo_bin))
-                    else:
-                        pred = pred & (scan <= _l(2 * lo_bin + 1))
-            elif is_value and sc.op in (">", ">="):
-                # null values compare greater than any string under
-                # the default ordering (graph_fuzzycmp NULL rule), so
-                # they satisfy > ranges (ref test/unit/david_5.sh)
-                pred = pred | col.isNull()
-            return pred
-        if sc.op == "~=":
-            if comp == "number":
-                raise GraphdError(
-                    "SEMANTICS",
-                    'cannot use ~= with comparator="number"',
-                )
-            from graphd_spark.glob import glob_column
 
-            cs = comp in ("case", "octet")
-            pred = None
-            if has_null:
-                # value~=null matches null values (test/unit/nullvalue.sh)
-                pred = col.isNull()
-            for v in nonnull:
-                if is_value and comp == "datetime":
-                    # date patterns match with the delimiter-aware
-                    # matcher, not the word glob (ref
-                    # delimited_string_match; test datetime-2)
-                    from graphd_spark.comparators import (
-                        delimited_match_column,
-                    )
+def _field(field, cols: dict):
+    col = cols.get(field)
+    if col is None:
+        if isinstance(field, str):
+            col = _c(field)
+        elif field[0] == "lower":
+            col = F.lower(_c(field[1]))
+        else:  # ("key", field, comparator)
+            col = sort_key_column(_c(field[1]), field[2])
+        cols[field] = col
+    return col
 
-                    g = delimited_match_column(col, v)
-                else:
-                    g = glob_column(col, v, case_sensitive=cs)
-                pred = g if pred is None else (pred | g)
-            return pred if pred is not None else _l(False)
-        raise GraphdError("SEMANTICS", f"unsupported operator {sc.op!r}")
+
+def _scan(node, cols: dict):
+    """A Bin leaf's scan-position Column."""
+    key = ("scan", node.order, node.field)
+    s = cols.get(key)
+    if s is None:
+        s = cols[key] = scan_order_column(
+            match.SCAN_ORDERS[node.order], _c(node.field)
+        )
+    return s
 
 
 def sort_cursor_string(store, types, asof, con, plan, rows,

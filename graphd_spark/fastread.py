@@ -45,11 +45,9 @@ from typing import Iterable, Optional
 from graphd_spark.comparators import (
     _ascii_lower,
     datetime_scan_order,
-    decode_number,
     delimited_match,
     fuzzy_key,
     literal_key,
-    number_bin_lookup,
     number_scan_order,
     number_sort_key,
     resolve_comparator,
@@ -62,8 +60,6 @@ from graphd_spark.compiler import (
     SetPlan,
     SubPlan,
     _OPS,
-    guid_sets,
-    merged_strcons,
 )
 from graphd_spark.cursor import (
     asof_horizon,
@@ -81,7 +77,9 @@ from graphd_spark.freeze import (
     _prefix_rollup,
 )
 from graphd_spark.glob import glob_match
-from graphd_spark.gql.ir import Constraint, TRUE, FALSE
+from graphd_spark import match
+from graphd_spark.match import bind, guid_sets, intrinsic_branch
+from graphd_spark.gql.ir import Constraint
 from graphd_spark.model import (
     Primitive,
     guid_compose,
@@ -400,6 +398,52 @@ def _thaw_pred(t: freeze.Thaw):
     )
 
 
+def _field(field, p):
+    """A match.bind field's value on a primitive (None when null)."""
+    if type(field) is str:
+        return getattr(p, field)
+    v = getattr(p, field[1])
+    if v is None:
+        return None
+    # ("lower", field) or ("key", field, comparator)
+    return v.lower() if field[0] == "lower" else literal_key(v, field[2])
+
+
+def _check(node, p, maxgen) -> bool:
+    """Does primitive ``p`` pass the ``match.bind`` tree ``node``?
+    ``maxgen(p)`` is the newest generation of p's lineage.  The tree
+    is interpreted: a serving read checks one to a few candidates per
+    constraint, fewer than would pay for compiling it to closures."""
+    t = type(node)
+    if t is match.In:
+        v = _field(node.field, p)
+        return node.null if v is None else v in node.values
+    if t is match.And:
+        for x in node.parts:
+            if not _check(x, p, maxgen):
+                return False
+        return True
+    if t is match.Newest:
+        return _OPS[node.op](maxgen(p) - p.generation, node.n)
+    if t is match.Or:
+        return any(_check(x, p, maxgen) for x in node.parts)
+    if t is match.Not:
+        return not _check(node.part, p, maxgen)
+    if t is match.Const:
+        return node.value
+    v = _field(node.field, p)
+    if t is match.Cmp:
+        return node.null if v is None else _OPS[node.op](v, node.lit)
+    if t is match.Bin:
+        o = match.SCAN_ORDERS[node.order](v)
+        return o is not None and (
+            node.op is None or _OPS[node.op](o, node.bound)
+        )
+    if t is match.Glob:
+        return glob_match(node.pattern, v, node.case_sensitive)
+    return delimited_match(node.pattern, v)
+
+
 #: mirror of Compiler._var_expr's scalar assignment kinds
 _VAR_ATTRS = {
     "value": "value", "name": "name", "guid": "guid", "left": "left",
@@ -418,8 +462,6 @@ def _scalar_var_fn(pat):
         return lambda p, lit=pat.literal: lit
     return None
 
-
-_RANGE_OPS = ("<", "<=", ">", ">=")
 
 #: graphd_value_compare's cross-type rank (graphd-value.c fall-through
 #: ``a->val_type - b->val_type``; enum graphd.h:1666-1678)
@@ -502,16 +544,6 @@ def shape_flags(con: Constraint) -> dict:
     return memo
 
 
-def _nested_intrinsic(b) -> bool:
-    """Every branch below is intrinsic (recursively): the nested
-    chain folds into a disjunction (_match_branch)."""
-    return all(
-        not x.subs and not x.assignments and _nested_intrinsic(x)
-        for ch in b.or_chains
-        for x in ch
-    )
-
-
 def _iter_cspec_branches(cspec):
     """All branch entries of a chain spec, INNER chains included
     (round 9: sub-bearing nested chains recurse into entry[5])."""
@@ -589,18 +621,12 @@ class FastReader:
         self._cursub_ring: dict = {}   # id(sub con) -> [slots*5, idx]
         self._cursub_defer: list = []
         self._spec_depth = 0
-        #: per-request cache of timestamp-range id bounds, keyed by
-        #: constraint identity (the reference compiles them once per
-        #: constraint; graphd_read_compile_timestamps)
-        self._ts_id_bounds: dict = {}
-        self._ts_envelopes: dict = {}
-        #: per-request cache of merged string-constraint lists, keyed
-        #: by (constraint identity, iter_level), and of merged guid
-        #: sets, keyed by (constraint identity, column): _iter_intrinsic
-        #: runs once per CANDIDATE, but the merge depends only on the
-        #: node's (rebound-per-request) constraints — constant within
-        #: one reader, which lives for exactly one request
-        self._msc_cache: dict = {}
+        #: bound intrinsic tests (_matcher), keyed by (constraint
+        #: identity, in_branch, iter_level, generation): a check runs
+        #: once per CANDIDATE, but its tests depend only on the node's
+        #: (rebound-per-request) constraints — constant within one
+        #: reader, which lives for exactly one request
+        self._matchers: dict = {}
         #: store-level (plan, matches) cache for repeated template
         #: shapes — the serving analog of the reference's iterator
         #: resource cache (graphd-iterator-resource.c): a cursor chain
@@ -1247,15 +1273,7 @@ class FastReader:
                     u |= xi
                 sets.append(u)
             if b.timestamps:
-                lo_hi = self._ts_bounds(b)
-                if lo_hi is None:
-                    return None
-                lo, hi = lo_hi
-                if not sets:
-                    return None  # pure ts branch: range producer
-                sets = [
-                    {i for i in s if lo <= i < hi} for s in sets
-                ]
+                return None
             if not sets:
                 return None  # unconstrained branch matches all
             out = sets[0]
@@ -1275,17 +1293,6 @@ class FastReader:
             i for i in union if st._base <= i < st.next_id
         )
         return ids or None
-
-    def _ts_bounds(self, con) -> Optional[tuple]:
-        """(low, high) id bounds a branch's timestamp envelope
-        compiles to at iterator level, or None when unmodeled."""
-        try:
-            ent = self._ts_id_bounds.get(id(con))
-            if ent is not None:
-                return ent
-        except Exception:
-            return None
-        return None
 
     # -- sorting (one key function per _sort_key column) ------------------
 
@@ -1516,11 +1523,7 @@ class FastReader:
         # gate on the outer AND inner first-match.
         chains = []
         for chain in con.or_chains:
-            if all(
-                not b.subs and not b.assignments
-                and _nested_intrinsic(b)
-                for b in chain
-            ):
+            if all(intrinsic_branch(b) for b in chain):
                 chains.append((chain, None))
                 plan.or_chain_subs.append([])
                 continue
@@ -1678,11 +1681,7 @@ class FastReader:
         for ch in b.or_chains:
             slots_here: list = []
             chain_slot_lists.append(slots_here)
-            if all(
-                not x.subs and not x.assignments
-                and _nested_intrinsic(x)
-                for x in ch
-            ):
+            if all(intrinsic_branch(x) for x in ch):
                 continue  # folds into _match_branch
             inner_branch_specs = [
                 self._build_branch_spec(x, plan, slots_here, flat_bvars)
@@ -3475,16 +3474,27 @@ class FastReader:
                 out.add(p.id)
         return out
 
-    # -- intrinsic matcher (mirror of _intrinsic_pred) ---------------------
+    # -- intrinsic matcher (match.bind rendered as a Python check) --------
+
+    def _matcher(self, con: Constraint, in_branch: bool = False,
+                 iter_level: bool = False, generation: bool = True):
+        """``con``'s bound intrinsic tests (match.bind), bound once per
+        request."""
+        key = (id(con), in_branch, iter_level, generation)
+        tree = self._matchers.get(key)
+        if tree is None:
+            tree = self._matchers[key] = bind(
+                self.store, self.types, con, in_branch, iter_level,
+                generation,
+            )
+        return tree
 
     def _match_branch(self, p: Primitive, b: Constraint,
                       skip=None) -> bool:
         """An or-BRANCH's match including its recursively-intrinsic
-        NESTED chains (mirror of Compiler._branch_pred; probed:
-        `{ { A | B } | C }` matches A|B|C row-wise).  An empty branch
-        matches everything, so a chain with one folds to true.
-        `skip` names chains (by id) evaluated separately — the
-        branch's sub-bearing nested chains, which _eval_branch
+        NESTED chains (probed: `{ { A | B } | C }` matches A|B|C
+        row-wise).  `skip` names chains (by id) evaluated separately —
+        the branch's sub-bearing nested chains, which _eval_branch
         recurses into (round 9)."""
         if not self._match_intrinsic(p, b, in_branch=True):
             return False
@@ -3497,21 +3507,8 @@ class FastReader:
 
     def _match_intrinsic(self, p: Primitive, con: Constraint,
                          in_branch: bool = False) -> bool:
-        if not self._iter_intrinsic(p, con, in_branch=in_branch):
-            return False
-        # generation: default newest=0 (Compiler._intrinsic_pred)
-        dist = self._maxgen(p) - p.generation
-        if con.gens:
-            for g in con.gens:
-                target = dist if g.field == "newest" else p.generation
-                if not _OPS[g.op](target, g.n):
-                    return False
-        elif not any(
-            g is not None for gc in con.next for g in gc.guids
-        ):
-            if dist != 0:
-                return False
-        return True
+        """``con``'s intrinsic match, generation test included."""
+        return self._iter_intrinsic(p, con, in_branch, generation=True)
 
     def _iter_match(self, p: Primitive, con: Constraint) -> bool:
         """Iterator-level match: the predicates the reference compiles
@@ -3552,143 +3549,19 @@ class FastReader:
 
     def _iter_intrinsic(self, p: Primitive, con: Constraint,
                         in_branch: bool = False,
-                        iter_level: bool = False) -> bool:
-        if con.false:
+                        iter_level: bool = False,
+                        generation: bool = False) -> bool:
+        """``con``'s bound tests (without the generation test unless
+        asked) and one candidate branch per or-chain.  Intrinsic
+        chains fold into the iterator pre-evaluation (probed round 7);
+        at iterator level, branch SUBS apply as raw existence too
+        (probed round 8: a chain branch `(<-left value="k")`
+        pre-evaluates kids that have such a child); branch timestamps
+        are CHECK-only — no id bound (seed 1151)."""
+        if not _check(self._matcher(con, in_branch, iter_level, generation),
+                      p, self._maxgen):
             return False
-        if con.live == TRUE and not p.live:
-            return False
-        if con.live == FALSE and p.live:
-            return False
-        if con.archival == TRUE and not p.archival:
-            return False
-        if con.archival == FALSE and p.archival:
-            return False
-        if con.dateline is not None and not self._dateline_pred(p, con):
-            return False
-        if con.guid and not self._guid_pred(p.guid, con, "guid", con.guid):
-            return False
-        for lk, gcs in con.links.items():
-            if gcs and not self._guid_pred(getattr(p, lk), con, lk, gcs):
-                return False
-        if not iter_level:
-            # prev/next are lineage-generational: acceptance-level
-            # only — they never pre-evaluate (probed round 8).
-            # Empty-set cons are the consumed prev=null/next=null
-            # rewrite markers (parser._normalize_version_pointers):
-            # they sign "=()" but match nothing-in-particular
-            live_prev = [gc for gc in con.prev if gc.guids]
-            if live_prev and not self._guid_pred(
-                p.prev, con, "prev", live_prev
-            ):
-                return False
-            for gc in con.next:
-                if gc.guids and not self._next_pred(p, gc):
-                    return False
-        match_comp = con.value_comparator or con.comparator
-        # merged per (node, iter_level) once per request: the merge
-        # walks only the node's strcons, identical for every candidate
-        mk = (id(con), iter_level)
-        merged = self._msc_cache.get(mk)
-        if merged is None:
-            tscs, nscs, vscs = (
-                con.type_strcons, con.name_strcons, con.value_strcons
-            )
-            if iter_level:
-                # check-only string constraints (no hmap/prefix/vrange
-                # bins) never enter the pre-evaluated set
-                from graphd_spark.compiler import _strcon_is_bin
-
-                tscs = [sc for sc in tscs if _strcon_is_bin(sc)]
-                nscs = [sc for sc in nscs if _strcon_is_bin(sc)]
-                vscs = [sc for sc in vscs if _strcon_is_bin(sc)]
-            merged = self._msc_cache[mk] = (
-                merged_strcons(tscs, match_comp),
-                merged_strcons(nscs, match_comp),
-                merged_strcons(vscs, match_comp),
-                # is a value RANGE the producer?  Only when no other
-                # bin predicate (type/name/value equality or prefix)
-                # can produce
-                iter_level and not any(
-                    sc.op not in _RANGE_OPS
-                    for scs in (tscs, nscs, vscs)
-                    for sc in scs
-                ),
-            )
-        m_tscs, m_nscs, m_vscs, vrange_prod = merged
-        for sc in m_tscs:
-            if not self._type_pred(p, sc):
-                return False
-        for sc in m_nscs:
-            if not self._string_pred(p, p.name, sc, match_comp,
-                                     is_value=False,
-                                     iter_level=iter_level):
-                return False
-        for sc in m_vscs:
-            if not self._string_pred(p, p.value, sc, match_comp,
-                                     is_value=True,
-                                     iter_level=iter_level,
-                                     range_is_producer=vrange_prod):
-                return False
-        if con.valuetype is not None and p.datatype != con.valuetype:
-            return False
-        if con.timestamps:
-            # one inclusive [min, max] envelope per constraint,
-            # mirror of Compiler (timestamp_envelope — ops fold in
-            # parse order with the reference's quirks)
-            from graphd_spark.compiler import timestamp_envelope
-
-            env = self._ts_envelopes.get(id(con))
-            if env is None:
-                try:
-                    env = timestamp_envelope(con)
-                except ValueError as e:
-                    raise GraphdError(
-                        "SYNTAX",
-                        f"cannot parse timestamp {e.args[0]!r}",
-                    )
-                self._ts_envelopes[id(con)] = env
-            tmin_e, tmax_e, ts_false = env
-            t = p.timestamp
-            if ts_false:
-                return False
-            if tmin_e is not None and t < tmin_e:
-                return False
-            if tmax_e is not None and t > tmax_e:
-                return False
-        if con.timestamps and not in_branch:
-            # timestamp bounds also compile to id-range datelines via
-            # the reference's timestamp->id bsearch (mirror of
-            # _intrinsic_pred; graphd-read.c:300-420); or-BRANCH
-            # timestamps are CHECK-only — no id bound (seed 1151)
-            b = self._ts_id_bounds.get(id(con))
-            if b is None:
-                from graphd_spark.compiler import timestamp_bounds
-
-                tmin, tmax = timestamp_bounds(con)
-                lo_id = hi_id = None
-                dead = False
-                if tmin is not None and tmin > 0:
-                    lo_id = self.store.timestamp_to_id(tmin, "ge")
-                    dead = dead or lo_id is None
-                if tmax is not None:
-                    hi_id = self.store.timestamp_to_id(tmax, "le")
-                    dead = dead or hi_id is None
-                b = (lo_id, hi_id, dead)
-                self._ts_id_bounds[id(con)] = b
-            lo_id, hi_id, dead = b
-            if dead:
-                return False
-            if lo_id is not None and p.id < lo_id:
-                return False
-            if hi_id is not None and p.id > hi_id:
-                return False
         for chain in con.or_chains:
-            # intrinsic chains fold into the iterator pre-evaluation
-            # (probed round 7); at iterator level, branch SUBS apply
-            # as raw existence too (probed round 8: a chain branch
-            # `(<-left value="k")` pre-evaluates kids that have such
-            # a child); branch timestamps are CHECK-only — no id
-            # bound (seed 1151)
             if not any(
                 self._iter_intrinsic(
                     p, b, in_branch=True, iter_level=iter_level
@@ -3749,235 +3622,6 @@ class FastReader:
                 break
             newest = np
         return newest.generation
-
-    def _dateline_pred(self, p: Primitive, con: Constraint) -> bool:
-        """Mirror of _dateline_cond: id-horizon predicate with the
-        reference's <=-is-< / >-is->= collapses; unparseable counts
-        match nothing."""
-        op, text = con.dateline
-        t = text.strip().lower()
-        _db, _, count = t.rpartition(".")
-        try:
-            n = int(count, 16)
-        except ValueError:
-            return False
-        c = p.id
-        return {
-            "=": c == n, "!=": c != n,
-            "<": c < n, "<=": c < n,
-            ">": c >= n, ">=": c >= n,
-        }[op]
-
-    def _guid_pred(self, val: Optional[str], con, col: str, gcs) -> bool:
-        """``val`` against guid_sets' merge of ``gcs``, ``con``'s guid
-        constraints on ``col``, merged once per request."""
-        key = (id(con), col)
-        sets = self._msc_cache.get(key)
-        if sets is None:
-            sets = self._msc_cache[key] = guid_sets(self.store, gcs)
-        include, standalone, excludes = sets
-        if include is not None and val not in include:
-            return False
-        for st in standalone:
-            if val not in st:
-                return False
-        for ex in excludes:
-            # standalone '!=': the linkage must exist and differ
-            if val is None or val in ex:
-                return False
-        return True
-
-    def _next_pred(self, p: Primitive, gc) -> bool:
-        """Compiler._next_cond."""
-        has_null = any(g is None for g in gc.guids)
-        prevs = []
-        for g in gc.guids:
-            if g is None:
-                continue
-            targets = [g]
-            if gc.op == "~=":
-                t = self.store.get(g)
-                if t is not None:
-                    targets = self.store.lineage_members(t.lineage)
-            for t in targets:
-                tp = self.store.get(t)
-                if tp is not None and tp.prev is not None:
-                    prevs.append(tp.prev)
-        newest = (self._maxgen(p) - p.generation) == 0
-        if gc.op in ("=", "~="):
-            if prevs and p.guid in prevs:
-                return True
-            if has_null and newest:
-                return True
-            return False
-        if newest:
-            return False
-        return p.guid not in prevs
-
-    def _type_pred(self, p: Primitive, sc) -> bool:
-        """Mirror of _type_cond (lineage-canonical type matching)."""
-        val = p.typeguid_lin
-        guids = []
-        has_null = False
-        for nm in sc.values:
-            if nm is None:
-                has_null = True
-                continue
-            g = self.types.resolve(nm)
-            if g is not None:
-                tp = self.store.get(g)
-                guids.append(tp.lineage if tp is not None else g)
-        if sc.op == "=":
-            if guids and val in guids:
-                return True
-            if has_null and val is None:
-                return True
-            return False
-        ok = True
-        if guids:
-            ok = val is None or val not in guids
-        if has_null:
-            ok = ok and val is not None
-        return ok
-
-    def _string_pred(self, p: Primitive, val: Optional[str], sc,
-                     comparator, is_value: bool,
-                     iter_level: bool = False,
-                     range_is_producer: bool = False) -> bool:
-        """Mirror of _string_cond for =, !=, ~= (ranges bail)."""
-        comp = resolve_comparator(comparator)
-        nonnull = [v for v in sc.values if v is not None]
-        has_null = any(v is None for v in sc.values)
-
-        def eq_one(lit: str) -> bool:
-            if val is None:
-                return False
-            if is_value and comp == "default":
-                return (
-                    p.value_fkey == fuzzy_key(lit)
-                    and p.value_norm == value_norm_key(lit)
-                )
-            if is_value and comp == "number":
-                lit_key = (
-                    value_norm_key(lit)
-                    if decode_number(lit, scientific=True) is not None
-                    else lit.lower()
-                )
-                return p.value_num == lit_key
-            if is_value and comp == "datetime":
-                return p.value_norm == value_norm_key(lit)
-            if comp in ("case", "octet"):
-                return val == lit
-            return val.lower() == lit.lower()
-
-        if sc.op == "=":
-            if (
-                is_value
-                and "" in nonnull
-                and val is None
-                and p.datatype == 2
-            ):
-                # value="" also finds string-datatype primitives whose
-                # value is stored null (test/unit/nullvalue.sh)
-                return True
-            if nonnull and any(eq_one(v) for v in nonnull):
-                return True
-            if has_null and val is None:
-                return True
-            return False
-        if sc.op == "!=":
-            if not nonnull and not has_null:
-                return val is not None
-            ok = True
-            if nonnull:
-                ok = val is None or not any(eq_one(v) for v in nonnull)
-            if has_null:
-                ok = ok and val is not None
-            return ok
-        if sc.op in _RANGE_OPS:
-            # mirror of _string_cond's range branch: order-preserving
-            # sort keys, plus the comparator-specific scan-membership
-            # rules (null values never match — except the fuzzy
-            # NULL-sorts-greater rule for > ranges)
-            lit = nonnull[0] if nonnull else None
-            if lit is None:
-                return False
-            if (
-                iter_level and is_value and comp == "default"
-                and range_is_producer
-            ):
-                # ITERATOR-level vrange membership when the range IS
-                # the producer (no other bin predicate): the scan
-                # covers whole string bins up to (from) the bound's
-                # bin and the exact comparison is an acceptance-level
-                # refinement (probed round 8: `value<"b"`
-                # pre-evaluates "b" — same bin — but not "ban" — the
-                # next bin).  With another bin as producer (eq/prefix
-                # bins), the range is an and-CHECK evaluated at the
-                # comparator's fuzzy order (writepaged seed 125:
-                # `value>="12" value="12"` keeps "+12")
-                if val is None:
-                    return sc.op in (">", ">=")  # the null tail
-                bo = string_bin_order(val)
-                lo = string_bin_order(lit)
-                if bo is None or lo is None:
-                    return False
-                return bo <= lo if sc.op in ("<", "<=") else bo >= lo
-            if (
-                iter_level and is_value and comp == "number"
-                and range_is_producer
-            ):
-                lo_bin = number_bin_lookup(lit)
-                if lo_bin is not None:
-                    so = number_scan_order(val)
-                    if so is None:
-                        return False
-                    return (
-                        so >= 2 * lo_bin
-                        if sc.op in (">", ">=")
-                        else so <= 2 * lo_bin + 1
-                    )
-            if is_value and comp == "default":
-                key = p.value_fkey
-            else:
-                key = None if val is None else literal_key(val, comp)
-            ok = key is not None and _OPS[sc.op](
-                key, literal_key(lit, comp)
-            )
-            if is_value and comp == "datetime":
-                return ok and datetime_scan_order(val) is not None
-            if comp == "number":
-                lo_bin = number_bin_lookup(lit) if is_value else None
-                if lo_bin is None:
-                    ok = ok and key is not None and key < b"\x02"
-                else:
-                    so = number_scan_order(val)
-                    if so is None:
-                        return False
-                    if sc.op in (">", ">="):
-                        ok = ok and so >= 2 * lo_bin
-                    else:
-                        ok = ok and so <= 2 * lo_bin + 1
-            elif is_value and sc.op in (">", ">="):
-                ok = ok or val is None
-            return ok
-        if sc.op == "~=":
-            if comp == "number":
-                raise GraphdError(
-                    "SEMANTICS",
-                    'cannot use ~= with comparator="number"',
-                )
-            cs = comp in ("case", "octet")
-            if has_null and val is None:
-                return True
-            for v in nonnull:
-                if is_value and comp == "datetime":
-                    if delimited_match(v, val):
-                        return True
-                elif glob_match(v, val, case_sensitive=cs):
-                    return True
-            return False
-        raise GraphdError("SEMANTICS", f"unsupported operator {sc.op!r}")
 
 
 # -- depth-2+ thaw model (round 7, closing the round-6 investigation) -----

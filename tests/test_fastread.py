@@ -712,6 +712,40 @@ def test_two_path_or_union_keeps_rejected_candidates(spark):
     ])
 
 
+def test_two_path_value_ne(spark):
+    """value!= answers one rule on both paths: a check-only != applies
+    only the comparator's equality (" 1" fuzzy-equals "1"), and a value
+    with no comparator key (a non-number under comparator="number")
+    differs from every literal, like a null value does."""
+    lines = [
+        f'write (name="x"{v})'
+        for v in (' value=" 1"', ' value="1"', ' value="2"',
+                  ' value="abc"', "")
+    ]
+    _two_path_pages(spark, lines, [
+        'read (name="x" value!="1" result=((value)))',
+        'read (name="x" comparator="number" value!="1" result=((value)))',
+    ])
+
+
+def test_two_path_or_branch_over_a_null_field(spark):
+    """A branch whose test reads a null field loses, and the next
+    branch binds its $vars and contents on both paths (the compiled
+    branch flag was null there, and `flag & ~prior` kept the second
+    branch from winning)."""
+    lines = [
+        'write (name="n" (<-left name="k" value="c1"))',
+        'write (name="n" value="y" (<-left name="k" value="c2"))',
+    ]
+    _two_path_pages(spark, lines, [
+        'read (name="n" {value="x" (<-left name="k" $a=value)} '
+        '| {name="n" $a=name} result=(($a)))',
+        'read (name="n" {value="x" (<-left name="k" result=((value)))} '
+        '| {name="n" (<-left name="k" result=((value)))} '
+        "result=((contents)))",
+    ])
+
+
 def test_vrange_value_beyond_rules():
     """Unit pins for the comparator value_in_range port that drives
     the sorter's window exit (graphd-comparator-default.c:2031-2196,
