@@ -23,6 +23,11 @@ physical strategy:
 - root pagination is orderBy().limit(start+pagesize) — Spark's
   TakeOrderedAndProject — never a global single-partition window.
 
+The read plan — sub modes, count bounds, column names, variables,
+or-chain first-match tables, contents slots — is bound once by
+readplan.bind_plan and shared with the fast path; this module renders
+it as a DataFrame.
+
 Driver-side state (the store) is used only to bind literals the
 reference also binds pre-plan: type names to typeguids
 (graphd-read.c:36-135), guid~= lineages, next= pointers, asof
@@ -33,7 +38,6 @@ from __future__ import annotations
 
 import operator
 from contextlib import contextmanager, nullcontext
-from dataclasses import dataclass, field as dfield
 from functools import reduce
 from typing import Optional
 
@@ -80,11 +84,8 @@ from graphd_spark.sortsim import (
     sort_production,
     sorter_run,
 )
-from graphd_spark.pattern import (
-    GraphdError,
-    default_read_pattern,
-    pattern_shows_contents,
-)
+from graphd_spark.pattern import GraphdError, default_read_pattern
+from graphd_spark.readplan import _OPS, SetPlan, SubPlan, bind_plan
 
 #: primitive fields carried in every element struct
 PRIM_ELEM_FIELDS = [
@@ -95,6 +96,24 @@ PRIM_ELEM_FIELDS = [
 # py4j round-trip caches: cached F.col/F.lit/constant-expression
 # handles — see jexpr.py
 from graphd_spark.jexpr import _c, _cc, _ctx_id, _l  # noqa: E402
+
+
+def _first_of(arr_col: str, col: str):
+    """``col`` of the first row in the page array ``arr_col``."""
+    return F.try_element_at(_c(arr_col), _l(1))[col]
+
+
+def _first_match(branches, flags: dict, effs: dict) -> None:
+    """Each branch's first-match test within its chain — its flag and
+    no earlier branch's — into ``effs``, nested chains included."""
+    prior = None
+    for bp in branches:
+        f = flags[bp]
+        effs[bp] = f if prior is None else (f & ~prior)
+        prior = f if prior is None else (prior | f)
+        for ibs in bp.chains:
+            if ibs is not None:
+                _first_match(ibs, flags, effs)
 
 
 def _key_tuple(row, n: int) -> tuple:
@@ -314,62 +333,6 @@ def effective_sub_cursor_mode(sub) -> Optional[str]:
     return mode
 
 
-@dataclass
-class SubPlan:
-    mode: str  # 'anti' | 'semi' | 'skip' | 'agg'
-    plan: "SetPlan"
-    cnt_col: Optional[str] = None
-    arr_col: Optional[str] = None
-    #: or-branch subs only: boolean column, true when this sub's
-    #: branch is the row's first matching branch — its contents slot
-    #: renders null otherwise (probed: non-winning branch slots are
-    #: null, a winning zero-row sub is "()")
-    eff_col: Optional[str] = None
-
-
-@dataclass
-class SetPlan:
-    con: Constraint
-    sub_plans: list = dfield(default_factory=list)
-    var_cols: dict = dfield(default_factory=dict)   # '$name' -> column
-    var_kinds: dict = dfield(default_factory=dict)  # '$name' -> pattern kind
-    #: '$name' -> column holding the PER-ROW pattern kind, for vars
-    #: whose or-branches bind different kinds (e.g. $t=guid | $t=value)
-    #: — the reference renders by the winning branch's pattern type
-    var_kind_cols: dict = dfield(default_factory=dict)
-    #: '$name' -> (sub_plan, arr_col, cnt_col, Pattern): variables bound
-    #: to set-shaped patterns (e.g. $f=((value))), evaluated at assembly
-    #: over the sub's collected rows
-    var_patterns: dict = dfield(default_factory=dict)
-    #: set-shaped assignments of THIS constraint, waiting for the parent
-    #: to register them against its aggregated array column
-    pending_pattern_vars: list = dfield(default_factory=list)
-    #: SubPlans attached by or-branches (their cnt/arr columns must
-    #: ride along in the element struct for variable assembly)
-    or_sub_plans: list = dfield(default_factory=list)
-    #: per or-chain (same index as con.or_chains): that chain's branch
-    #: SubPlans in branch order, for contents slot assembly
-    or_chain_subs: list = dfield(default_factory=list)
-    #: `contents` slot list in parse order: root subs and or-branch
-    #: subs interleaved exactly as written (the reference's single
-    #: con_head list; see Constraint.ordered_clauses)
-    contents_slots: Optional[list] = None
-    cursor: Optional[str] = None
-    #: subconstraint cursor context: the materialized candidate set the
-    #: evaluator freezes per parent (test/unit/cursor6.sh)
-    cursor_ctx: Optional[dict] = None
-    #: effective count cap (implicit caps shift with the cursor offset)
-    countlimit: Optional[int] = None
-
-    def __copy__(self):
-        """Field-shallow copy without copy-module dispatch — the
-        serving eval cache clones its cached plan once per request
-        (fastread.run), so this sits on the hot path."""
-        new = object.__new__(SetPlan)
-        new.__dict__.update(self.__dict__)
-        return new
-
-
 #: sorted-page simulation cap: the incremental-sorter mirror collects
 #: one (id, key...) tuple per candidate, so an unselective sorted read
 #: over a huge store keeps the declarative top-k plan instead (the
@@ -382,16 +345,6 @@ _SORTSIM_CAP = 200_000
 #: side before broadcasting (~10 MB of primitives at ~100 B/row);
 #: below it the distinct's shuffle stage is pure per-query latency
 _SEMI_DISTINCT_MIN_ROWS = 100_000
-
-_OPS = {
-    "=": lambda a, b: a == b,
-    "!=": lambda a, b: a != b,
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-    ">": lambda a, b: a > b,
-    ">=": lambda a, b: a >= b,
-}
-
 
 class Compiler:
     def __init__(self, spark, store, types, asof: Optional[str] = None):
@@ -406,7 +359,6 @@ class Compiler:
         #: mirror of fastread.run's self.horizon narrowing)
         self._chain_h = None
         self.base = self._build_base()
-        self._n = 0
 
     def _build_base(self):
         src = self.store.to_df(self.spark)
@@ -1117,6 +1069,12 @@ class Compiler:
     # -- recursive compilation --------------------------------------------
 
     def _compile(self, con: Constraint, exists_only: bool = False):
+        """``con``'s bound read plan and the frame rendering it."""
+        plan = bind_plan(con, exists_only)
+        return plan, self._render(plan)
+
+    def _render(self, plan: SetPlan):
+        con = plan.con
         df = self.base
         # per-node cursor [n:] bound (set_boundary propagation) — the
         # base frame itself stays live so 'my' subs of a cursored
@@ -1131,102 +1089,25 @@ class Compiler:
             pred = bound if pred is None else (bound & pred)
         if pred is not None:
             df = df.filter(pred)
-        plan = SetPlan(con=con)
-        for chain in con.or_chains:
-            df = self._apply_or_chain(df, chain, plan)
-        for sub in con.subs:
-            df, sp, _flag = self._attach_sub(df, con, sub, exists_only)
-            plan.sub_plans.append(sp)
-            if sp.mode == "agg":
-                df = self._import_sub_vars(df, plan, sp)
-        # contents slot list in parse order: root subs and or-branch
-        # subs exactly as written (the reference's con_head order)
-        slots = []
-        n_sub = n_chain = 0
-        for kind, _item in con.ordered_clauses():
-            if kind == "sub":
-                slots.append(plan.sub_plans[n_sub])
-                n_sub += 1
-            else:
-                slots.extend(plan.or_chain_subs[n_chain])
-                n_chain += 1
-        plan.contents_slots = slots
-        for var, pat in con.assignments:
-            if pat.kind == "variable":
-                # alias to a child-sampled variable ($b=$a, david_9.sh)
-                src = plan.var_cols.get(pat.var)
-                if src is not None:
-                    plan.var_cols[var] = src
-                    plan.var_kinds[var] = plan.var_kinds.get(
-                        pat.var, "value"
-                    )
-                elif pat.var in plan.var_patterns:
-                    plan.var_patterns[var] = plan.var_patterns[pat.var]
-                continue
-            expr = self._var_expr(pat)
-            if expr is None:
-                # set-shaped pattern ($f=((value))): the parent binds it
-                # against its aggregated array of this constraint's rows
-                plan.pending_pattern_vars.append((var, pat))
-                continue
-            self._n += 1
-            vcol = f"v{self._n}"
-            df = df.withColumn(vcol, expr)
-            plan.var_cols[var] = vcol
-            plan.var_kinds[var] = pat.kind
-            plan.var_kind_cols.pop(var, None)  # own assignment wins
-        return plan, df
-
-    def _import_sub_vars(self, df, plan: SetPlan, sp: "SubPlan"):
-        """Make a sub's variables visible to the parent (pat_sample:
-        scalar vars take the first child's value; set-shaped vars
-        evaluate over the whole child array at assembly time)."""
-        for var, vcol in sp.plan.var_cols.items():
-            self._n += 1
-            newcol = f"v{self._n}"
-            df = df.withColumn(
-                newcol,
-                F.try_element_at(_c(sp.arr_col), _l(1))[vcol],
-            )
-            plan.var_cols[var] = newcol
-            plan.var_kinds[var] = sp.plan.var_kinds[var]
-        for var, pat in sp.plan.pending_pattern_vars:
-            plan.var_patterns[var] = (sp.plan, sp.arr_col, sp.cnt_col, pat)
-        # pass grandchild set-vars one more level up unchanged: they
-        # resolve against nested arrays inside this sub's elem structs
-        for var, entry in sp.plan.var_patterns.items():
-            plan.var_patterns.setdefault(var, entry)
+        for chain, cp in zip(con.or_chains, plan.chains):
+            df = self._apply_or_chain(df, chain, cp)
+        for sp in plan.sub_plans:
+            df, _flag = self._attach_sub(df, sp)
+            for newcol, vcol in sp.imports:
+                df = df.withColumn(newcol, _first_of(sp.arr_col, vcol))
+        for vcol, fld, lit in plan.assigns:
+            df = df.withColumn(vcol, _l(lit) if fld is None else _c(fld))
         return df
-
-    def _var_expr(self, pat: Pattern):
-        """Scalar column for an assignment pattern; None if set-shaped."""
-        k = pat.kind
-        if k in ("value", "name", "guid", "left", "right", "typeguid",
-                 "scope", "timestamp", "datatype", "valuetype",
-                 "generation", "live", "archival", "previous"):
-            col = {
-                "previous": "prev",
-                "valuetype": "datatype",
-            }.get(k, k)
-            return _c(col)
-        if k == "literal":
-            return _l(pat.literal)
-        return None
 
     # -- subconstraints ----------------------------------------------------
 
-    def _attach_sub(self, df, parent: Constraint, sub: Constraint,
-                    exists_only: bool, or_mode: bool = False):
-        """Join one subconstraint onto the parent candidate set.
+    def _attach_sub(self, df, sp: SubPlan):
+        """Join one bound subconstraint onto the parent candidate set.
 
-        Returns (df, SubPlan, flag): in or_mode nothing is filtered —
-        the returned boolean flag column says whether the sub's count
-        bounds hold for each parent row (the or-branch ORs flags).
-        """
-        if sub.linkage is None:
-            raise GraphdError(
-                "SEMANTICS", "subconstraint is not connected to its parent"
-            )
+        Returns (df, flag): an or-branch sub filters nothing — the
+        flag column says whether its count bounds hold for each parent
+        row (the branch ANDs it into its match flag)."""
+        sub = sp.sub
         kind, lk = sub.linkage
         # joins run on RAW guid keys: a pointer names one specific
         # generation, and traversal intersects it with the (gen-
@@ -1254,31 +1135,7 @@ class Compiler:
             child_key = _c("guid")    # parent.lk -> child.guid
             parent_key = _c(lk)
 
-        count_min = (
-            sub.count_min
-            if sub.count_min is not None
-            # implicit minimum follows start=: a page beginning
-            # at `start` requires start+1 matches
-            # (ref graphd-semantic.c:740-743)
-            else (sub.start or 0) + 1
-        )
-        parent_pat = (
-            parent.result
-            if parent.result is not None
-            else default_read_pattern()
-        )
-        need_payload = not exists_only and (
-            pattern_shows_contents(parent_pat, parent)
-            or bool(sub.assignments)
-            or self._has_deep_assignments(sub)
-        )
-        counting = (
-            (sub.count_eq not in (None, 0))
-            or sub.count_max is not None
-            or count_min > 1
-        )
-
-        sub_plan, child_df = self._compile(sub, exists_only=not need_payload)
+        child_df = self._render(sp.plan)
         if kind == "my" and lk == "bi":
             child_df = child_df.withColumn(
                 "__bikey",
@@ -1286,7 +1143,7 @@ class Compiler:
             )
         child_df = child_df.filter(child_key.isNotNull())
 
-        if not or_mode and not need_payload and not counting:
+        if sp.mode != "agg":
             keys = child_df.select(child_key.alias("__k"))
             # semi/anti joins are duplicate-insensitive, so the
             # distinct below is purely a broadcast-size guard: it
@@ -1298,25 +1155,16 @@ class Compiler:
             # ~10 MB of primitives)
             if self.store.count() > _SEMI_DISTINCT_MIN_ROWS:
                 keys = keys.distinct()
-            if sub.count_eq == 0:
-                out = df.join(
-                    keys, parent_key == _c("__k"), "left_anti"
-                )
-                return out, SubPlan("anti", sub_plan), None
-            if count_min >= 1:
-                out = df.join(
-                    keys, parent_key == _c("__k"), "left_semi"
-                )
-                return out, SubPlan("semi", sub_plan), None
-            return df, SubPlan("skip", sub_plan), None  # optional, unused
+            if sp.mode == "skip":
+                return df, None  # optional, unused
+            how = "left_anti" if sp.mode == "anti" else "left_semi"
+            return df.join(keys, parent_key == _c("__k"), how), None
 
         # aggregation path: per-parent ordered contents + counts.
-        child_df = self._sub_cursor_setup(sub, sub_plan, child_df)
-        self._n += 1
-        tag = self._n
-        cnt, arr = f"n{tag}", f"c{tag}"
-        elem = self._elem_struct(sub, sub_plan)
-        order = self._sort_exprs(sub, sub_plan)
+        child_df = self._sub_cursor_setup(sub, sp.plan, child_df)
+        cnt, arr = sp.cnt_col, sp.arr_col
+        elem = self._elem_struct(sub, sp.plan)
+        order = self._sort_exprs(sub, sp.plan)
         kdf = (
             child_df.withColumn("__k", child_key)
             .withColumn(
@@ -1328,13 +1176,12 @@ class Compiler:
             .withColumn("__e", elem)
             .select("__k", "__rn", "__e")
         )
-        rps = result_pagesize(sub)
         # collect only the rendered page into the aggregation buffer:
         # collect_list drops the when()'s nulls, so a 10^6-fan-out
         # parent costs O(resultpagesize) memory, not O(fan-out); the
         # exact count still aggregates over every child.  start= on a
         # subconstraint offsets the page (test/unit/start-unsorted.sh)
-        lo = sub.start or 0
+        lo = sp.lo
         agg = kdf.groupBy("__k").agg(
             F.count(_l(1)).alias(cnt),
             F.transform(
@@ -1342,7 +1189,7 @@ class Compiler:
                     F.collect_list(
                         F.when(
                             (_c("__rn") > _l(lo))
-                            & (_c("__rn") <= _l(lo + rps)),
+                            & (_c("__rn") <= _l(lo + sp.rps)),
                             F.struct(
                                 _c("__rn").alias("o"),
                                 _c("__e").alias("e"),
@@ -1355,33 +1202,21 @@ class Compiler:
         )
 
         cnt_eff = F.coalesce(_c(cnt), _l(0))
-        bounds = []
-        if sub.count_eq is not None:
-            bounds.append(cnt_eff == sub.count_eq)
-        else:
-            if count_min > 0:
-                bounds.append(cnt_eff >= count_min)
-            if sub.count_max is not None:
-                bounds.append(cnt_eff <= sub.count_max)
         flag = _l(True)
-        for b in bounds:
-            flag = flag & b
-
-        if or_mode:
+        for op, k in sp.bounds:
+            flag = flag & _OPS[op](cnt_eff, k)
+        if sp.branch:
             out = df.join(agg, parent_key == agg["__k"], "left").drop("__k")
-            return out, SubPlan("agg", sub_plan, cnt_col=cnt,
-                                arr_col=arr), flag
-
-        outer = count_min == 0 or sub.count_eq == 0
+            return out, flag
         out = df.join(
             agg,
             parent_key == agg["__k"],
-            "left" if outer else "inner",
+            "left" if sp.outer else "inner",
         ).drop("__k")
-        if bounds and (outer or sub.count_eq is not None
-                       or count_min > 1 or sub.count_max is not None):
+        # the inner join already holds an implicit count>=1
+        if sp.bounds and (sp.outer or sp.bounds != ((">=", 1),)):
             out = out.filter(flag)
-        return out, SubPlan("agg", sub_plan, cnt_col=cnt, arr_col=arr), None
+        return out, None
 
     def _sub_cursor_setup(self, sub, sub_plan, child_df):
         """Subconstraint cursors (per-parent contents pagination, ref
@@ -1463,223 +1298,81 @@ class Compiler:
         sub_plan.cursor_ctx = ctx
         return child_df
 
-    def _has_deep_assignments(self, con: Constraint) -> bool:
-        return any(bool(c.assignments) for c in con.walk())
-
     # -- or-chains ---------------------------------------------------------
 
-    def _apply_or_chain(self, df, chain, plan: SetPlan):
+    def _apply_or_chain(self, df, chain, cp):
         """A primitive matches if any branch accepts it.
 
         Pure-intrinsic branches fold into one disjunctive filter (no
         shuffle).  Branches with subconstraints left-join their sub
         aggregates and contribute a per-row match flag; the chain
-        filters on the OR of flags, so variables bound inside branches
-        stay available (null when the branch didn't match).  '||'
-        short-circuit selects the first matching branch's bindings —
-        with '|' too, earlier branches win, matching the reference's
-        evaluation order.
-        """
-        if all(intrinsic_branch(b) for b in chain):
-            plan.or_chain_subs.append([])
+        filters on the OR of flags.  The bound plan's first-match
+        columns become ``when`` cascades over each branch path's
+        guard: a branch's flag and no earlier branch's, at every
+        nesting level (or4: '{} || (... $a=...)' binds nothing)."""
+        if cp is None:
             return df.filter(reduce(
                 operator.or_, [self._branch_pred(b) for b in chain]
             ))
+        flags: dict = {}
+        for bp in cp.branches:
+            df = self._branch_flag(df, bp, flags)
+        effs: dict = {}
+        _first_match(cp.branches, flags, effs)
 
-        flags = []
-        chain_sps: list = []  # this chain's SubPlans, parse order
-        for b in chain:
-            df, flag, cases, bpats, bsps, slot_sps = self._branch_flag(
-                df, b, plan
-            )
-            flags.append((flag, cases, bpats, bsps))
-            chain_sps.extend(slot_sps)
-        plan.or_chain_subs.append(chain_sps)
+        def guard(path):
+            g = effs[path[-1]]
+            for bp in reversed(path[:-1]):
+                g = effs[bp] & g
+            return g
 
-        # merge variables: the FIRST matching branch's bindings apply —
-        # a later branch's assignment stays null for rows an earlier
-        # branch already accepted (or4: '{} || (... $a=...)' binds
-        # nothing), matching the reference's in-order or evaluation
-        all_vars: dict = {}
-        prior = None
-        for flag, cases, bpats, bsps in flags:
-            eff = flag if prior is None else (flag & ~prior)
-            ecol = None
-            for sp, guard in bsps:
-                # first-match flag: this branch's contents slots
-                # render null unless it's effective; an INNER-branch
-                # sub additionally needs its inner first-match guard
-                # (winner slot filled, losers null — probed round 9)
-                if guard is None:
-                    if ecol is None:
-                        self._n += 1
-                        ecol = f"v{self._n}"
-                        df = df.withColumn(
-                            ecol,
-                            F.when(eff, _l(True)).otherwise(_l(False)),
-                        )
-                    sp.eff_col = ecol
-                else:
-                    self._n += 1
-                    gc = f"v{self._n}"
-                    df = df.withColumn(
-                        gc,
-                        F.when(eff & guard, _l(True)).otherwise(
-                            _l(False)
-                        ),
-                    )
-                    sp.eff_col = gc
-            for var, vlist in cases.items():
-                for guard, vexpr, kind in vlist:
-                    all_vars.setdefault(var, []).append(
-                        (eff if guard is None else (eff & guard),
-                         vexpr, kind)
-                    )
-                    plan.var_kinds.setdefault(var, kind)
-            for var, sub_plan, arr_col, cnt_col, pat, guard in bpats:
-                # guard the set-shaped var's array: null unless this
-                # branch (and, for inner subs, the inner branch) is
-                # the first match
-                self._n += 1
-                gcol = f"v{self._n}"
-                df = df.withColumn(
-                    gcol,
-                    F.when(
-                        eff if guard is None else (eff & guard),
-                        _c(arr_col),
-                    ),
-                )
-                plan.var_patterns[var] = (sub_plan, gcol, cnt_col, pat)
-                plan.var_cols.pop(var, None)
-                plan.var_kind_cols.pop(var, None)
-            prior = flag if prior is None else (prior | flag)
-        for var, cases in all_vars.items():
+        for path, col, arr in cp.guards:
+            g = guard(path)
+            df = df.withColumn(col, (
+                F.when(g, _l(True)).otherwise(_l(False)) if arr is None
+                else F.when(g, _c(arr))
+            ))
+        for vcol, kcol, cases in cp.cases.values():
             # branches binding different pattern kinds: carry the
             # winning branch's kind per row (values ride as strings,
             # the assembler re-types them)
-            mixed = len({k for _, _, k in cases}) > 1
-            expr = None
-            kexpr = None
-            for flag, v, kind in cases:
-                cv = v.cast("string") if mixed else v
-                expr = (
-                    F.when(flag, cv) if expr is None else expr.when(flag, cv)
+            expr = kexpr = None
+            for c in cases:
+                g = guard(c.path)
+                v = (
+                    _first_of(c.sp.arr_col, c.col) if c.sp is not None
+                    else _l(c.lit) if c.col is None else _c(c.col)
                 )
-                if mixed:
-                    kexpr = (
-                        F.when(flag, _l(kind))
-                        if kexpr is None
-                        else kexpr.when(flag, _l(kind))
-                    )
-            self._n += 1
-            vcol = f"v{self._n}"
+                if kcol is not None:
+                    v = v.cast("string")
+                    kexpr = (F.when(g, _l(c.kind)) if kexpr is None
+                             else kexpr.when(g, _l(c.kind)))
+                expr = F.when(g, v) if expr is None else expr.when(g, v)
             df = df.withColumn(vcol, expr)
-            plan.var_cols[var] = vcol
-            if mixed:
-                self._n += 1
-                kcol = f"v{self._n}"
+            if kcol is not None:
                 df = df.withColumn(kcol, kexpr)
-                plan.var_kind_cols[var] = kcol
+        return df.filter(reduce(
+            operator.or_, [flags[bp] for bp in cp.branches]
+        ))
 
-        pred = None
-        for flag, _, _, _ in flags:
-            pred = flag if pred is None else (pred | flag)
-        return df.filter(pred)
-
-    def _branch_flag(self, df, b: Constraint, plan: SetPlan):
-        """One or-branch's match flag plus its variable/slot payload,
-        recursing into sub-bearing NESTED chains (the round-8 refusal,
-        lifted round 9).
-
-        Probed against the reference (ref graphd/graphd-read-or.c
-        recursive rom slots; graphd/graphd-pattern-frame.c): the
-        observable semantics over the hoisted parse are plain
-        first-match recursion — an inner chain matches when any inner
-        branch's intrinsics AND sub count bounds hold; the winning
-        inner branch's sub slots render (losers null), its $vars bind,
-        and slot order follows parse order.
-
-        Returns (df, flag, cases, bpats, bsps, slot_sps):
-          cases:    var -> [(guard|None, expr, kind)]
-          bpats:    [(var, sub_plan, arr_col, cnt_col, pat, guard|None)]
-          bsps:     [(SubPlan, guard|None)] — guard is the inner
-                    first-match expr for inner-branch subs
-          slot_sps: SubPlans in this branch's parse order
-        """
+    def _branch_flag(self, df, bp, flags: dict):
+        """One or-branch's match flag into ``flags``: its intrinsics,
+        its subs' count bounds, and one matching branch per nested
+        sub-bearing chain (probed against the reference, ref
+        graphd/graphd-read-or.c recursive rom slots)."""
         # never null: a later branch's first-match test negates it
-        flag = F.coalesce(self._branch_pred(b), _l(False))
-        cases: dict = {}
-        bpats: list = []
-        bsps: list = []
-        sub_sps: list = []    # per b.subs index (None = non-agg)
-        chain_slots: list = []  # per b.or_chains index
-        for sub in b.subs:
-            df, sp, sflag = self._attach_sub(
-                df, b, sub, exists_only=False, or_mode=True
-            )
-            if sflag is not None:
-                flag = flag & sflag
-            sub_sps.append(sp if sp.mode == "agg" else None)
-            if sp.mode == "agg":
-                plan.or_sub_plans.append(sp)
-                bsps.append((sp, None))
-                for var, vcol in sp.plan.var_cols.items():
-                    cases.setdefault(var, []).append((
-                        None,
-                        F.try_element_at(
-                            _c(sp.arr_col), _l(1)
-                        )[vcol],
-                        sp.plan.var_kinds[var],
-                    ))
-                for var, pat in sp.plan.pending_pattern_vars:
-                    bpats.append(
-                        (var, sp.plan, sp.arr_col, sp.cnt_col, pat, None)
-                    )
-        for var, pat in b.assignments:
-            expr = self._var_expr(pat)
-            if expr is not None:
-                cases.setdefault(var, []).append((None, expr, pat.kind))
-        for ch in b.or_chains:
-            slots_here: list = []
-            if all(intrinsic_branch(x) for x in ch):
-                chain_slots.append(slots_here)
+        flag = F.coalesce(self._branch_pred(bp.con), _l(False))
+        for sp in bp.subs:
+            df, sflag = self._attach_sub(df, sp)
+            flag = flag & sflag
+        for ibs in bp.chains:
+            if ibs is None:
                 continue  # folded into _branch_pred
-            cpred = None
-            prior = None
-            for x in ch:
-                df, xflag, xcases, xpats, xsps, xslots = (
-                    self._branch_flag(df, x, plan)
-                )
-                eff = xflag if prior is None else (xflag & ~prior)
-                for sp, g in xsps:
-                    bsps.append((sp, eff if g is None else (eff & g)))
-                for var, xlist in xcases.items():
-                    for g, v, k in xlist:
-                        cases.setdefault(var, []).append(
-                            (eff if g is None else (eff & g), v, k)
-                        )
-                for var, spl, arr, cnt, pat, g in xpats:
-                    bpats.append((
-                        var, spl, arr, cnt, pat,
-                        eff if g is None else (eff & g),
-                    ))
-                slots_here.extend(xslots)
-                prior = xflag if prior is None else (prior | xflag)
-                cpred = xflag if cpred is None else (cpred | xflag)
-            if cpred is not None:
-                flag = flag & cpred
-            chain_slots.append(slots_here)
-        slot_sps: list = []
-        n_sub = n_chain = 0
-        for kind, _item in b.ordered_clauses():
-            if kind == "sub":
-                if sub_sps[n_sub] is not None:
-                    slot_sps.append(sub_sps[n_sub])
-                n_sub += 1
-            else:
-                slot_sps.extend(chain_slots[n_chain])
-                n_chain += 1
-        return df, flag, cases, bpats, bsps, slot_sps
+            for x in ibs:
+                df = self._branch_flag(df, x, flags)
+            flag = flag & reduce(operator.or_, [flags[x] for x in ibs])
+        flags[bp] = flag
+        return df
 
     def _branch_pred(self, b: Constraint):
         """An or-BRANCH's intrinsic match and its intrinsic NESTED

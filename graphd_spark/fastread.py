@@ -7,8 +7,9 @@ so a point read through a Spark action pays ~100ms of fixed cost.
 :class:`FastReader` answers the reads whose working set the driver
 mirror holds straight from the store's point indexes, with NO Spark
 job, and produces the exact (plan, rows, total) triple
-``Compiler.run`` would, feeding the same ``Assembler``.  The root
-page, count and cursor policy (cursor.py) and the root iterator freeze
+``Compiler.run`` would, feeding the same ``Assembler``.  The read plan
+(readplan.py), the intrinsic match (match.py), the root page, count
+and cursor policy (cursor.py) and the iterator freeze and thaw
 (freeze.py) are shared with the compiler; this module is the driver
 data plane under them.
 
@@ -27,9 +28,7 @@ or-branch subs).  Thawed sorted cursor subs at any depth run the
 reference's sorter model (:class:`_ThawScan`: the sort-root producer,
 the per-constraint bad-id ring, the verify/defer/resume order and the
 median-gated window exit), nested ones with their deferred sets
-(``_resume_deferred_set``).  The one refused or-family is a branch
-conjoining a nested chain whose inner branches carry subs or
-assignments.
+(``_resume_deferred_set``).
 
 Scale stance: this is the hot-working-set path.  Reads whose working
 set exceeds the driver mirror, or that use an analytical feature,
@@ -55,12 +54,7 @@ from graphd_spark.comparators import (
     value_norm_key,
 )
 from graphd_spark import freeze
-from graphd_spark.compiler import (
-    PRIM_ELEM_FIELDS,
-    SetPlan,
-    SubPlan,
-    _OPS,
-)
+from graphd_spark.compiler import PRIM_ELEM_FIELDS
 from graphd_spark.cursor import (
     asof_horizon,
     count_root_set,
@@ -78,7 +72,14 @@ from graphd_spark.freeze import (
 )
 from graphd_spark.glob import glob_match
 from graphd_spark import match
-from graphd_spark.match import bind, guid_sets, intrinsic_branch
+from graphd_spark.match import bind, guid_sets
+from graphd_spark.readplan import (
+    _OPS,
+    SetPlan,
+    SubPlan,
+    bind_plan,
+    counts_ok,
+)
 from graphd_spark.gql.ir import Constraint
 from graphd_spark.model import (
     Primitive,
@@ -98,11 +99,7 @@ from graphd_spark.sortsim import (
     sorter_run,
 )
 from graphd_spark.wordhash import prefix_bins
-from graphd_spark.pattern import (
-    GraphdError,
-    default_read_pattern,
-    pattern_shows_contents,
-)
+from graphd_spark.pattern import GraphdError, default_read_pattern
 
 
 class Unsupported(Exception):
@@ -112,35 +109,6 @@ class Unsupported(Exception):
 #: sentinel: candidate failed the constraint (vs a None row, which is
 #: a legitimate "no payload needed" match)
 _NO_MATCH = object()
-
-
-class _SubSpec:
-    """One subconstraint's evaluation plan (mirror of _attach_sub)."""
-
-    __slots__ = ("sub", "mode", "sp", "count_min", "outer", "rps", "lo",
-                 "child_spec", "var_imports", "cstate", "cfilter", "ssim",
-                 "has_thaw")
-
-    def __init__(self, sub, mode, sp, count_min, outer, rps, lo,
-                 child_spec, var_imports, cstate=None, cfilter=None,
-                 ssim=None):
-        self.sub = sub
-        self.mode = mode
-        self.sp = sp
-        self.count_min = count_min
-        self.outer = outer
-        self.rps = rps
-        self.lo = lo
-        self.child_spec = child_spec
-        self.cstate = cstate
-        self.cfilter = cfilter
-        self.ssim = ssim
-        self.var_imports = var_imports
-        #: a live _ThawScan somewhere strictly BELOW this sub: its
-        #: set evaluation defers at count-min during verify and the
-        #: remaining candidates evaluate at render-resume (spew-
-        #: trace-derived, ref graphd-read-set-defer.c)
-        self.has_thaw = False
 
 
 class _SubSortState:
@@ -267,10 +235,7 @@ class _ThawScan:
                 continue  # known-bad: skipped before any match
             crow = _NO_MATCH
             if getattr(c, lk) == p.guid:
-                crow = reader._row_for(
-                    c, sub, ss.child_spec,
-                    build_row=ss.sp.arr_col is not None,
-                )
+                crow = reader._row_for(c, ss.plan, build_row=True)
             if crow is _NO_MATCH:
                 ring.add(c.id)
                 continue
@@ -368,17 +333,6 @@ class _ThawScan:
         return n
 
 
-class _NodeSpec:
-    __slots__ = ("subs", "assigns", "chains")
-
-    def __init__(self, subs, assigns, chains=None):
-        self.subs = subs
-        self.assigns = assigns
-        self.chains = chains or []
-
-
-
-
 def _thaw_pred(t: freeze.Thaw):
     """freeze.thaw's restriction ``t`` as a test over a primitive,
     built once per request; None restricts nothing.  A fixed set
@@ -442,25 +396,6 @@ def _check(node, p, maxgen) -> bool:
     if t is match.Glob:
         return glob_match(node.pattern, v, node.case_sensitive)
     return delimited_match(node.pattern, v)
-
-
-#: mirror of Compiler._var_expr's scalar assignment kinds
-_VAR_ATTRS = {
-    "value": "value", "name": "name", "guid": "guid", "left": "left",
-    "right": "right", "typeguid": "typeguid", "scope": "scope",
-    "timestamp": "timestamp", "datatype": "datatype",
-    "valuetype": "datatype", "generation": "generation", "live": "live",
-    "archival": "archival", "previous": "prev",
-}
-
-
-def _scalar_var_fn(pat):
-    attr = _VAR_ATTRS.get(pat.kind)
-    if attr is not None:
-        return lambda p, a=attr: getattr(p, a)
-    if pat.kind == "literal":
-        return lambda p, lit=pat.literal: lit
-    return None
 
 
 #: graphd_value_compare's cross-type rank (graphd-value.c fall-through
@@ -544,15 +479,6 @@ def shape_flags(con: Constraint) -> dict:
     return memo
 
 
-def _iter_cspec_branches(cspec):
-    """All branch entries of a chain spec, INNER chains included
-    (round 9: sub-bearing nested chains recurse into entry[5])."""
-    for entry in cspec[0]:
-        yield entry
-        for _ch, icspec in entry[5]:
-            yield from _iter_cspec_branches(icspec)
-
-
 def check_supported(con: Constraint) -> None:
     """Raise Unsupported unless every feature of the tree is mirrored."""
     from graphd_spark.compiler import effective_sub_cursor_mode
@@ -582,7 +508,7 @@ def check_supported(con: Constraint) -> None:
         for chain in node.or_chains:
             for b in chain:
                 # sub-bearing nested chains recurse since round 9
-                # (_build_branch_spec / _eval_branch)
+                # (readplan.bind_plan / _eval_branch)
                 _walk(b, True, depth + 1, cdepth + 1)
         for _var, pat in node.assignments:
             if any(p.kind == "cursor" for p in pat.walk()):
@@ -597,6 +523,39 @@ def _id_key(p, row):
     return p.id
 
 
+def _put_page(row, sp: SubPlan, n, rows, keep_empty: bool = False) -> None:
+    """One parent's count and page of agg sub ``sp`` into ``row``: no
+    match under an outer sub is the left join's null (unless
+    ``keep_empty``), and the sub's scalar variables sample the first
+    paged row."""
+    if n == 0 and sp.outer and not keep_empty:
+        n = rows = None
+    row[sp.cnt_col] = n
+    row[sp.arr_col] = rows
+    first = rows[0] if rows else None
+    for newcol, src in sp.imports:
+        row[newcol] = None if first is None else first.get(src)
+
+
+def _ssims(plan: SetPlan):
+    """The sorted-sub sorters anywhere in ``plan``'s tree."""
+    for sp in (*plan.sub_plans, *plan.or_sub_plans):
+        if sp.ssim is not None:
+            yield sp.ssim
+        yield from _ssims(sp.plan)
+
+
+def _first_winners(branches, results, won: set) -> None:
+    """The first flagged branch of a chain into ``won``, and the
+    winners of its nested chains."""
+    for bp, (flag, inner) in zip(branches, results):
+        if flag:
+            won.add(bp)
+            for ibs, ires in inner:
+                _first_winners(ibs, ires, won)
+            return
+
+
 class FastReader:
     """Mirror of Compiler.run for the supported subset (see module
     docstring).  Construction is cheap; one instance per request."""
@@ -607,7 +566,6 @@ class FastReader:
         self.store = store
         self.types = types
         self.asof = asof
-        self._n = 0
         #: thawed sorted-cursor-sub simulation (see _ThawScan): set
         #: during _build_specs; _eval_set then consumes candidates
         #: lazily and resumes rendered parents in render order
@@ -1416,305 +1374,43 @@ class FastReader:
 
     # -- set evaluation ---------------------------------------------------
     #
-    # The plan tree (SetPlan/SubPlan with agg column names) is built
-    # ONCE per constraint node — mirror of _compile's structure — so
-    # every child row in an aggregated array shares the same nested
-    # column names, exactly like the Spark schema does.
+    # The plan tree (readplan.bind_plan) is bound ONCE per request, the
+    # plan the compiler renders, so every child row in an aggregated
+    # array carries the compiled frame's nested column names.
 
-    def _build_specs(self, con: Constraint, exists_only: bool):
-        """Recursive (SetPlan, node spec) construction — mirror of
-        _compile's per-node structure including the variable
-        bookkeeping (var_cols / var_kinds / var_patterns /
-        pending_pattern_vars and sub-var imports)."""
-        self._spec_depth = getattr(self, "_spec_depth", 0) + 1
+    def _build_specs(self, con: Constraint, exists_only: bool) -> SetPlan:
+        """``con``'s bound read plan with this request's data-plane
+        state attached to its agg subs."""
+        plan = bind_plan(con, exists_only)
+        self._attach_state(plan)
+        return plan
+
+    def _attach_state(self, plan: SetPlan) -> None:
+        """Each agg sub's thawed cursor state, child restriction and
+        sorted-sub sorter (_sub_cursor_setup_f), children first; and,
+        for root subs, whether a live sorted-cursor thaw sits strictly
+        below (its set evaluation defers, see _agg_step)."""
+        if not plan.sub_plans and not plan.or_sub_plans:
+            return
+        self._spec_depth += 1
         try:
-            return self._build_specs_inner(con, exists_only)
+            for sp in plan.sub_plans:
+                self._attach_state(sp.plan)
+                if sp.mode == "agg":
+                    sp.cstate, sp.cfilter, sp.ssim = (
+                        self._sub_cursor_setup_f(sp)
+                    )
+            for sp in plan.sub_plans:
+                sp.has_thaw = any(
+                    c.has_thaw
+                    or (c.ssim is not None and c.ssim.thaw is not None)
+                    for c in sp.plan.sub_plans
+                )
+            for sp in plan.or_sub_plans:
+                self._attach_state(sp.plan)
+                sp.cstate, sp.cfilter, sp.ssim = self._sub_cursor_setup_f(sp)
         finally:
             self._spec_depth -= 1
-
-    def _build_specs_inner(self, con: Constraint, exists_only: bool):
-        plan = SetPlan(con=con)
-        subs = []
-        parent_pat = (
-            con.result if con.result is not None else default_read_pattern()
-        )
-        for sub in con.subs:
-            if sub.linkage is None:
-                raise GraphdError(
-                    "SEMANTICS",
-                    "subconstraint is not connected to its parent",
-                )
-            count_min = (
-                sub.count_min
-                if sub.count_min is not None
-                # implicit minimum follows start=: a page
-                # beginning at `start` requires start+1
-                # matches (ref graphd-semantic.c:740-743)
-                else (sub.start or 0) + 1
-            )
-            need_payload = not exists_only and (
-                pattern_shows_contents(parent_pat, con)
-                or bool(sub.assignments)
-                or self._has_deep_assignments(sub)
-            )
-            counting = (
-                (sub.count_eq not in (None, 0))
-                or sub.count_max is not None
-                or count_min > 1
-            )
-            sub_plan, child_spec = self._build_specs(
-                sub, exists_only=not need_payload
-            )
-            if not need_payload and not counting:
-                if sub.count_eq == 0:
-                    mode = "anti"
-                elif count_min >= 1:
-                    mode = "semi"
-                else:
-                    mode = "skip"
-                sp = SubPlan(mode, sub_plan)
-                subs.append(_SubSpec(
-                    sub, mode, sp, count_min, False, 0, 0, child_spec, []
-                ))
-            else:
-                self._n += 1
-                cnt, arr = f"n{self._n}", f"c{self._n}"
-                sp = SubPlan("agg", sub_plan, cnt_col=cnt, arr_col=arr)
-                rps = result_pagesize(sub)
-                lo = sub.start or 0
-                outer = count_min == 0 or sub.count_eq == 0
-                # sub-var imports (mirror _import_sub_vars): scalar
-                # vars sample the first PAGED child element; set-shaped
-                # vars evaluate at assembly over the whole array
-                imports = []
-                for var, vcol in sub_plan.var_cols.items():
-                    self._n += 1
-                    newcol = f"v{self._n}"
-                    imports.append((newcol, vcol))
-                    plan.var_cols[var] = newcol
-                    plan.var_kinds[var] = sub_plan.var_kinds[var]
-                for var, vpat in sub_plan.pending_pattern_vars:
-                    plan.var_patterns[var] = (sub_plan, arr, cnt, vpat)
-                for var, entry in sub_plan.var_patterns.items():
-                    plan.var_patterns.setdefault(var, entry)
-                sub_cstate, sub_cfilter, sub_ssim = (
-                    self._sub_cursor_setup_f(sub, sub_plan)
-                )
-                subs.append(_SubSpec(
-                    sub, "agg", sp, count_min, outer, rps, lo,
-                    child_spec, imports, cstate=sub_cstate,
-                    cfilter=sub_cfilter, ssim=sub_ssim,
-                ))
-            plan.sub_plans.append(sp)
-        for ss in subs:
-            # child _SubSpecs are complete (bottom-up recursion), so
-            # a live thaw STRICTLY below this sub is visible here
-            # (the sub's own thaw rides the dedicated verify branch)
-            ss.has_thaw = ss.child_spec is not None and any(
-                c.has_thaw
-                or (c.ssim is not None and c.ssim.thaw is not None)
-                for c in ss.child_spec.subs
-            )
-        # or-chains with subconstraints / assignments (mirror of
-        # _apply_or_chain's flag + first-match-binding machinery);
-        # pure-intrinsic chains carry no branch specs.  Sub-bearing
-        # NESTED chains recurse (round 9, mirror of _branch_flag):
-        # each inner branch gets its own entry whose slots and $vars
-        # gate on the outer AND inner first-match.
-        chains = []
-        for chain in con.or_chains:
-            if all(intrinsic_branch(b) for b in chain):
-                chains.append((chain, None))
-                plan.or_chain_subs.append([])
-                continue
-            chain_sps: list = []
-            flat_bvars: list = []  # (var, kind, newcol) in case order
-            branch_specs = [
-                self._build_branch_spec(b, plan, chain_sps, flat_bvars)
-                for b in chain
-            ]
-            plan.or_chain_subs.append(chain_sps)
-            # merged output columns, first matching branch wins;
-            # branches binding different kinds carry a per-row kind
-            # column (mirror of _apply_or_chain's var_kind_cols).
-            # Inner-branch bindings flatten into the same merge, in
-            # the compiler's case order (own subs, assignments, then
-            # inner chains).
-            merged = {}  # var -> [vcol, [(newcol, kind)], kcol]
-            for var, kind, newcol in flat_bvars:
-                if var not in merged:
-                    self._n += 1
-                    merged[var] = [f"v{self._n}", [], None]
-                    plan.var_kinds.setdefault(var, kind)
-                merged[var][1].append((newcol, kind))
-            for var, entry in merged.items():
-                if len({k for _nc, k in entry[1]}) > 1:
-                    self._n += 1
-                    entry[2] = f"v{self._n}"
-                    plan.var_kind_cols[var] = entry[2]
-            for var, (vcol, _cases, _kcol) in merged.items():
-                plan.var_cols[var] = vcol
-            chains.append((chain, (branch_specs, merged)))
-        # own assignments (mirror of _compile's assignment loop)
-        assigns = []
-        for var, pat in con.assignments:
-            if pat.kind == "variable":
-                src = plan.var_cols.get(pat.var)
-                if src is not None:
-                    plan.var_cols[var] = src
-                    plan.var_kinds[var] = plan.var_kinds.get(
-                        pat.var, "value"
-                    )
-                elif pat.var in plan.var_patterns:
-                    plan.var_patterns[var] = plan.var_patterns[pat.var]
-                continue
-            fn = _scalar_var_fn(pat)
-            if fn is None:
-                # set-shaped ($f=((value))): the parent binds it
-                # against its aggregated array of this node's rows
-                plan.pending_pattern_vars.append((var, pat))
-                continue
-            self._n += 1
-            vcol = f"v{self._n}"
-            assigns.append((vcol, fn))
-            plan.var_cols[var] = vcol
-            plan.var_kinds[var] = pat.kind
-            plan.var_kind_cols.pop(var, None)  # own assignment wins
-        # contents slot list in parse order (mirror of _compile)
-        slots = []
-        n_sub = n_chain = 0
-        for kind, _item in con.ordered_clauses():
-            if kind == "sub":
-                slots.append(plan.sub_plans[n_sub])
-                n_sub += 1
-            else:
-                slots.extend(plan.or_chain_subs[n_chain])
-                n_chain += 1
-        plan.contents_slots = slots
-        return plan, _NodeSpec(subs, assigns, chains)
-
-    def _build_branch_spec(self, b: Constraint, plan, chain_sps: list,
-                           flat_bvars: list):
-        """One or-branch's spec entry: (b, bsubs, bvars, bpats, ecol,
-        inner_cspecs).  Mirror of Compiler._branch_flag (round 9):
-        sub-bearing NESTED chains of the branch recurse into
-        inner_cspecs = [(chain, (inner_branch_specs, None))], whose
-        slots and bindings gate on the outer branch's first-match AND
-        the inner one (commit walk in _eval_or_chain).  Appends agg
-        SubPlans to chain_sps in the branch's PARSE order (the
-        reference's con_head slot order, probed: inner-chain slots
-        come before a conjoined sub written after them) and
-        (var, kind, newcol) case entries to flat_bvars for the
-        chain-level var merge."""
-        b_pat = (
-            b.result
-            if b.result is not None
-            else default_read_pattern()
-        )
-        bsubs = []
-        bvars = []   # (var, kind, newcol, src_arr, src_vcol|fn)
-        bpats = []   # (var, sub_plan, guard_col, src_arr, cnt_col, pat)
-        sub_sps: list = []        # per b.subs index (None = non-agg)
-        chain_slot_lists: list = []  # per b.or_chains index
-        inner_cspecs: list = []
-        for sub in b.subs:
-            if sub.linkage is None:
-                raise GraphdError(
-                    "SEMANTICS",
-                    "subconstraint is not connected to its"
-                    " parent",
-                )
-            sub_need = pattern_shows_contents(b_pat, b) or bool(
-                sub.assignments
-            ) or self._has_deep_assignments(sub)
-            sub_plan, child_spec = self._build_specs(
-                sub, exists_only=not sub_need
-            )
-            self._n += 1
-            cnt, arr = f"n{self._n}", f"c{self._n}"
-            sp = SubPlan(
-                "agg", sub_plan, cnt_col=cnt, arr_col=arr
-            )
-            plan.or_sub_plans.append(sp)
-            sub_sps.append(sp)
-            rps = result_pagesize(sub)
-            cm = (
-                sub.count_min
-                if sub.count_min is not None
-                # implicit minimum follows start=
-                # (ref graphd-semantic.c:740-743)
-                else (sub.start or 0) + 1
-            )
-            b_cstate, b_cfilter, b_ssim = (
-                self._sub_cursor_setup_f(sub, sub_plan)
-            )
-            bsubs.append(_SubSpec(
-                sub, "agg", sp, cm, True, rps, sub.start or 0,
-                child_spec, [], cstate=b_cstate,
-                cfilter=b_cfilter, ssim=b_ssim,
-            ))
-            for var, vcol in sub_plan.var_cols.items():
-                self._n += 1
-                newcol = f"v{self._n}"
-                bvars.append(
-                    (var, sub_plan.var_kinds[var], newcol,
-                     arr, vcol)
-                )
-                flat_bvars.append(
-                    (var, sub_plan.var_kinds[var], newcol)
-                )
-            for var, vpat in sub_plan.pending_pattern_vars:
-                self._n += 1
-                gcol = f"v{self._n}"
-                bpats.append((var, sub_plan, gcol, arr, cnt, vpat))
-                plan.var_patterns[var] = (sub_plan, gcol, cnt, vpat)
-                plan.var_cols.pop(var, None)
-                plan.var_kind_cols.pop(var, None)
-        for var, pat in b.assignments:
-            fn = _scalar_var_fn(pat)
-            if fn is None:
-                raise Unsupported("or-branch-set-var")
-            self._n += 1
-            newcol = f"v{self._n}"
-            bvars.append((var, pat.kind, newcol, None, fn))
-            flat_bvars.append((var, pat.kind, newcol))
-        for ch in b.or_chains:
-            slots_here: list = []
-            chain_slot_lists.append(slots_here)
-            if all(intrinsic_branch(x) for x in ch):
-                continue  # folds into _match_branch
-            inner_branch_specs = [
-                self._build_branch_spec(x, plan, slots_here, flat_bvars)
-                for x in ch
-            ]
-            inner_cspecs.append((ch, (inner_branch_specs, None)))
-        ecol = None
-        if bsubs:
-            # first-match flag: this branch's contents slots
-            # render null unless it's effective (mirror of
-            # _apply_or_chain's eff_col; inner-branch subs carry
-            # their OWN ecol, set only along the effective path)
-            self._n += 1
-            ecol = f"v{self._n}"
-            for ss in bsubs:
-                ss.sp.eff_col = ecol
-        # slot order: this branch's parse order
-        n_sub = n_chain = 0
-        for kind, _item in b.ordered_clauses():
-            if kind == "sub":
-                if sub_sps[n_sub] is not None:
-                    chain_sps.append(sub_sps[n_sub])
-                n_sub += 1
-            else:
-                chain_sps.extend(chain_slot_lists[n_chain])
-                n_chain += 1
-        return (b, bsubs, bvars, bpats, ecol, inner_cspecs)
-
-    def _has_deep_assignments(self, con: Constraint) -> bool:
-        """Mirror of Compiler._has_deep_assignments: any assignment
-        anywhere below forces the payload path so bindings can ride
-        up through the arrays."""
-        return any(bool(node.assignments) for node in con.walk())
 
     def _resume_deferred_set(self, entry):
         """Continue a count-min-deferred ancestor set to its page
@@ -1723,33 +1419,18 @@ class FastReader:
         own nested thaw verify here, which is exactly when the
         reference runs it (graphd-read-set-defer.c); the parent row's
         count/array columns are finalized in place."""
-        p, ss, kids, cand_ids, ci, row = entry
-        sub, sp = ss.sub, ss.sp
-        stop = ss.lo + ss.rps
+        p, sp, kids, cand_ids, ci, row = entry
+        stop = sp.lo + sp.rps
         while ci < len(cand_ids) and len(kids) < stop:
             cid = cand_ids[ci]
             ci += 1
             c = self.store.rows[cid - self.store._base]
-            if ss.cfilter is not None and not ss.cfilter(c):
+            if sp.cfilter is not None and not sp.cfilter(c):
                 continue
-            crow = self._row_for(
-                c, sub, ss.child_spec,
-                build_row=sp.arr_col is not None,
-            )
-            if crow is _NO_MATCH:
-                continue
-            kids.append((c, crow))
-        n = len(kids)
-        child_rows = [r for _c, r in kids[ss.lo:ss.lo + ss.rps]]
-        if n == 0 and ss.outer:
-            row[sp.cnt_col] = None
-            row[sp.arr_col] = None
-        else:
-            row[sp.cnt_col] = n
-            row[sp.arr_col] = child_rows
-        first = child_rows[0] if child_rows else None
-        for newcol, src in ss.var_imports:
-            row[newcol] = None if first is None else first.get(src)
+            crow = self._row_for(c, sp.plan, build_row=True)
+            if crow is not _NO_MATCH:
+                kids.append((c, crow))
+        _put_page(row, sp, len(kids), [r for _c, r in kids[sp.lo:stop]])
 
     def _eval_set(self, con: Constraint, exists_only: bool):
         """Scope wrapper: the node's cursor [n:] bound applies to its
@@ -1764,31 +1445,11 @@ class FastReader:
             self._cur_high = prev
 
     def _eval_set_inner(self, con: Constraint, exists_only: bool):
-        """Mirror of Compiler._compile + evaluation: returns
+        """The bound plan evaluated over the mirror: returns
         (SetPlan, matches) with matches an id-ordered list of
         (prim, rowdict)."""
-        plan, spec = self._build_specs(con, exists_only)
-
-        def _collect_ssims(sp):
-            out = []
-            for ss in sp.subs:
-                if ss.ssim is not None:
-                    out.append(ss.ssim)
-                if ss.child_spec is not None:
-                    out.extend(_collect_ssims(ss.child_spec))
-            for _chain, cspec in sp.chains:
-                if cspec is None:
-                    continue
-                for _b, bsubs, _bv, _bp, _e, _ic in \
-                        _iter_cspec_branches(cspec):
-                    for ss in bsubs:
-                        if ss.ssim is not None:
-                            out.append(ss.ssim)
-                        if ss.child_spec is not None:
-                            out.extend(_collect_ssims(ss.child_spec))
-            return out
-
-        plan._root_ssims = _collect_ssims(spec)
+        plan = self._build_specs(con, exists_only)
+        plan._root_ssims = list(_ssims(plan))
         # thawed sorted cursor sub: the shared bad-id ring makes
         # evaluation ORDER-DEPENDENT, so the root scan must consume
         # candidates exactly as far as the reference's lazy traversal
@@ -1831,7 +1492,7 @@ class FastReader:
             if _nb is not None and p.id >= _nb:
                 continue
             ncand += 1
-            row = self._row_for(p, con, spec, build_row=not exists_only)
+            row = self._row_for(p, plan, build_row=not exists_only)
             if row is not _NO_MATCH:
                 matches.append((p, row))
                 if stop_at is not None and len(matches) >= stop_at:
@@ -1855,66 +1516,41 @@ class FastReader:
         if self._thaw_active and (self._thaw_by_row or self._defer_by_row):
             lo = con.start or 0
 
-            def _resume_walk(row, node_spec):
+            def _resume_walk(row, node: SetPlan):
                 # render order (spew-trace-derived): subs in parse
-                # order; a sub's deferred SET continuation completes
-                # first (evaluating remaining candidates, each
-                # running its nested thaw verify), then the sub's own
-                # deferred thaw resumes, then its rendered page
-                # recurses — registries are consulted LIVE because a
-                # set resume registers fresh entries for the rows it
-                # creates
+                # order, or-branch subs after them; a sub's deferred
+                # SET continuation completes first (evaluating
+                # remaining candidates, each running its nested thaw
+                # verify), then the sub's own deferred thaw resumes,
+                # then its rendered page recurses — registries are
+                # consulted LIVE because a set resume registers fresh
+                # entries for the rows it creates
                 rid = id(row)
-                for ss in node_spec.subs:
-                    if ss.sp.arr_col is None:
+                for sp in (*node.sub_plans, *node.or_sub_plans):
+                    if sp.arr_col is None:
                         continue
                     for entry in list(self._defer_by_row.get(rid, ())):
-                        if entry[1] is ss:
+                        if entry[1] is sp:
                             self._resume_deferred_set(entry)
-                    for entry in self._thaw_by_row.get(rid, ()):
-                        p2, ss2, rows_list, prow = entry
-                        if ss2 is not ss:
+                    for p2, sp2, rows_list, prow in self._thaw_by_row.get(
+                        rid, ()
+                    ):
+                        if sp2 is not sp:
                             continue
-                        n = ss2.ssim.thaw.resume(p2, ss2, rows_list)
-                        if n and prow.get(ss2.sp.cnt_col):
+                        n = sp.ssim.thaw.resume(p2, sp, rows_list)
+                        if n and prow.get(sp.cnt_col):
                             # final accepted count: the render-side
                             # exhaustion check (delivered >=
                             # accepted -> null:) must see the
                             # completed evaluation
-                            prow[ss2.sp.cnt_col] = n
-                    kids = row.get(ss.sp.arr_col) or ()
-                    for krow in list(kids):
+                            prow[sp.cnt_col] = n
+                    for krow in list(row.get(sp.arr_col) or ()):
                         if isinstance(krow, dict):
-                            _resume_walk(krow, ss.child_spec)
-                for _chain, cspec in node_spec.chains:
-                    if cspec is None:
-                        continue
-                    for _b, bsubs, _bv, _bp, _e, _ic in \
-                            _iter_cspec_branches(cspec):
-                        for ss in bsubs:
-                            if ss.sp.arr_col is None:
-                                continue
-                            for entry in self._thaw_by_row.get(
-                                rid, ()
-                            ):
-                                p2, ss2, rows_list, prow = entry
-                                if ss2 is not ss:
-                                    continue
-                                n = ss2.ssim.thaw.resume(
-                                    p2, ss2, rows_list
-                                )
-                                if n and prow.get(ss2.sp.cnt_col):
-                                    prow[ss2.sp.cnt_col] = n
-                            kids = row.get(ss.sp.arr_col) or ()
-                            for krow in list(kids):
-                                if isinstance(krow, dict):
-                                    _resume_walk(
-                                        krow, ss.child_spec
-                                    )
+                            _resume_walk(krow, sp.plan)
 
             for _pr, row in matches[lo:]:
                 if row is not None:
-                    _resume_walk(row, spec)
+                    _resume_walk(row, plan)
         # iam pagesize=0 probe [n:] pins (probed round 6, 11 probe
         # shapes vs the binary; cursor fuzz seed 2120):
         # - a single-element value/name hmap (or word-prefix) bin
@@ -1976,13 +1612,14 @@ class FastReader:
             return "vrange"
         return None
 
-    def _sub_cursor_setup_f(self, sub, sub_plan):
+    def _sub_cursor_setup_f(self, sp: SubPlan):
         """Subconstraint cursors (ref graphd-read-set-cursor.c;
         test/unit/cursor6.sh): freeze.thaw_sub's restriction as a
         per-parent child filter (returned with the cstate, applied in
         _row_for's candidate loop), and when the sub's result wants a
         cursor the cursor_ctx the shared assembler freezes from (see
         compiler.sub_cursor_mode for the probed family)."""
+        sub, sub_plan = sp.sub, sp.plan
         cstate, t, ctx = freeze.thaw_sub(self, sub)
         cfilter = _thaw_pred(t)
         if ctx is None:
@@ -1995,7 +1632,7 @@ class FastReader:
         if mode == "sort":
             # value/name sorted sub: per-parent incremental sorter
             # with a raw-value grid thawed from the sort: cursor
-            ssim, thawed_n = self._sub_sort_setup(sub, sub_plan)
+            ssim, thawed_n = self._sub_sort_setup(sp)
             sort_cfilter = None
             if thawed_n is not None:
                 sort_cfilter = lambda c, _n=thawed_n: c.id < _n
@@ -2052,7 +1689,7 @@ class FastReader:
         sub_plan.cursor_ctx = ctx
         return cstate, cfilter, None
 
-    def _sub_sort_setup(self, sub, sub_plan):
+    def _sub_sort_setup(self, sp: SubPlan):
         """Build the per-sub incremental-sorter state (_SubSortState)
         for a value/name-sorted cursor sub, thawing a ``sort:`` resume
         into the raw-value boundary grid.
@@ -2067,6 +1704,7 @@ class FastReader:
         producer order WITHOUT sorting and freeze ``null:`` (the
         reference's one-shot sort-cursor thaw; graphd-read-set.c
         grsc_initialize_sort + graphd-sort.c graphd_sort_cursor_set)."""
+        sub, sub_plan = sp.sub, sp.plan
         keyfns = []
         for pat, comp, desc in sort_keys(sub):
             fn = self._sort_key(pat, sub, sub_plan, comp)
@@ -2108,18 +1746,18 @@ class FastReader:
         ssim = _SubSortState(P, keyfns, sims, grid, offset, ended)
         if grid is not None and not ended:
             ssim.thaw = self._make_thaw_scan(
-                sub, keyfns, sims, grid, P, offset, thawed_n
+                sp, keyfns, sims, grid, P, offset, thawed_n
             )
             if ssim.thaw is not None:
                 self._thaw_active = True
-            elif getattr(self, "_spec_depth", 0) > 1:
+            elif self._spec_depth > 1:
                 # a NESTED thawed grid outside the exact _ThawScan
                 # family would ride the legacy one-shot model, which
                 # is only probed at depth 1 — fall back to Spark
                 raise Unsupported("nested-sort-legacy-thaw")
         return ssim, thawed_n
 
-    def _make_thaw_scan(self, sub, keyfns, specs, grid, P, offset,
+    def _make_thaw_scan(self, sp: SubPlan, keyfns, specs, grid, P, offset,
                         thawed_n):
         """Build the exact thaw simulation (_ThawScan) when the shape
         is inside the probed family; None falls back to the legacy
@@ -2129,6 +1767,7 @@ class FastReader:
         subs (probed depth-2 chains match depth-1 byte-for-byte);
         nested shapes that would fall to the LEGACY model raise
         Unsupported in _sub_sort_setup instead."""
+        sub = sp.sub
         sk0 = sub.sort[0]
         if sub.subs or sub.or_chains:
             return None  # nested checks inside the scan: unprobed
@@ -2195,14 +1834,9 @@ class FastReader:
                 return _ofn(p.value)
         else:
             return None
-        count_min = (
-            sub.count_min
-            if sub.count_min is not None
-            else (sub.start or 0) + 1
-        )
         return _ThawScan(
             self, sub, keyfns, specs, grid, P, offset, thawed_n,
-            count_min, order, binfn=binfn,
+            sp.count_min, order, binfn=binfn,
             comp0=comp, desc0=sk0.descending,
         )
 
@@ -2387,15 +2021,16 @@ class FastReader:
         kind, lk = sub.linkage or (None, None)
         if kind == "my" and getattr(c, lk, None) != p.guid:
             return None
-        crow = self._row_for(c, sub, ss.child_spec, build_row=build_row)
+        crow = self._row_for(c, ss.plan, build_row=build_row)
         if crow is _NO_MATCH:
             return None
         return (c, crow)
 
-    def _row_for(self, p: Primitive, con: Constraint, spec: "_NodeSpec",
-                 build_row: bool):
-        """Rowdict for one candidate, or _NO_MATCH.  Mirrors the join
-        semantics of _attach_sub per sub spec."""
+    def _row_for(self, p: Primitive, plan: SetPlan, build_row: bool):
+        """Rowdict for one candidate of ``plan``'s constraint, or
+        _NO_MATCH: its intrinsic match, or-chains, subs (the compiled
+        joins' semantics) and own assignments."""
+        con = plan.con
         if not self._match_intrinsic(p, con):
             return _NO_MATCH
         row = (
@@ -2403,316 +2038,261 @@ class FastReader:
             if build_row
             else None
         )
-        for chain, cspec in spec.chains:
-            if cspec is None:
+        for chain, cp in zip(con.or_chains, plan.chains):
+            if cp is None:
                 # pure-intrinsic chain: disjunctive filter fold
-                if not any(
-                    self._match_branch(p, b) for b in chain
-                ):
+                if not any(self._match_branch(p, b) for b in chain):
                     return _NO_MATCH
-                continue
-            if not self._eval_or_chain(p, cspec, row):
+            elif not self._eval_or_chain(p, cp, row):
                 return _NO_MATCH
-        for ss in spec.subs:
-            sub, mode, sp = ss.sub, ss.mode, ss.sp
-            if mode == "skip":
+        for sp in plan.sub_plans:
+            if sp.mode == "skip":
                 continue
-            if mode in ("semi", "anti"):
-                has = self._sub_exists(p, sub, ss.child_spec)
-                if mode == "semi" and not has:
-                    return _NO_MATCH
-                if mode == "anti" and has:
+            if sp.mode != "agg":
+                if self._sub_exists(p, sp) != (sp.mode == "semi"):
                     return _NO_MATCH
                 continue
-            # agg: per-parent exact count + ordered page array
-            if ss.cstate is not None and ss.ssim is None:
-                rem = self._cursub_remainder(ss)
-                if rem is not None:
-                    # resumed unsorted PLAIN sub cursor: the same
-                    # two-pass ring model as or-branch subs — a
-                    # count>=0 sub evaluates (and drains) for every
-                    # root candidate, so an earlier parent's pass
-                    # poisons a later pinned parent's resume (cursor
-                    # seed 321); mandatory subs restrict the root to
-                    # linked parents (no drain for the rest)
-                    mandatory = (
-                        not sub.is_optional
-                        and sub.count_eq != 0
-                        and (
-                            sub.count_min is None or sub.count_min > 0
-                        )
-                    )
-                    rec = self._cursub_pass1(
-                        p, ss, rem,
-                        build_row=row is not None,
-                        sibling_candidacy=lambda m=mandatory: not m,
-                    )
-                    if rec is None or not rec["flag"]:
-                        if mandatory and not ss.outer:
-                            return _NO_MATCH
-                        if row is not None:
-                            row[sp.cnt_col] = None
-                            row[sp.arr_col] = None
-                            first = None
-                            for newcol, src in ss.var_imports:
-                                row[newcol] = None
-                        continue
-                    rec["prow"] = row
-                    if row is not None:
-                        row[sp.cnt_col] = rec["n"]
-                        row[sp.arr_col] = rec["rows"]
-                        first = rec["rows"][0] if rec["rows"] else None
-                        for newcol, src in ss.var_imports:
-                            row[newcol] = (
-                                None if first is None
-                                else first.get(src)
-                            )
-                    continue
-            thaw = ss.ssim.thaw if ss.ssim is not None else None
-            if thaw is not None:
-                # thawed sorted cursor sub: exact reference model —
-                # verify phase here, resume (for rendered parents, in
-                # render order) in _eval_set.  Bypasses the per-parent
-                # kids loop entirely: the producer is global and the
-                # shared bad-id ring makes evaluation order-dependent
-                # (see _ThawScan).
-                if ss.var_imports:
-                    raise Unsupported("thaw-sort-vars")
-                n, child_rows = thaw.verify(p, ss)
-                if row is not None:
-                    # registered for render-resume; a parent whose
-                    # row is never built cannot render, so its scan
-                    # stays deferred forever (reference: resume runs
-                    # only for parents actually rendered)
-                    self._thaw_by_row.setdefault(
-                        id(row), []
-                    ).append((p, ss, child_rows, row))
-                if not ss.outer and (
-                    n == 0 or n + thaw.offset < thaw.count_min
-                ):
-                    return _NO_MATCH  # absolute count below minimum
-                # count bounds: the verify defer guarantees the
-                # minimum via the absolute count (offset included);
-                # count_eq/count_max shapes never build a _ThawScan
-                if row is not None:
-                    if n == 0 and ss.outer:
-                        row[sp.cnt_col] = None
-                        row[sp.arr_col] = None
-                    else:
-                        row[sp.cnt_col] = n
-                        row[sp.arr_col] = child_rows
-                    first = child_rows[0] if child_rows else None
-                    for newcol, src in ss.var_imports:
-                        row[newcol] = (
-                            None if first is None else first.get(src)
-                        )
-                continue
-            kids = []
-            stop_kids = None
-            if self._thaw_active and ss.rps != 0:
-                # thawed sorted cursor sub somewhere in the request:
-                # every OTHER set must consume candidates exactly as
-                # far as the reference's lazy traversal, because the
-                # subtree below may run thaw verifies whose shared
-                # bad-id ring is order-dependent.  The reference
-                # stops a set at start+pagesize accepted elements
-                # (+1 lookahead when it wants a cursor), or at the
-                # count minimum if that is larger; exact-count
-                # demands (count=, count<=) scan in full there too,
-                # so those keep the full loop.
-                if sub.result is not None and any(
-                    pat.kind in ("count", "estimate", "estimate-count")
-                    for pat in sub.result.walk()
-                ):
-                    raise Unsupported("thaw-sort-sibling-count")
-                wants_cur = (
-                    getattr(sp.plan, "cursor_ctx", None) is not None
-                )
-                if wants_cur and ss.ssim is not None:
-                    # a second, legacy-model sorted cursor sub mixed
-                    # with the exact thaw model: incoherent
-                    raise Unsupported("thaw-sort-mixed-cursor")
-                if (
-                    sub.count_eq is None
-                    and sub.count_max is None
-                    # a (legacy) sorted sub needs its full candidate
-                    # set — its own sorter window applies, not ours
-                    and ss.ssim is None
-                    and sub.sort is None
-                ):
-                    stop_kids = max(
-                        ss.lo + ss.rps + (1 if wants_cur else 0),
-                        ss.count_min,
-                    )
-            defer_set = False
-            if self._thaw_active and ss.has_thaw:
-                # ancestor set of a live thaw: the reference's verify
-                # defers this set at its COUNT MINIMUM and evaluates
-                # the remaining candidates at render-resume, so the
-                # nested thaw verifies interleave with the leaf
-                # resumes in render order (spew-trace-derived; the
-                # shared bad-id ring makes the order observable)
-                if (
-                    sub.count_eq is not None
-                    or sub.count_max is not None
-                    or sub.sort is not None
-                    or ss.ssim is not None
-                    or ss.rps == 0
-                ):
-                    # exact counts force full scans, sorted ancestor
-                    # sets suspend through the sorter, pagesize-0
-                    # probes drop sort context — all unprobed above
-                    # a live thaw
-                    raise Unsupported("thaw-ancestor-shape")
-                defer_set = True
-                stop_kids = ss.count_min
-            _hb = self._sub_high(sub)
-            cand_ids = [
-                cid for cid in self._child_ids(p, sub)
-                if _hb is None or cid < _hb
-            ]
-            ci = 0
-            while ci < len(cand_ids):
-                if stop_kids is not None and len(kids) >= stop_kids:
-                    break  # count_min 0: defer before any candidate
-                cid = cand_ids[ci]
-                ci += 1
-                c = self.store.rows[cid - self.store._base]
-                if ss.cfilter is not None and not ss.cfilter(c):
-                    continue  # thawed sub-cursor restriction
-                crow = self._row_for(
-                    c, sub, ss.child_spec,
-                    build_row=sp.arr_col is not None,
-                )
-                if crow is _NO_MATCH:
-                    continue
-                kids.append((c, crow))
-                if stop_kids is not None and len(kids) >= stop_kids:
-                    break
-            if ss.ssim is not None:
-                # value/name sorted cursor sub: the incremental
-                # sorter per parent (see _sub_sort_page); n is the
-                # ACCEPTED count — prefilter-rejected kids are
-                # invisible to count, like root sorted sets
-                first = not ss.ssim.consumed
-                if ss.ssim.grid is not None and not cand_ids:
-                    # a parent with NO linkage children gets a NULL
-                    # iterator — the thawed one-shot is never
-                    # consumed and the parent logs no eval (mirror
-                    # of _ThawScan.verify's kid-less rule; cursor
-                    # fuzz seed 3134: a kid-less sibling must not
-                    # trip the multi-parent cursor override)
-                    n, page_kids, trailing = 0, [], False
-                    child_rows = []
-                    ss.ssim.sim[id(child_rows)] = (
-                        trailing, ss.ssim.P
-                    )
-                else:
-                    n, page_kids, trailing = self._sub_sort_page(
-                        ss, kids
-                    )
-                    child_rows = [
-                        r for _c, r in page_kids[ss.lo:ss.lo + ss.rps]
-                    ]
-                    ss.ssim.sim[id(child_rows)] = (
-                        trailing, ss.ssim.P
-                    )
-                    if ss.ssim.grid is not None:
-                        # grid-mode bookkeeping for the one-shot
-                        # thaw override (see _sub_sort_finalize):
-                        # log this parent's sub-level acceptance in
-                        # scan order
-                        acc = n > 0 or ss.outer
-                        if sub.count_eq is not None:
-                            acc = acc and n == sub.count_eq
-                        else:
-                            if ss.count_min > 0:
-                                acc = acc and n >= ss.count_min
-                            if sub.count_max is not None:
-                                acc = acc and n <= sub.count_max
-                        ss.ssim.evals.append(acc)
-                        if first:
-                            ss.ssim.first_key = id(child_rows)
-            else:
-                if ss.rps == 0 and not kids:
-                    refound = self._ps0_checkcleared_refind(
-                        p, ss, build_row=sp.arr_col is not None
-                    )
-                    if refound is not None:
-                        kids.append(refound)
-                n = len(kids)
-                # pagesize=0 count-min probe: consumes max(1, start)
-                # accepted kids in PRODUCER order (the sort context is
-                # dropped at resultpagesize 0) — capture the k-th
-                # accepted kid before any sort reorders the list;
-                # start >= n exhausts the skip and freezes null:
-                # (probed: versioned spokes still count in /POS/)
-                probe_entry = None
-                if ss.rps == 0 and kids and ss.lo < n:
-                    k = max(1, ss.lo)
-                    # a descending timestamp/guid sort runs the
-                    # BACKWARD producer, so the probe consumes from
-                    # the top (the frozen '~' forms; probed round 7)
-                    ki = n - k if freeze.sub_sort_backward(sub) else k - 1
-                    probe_entry = (kids[ki][0].id, p.guid, k)
-                if sub.sort is not None:
-                    self._apply_sort(sub, sp.plan, kids)
-                child_rows = [r for _c, r in kids[ss.lo:ss.lo + ss.rps]]
-                if (
-                    probe_entry is not None
-                    and getattr(sp.plan, "cursor_ctx", None) is not None
-                ):
-                    sp.plan.cursor_ctx.setdefault("probe", {})[
-                        id(child_rows)
-                    ] = probe_entry
-                if defer_set and row is not None:
-                    # deferred-set continuation: the remaining
-                    # candidates evaluate at render-resume (only if
-                    # this parent actually renders), each running its
-                    # own nested thaw verify at that point
-                    self._defer_by_row.setdefault(
-                        id(row), []
-                    ).append((p, ss, kids, cand_ids, ci, row))
-            # a THAWED sub chain verifies its count bounds in the
-            # ABSOLUTE frame: the cursor's [o:] offset counts already-
-            # consumed elements, so a drained remainder still passes
-            # (probed round 8, writepaged seed 211: a start=1 chain's
-            # exhausted page renders the parent with a null: sub)
-            thaw_o = self._sub_thaw_offset(p, ss)
-            if n + thaw_o == 0 and not ss.outer:
-                return _NO_MATCH  # inner join semantics
-            passes = True
-            if sub.count_eq is not None:
-                passes = (n + thaw_o) == sub.count_eq
-            else:
-                if ss.count_min > 0:
-                    passes = passes and (n + thaw_o) >= ss.count_min
-                if sub.count_max is not None:
-                    passes = passes and (n + thaw_o) <= sub.count_max
-            bounds_checked = (
-                ss.outer
-                or sub.count_eq is not None
-                or ss.count_min > 1
-                or sub.count_max is not None
-            )
-            if bounds_checked and not passes:
+            if not self._agg_step(p, sp, row):
                 return _NO_MATCH
-            if row is not None:
-                if n == 0 and ss.outer:
-                    row[sp.cnt_col] = None  # left-join miss
-                    row[sp.arr_col] = None
-                else:
-                    row[sp.cnt_col] = n
-                    row[sp.arr_col] = child_rows
-                first = child_rows[0] if child_rows else None
-                for newcol, src in ss.var_imports:
-                    row[newcol] = (
-                        None if first is None else first.get(src)
-                    )
         if row is not None:
-            for vcol, fn in spec.assigns:
-                row[vcol] = fn(p)
+            for vcol, fld, lit in plan.assigns:
+                row[vcol] = lit if fld is None else getattr(p, fld)
         return row
+
+    def _agg_step(self, p: Primitive, sp: SubPlan, row,
+                  siblings=()) -> bool:
+        """One parent's per-parent count and ordered page of agg sub
+        ``sp`` (the compiled aggregate), written into ``row``; returns
+        whether the sub's count bounds hold.  An or-branch sub's
+        verdict feeds its branch's flag; ``siblings`` are the chain's
+        other branch constraints (root-candidacy of the resumed
+        branch-sub cursor model, rule 4)."""
+        sub = sp.sub
+        if sp.cstate is not None and sp.ssim is None:
+            rem = self._cursub_remainder(sp)
+            if rem is not None:
+                # resumed unsorted sub cursor: the two-pass ring model
+                # (see the round-9 block above _cursub_remainder).  A
+                # root count>=0 sub evaluates (and drains) for every
+                # root candidate, so an earlier parent's pass poisons
+                # a later pinned parent's resume (cursor seed 321);
+                # mandatory subs restrict the root to linked parents
+                # (no drain for the rest).  A branch sub's parent is a
+                # root candidate through a sibling branch's
+                # iterator-level intrinsics (the reference's union
+                # runs pre-generation-filter).
+                mandatory = not sp.branch and (
+                    not sub.is_optional
+                    and sub.count_eq != 0
+                    and (sub.count_min is None or sub.count_min > 0)
+                )
+                rec = self._cursub_pass1(
+                    p, sp, rem,
+                    build_row=row is not None,
+                    sibling_candidacy=(lambda: any(
+                        self._iter_intrinsic(
+                            p, b2, in_branch=True, iter_level=True
+                        )
+                        for b2 in siblings
+                    )) if sp.branch else (lambda: not mandatory),
+                )
+                if rec is None or not rec["flag"]:
+                    if row is not None:
+                        _put_page(row, sp, None, None)
+                    return not sp.branch and (not mandatory or sp.outer)
+                rec["prow"] = row
+                if row is not None:
+                    # the deferred slot RENDERS even when empty
+                    # (("null:") — probe atleast2); pass 2 finalizes
+                    # cnt/arr and the keep/null verdict
+                    _put_page(row, sp, rec["n"], rec["rows"], True)
+                return True
+        thaw = sp.ssim.thaw if sp.ssim is not None else None
+        if thaw is not None:
+            # thawed sorted cursor sub: exact reference model —
+            # verify phase here, resume (for rendered parents, in
+            # render order) in _eval_set.  Bypasses the per-parent
+            # kids loop entirely: the producer is global and the
+            # shared bad-id ring makes evaluation order-dependent
+            # (see _ThawScan).
+            if sp.imports:
+                raise Unsupported("thaw-sort-vars")
+            n, child_rows = thaw.verify(p, sp)
+            if row is not None:
+                # registered for render-resume; a parent whose row is
+                # never built cannot render, so its scan stays
+                # deferred forever (reference: resume runs only for
+                # parents actually rendered)
+                self._thaw_by_row.setdefault(id(row), []).append(
+                    (p, sp, child_rows, row)
+                )
+                _put_page(row, sp, n, child_rows)
+            # count bounds: the verify defer guarantees the minimum via
+            # the absolute count (offset included); count_eq/count_max
+            # shapes never build a _ThawScan
+            if sp.branch:
+                return n >= sp.count_min
+            return sp.outer or (n > 0 and n + thaw.offset >= sp.count_min)
+        stop_kids = None
+        defer_set = False
+        if self._thaw_active and not sp.branch:
+            stop_kids, defer_set = self._thaw_discipline(sp)
+        _hb = self._sub_high(sub)
+        cand_ids = [
+            cid for cid in self._child_ids(p, sub)
+            if _hb is None or cid < _hb
+        ]
+        kids = []
+        ci = 0
+        while ci < len(cand_ids):
+            if stop_kids is not None and len(kids) >= stop_kids:
+                break  # count_min 0: defer before any candidate
+            cid = cand_ids[ci]
+            ci += 1
+            c = self.store.rows[cid - self.store._base]
+            if sp.cfilter is not None and not sp.cfilter(c):
+                continue  # thawed sub-cursor restriction
+            crow = self._row_for(c, sp.plan, build_row=True)
+            if crow is _NO_MATCH:
+                continue
+            kids.append((c, crow))
+            if stop_kids is not None and len(kids) >= stop_kids:
+                break
+        ssim = sp.ssim
+        if ssim is not None:
+            # value/name sorted cursor sub: the incremental sorter per
+            # parent (see _sub_sort_page); n is the ACCEPTED count —
+            # prefilter-rejected kids are invisible to count, like
+            # root sorted sets
+            first = not ssim.consumed
+            if ssim.grid is not None and not cand_ids:
+                # a parent with NO linkage children gets a NULL
+                # iterator — the thawed one-shot is never consumed and
+                # the parent logs no eval (mirror of _ThawScan.verify's
+                # kid-less rule; cursor fuzz seed 3134: a kid-less
+                # sibling must not trip the multi-parent cursor
+                # override)
+                n, child_rows = 0, []
+                ssim.sim[id(child_rows)] = (False, ssim.P)
+            else:
+                n, page_kids, trailing = self._sub_sort_page(sp, kids)
+                child_rows = [r for _c, r in page_kids[sp.lo:sp.lo + sp.rps]]
+                ssim.sim[id(child_rows)] = (trailing, ssim.P)
+                if ssim.grid is not None:
+                    # grid-mode bookkeeping for the one-shot thaw
+                    # override (see FastReader.run): log this parent's
+                    # sub-level acceptance in scan order
+                    ssim.evals.append(
+                        (n > 0 or sp.outer) and counts_ok(sp.bounds, n)
+                    )
+                    if first:
+                        ssim.first_key = id(child_rows)
+        else:
+            if sp.rps == 0 and not kids:
+                refound = self._ps0_checkcleared_refind(
+                    p, sp, build_row=True
+                )
+                if refound is not None:
+                    kids.append(refound)
+            n = len(kids)
+            # pagesize=0 count-min probe: consumes max(1, start)
+            # accepted kids in PRODUCER order (the sort context is
+            # dropped at resultpagesize 0) — capture the k-th accepted
+            # kid before any sort reorders the list; start >= n
+            # exhausts the skip and freezes null: (probed: versioned
+            # spokes still count in /POS/; or-branch subs probe
+            # exactly like root-level ones, my-form included — cursor
+            # fuzz seed 612)
+            probe_entry = None
+            if sp.rps == 0 and kids and sp.lo < n:
+                k = max(1, sp.lo)
+                # a descending timestamp/guid sort runs the BACKWARD
+                # producer, so the probe consumes from the top (the
+                # frozen '~' forms; probed round 7)
+                ki = n - k if freeze.sub_sort_backward(sub) else k - 1
+                probe_entry = (kids[ki][0].id, p.guid, k)
+            if sub.sort is not None:
+                self._apply_sort(sub, sp.plan, kids)
+            child_rows = [r for _c, r in kids[sp.lo:sp.lo + sp.rps]]
+            if probe_entry is not None and sp.plan.cursor_ctx is not None:
+                sp.plan.cursor_ctx.setdefault("probe", {})[
+                    id(child_rows)
+                ] = probe_entry
+            if defer_set and row is not None:
+                # deferred-set continuation: the remaining candidates
+                # evaluate at render-resume (only if this parent
+                # actually renders), each running its own nested thaw
+                # verify at that point
+                self._defer_by_row.setdefault(id(row), []).append(
+                    (p, sp, kids, cand_ids, ci, row)
+                )
+        if row is not None:
+            _put_page(row, sp, n, child_rows)
+        # a THAWED root sub chain verifies its count bounds in the
+        # ABSOLUTE frame: the cursor's [o:] offset counts already-
+        # consumed elements, so a drained remainder still passes
+        # (probed round 8, writepaged seed 211: a start=1 chain's
+        # exhausted page renders the parent with a null: sub);
+        # or-branch subs count the local frame
+        off = 0 if sp.branch else self._sub_thaw_offset(p, sp)
+        return counts_ok(sp.bounds, n + off)
+
+    def _thaw_discipline(self, sp: SubPlan):
+        """(stop_kids, defer_set) of a root agg sub while a thawed
+        sorted cursor sub is live somewhere in the request."""
+        sub = sp.sub
+        stop_kids = None
+        if sp.rps != 0:
+            # every OTHER set must consume candidates exactly as far
+            # as the reference's lazy traversal, because the subtree
+            # below may run thaw verifies whose shared bad-id ring is
+            # order-dependent.  The reference stops a set at
+            # start+pagesize accepted elements (+1 lookahead when it
+            # wants a cursor), or at the count minimum if that is
+            # larger; exact-count demands (count=, count<=) scan in
+            # full there too, so those keep the full loop.
+            if sub.result is not None and any(
+                pat.kind in ("count", "estimate", "estimate-count")
+                for pat in sub.result.walk()
+            ):
+                raise Unsupported("thaw-sort-sibling-count")
+            wants_cur = sp.plan.cursor_ctx is not None
+            if wants_cur and sp.ssim is not None:
+                # a second, legacy-model sorted cursor sub mixed with
+                # the exact thaw model: incoherent
+                raise Unsupported("thaw-sort-mixed-cursor")
+            if (
+                sub.count_eq is None
+                and sub.count_max is None
+                # a (legacy) sorted sub needs its full candidate set —
+                # its own sorter window applies, not ours
+                and sp.ssim is None
+                and sub.sort is None
+            ):
+                stop_kids = max(
+                    sp.lo + sp.rps + (1 if wants_cur else 0),
+                    sp.count_min,
+                )
+        if not sp.has_thaw:
+            return stop_kids, False
+        # ancestor set of a live thaw: the reference's verify defers
+        # this set at its COUNT MINIMUM and evaluates the remaining
+        # candidates at render-resume, so the nested thaw verifies
+        # interleave with the leaf resumes in render order (spew-
+        # trace-derived; the shared bad-id ring makes the order
+        # observable)
+        if (
+            sub.count_eq is not None
+            or sub.count_max is not None
+            or sub.sort is not None
+            or sp.ssim is not None
+            or sp.rps == 0
+        ):
+            # exact counts force full scans, sorted ancestor sets
+            # suspend through the sorter, pagesize-0 probes drop sort
+            # context — all unprobed above a live thaw
+            raise Unsupported("thaw-ancestor-shape")
+        return sp.count_min, True
 
     def _sub_thaw_offset(self, p: Primitive, ss) -> int:
         """The thawed sub cursor's consumed [o:] offset, attributed
@@ -2879,9 +2459,7 @@ class FastReader:
             if getattr(c, lk, None) != p.guid:
                 self._cursub_ring_add(sub, cid)
                 continue
-            crow = self._row_for(
-                c, sub, ss.child_spec, build_row=build_row
-            )
+            crow = self._row_for(c, ss.plan, build_row=build_row)
             if crow is _NO_MATCH:
                 self._cursub_ring_add(sub, cid)
                 continue
@@ -2930,10 +2508,7 @@ class FastReader:
                 if getattr(c, lk, None) != p.guid:
                     self._cursub_ring_add(sub, cid)
                     continue
-                crow = self._row_for(
-                    c, sub, ss.child_spec,
-                    build_row=rec["build_row"],
-                )
+                crow = self._row_for(c, ss.plan, build_row=rec["build_row"])
                 if crow is _NO_MATCH:
                     self._cursub_ring_add(sub, cid)
                     continue
@@ -2942,357 +2517,105 @@ class FastReader:
             del child_rows[:]
             for _c, r in accepts[ss.lo:ss.lo + ss.rps]:
                 child_rows.append(r)
-            prow[ss.sp.cnt_col] = len(accepts)
-            prow[ss.sp.arr_col] = child_rows
+            prow[ss.cnt_col] = len(accepts)
+            prow[ss.arr_col] = child_rows
             keep = len(accepts) >= stop
-            ctx = getattr(ss.sp.plan, "cursor_ctx", None)
+            ctx = ss.plan.cursor_ctx
             if ctx is not None:
                 ctx.setdefault("resumed", {})[id(child_rows)] = keep
 
-    def _eval_or_chain(self, p: Primitive, cspec, row) -> bool:
-        """Mirror of _apply_or_chain's non-intrinsic path: every
-        branch's sub aggregates left-join onto the row, per-branch
-        flags AND intrinsics with sub count bounds, the chain requires
-        one flag, and the FIRST matching branch's bindings apply.
-        Sub-bearing NESTED chains recurse (round 9): evaluation is
-        two-phase — _eval_branch computes flags and slot contents at
-        every depth, then the commit walk binds the winning path's
-        $vars/ecols (inner slots of a losing outer branch stay null,
-        probed against the reference)."""
-        branch_specs, merged = cspec
+    def _eval_or_chain(self, p: Primitive, cp, row) -> bool:
+        """The compiled or-chain over one candidate: every branch's
+        sub aggregates land in the row, a branch's flag ANDs its
+        intrinsics with its subs' count bounds and one matching branch
+        per nested sub-bearing chain, and the chain requires one flag.
+        Two phases: _eval_branch computes flags and slot contents at
+        every depth, then the first-match commit binds the winning
+        path's columns (inner slots of a losing outer branch stay
+        null, probed against the reference)."""
         results = [
             self._eval_branch(
-                p, bentry, row,
-                siblings=[
-                    e[0] for e in branch_specs if e is not bentry
-                ],
+                p, bp, row, [x.con for x in cp.branches if x is not bp]
             )
-            for bentry in branch_specs
+            for bp in cp.branches
         ]
         if row is not None:
-            self._null_or_chain(row, cspec)
-            self._commit_or_chain(row, branch_specs, results, merged,
-                                  set())
-        return any(r[0] for r in results)
+            self._commit_or_chain(p, row, cp, results)
+        return any(flag for flag, _inner in results)
 
-    def _eval_branch(self, p: Primitive, bentry, row, siblings=()):
-        """Phase 1 for one branch entry: (flag, vals, inner_results).
-        Slot contents (cnt/arr cols) are written into `row`
-        unconditionally — the ecol written by the commit walk gates
-        their rendering.  `siblings` are the chain's other branch
-        constraints (root-candidacy check of the resumed branch-sub
-        cursor model, rule 4)."""
-        b, bsubs, bvars, bpats, _ecol, inner_cspecs = bentry
-        skip = (
-            {id(ch) for ch, _ic in inner_cspecs}
-            if inner_cspecs else None
-        )
-        flag = self._match_branch(p, b, skip=skip)
-        vals = {}
-        for ss in bsubs:
-            sub, sp = ss.sub, ss.sp
-            if ss.cstate is not None and ss.ssim is None:
-                rem = self._cursub_remainder(ss)
-                if rem is not None:
-                    # resumed unsorted branch-sub cursor: the
-                    # spew-derived two-pass model (see the round-9
-                    # block above _cursub_remainder)
-                    rec = self._cursub_pass1(
-                        p, ss, rem,
-                        build_row=row is not None,
-                        # root-union candidacy via a sibling branch:
-                        # iterator-level intrinsics (the reference's
-                        # union runs pre-generation-filter)
-                        sibling_candidacy=lambda: any(
-                            self._iter_intrinsic(
-                                p, b2, in_branch=True, iter_level=True
-                            )
-                            for b2 in siblings
-                        ),
-                    )
-                    if rec is None or not rec["flag"]:
-                        flag = False
-                        if row is not None:
-                            row[sp.cnt_col] = None
-                            row[sp.arr_col] = None
-                        continue
-                    rec["prow"] = row
-                    child_rows = rec["rows"]
-                    if row is not None:
-                        # the deferred slot RENDERS even when empty
-                        # (("null:") — probe atleast2); pass 2
-                        # finalizes cnt/arr and the keep/null verdict
-                        row[sp.cnt_col] = rec["n"]
-                        row[sp.arr_col] = child_rows
-                    first = child_rows[0] if child_rows else None
-                    for var, _k, newcol, arr, src in bvars:
-                        if arr == sp.arr_col:
-                            vals[newcol] = (
-                                None if first is None
-                                else first.get(src)
-                            )
-                    continue
-            bthaw = ss.ssim.thaw if ss.ssim is not None else None
-            if bthaw is not None:
-                # thawed sorted cursor sub inside an or-branch:
-                # the same exact model as root-level subs
-                # (_ThawScan verify here, resume for rendered
-                # parents in render order via _resume_walk's
-                # chain traversal)
-                n, child_rows = bthaw.verify(p, ss)
-                if row is not None:
-                    self._thaw_by_row.setdefault(
-                        id(row), []
-                    ).append((p, ss, child_rows, row))
-                    if n == 0:
-                        row[sp.cnt_col] = None
-                        row[sp.arr_col] = None
-                    else:
-                        row[sp.cnt_col] = n
-                        row[sp.arr_col] = child_rows
-                bthaw_o = self._sub_thaw_offset(p, ss)
-                flag = flag and (n + bthaw_o) >= ss.count_min
-                first = child_rows[0] if child_rows else None
-                for var, _k, newcol, arr, src in bvars:
-                    if arr == sp.arr_col:
-                        vals[newcol] = (
-                            None if first is None else
-                            first.get(src)
-                        )
+    def _eval_branch(self, p: Primitive, bp, row, siblings):
+        """Phase 1 for one branch: (flag, [(nested branches, their
+        results)]).  Slot contents (cnt/arr cols) are written into
+        `row` unconditionally — the commit's first-match flags gate
+        their rendering."""
+        flag = self._match_branch(p, bp.con, bp.chains)
+        for sp in bp.subs:
+            if not self._agg_step(p, sp, row, siblings):
+                flag = False
+        inner = []
+        for ibs in bp.chains:
+            if ibs is None:
                 continue
-            kids = []
-            has_cands = False
-            _hb = self._sub_high(sub)
-            for cid in self._child_ids(p, sub):
-                if _hb is not None and cid >= _hb:
-                    continue
-                has_cands = True
-                c = self.store.rows[cid - self.store._base]
-                if ss.cfilter is not None and not ss.cfilter(c):
-                    continue  # thawed sub-cursor restriction
-                crow = self._row_for(
-                    c, sub, ss.child_spec, build_row=True
-                )
-                if crow is _NO_MATCH:
-                    continue
-                kids.append((c, crow))
-            if ss.ssim is not None:
-                # fresh / grid-legacy sorted branch sub: the
-                # bounded incremental sorter per parent, same as
-                # root-level agg subs
-                sfirst = not ss.ssim.consumed
-                if ss.ssim.grid is not None and not has_cands:
-                    # kid-less parent: null iterator, one-shot
-                    # untouched, no eval logged (seed 3134 rule)
-                    n, page_kids, trailing = 0, [], False
-                    child_rows = []
-                    ss.ssim.sim[id(child_rows)] = (
-                        trailing, ss.ssim.P
-                    )
-                else:
-                    n, page_kids, trailing = self._sub_sort_page(
-                        ss, kids
-                    )
-                    child_rows = [
-                        r for _c, r
-                        in page_kids[ss.lo:ss.lo + ss.rps]
-                    ]
-                    ss.ssim.sim[id(child_rows)] = (
-                        trailing, ss.ssim.P
-                    )
-                    if ss.ssim.grid is not None:
-                        acc = n >= ss.count_min
-                        ss.ssim.evals.append(acc)
-                        if sfirst:
-                            ss.ssim.first_key = id(child_rows)
-                if row is not None:
-                    if n == 0:
-                        row[sp.cnt_col] = None
-                        row[sp.arr_col] = None
-                    else:
-                        row[sp.cnt_col] = n
-                        row[sp.arr_col] = child_rows
-                bthaw_o = self._sub_thaw_offset(p, ss)
-                passes = True
-                if sub.count_eq is not None:
-                    passes = (n + bthaw_o) == sub.count_eq
-                else:
-                    if ss.count_min > 0:
-                        passes = passes and (
-                            n + bthaw_o >= ss.count_min
-                        )
-                    if sub.count_max is not None:
-                        passes = passes and (
-                            n + bthaw_o <= sub.count_max
-                        )
-                flag = flag and passes
-                first = child_rows[0] if child_rows else None
-                for var, _k, newcol, arr, src in bvars:
-                    if arr == sp.arr_col:
-                        vals[newcol] = (
-                            None if first is None else
-                            first.get(src)
-                        )
-                continue
-            if ss.rps == 0 and not kids:
-                refound = self._ps0_checkcleared_refind(
-                    p, ss, build_row=row is not None
-                )
-                if refound is not None:
-                    kids.append(refound)
-            n = len(kids)
-            probe_entry = None
-            probe_my = False
-            if ss.rps == 0:
-                # pagesize=0 probe subs inside or-branches probe
-                # EXACTLY like root-level ones — MY-form included
-                # (probed: a my-form branch over a non-empty kid
-                # set freezes the advancing gmap/vip/fixed probe
-                # and wins the branch; the round-6 "my-form
-                # counts 0" reading came from stores whose branch
-                # subs had no candidates at all — cursor fuzz
-                # seed 612)
-                if kids and ss.lo < n:
-                    k = max(1, ss.lo)
-                    ki = n - k if freeze.sub_sort_backward(sub) else k - 1
-                    probe_entry = (
-                        kids[ki][0].id, p.guid, k,
-                    )
-            if sub.sort is not None:
-                self._apply_sort(sub, sp.plan, kids)
-            child_rows = [
-                r for _c, r in kids[ss.lo:ss.lo + ss.rps]
-            ]
-            if (
-                probe_entry is not None
-                and getattr(sp.plan, "cursor_ctx", None) is not None
-            ):
-                sp.plan.cursor_ctx.setdefault("probe", {})[
-                    id(child_rows)
-                ] = probe_entry
-            if row is not None:
-                if probe_my:
-                    row[sp.cnt_col] = 0
-                    row[sp.arr_col] = child_rows  # ("null:")
-                elif n == 0:
-                    row[sp.cnt_col] = None  # left-join miss
-                    row[sp.arr_col] = None
-                else:
-                    row[sp.cnt_col] = n
-                    row[sp.arr_col] = child_rows
-            # bounds flag over cnt_eff (coalesced 0)
-            if sub.count_eq is not None:
-                passes = n == sub.count_eq
-            else:
-                passes = True
-                if ss.count_min > 0:
-                    passes = passes and n >= ss.count_min
-                if sub.count_max is not None:
-                    passes = passes and n <= sub.count_max
-            flag = flag and passes
-            first = child_rows[0] if child_rows else None
-            for var, _k, newcol, arr, src in bvars:
-                if arr == sp.arr_col:
-                    vals[newcol] = (
-                        None if first is None else first.get(src)
-                    )
-        for var, _k, newcol, arr, src in bvars:
-            if arr is None:  # scalar branch assignment
-                vals[newcol] = src(p)
-        inner_results = []
-        for _ch, icspec in inner_cspecs:
             ires = [
                 self._eval_branch(
-                    p, ibe, row,
-                    siblings=[
-                        e[0] for e in icspec[0] if e is not ibe
-                    ],
+                    p, x, row, [y.con for y in ibs if y is not x]
                 )
-                for ibe in icspec[0]
+                for x in ibs
             ]
-            flag = flag and any(r[0] for r in ires)
-            inner_results.append((icspec, ires))
-        return (flag, vals, inner_results)
+            flag = flag and any(f for f, _i in ires)
+            inner.append((ibs, ires))
+        return flag, inner
 
-    def _null_or_chain(self, row, cspec) -> None:
-        """Default every output column of the chain (all nesting
-        levels) before the commit walk binds the winning path's."""
-        branch_specs, merged = cspec
-        if merged:
-            for var, (vcol, _cases, kcol) in merged.items():
-                row.setdefault(vcol, None)
-                if kcol is not None:
-                    row.setdefault(kcol, None)
-        for _b, _bs, _bv, bpats, ecol, inner_cspecs in branch_specs:
-            for _var, _sp, gcol, _arr, _cnt, _vp in bpats:
-                row.setdefault(gcol, None)
-            if ecol is not None:
-                row[ecol] = False
-            for _ch, icspec in inner_cspecs:
-                self._null_or_chain(row, icspec)
-
-    def _commit_or_chain(self, row, branch_specs, results, merged,
-                         done_vcols) -> None:
-        """First-match commit walk: eff = flag & ~prior is true for
-        at most one branch per chain; that branch's values (and
-        guarded arrays) bind, its effective INNER branches commit
-        recursively, every other output column stays null.  merged is
-        the TOP chain's var merge (inner bindings flattened into it
-        at build); done_vcols makes the first case in parse order win
-        when several branches of the winning path bind one var
-        (mirror of _apply_or_chain's when-cascade)."""
-        prior = False
-        for bentry, (flag, vals, inner_results) in zip(
-            branch_specs, results
-        ):
-            eff = flag and not prior
-            prior = prior or flag
-            if not eff:
-                continue
-            _b, bsubs, bvars, bpats, ecol, _inner = bentry
-            for wss in bsubs:
+    def _commit_or_chain(self, p: Primitive, row, cp, results) -> None:
+        """First-match commit: the first flagged branch of each chain
+        on the winning path wins; the plan's guard columns and case
+        table bind for the winners (a case binds when its path's last
+        branch won, so every branch above it won too), and every other
+        output column of the chain stays null or false."""
+        won: set = set()
+        _first_winners(cp.branches, results, won)
+        for bp in won:
+            for sp in bp.subs:
                 # winning-branch tally: an iam probe's [n:] pins the
                 # parent id when exactly one parent won this branch,
                 # the store horizon for 2+ (probed; see
                 # _sub_probe_cursor)
-                wctx = getattr(wss.sp.plan, "cursor_ctx", None)
-                if wctx is not None:
-                    wctx["branch_winners"] = (
-                        wctx.get("branch_winners", 0) + 1
-                    )
-            if ecol is not None:
-                row[ecol] = True
-            for var, _k, newcol, _arr, _src in bvars:
-                vcol, _cases, kcol = merged[var]
-                if vcol in done_vcols:
-                    continue
-                done_vcols.add(vcol)
-                row[vcol] = vals.get(newcol)
-                if kcol is not None:
-                    row[kcol] = _k
-            for _var, _sp, gcol, arr, _cnt, _vp in bpats:
-                row[gcol] = row.get(arr)
-            for icspec, ires in inner_results:
-                self._commit_or_chain(
-                    row, icspec[0], ires, merged, done_vcols
-                )
+                ctx = sp.plan.cursor_ctx
+                if ctx is not None:
+                    ctx["branch_winners"] = ctx.get("branch_winners", 0) + 1
+        for path, col, arr in cp.guards:
+            if arr is None:
+                row[col] = path[-1] in won
+            else:
+                row[col] = row.get(arr) if path[-1] in won else None
+        for vcol, kcol, cases in cp.cases.values():
+            case = next((c for c in cases if c.path[-1] in won), None)
+            if case is None:
+                v = None
+            elif case.sp is not None:
+                kids = row.get(case.sp.arr_col)
+                v = kids[0].get(case.col) if kids else None
+            else:
+                v = case.lit if case.col is None else getattr(p, case.col)
+            row[vcol] = v
+            if kcol is not None:
+                row[kcol] = None if case is None else case.kind
 
-    def _sub_exists(self, p: Primitive, sub: Constraint,
-                    child_spec: "_NodeSpec") -> bool:
+    def _sub_exists(self, p: Primitive, sp: SubPlan) -> bool:
+        sub = sp.sub
         _hb = self._sub_high(sub)
         for cid in self._child_ids(p, sub):
             if _hb is not None and cid >= _hb:
                 continue
             c = self.store.rows[cid - self.store._base]
-            if self._row_for(c, sub, child_spec, build_row=False) \
-                    is not _NO_MATCH:
+            if self._row_for(c, sp.plan, build_row=False) is not _NO_MATCH:
                 return True
         return False
 
     def _child_ids(self, p: Primitive, sub: Constraint) -> list[int]:
         """Candidate child ids for one parent, via the linkage indexes
-        (mirror of _attach_sub's RAW-guid join keys — see the probe
-        notes there).  'bi' keeps per-endpoint multiplicity like the
+        (the compiled join's RAW-guid keys — see the probe notes on
+        Compiler._attach_sub).  'bi' keeps per-endpoint multiplicity like the
         exploded join does."""
         kind, lk = sub.linkage
         st = self.store
@@ -3490,16 +2813,16 @@ class FastReader:
         return tree
 
     def _match_branch(self, p: Primitive, b: Constraint,
-                      skip=None) -> bool:
+                      inner=()) -> bool:
         """An or-BRANCH's match including its recursively-intrinsic
         NESTED chains (probed: `{ { A | B } | C }` matches A|B|C
-        row-wise).  `skip` names chains (by id) evaluated separately —
-        the branch's sub-bearing nested chains, which _eval_branch
-        recurses into (round 9)."""
+        row-wise).  ``inner`` is the branch plan's per-chain list: a
+        chain with BranchPlans there is sub-bearing and evaluates in
+        _eval_branch instead."""
         if not self._match_intrinsic(p, b, in_branch=True):
             return False
-        for chain in b.or_chains:
-            if skip is not None and id(chain) in skip:
+        for i, chain in enumerate(b.or_chains):
+            if i < len(inner) and inner[i] is not None:
                 continue
             if not any(self._match_branch(p, x) for x in chain):
                 return False
@@ -3629,7 +2952,7 @@ class FastReader:
 # NESTED (depth >= 2) sorted cursor subs now run the exact model:
 # the round-6 note's item (a) — ancestor sets evaluating in the
 # reference's deferred two-phase structure — is implemented by
-# _SubSpec.has_thaw + the count-min verify defer in _row_for +
+# SubPlan.has_thaw + the count-min verify defer in _agg_step +
 # _resume_deferred_set + _eval_set's recursive render-order resume
 # walk over live registries, matching the RXN spew traces exactly
 # (verify defers EVERY set at one accepted element; render completes

@@ -1006,7 +1006,7 @@ def _gen_or_read(rng: random.Random) -> str:
             # parse-level flatten when bare (round 8) and run the
             # recursive first-match machinery when the branch
             # conjoins the chain with its own clauses (round 9,
-            # _branch_flag / _build_branch_spec — the family rounds
+            # readplan.bind_plan's first-match table — the family rounds
             # 7-8 refused).  pure_chain now only guards a MINORITY of
             # emissions so the conjoined shapes fuzz too.
             pure_chain = rng.random() < 0.4
